@@ -4,10 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Runs every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
-  * Each query is executed once to warm shared caches/codegen (cold pass,
-  * reported as cold_total_sec) and once timed (steady-state, reported
-  * per-query; "value" is the warm total). A short GC quiesce between queries
-  * keeps async cleanup from the previous query out of the next one's timing.
+  * Each query is timed by [[coldThenWarm]]: a cold pass (reported as
+  * cold_total_sec), then the min of two warm passes (reported per query;
+  * "value" is the warm total).
   */
 object Bench {
   /** The round-1 benchmark query set (BENCH_r01.json), for the
@@ -31,18 +30,31 @@ object Bench {
     "token_packing", "tokens", "top_parts_per_brand", "vocab_stats",
     "xml_roundtrip")
 
+  /** GC, then a short pause, so async cleanup from the previous pass
+    * stays out of the next one's timing. */
+  def quiesce(): Unit = { System.gc(); Thread.sleep(200) }
+
+  /** The timing protocol of every timing main: one cold pass (warms shared
+    * caches and codegen, builds staged artifacts), then warm = the min of
+    * two timed passes, with a quiesce after each pass. Min-of-2 because
+    * single-pass timings swing 2-3x per query run-to-run (GC moment, host
+    * CPU steal, cache eviction timing); it rejects the one-bad-moment sample
+    * while keeping the suite one JVM. Returns (cold, warm) seconds. */
+  def coldThenWarm(pass: => Unit): (Double, Double) = {
+    def timed(): Double = {
+      val t0 = System.nanoTime()
+      pass
+      val s = (System.nanoTime() - t0) / 1e9
+      quiesce()
+      s
+    }
+    val cold = timed()
+    (cold, (1 to 2).map(_ => timed()).min)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def quiesce(): Unit = { System.gc(); Thread.sleep(200) }
+    val spark = GraftSession.local()
 
     // optional args restrict the query set (local iteration only; the
     // driver always runs the full suite with no args)
@@ -58,25 +70,10 @@ object Bench {
         failed += name
         -1L
       }
-    // warm time = min of two timed passes: single-pass timings on this box
-    // swing 2-3x per query run-to-run (GC moment, host CPU steal, cache
-    // eviction timing — the r4 artifact recorded three 2-3x "regressions"
-    // on queries whose code hadn't changed and that measure at r3 speed
-    // locally); min-of-2 rejects the one-bad-moment sample while keeping
-    // the suite one sbt invocation
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      run(name, fn)
-      coldTotal += (System.nanoTime() - t0) / 1e9
-      quiesce()
-      val warm = (1 to 2).map { _ =>
-        val t1 = System.nanoTime()
-        run(name, fn)
-        val w = (System.nanoTime() - t1) / 1e9
-        quiesce()
-        w
-      }.min
+      val (cold, warm) = coldThenWarm(run(name, fn))
+      coldTotal += cold
       // operator-internal persists are bounded BY DESIGN, not by audit
       // (VERDICT r12 item 8): whatever this query registered is dropped
       // before the next query runs, so no managed entry survives a suite

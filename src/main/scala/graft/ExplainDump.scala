@@ -1,10 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8).config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val d = "/root/testdata/sf0.01"
     for (q <- args) {
       println(s"===== $q =====")

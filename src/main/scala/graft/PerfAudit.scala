@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -25,31 +24,12 @@ object PerfAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def quiesce(): Unit = { System.gc(); Thread.sleep(200) }
+    val spark = GraftSession.local()
 
     val names = if (args.nonEmpty) args.toSeq else DefaultQueries
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      // cold pass warms shared caches/codegen like Bench does
-      val t0 = System.nanoTime(); fn(spark, sfDir).count()
-      val cold = (System.nanoTime() - t0) / 1e9
-      quiesce()
-      val warm = (1 to 2).map { _ =>
-        val t1 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val w = (System.nanoTime() - t1) / 1e9
-        quiesce()
-        w
-      }.min
+      val (cold, warm) = Bench.coldThenWarm(fn(spark, sfDir).count())
       // metrics pass: count() plans its OWN QueryExecution, so execute this
       // dataset's executed plan directly and read the metrics off that tree
       val qe = fn(spark, sfDir).queryExecution

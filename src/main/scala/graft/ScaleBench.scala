@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling probe: times the dedup / ANN / connected-components families at
   * SEVERAL scale factors in ONE JVM and fits a per-family scaling exponent
   * — the measured evidence behind SURVEY §8's linear-in-bytes claims
@@ -81,28 +79,9 @@ object ScaleBench {
     val dirs: Seq[String] =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def quiesce(): Unit = { System.gc(); Thread.sleep(200) }
-    def timed(name: String, dir: String): Double = {
-      val fn = SparkEntry.queries(name)
-      fn(spark, dir).count() // cold
-      quiesce()
-      (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        val w = (System.nanoTime() - t0) / 1e9
-        quiesce()
-        w
-      }.min
-    }
+    val spark = GraftSession.local()
+    def timed(name: String, dir: String): Double =
+      Bench.coldThenWarm(SparkEntry.queries(name)(spark, dir).count())._2
 
     val names = Families.flatMap(_._2)
     // position of each dir on the fit's x axis: parsed sf, else 10x steps

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an N× scaled copy of a testdata dir for the SCALE PROBE
@@ -36,12 +36,7 @@ object ScaleUp {
     // optional 4th+ args: restrict to the named tables (re-generate one
     // table after a partial run without rewriting the rest)
     val only = args.drop(3).toSet
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // single-FILE parquet per table, exactly the testdata layout — the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-family floor telemetry (VERDICT r13 item 8).
   *
   * Seven of the r13 suite's slowest 20 are streaming queries whose cost is
@@ -32,15 +30,8 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def quiesce(): Unit = { System.gc(); Thread.sleep(200) }
+    val spark = GraftSession.local()
+    import Bench.quiesce
 
     graft.streaming.StreamTelemetry.enabled = true
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)

@@ -103,7 +103,7 @@ object Staging {
     * parquet table — the storage layout the 100 TB path reads: every
     * downstream equi-join / aggregation keyed on `bucketCol` (or a superset)
     * scans the artifact with ZERO exchanges on this side
-    * (BucketedCooccurDemo measured 17 → 1 exchanges on the cooccurrence
+    * (measured 17 → 1 exchanges on the cooccurrence
     * pair join). Same canonical-inputs contract as [[stageOnce]].
     *
     * The table lives in a process-lifetime temp dir (registered for exit

@@ -141,9 +141,6 @@ object AssertionDb {
     * evidence row (:73-79; PK (evidence_id, predicate_curie) holds because
     * evidence_id already encodes the pair and the pair determines the
     * predicate). Doc-local like [[evidenceFrom]]. */
-  def evidenceScores(docs: DataFrame, annots: DataFrame): DataFrame =
-    evidenceScoresFrom(evidenceBase(docs, annots))
-
   def evidenceScoresFrom(base: DataFrame): DataFrame =
     docLocalDistinct(scoresProjected(base))
 

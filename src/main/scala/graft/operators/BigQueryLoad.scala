@@ -122,9 +122,6 @@ object BigQueryLoad {
     * annotation_type, span_start, span_end, covered_text. Zero-width spans
     * dropped; covered text newline/tab-normalized (the TSV quote-doubling
     * in serializeAnnotation:269 is CSV-load framing, not table content). */
-  def annotationTable(docs: DataFrame, annots: DataFrame): DataFrame =
-    annotationTableFrom(annotationUniverse(docs, annots))
-
   def annotationTableFrom(u: DataFrame): DataFrame =
     u
       .where(col("char_start") =!= col("char_end"))
@@ -148,9 +145,6 @@ object BigQueryLoad {
     * unique-map accumulation. Only SECTION..CONCEPT layers ever act as
     * zones; the layer-order predicate admits an inner annotation only at or
     * below its zone's layer. */
-  def zoneTables(docs: DataFrame, annots: DataFrame): DataFrame =
-    zoneTablesFrom(annotationUniverse(docs, annots))
-
   def zoneTablesFrom(u: DataFrame): DataFrame = {
     val inner = u.select(col("doc_id"), col("annotation_id").as("inner_annot_id"),
       col("char_start").as("i_start"), col("char_end").as("i_end"),

@@ -41,7 +41,7 @@ object Cooccurrence {
     * already satisfies the pair self-join's distribution on both sides, so
     * the join plans with ZERO exchanges (only the final pair aggregation
     * shuffles) — the in-session analog of the doc_id-bucketed table layout
-    * measured in BucketedCooccurDemo (pair-join exchanges 17 → 1), the
+    * recorded in SURVEY §7 (pair-join exchanges 17 → 1), the
     * layout the 100 TB path gets from bucketed storage. */
   def unitConcepts(annots: DataFrame, unitCols: Seq[String], addAncestors: Boolean = true): DataFrame =
     graft.infra.Caches.managed(
@@ -112,7 +112,7 @@ object Cooccurrence {
   /** [[pairCounts]] over a PERSISTED doc_id-bucketed unit-concepts table —
     * the storage layout the 100 TB cooccurrence family reads (the in-session
     * `repartition + persist` in [[unitConcepts]] is this layout's transient
-    * analog; BucketedCooccurDemo measured the difference at 17→1 exchanges /
+    * analog; SURVEY §7 records the difference at 17→1 exchanges /
     * 29.4→3.6 s). With both sides of the pair self-join coming from the same
     * bucketed table, the join plans with ZERO exchanges — only the final
     * (concept1, concept2) aggregation shuffles. Same result and oracle as

@@ -193,14 +193,11 @@ object KnowledgeGraph {
 
   /** Edge table from document-level cooccurrence metrics: subject, object,
     * predicate, subject_category, object_category, pair_count, ngd, npmi.
-    * Two broadcast category joins — one per endpoint. */
-  def edges(annots: DataFrame): DataFrame =
-    edgesFromMetrics(Cooccurrence.metrics(annots, Seq("doc_id")))
-
-  /** [[edges]] from the published cooccurrence-scores table (staged
-    * artifact — the reference's KG build reads the exported scores, it
-    * does not re-run the pair join; trapi_edges' 0.42 → 1.08 s r14 drift
-    * was exactly the honest per-query rebuild of that chain). */
+    * Two broadcast category joins — one per endpoint. Reads the published
+    * cooccurrence-scores table (staged artifact — the reference's KG build
+    * reads the exported scores, it does not re-run the pair join;
+    * trapi_edges' 0.42 → 1.08 s r14 drift was exactly the honest per-query
+    * rebuild of that chain). */
   def edgesFromMetrics(base: DataFrame): DataFrame = {
     joinCategory(joinCategory(base, "concept1", "subject_category"),
         "concept2", "object_category")
@@ -217,10 +214,6 @@ object KnowledgeGraph {
     * degree dwarfs the curve is the node that breaks BFS/PageRank cost
     * models). Two map-side-combinable aggregations over the edge list —
     * degree per node, then nodes per degree (a ≤|V|-key rollup). */
-  def degreeDist(annots: DataFrame): DataFrame =
-    degreeDistFromPairs(Cooccurrence.pairCounts(
-      Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")))
-
   def degreeDistFromPairs(pairs: DataFrame): DataFrame = {
     pairs.select(col("concept1").as("src"))
       .unionAll(pairs.select(col("concept2").as("src")))
@@ -252,10 +245,6 @@ object KnowledgeGraph {
     * destination key — the Pregel cost model. Degrees are computed once.
     * Rounds are a fixed constant, so total cost is O(iters · |E|) with no
     * driver-side data movement at all. */
-  def pageRank(annots: DataFrame, iterations: Int = PageRankIters): DataFrame =
-    pageRankFromPairs(Cooccurrence.pairCounts(
-      Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")), iterations)
-
   def pageRankFromPairs(pairsIn: DataFrame, iterations: Int = PageRankIters): DataFrame = {
     val pairs = pairsIn.select("concept1", "concept2")
     // concept1 < concept2 by construction, so the two directions are
@@ -293,17 +282,12 @@ object KnowledgeGraph {
     * [[KHopRounds]] hops) from the seed set (concepts of one prefix) over
     * the undirected cooccurrence graph — the "k-hop neighborhood of a
     * category" expansion KG consumers run for subgraph extraction. Same
-    * Pregel cost model as [[pageRank]]: the edge list materializes once,
+    * Pregel cost model as [[pageRankFromPairs]]: the edge list materializes once,
     * each round is one equi-join of edges against the current distance
     * table plus a min-groupBy — the frontier never needs to be
     * distinguished from the settled set because min() is idempotent, so
     * no driver-side convergence probe exists at all. Distances are exact
     * integers. */
-  def kHop(annots: DataFrame, seedPrefix: String = "OP",
-           rounds: Int = KHopRounds): DataFrame =
-    kHopFromPairs(Cooccurrence.pairCounts(
-      Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")), seedPrefix, rounds)
-
   def kHopFromPairs(pairsIn: DataFrame, seedPrefix: String = "OP",
                     rounds: Int = KHopRounds): DataFrame = {
     val pairs = pairsIn.select("concept1", "concept2")
@@ -336,10 +320,6 @@ object KnowledgeGraph {
     * side, and every step is an equi-join (no cartesian anywhere). Counts
     * and degrees are exact integers; the coefficient is one rounded
     * division at the end. */
-  def triangles(annots: DataFrame): DataFrame =
-    trianglesFromPairs(Cooccurrence.pairCounts(
-      Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")))
-
   def trianglesFromPairs(pairsIn: DataFrame): DataFrame = {
     val pairs = pairsIn
       .select(col("concept1").as("a"), col("concept2").as("b"))
@@ -374,11 +354,7 @@ object KnowledgeGraph {
     * itself pivoted on the shared endpoint (endpoints can't appear as
     * their own common neighbor — no self-loops exist); the union size is
     * deg(a)+deg(b)−common in exact integers, one rounded division per
-    * edge. Bounded exactly like [[triangles]]' wedge join. */
-  def neighborJaccard(annots: DataFrame): DataFrame =
-    neighborJaccardFromPairs(Cooccurrence.pairCounts(
-      Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")))
-
+    * edge. Bounded exactly like [[trianglesFromPairs]]' wedge join. */
   def neighborJaccardFromPairs(pairsIn: DataFrame): DataFrame = {
     val pairs = pairsIn
       .select(col("concept1").as("a"), col("concept2").as("b"))
@@ -427,12 +403,8 @@ object KnowledgeGraph {
   /** subject, edge_label, object, relation, id, association_type — the KGX
     * edge table (KGX_EDGE_HEADER columns) over the cooccurrence pairs.
     * Based on pair COUNTS, not metrics: the KGX edge universe is every
-    * pair with evidence (so it equals [[kgxEdgesEvidence]]'s universe),
+    * pair with evidence (so it equals [[kgxEdgesEvidenceFromUnits]]'s universe),
     * whereas the metric table may drop degenerate pairs. */
-  def kgxEdges(annots: DataFrame): DataFrame =
-    kgxEdgesFromPairs(Cooccurrence.pairCounts(
-      Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")))
-
   def kgxEdgesFromPairs(pairs: DataFrame): DataFrame =
     pairs
       .select(col("concept1").as("subject"), col("concept2").as("object"))
@@ -447,9 +419,6 @@ object KnowledgeGraph {
     * KgxNlpEvidenceNode.getId's fields collapsed to the per-document
     * identity this engine tracks). Group-bounded: evidence lists are
     * per-pair, the same volume as the pair-count aggregation. */
-  def kgxEdgesEvidence(annots: DataFrame): DataFrame =
-    kgxEdgesEvidenceFromUnits(Cooccurrence.unitConcepts(annots, Seq("doc_id")))
-
   def kgxEdgesEvidenceFromUnits(units: DataFrame): DataFrame = {
     val ev = units.select(col("doc_id"), col("concept_id").as("subject"))
       .join(units.select(col("doc_id"), col("concept_id").as("object")), Seq("doc_id"))
@@ -528,9 +497,6 @@ object KnowledgeGraph {
 
   /** subject, object, triple_ord, line — N-Triples for every association:
     * blank assoc node, type/subject/predicate/object, 6dp decimal score. */
-  def trapiEdgeTriples(annots: DataFrame): DataFrame =
-    trapiEdgeTriplesFromMetrics(Cooccurrence.metrics(annots, Seq("doc_id")))
-
   def trapiEdgeTriplesFromMetrics(metrics: DataFrame): DataFrame = {
     val e = edgesFromMetrics(metrics)
     val assoc = concat(lit("<_:"),

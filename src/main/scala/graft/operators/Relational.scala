@@ -297,17 +297,15 @@ object Relational {
     * TopKAgg ships ≤ k (price, key, name) entries per brand through
     * partial aggregation. Ordering (score DESC, id ASC) matches the
     * window/oracle formulation row-for-row; the name rides the heap as
-    * inert cargo. The window formulation itself stays covered by
-    * ExtensionsSpec, where WindowTopKToBoundedHeap rewrites it to exactly
-    * this plan. */
+    * inert cargo. The window formulation itself is the DuckDB oracle's
+    * twin of this query, which checks the heap plan row-for-row. */
   def topPartsPerBrand(part: DataFrame, k: Int = 3): DataFrame =
     part
       // explicit non-null contract (ADVICE r9): TopKAgg.update skips null
       // score/id rows, where the window formulation would rank them NULLS
       // LAST — the TPC-H columns are never null, but if a source schema
       // marks them nullable the divergence must be this visible pre-filter,
-      // not a silent heap-side drop (the optimizer rule refuses nullable
-      // score/id for the same reason).
+      // not a silent heap-side drop.
       .where(col("p_retailprice").isNotNull && col("p_partkey").isNotNull)
       .groupBy("p_brand")
       .agg(graft.functions.TopKAgg.topKWith(

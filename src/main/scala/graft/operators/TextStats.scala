@@ -883,25 +883,9 @@ object TextStats {
         Num.r6(lit(1.0) - col("ndtr").cast("double") / col("n_trigrams").cast("double"))
           .as("dup_trigram_ratio"))
 
-  /** Rule-based quality filter (Gopher-rule shape): keep/drop decision plus
-    * the firing reasons, so filtering is auditable. */
-  /** doc_id, compression_ratio, is_repetitive, is_noise — the deflate
-    * compression-ratio quality signal (Gopher/RefinedWeb lineage): text that
-    * compresses too WELL is templated/repetitive, text that barely
-    * compresses is noise; both tails are dropped from training corpora.
-    * The ratio comes from a codegen'd expression over zlib level 6
-    * (deterministic output size); no DuckDB twin exists, so the driver
-    * check is rows-only and numeric behavior is spec-pinned. */
+  /** Compression-ratio gates of [[compressionQualityStaged]]. */
   val CompressionRepetitiveBelow = 0.25
   val CompressionNoiseAbove = 0.95
-
-  def compressionQuality(docs: DataFrame,
-                         repetitiveBelow: Double = CompressionRepetitiveBelow,
-                         noiseAbove: Double = CompressionNoiseAbove): DataFrame =
-    docs.select(col("doc_id"),
-        graft.functions.CompressionRatio.compressionRatio(col("text")).as("compression_ratio"))
-      .withColumn("is_repetitive", col("compression_ratio") < repetitiveBelow)
-      .withColumn("is_noise", col("compression_ratio") > noiseAbove)
 
   // DuckDB has no deflate, so the ratio NUMBER can never be oracle-checked;
   // the GATE DERIVATION can. The engine-computed ratios are staged once per
@@ -918,6 +902,13 @@ object TextStats {
   def compressionStagePath(sfDir: String): String =
     graft.infra.Staging.oracleStagePath("compression_ratio", sfDir)
 
+  /** doc_id, compression_ratio, is_repetitive, is_noise — the deflate
+    * compression-ratio quality signal (Gopher/RefinedWeb lineage): text that
+    * compresses too WELL is templated/repetitive, text that barely
+    * compresses is noise; both tails are dropped from training corpora.
+    * The ratio comes from a codegen'd expression over zlib level 6
+    * (deterministic output size) and is spec-pinned; the oracle checks the
+    * gate flags over the staged ratios. */
   def compressionQualityStaged(docs: DataFrame, sfDir: String): DataFrame = {
     val path = compressionStagePath(sfDir)
     compressionStaged.synchronized {
@@ -943,6 +934,8 @@ object TextStats {
        |  compression_ratio > $CompressionNoiseAbove AS is_noise
        |FROM read_parquet('$lastCompressionStage/*.parquet')""".stripMargin
 
+  /** Rule-based quality filter (Gopher-rule shape): keep/drop decision plus
+    * the firing reasons, so filtering is auditable. */
   def qualityFilter(docs: DataFrame,
                     minTokens: Long = 20, maxDupTrigram: Double = 0.55,
                     maxStopRatio: Double = 0.12): DataFrame = {

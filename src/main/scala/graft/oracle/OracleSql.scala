@@ -3512,7 +3512,7 @@ object OracleSql {
          |FROM r${KnowledgeGraph.PageRankIters} r JOIN deg d ON d.src = r.concept_id""".stripMargin
   }
 
-  /** KnowledgeGraph.kHop twin: BFS layers unrolled — each round min-folds
+  /** KnowledgeGraph.kHopFromPairs twin: BFS layers unrolled — each round min-folds
     * the previous distance table with its one-hop expansion. */
   val kgKhop: String = {
     val head = docPipeline(unitsDocCte, pairCountsSql("units_doc", Seq("doc_id")),
@@ -3555,7 +3555,7 @@ object OracleSql {
          |    ELSE 0.0 END AS clustering_coeff
          |FROM deg d LEFT JOIN pn p USING (concept_id)""".stripMargin
 
-  /** KnowledgeGraph.neighborJaccard twin: adjacency self-pivot with an
+  /** KnowledgeGraph.neighborJaccardFromPairs twin: adjacency self-pivot with an
     * EXISTS probe, exact-integer union sizes. */
   val kgJaccard: String =
     docPipeline(unitsDocCte, pairCountsSql("units_doc", Seq("doc_id")),
@@ -4704,7 +4704,7 @@ object OracleSql {
        |  floor((CAST(sum(term_micro) AS DOUBLE) / 1000000) * 1000000 + 0.5) / 1000000 AS kl
        |FROM terms GROUP BY 1""".stripMargin
 
-  /** KnowledgeGraph.degreeDist twin over the same doc-level pair graph. */
+  /** KnowledgeGraph.degreeDistFromPairs twin over the same doc-level pair graph. */
   val kgDegreeDist: String =
     docPipeline(unitsDocCte, pairCountsSql("units_doc", Seq("doc_id")),
       """edges AS (

@@ -17,12 +17,6 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // Legacy testdata layouts carried ts as parquet TIMESTAMP(NANOS); with
-      // this flag those files load as raw nanosecond longs instead of failing.
-      // Current layouts carry TIMESTAMP(MICROS) and ignore the flag entirely.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    }
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name == "events") canonicalizeEventTs(df) else df
   }
@@ -32,15 +26,20 @@ object Tables {
     * event operator does exact integer math on this column, identical to the
     * DuckDB oracle's `epoch_us(ts)`; no per-site precision arithmetic exists
     * anywhere else. Pure column arithmetic (stays inside whole-stage codegen,
-    * never blocks filter pushdown on the other columns). */
+    * never blocks filter pushdown on the other columns).
+    *
+    * Legacy layouts carry ts as parquet TIMESTAMP(NANOS); GraftSession's
+    * nanos-as-long parquet policy loads those as raw nanosecond longs (the
+    * LongType branch). Current layouts carry TIMESTAMP(MICROS), which loads
+    * as TIMESTAMP or, when the writer marks it naive, TIMESTAMP_NTZ. */
   private[graft] def canonicalizeEventTs(df: DataFrame): DataFrame = {
     val canon: Column = df.schema("ts").dataType match {
       case LongType         => expr("ts div 1000")               // legacy NANOS-as-long
       case TimestampType    => unix_micros(col("ts"))
       case TimestampNTZType =>
-        // NTZ -> TZ cast applies the session time zone; GraftSession (and the
-        // test harness) pin it to UTC, so the wall-clock value IS the instant
-        // and this matches DuckDB's epoch_us on the same naive column.
+        // NTZ -> TZ cast applies the session time zone; GraftSession pins it
+        // to UTC, so the wall-clock value IS the instant and this matches
+        // DuckDB's epoch_us on the same naive column.
         unix_micros(col("ts").cast(TimestampType))
       case other => throw new IllegalStateException(
         s"events.ts: unsupported parquet-loaded type $other")

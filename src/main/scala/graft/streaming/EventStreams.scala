@@ -52,12 +52,8 @@ object EventStreams {
     val dir = graft.infra.Staging.tempDir("graft-stream-q")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"), dir.resolve("events.parquet"))
-    // legacy layouts carry ts as parquet TIMESTAMP(NANOS): without this flag
-    // the schema-inference batch read throws 'Illegal Parquet type' unless
-    // Tables.table("events") happened to run earlier in the session and set
-    // the session-global conf — the stream must be self-contained across
-    // layouts (current MICROS layouts ignore the flag)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // legacy TIMESTAMP(NANOS) layouts load as raw longs under GraftSession's
+    // nanos policy, which the canonicalizer below normalizes
     val fileSchema = spark.read.parquet(dir.toString).schema
     val raw = spark.readStream.schema(fileSchema).parquet(dir.toString)
     graft.sources.Tables.canonicalizeEventTs(raw)

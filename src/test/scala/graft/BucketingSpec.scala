@@ -142,7 +142,7 @@ class BucketingSpec extends SparkSpec {
     // cooccur_counts_bucketed: both sides of the pair self-join read the
     // same doc_id-bucketed table, so the only Exchange in the whole plan is
     // the final (concept1, concept2) aggregation — the cooccurrence family's
-    // 100 TB layout (BucketedCooccurDemo measured 17→1 exchanges)
+    // 100 TB layout (SURVEY §7 records 17→1 exchanges)
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val docs = sources.Tables.documents(spark, "/root/testdata/sf0.001")

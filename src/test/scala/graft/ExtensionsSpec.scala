@@ -1,23 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Uses its own session: extensions must be installed at build time. */
-class ExtensionsSpec extends AnyFunSuite {
-
-  /** getOrCreate() would hand back the extension-less shared test session;
-    * clear the session registry (keeping the SparkContext) so a fresh
-    * SparkSession is built with GraftExtensions applied, then restore the
-    * shared session as default for the other suites. */
-  private lazy val spark: SparkSession = {
-    val shared = SparkSpec.session
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = GraftSession.builder("local[4]", 4).getOrCreate()
-    SparkSession.setDefaultSession(shared)
-    s
-  }
+/** Engine-level session wiring: the GraftExtensions installed by GraftSession. */
+class ExtensionsSpec extends SparkSpec {
 
   test("cosine_sim is callable from SQL via GraftExtensions") {
     import spark.implicits._
@@ -37,285 +21,6 @@ class ExtensionsSpec extends AnyFunSuite {
     val optimized = df.queryExecution.optimizedPlan.toString
     assert(!optimized.toLowerCase.contains("cosinesimilarity"))
     assert(df.as[Double].head() == 1.0)
-  }
-
-  private def rankTopK(s: SparkSession, extra: Boolean) = {
-    import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val df = (0L until 200L).map(i => (i % 5, (i * 37 % 101).toDouble, i, s"x$i"))
-      .toDF("g", "s", "id", "x")
-    val ranked = df.withColumn("rank", row_number().over(
-      Window.partitionBy("g").orderBy(col("s").desc, col("id").asc)))
-      .where(col("rank") <= 3)
-    if (extra) ranked.select("g", "rank", "id", "s", "x")
-    else ranked.select("g", "rank", "id", "s")
-  }
-
-  test("WindowTopKToBoundedHeap rewrites an eligible rank-window to the bounded heap") {
-    val q = rankTopK(spark, extra = false)
-    val opt = q.queryExecution.optimizedPlan
-    assert(opt.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-      s"window survived:\n$opt")
-    assert(q.queryExecution.executedPlan.toString.contains("top_k_agg"),
-      q.queryExecution.executedPlan.toString.take(2000))
-    // row-for-row identical to the extension-less session's window plan
-    val expected = rankTopK(SparkSpec.session, extra = false)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val got = q.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(got == expected)
-    assert(got.size == 15) // 5 groups x top-3
-  }
-
-  test("WindowTopKToBoundedHeap serves ascending (bottom-k) ranks via the heap's asc mode") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    def q(s: SparkSession) = {
-      import s.implicits._
-      (0L until 100L).map(i => (i % 4, (i * 13 % 47).toDouble, i)).toDF("g", "s", "id")
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(col("s").asc, col("id").asc)))
-        .where(col("rank") <= 2)
-        .select("g", "rank", "id", "s")
-    }
-    val rewritten = q(spark)
-    assert(rewritten.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty)
-    val expected = q(SparkSpec.session).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val got = rewritten.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(got == expected)
-  }
-
-  test("WindowTopKToBoundedHeap routes INTEGER score keys through the exact long-lane heap") {
-    // the composite-integer-key shape ("first k per key by (major, minor)")
-    // — the r12 concept_pair_sentences cap — must rewrite through
-    // TopKLongAgg, exact at any magnitude (no 2^53 double caveat), and stay
-    // row-identical to the window plan including HUGE keys
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    def q(s: SparkSession) = {
-      import s.implicits._
-      // majors beyond 2^53: the double lane would collapse neighbors
-      (0L until 120L).map(i => (i % 4, (1L << 60) + (i * 7 % 31), i))
-        .toDF("g", "major", "id")
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(col("major").asc, col("id").asc)))
-        .where(col("rank") <= 3)
-        .select("g", "rank", "major", "id")
-    }
-    val rewritten = q(spark)
-    assert(rewritten.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-      s"window survived:\n${rewritten.queryExecution.optimizedPlan}")
-    assert(rewritten.queryExecution.executedPlan.toString.contains("top_k_long_agg"),
-      rewritten.queryExecution.executedPlan.toString.take(2000))
-    val expected = q(SparkSpec.session).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val got = rewritten.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got == expected && got.size == 12)
-  }
-
-  test("WindowTopKToBoundedHeap routes MULTI-KEY integer sorts through the lexicographic heap") {
-    // the `(k1 ASC, k2 ASC, id ASC)` shape (verdict r12 item 6): the user
-    // writes the multi-column rank window directly — no hand-placing the
-    // minor key in the heap's id slot — and gets the bounded TopKLexAgg
-    // plan, exact at any 64-bit magnitude on every lane
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    def q(s: SparkSession) = {
-      import s.implicits._
-      (0L until 180L).map(i => (i % 4, (1L << 60) + (i * 7 % 13), i * 11 % 17, i))
-        .toDF("g", "major", "minor", "id")
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(col("major").asc, col("minor").asc, col("id").asc)))
-        .where(col("rank") <= 3)
-        .select("g", "rank", "major", "minor", "id")
-    }
-    val rewritten = q(spark)
-    assert(rewritten.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-      s"window survived:\n${rewritten.queryExecution.optimizedPlan}")
-    assert(rewritten.queryExecution.executedPlan.toString.contains("top_k_lex_agg"),
-      rewritten.queryExecution.executedPlan.toString.take(2000))
-    val expected = q(SparkSpec.session).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    val got = rewritten.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    assert(got == expected && got.size == 12)
-  }
-
-  test("WindowTopKToBoundedHeap leaves MIXED-direction multi-key sorts alone") {
-    // (k1 ASC, k2 DESC, id ASC) has no shared heap direction — the rewrite
-    // must not fire (a wrong direction on one lane would reorder results)
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val q = (0L until 60L).map(i => (i % 3, i % 5, i % 7, i))
-      .toDF("g", "major", "minor", "id")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("g").orderBy(col("major").asc, col("minor").desc, col("id").asc)))
-      .where(col("rank") <= 2)
-    assert(q.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.nonEmpty,
-      "mixed-direction sort must keep the window plan")
-  }
-
-  test("WindowTopKToBoundedHeap carries extra projection columns as heap payload") {
-    // column x (a child attribute outside {keys, rank, score, id}) rides
-    // the heap as cargo — the r8 verdict's top_parts_per_brand shape
-    val q = rankTopK(spark, extra = true)
-    val opt = q.queryExecution.optimizedPlan
-    assert(opt.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-      s"payload-carrying shape was not rewritten:\n$opt")
-    assert(q.queryExecution.executedPlan.toString.contains("top_k_agg"))
-    val expected = rankTopK(SparkSpec.session, extra = true).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getString(4))).toSet
-    val got = q.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getString(4))).toSet
-    assert(got == expected)
-    assert(got.size == 15)
-  }
-
-  test("WindowTopKToBoundedHeap handles extra filter conjuncts beside the rank bound") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    // Catalyst can't push `s > 40` below the Window, so the conjunction
-    // survives to the rule, which must re-apply it above the heap
-    def q(s: SparkSession) = {
-      import s.implicits._
-      (0L until 200L).map(i => (i % 5, (i * 37 % 101).toDouble, i, s"x$i"))
-        .toDF("g", "s", "id", "x")
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(col("s").desc, col("id").asc)))
-        .where(col("rank") <= 3 && col("s") > 40.0 && col("x") =!= "none")
-        .select("g", "rank", "id", "s", "x")
-    }
-    val rewritten = q(spark)
-    assert(rewritten.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-      s"conjunctive filter blocked the rewrite:\n${rewritten.queryExecution.optimizedPlan}")
-    val expected = q(SparkSpec.session).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getString(4))).toSet
-    val got = rewritten.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getString(4))).toSet
-    assert(got == expected && got.nonEmpty)
-  }
-
-  test("WindowTopKToBoundedHeap leaves a disjunctive rank condition alone") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    // OR means rows past rank k can survive — no bounded-heap equivalent
-    val q = (0L until 100L).map(i => (i % 4, (i * 13 % 47).toDouble, i))
-      .toDF("g", "s", "id")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("g").orderBy(col("s").desc, col("id").asc)))
-      .where(col("rank") <= 2 || col("s") > 40.0)
-      .select("g", "rank", "id", "s")
-    assert(q.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.nonEmpty,
-      s"disjunctive condition was rewritten:\n${q.queryExecution.optimizedPlan}")
-  }
-
-  test("WindowTopKToBoundedHeap leaves nullable score or id alone (ADVICE r8)") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    // row_number ranks null-id rows (NULLS FIRST on ASC); TopKAgg skips
-    // them — so the rewrite must refuse both nullable rank columns
-    val df = (0L until 50L).map(i => (i % 3, i.toDouble, i)).toDF("g", "s", "id")
-    def winPlan(scoreCol: org.apache.spark.sql.Column, idCol: org.apache.spark.sql.Column) =
-      df.select(col("g"), scoreCol.as("sc"), idCol.as("i"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(col("sc").desc, col("i").asc)))
-        .where(col("rank") <= 2)
-        .select("g", "rank", "i", "sc")
-    for (q <- Seq(
-        winPlan(when(col("s") > 10, col("s")), col("id")),   // nullable score
-        winPlan(col("s"), when(col("id") >= 0, col("id"))))) // nullable id
-      assert(q.queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.nonEmpty,
-        s"nullable rank column was rewritten:\n${q.queryExecution.optimizedPlan}")
-  }
-
-  test("WindowTopKToBoundedHeap ranks NaN scores exactly like the window sort") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    // Spark sorts NaN greatest: DESC puts it first, ASC last. The heap's
-    // java.lang.Double.compare ordering matches both directions (ADVICE r8:
-    // the old (-s, id) ordering evicted NaN under DESC, and negation would
-    // flip where NaN lands under ASC).
-    def q(s: SparkSession, desc: Boolean) = {
-      import s.implicits._
-      val df = Seq((0L, 1.0, 1L), (0L, Double.NaN, 2L), (0L, 5.0, 3L),
-        (0L, 2.0, 4L), (1L, Double.NaN, 5L), (1L, 0.5, 6L))
-        .toDF("g", "s", "id")
-      val ord = if (desc) col("s").desc else col("s").asc
-      df.withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(ord, col("id").asc)))
-        .where(col("rank") <= 2)
-        .select("g", "rank", "id", "s")
-    }
-    for (desc <- Seq(true, false)) {
-      val rewritten = q(spark, desc)
-      assert(rewritten.queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-        s"NaN-carrying eligible shape was not rewritten (desc=$desc)")
-      // NaN != NaN under Scala ==; compare score bit patterns
-      val expected = q(SparkSpec.session, desc).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-      val got = rewritten.collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-      assert(got == expected, s"desc=$desc: got $got, expected $expected")
-    }
-  }
-
-  test("randomized: rewritten plans are row-identical to window plans across shapes") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    // seeded sweep over direction × k × NaN density × payload/residual —
-    // every rewritten result must equal the plain session's window result
-    val rnd = new scala.util.Random(42)
-    for (trial <- 0 until 6) {
-      val n = 80 + rnd.nextInt(120)
-      val nanEvery = 7 + rnd.nextInt(13)
-      val rows = (0L until n.toLong).map { i =>
-        val s = if (i % nanEvery == 0) Double.NaN else (i * 37 % 101).toDouble
-        (i % (3 + trial % 3), s, i, s"p$i")
-      }
-      val k = 1 + rnd.nextInt(4)
-      val desc = trial % 2 == 0
-      val residual = trial % 3 == 0
-      def q(sess: SparkSession) = {
-        import sess.implicits._
-        val df = rows.toDF("g", "s", "id", "x")
-        val ord = if (desc) col("s").desc else col("s").asc
-        val ranked = df.withColumn("rank", row_number().over(
-          Window.partitionBy("g").orderBy(ord, col("id").asc)))
-        val cond = if (residual) col("rank") <= k && col("x") =!= "p1"
-                   else col("rank") <= k
-        ranked.where(cond).select("g", "rank", "id", "s", "x")
-      }
-      val rewritten = q(spark)
-      assert(rewritten.queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isEmpty,
-        s"trial $trial not rewritten")
-      def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          java.lang.Double.doubleToLongBits(r.getDouble(3)), r.getString(4))).toSet
-      val exp = canon(q(SparkSpec.session))
-      val got = canon(rewritten)
-      assert(got == exp, s"trial $trial (k=$k desc=$desc residual=$residual): " +
-        s"${got.diff(exp)} vs ${exp.diff(got)}")
-    }
   }
 
   test("GraftSession applies AQE + nanos policy") {

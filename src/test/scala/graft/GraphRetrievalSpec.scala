@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Embeddings, KnowledgeGraph}
+import graft.operators.{Cooccurrence, Embeddings, KnowledgeGraph}
 
 /** PageRank centrality, hard-negative mining, and the IVF probe sweep. */
 class GraphRetrievalSpec extends SparkSpec {
@@ -9,19 +9,23 @@ class GraphRetrievalSpec extends SparkSpec {
   private def annots(pairs: (Long, String)*) =
     pairs.toDF("doc_id", "concept_id")
 
+  /** The document-cooccurrence pair graph the *FromPairs operators read. */
+  private def docPairs(pairs: (Long, String)*) =
+    Cooccurrence.pairCounts(Cooccurrence.unitConcepts(annots(pairs: _*), Seq("doc_id")), Seq("doc_id"))
+
   test("pageRank on a regular graph keeps every rank at exactly 1.0") {
     // one doc with three concepts -> K3: every node degree 2, perfectly
     // symmetric, so the damped iteration is a fixpoint at 10^6 micro-units
-    val r = KnowledgeGraph.pageRank(
-      annots((1L, "XX:a"), (1L, "XX:b"), (1L, "XX:c"))).collect()
+    val r = KnowledgeGraph.pageRankFromPairs(
+      docPairs((1L, "XX:a"), (1L, "XX:b"), (1L, "XX:c"))).collect()
     assert(r.length == 3)
     assert(r.forall(_.getAs[Long]("degree") == 2L))
     assert(r.forall(_.getAs[Double]("pagerank") == 1.0))
   }
 
   test("pageRank concentrates mass on a star center; leaves stay symmetric") {
-    val r = KnowledgeGraph.pageRank(
-      annots((1L, "XX:c"), (1L, "XX:a"),
+    val r = KnowledgeGraph.pageRankFromPairs(
+      docPairs((1L, "XX:c"), (1L, "XX:a"),
              (2L, "XX:c"), (2L, "XX:b"),
              (3L, "XX:c"), (3L, "XX:d")))
       .collect().map(x => x.getAs[String]("concept_id") -> x.getAs[Double]("pagerank")).toMap
@@ -34,8 +38,8 @@ class GraphRetrievalSpec extends SparkSpec {
   }
 
   test("kHop layers a path graph by exact hop distance from the seed prefix") {
-    val d = KnowledgeGraph.kHop(
-      annots((1L, "S:a"), (1L, "M:b"), (2L, "M:b"), (2L, "M:c"), (3L, "M:c"), (3L, "M:d")),
+    val d = KnowledgeGraph.kHopFromPairs(
+      docPairs((1L, "S:a"), (1L, "M:b"), (2L, "M:b"), (2L, "M:c"), (3L, "M:c"), (3L, "M:d")),
       seedPrefix = "S")
       .collect().map(r => r.getAs[String]("concept_id") -> r.getAs[Long]("dist")).toMap
     assert(d == Map("S:a" -> 0L, "M:b" -> 1L, "M:c" -> 2L, "M:d" -> 3L))
@@ -43,8 +47,8 @@ class GraphRetrievalSpec extends SparkSpec {
 
   test("triangles counts the K3 exactly once per node and zeroes the pendant") {
     // doc1 makes a triangle a-b-c; doc2 hangs d off c (no new triangle)
-    val r = KnowledgeGraph.triangles(
-      annots((1L, "XX:a"), (1L, "XX:b"), (1L, "XX:c"), (2L, "XX:c"), (2L, "XX:d")))
+    val r = KnowledgeGraph.trianglesFromPairs(
+      docPairs((1L, "XX:a"), (1L, "XX:b"), (1L, "XX:c"), (2L, "XX:c"), (2L, "XX:d")))
       .collect().map(x => x.getAs[String]("concept_id") ->
         (x.getAs[Long]("degree"), x.getAs[Long]("n_triangles"),
           x.getAs[Double]("clustering_coeff"))).toMap
@@ -254,8 +258,8 @@ class GraphRetrievalSpec extends SparkSpec {
 
   test("neighborJaccard: triangle edges overlap fully-shared; pendant edge shares nothing") {
     // K3 plus a pendant d off c
-    val r = KnowledgeGraph.neighborJaccard(
-      annots((1L, "XX:a"), (1L, "XX:b"), (1L, "XX:c"), (2L, "XX:c"), (2L, "XX:d")))
+    val r = KnowledgeGraph.neighborJaccardFromPairs(
+      docPairs((1L, "XX:a"), (1L, "XX:b"), (1L, "XX:c"), (2L, "XX:c"), (2L, "XX:d")))
       .collect().map(x => (x.getAs[String]("concept_a"), x.getAs[String]("concept_b")) ->
         (x.getAs[Long]("common_neighbors"), x.getAs[Double]("jaccard"))).toMap
     // edge (a,b): common = {c}; union = N(a)+N(b)-1 = 2+2-1 = 3
@@ -274,7 +278,7 @@ class GraphRetrievalSpec extends SparkSpec {
         (i.toLong, Seq(s"XX:n$a", s"XX:n$b"))
       }
       val an = pairs.flatMap { case (d, cs) => cs.map(c => (d, c)) }
-      val r = KnowledgeGraph.pageRank(an.toDF("doc_id", "concept_id")).collect()
+      val r = KnowledgeGraph.pageRankFromPairs(docPairs(an: _*)).collect()
       val ranks = r.map(_.getAs[Double]("pagerank"))
       // every node keeps at least the damping floor; floors only ever leak mass
       assert(ranks.forall(_ >= 0.15), s"trial $trial: $ranks")

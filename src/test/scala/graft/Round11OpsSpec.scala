@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Concepts, Exports, KnowledgeGraph, LabelQa}
+import graft.operators.{Concepts, Cooccurrence, Exports, KnowledgeGraph, LabelQa}
 import org.apache.spark.sql.functions._
 
 class Round11OpsSpec extends SparkSpec {
@@ -18,10 +18,11 @@ class Round11OpsSpec extends SparkSpec {
     val nodes = KnowledgeGraph.kgxNodes(spark)
     // KGX_NODE_HEADER columns, exactly (KgxUtil.validateFile's column-count check)
     assert(nodes.columns.toSeq == Seq("id", "name", "category"))
-    val edges = KnowledgeGraph.kgxEdges(pp(d))
+    val edges = KnowledgeGraph.kgxEdgesFromPairs(
+      Cooccurrence.pairCounts(Cooccurrence.unitConcepts(pp(d), Seq("doc_id")), Seq("doc_id")))
     assert(edges.columns.toSeq ==
       Seq("subject", "edge_label", "object", "relation", "id", "association_type"))
-    val ev = KnowledgeGraph.kgxEdgesEvidence(pp(d))
+    val ev = KnowledgeGraph.kgxEdgesEvidenceFromUnits(Cooccurrence.unitConcepts(pp(d), Seq("doc_id")))
     assert(ev.columns.toSeq == Seq("subject", "edge_label", "object", "relation",
       "id", "association_type", "evidence_count", "has_evidence"))
     // the id digests the edge identity: same pair → same id across both tables
@@ -35,7 +36,7 @@ class Round11OpsSpec extends SparkSpec {
 
   test("kgx evidence: count matches supporting docs, list sorted and pipe-joined") {
     val d = docs("join table", "join table", "join row")
-    val ev = KnowledgeGraph.kgxEdgesEvidence(pp(d)).collect()
+    val ev = KnowledgeGraph.kgxEdgesEvidenceFromUnits(Cooccurrence.unitConcepts(pp(d), Seq("doc_id"))).collect()
       .map(r => (r.getAs[String]("subject"), r.getAs[String]("object")) -> r).toMap
     // join+table cooccur in docs 0,1 → 2 evidence nodes
     val jt = ev(("DS:table", "OP:join"))

@@ -70,26 +70,4 @@ class Round13OpsSpec extends SparkSpec {
       ("12", Relay.BaseTmuiUrl + "/12", false),
       ("7", Relay.BaseTmuiUrl + "/7", false)))
   }
-
-  // ------------------------------------------------------------ lex top-k
-
-  test("TopKLexAgg Column API orders lexicographically with id tiebreak at 64-bit magnitude") {
-    val big = 1L << 60
-    val df = Seq(
-      // g=1: (major, minor, id) — expect the 2 smallest lex composites
-      (1L, big + 2, 5L, 100L), (1L, big + 1, 9L, 101L),
-      (1L, big + 1, 3L, 102L), (1L, big + 1, 3L, 99L),
-      (2L, 1L, 1L, 1L))
-      .toDF("g", "major", "minor", "id")
-    val got = df.groupBy("g")
-      .agg(graft.functions.TopKLexAgg.topK(
-        Seq(col("major"), col("minor")), col("id"), 2, asc = true).as("tk"))
-      .select(col("g"), explode(col("tk")).as("e"))
-      .select(col("g"), col("e.s0"), col("e.s1"), col("e.id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val g1 = got.filter(_._1 == 1L).toSeq
-    // (big+1, 3, 99) then (big+1, 3, 102): minor=3 beats minor=9; id ASC ties
-    assert(g1 == Seq((1L, big + 1, 3L, 99L), (1L, big + 1, 3L, 102L)))
-    assert(got.filter(_._1 == 2L).toSeq == Seq((2L, 1L, 1L, 1L)))
-  }
 }

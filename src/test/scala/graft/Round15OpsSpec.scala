@@ -40,7 +40,7 @@ class Round15OpsSpec extends SparkSpec {
     // sentences, 2 concepts, 14 tokens
     assert(byLayer == Map("SECTION" -> 2, "PARAGRAPH" -> 1, "SENTENCE" -> 2,
       "CONCEPT" -> 2, "TOKEN" -> 14))
-    val z = BigQueryLoad.zoneTables(docs, annots)
+    val z = BigQueryLoad.zoneTablesFrom(BigQueryLoad.annotationUniverse(docs, annots))
       .as[(String, String, String)].collect().toSet
     val id = u.map(r => (r.getAs[String]("layer"), r.getAs[Long]("char_start")) ->
       r.getAs[String]("annotation_id")).toMap
@@ -86,7 +86,7 @@ class Round15OpsSpec extends SparkSpec {
   }
 
   test("annotation table drops zero-width spans and matches the load schema columns") {
-    val t = BigQueryLoad.annotationTable(docs, annots)
+    val t = BigQueryLoad.annotationTableFrom(BigQueryLoad.annotationUniverse(docs, annots))
     assert(t.columns.toSeq == Seq("annotation_id", "annotator_name", "document_id",
       "annotation_layer", "annotation_type", "span_start", "span_end", "covered_text"))
     assert(t.where(col("span_start") === col("span_end")).count() == 0)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Embeddings, KnowledgeGraph, TextStats}
+import graft.operators.{Cooccurrence, Embeddings, KnowledgeGraph, TextStats}
 import org.apache.spark.sql.functions._
 
 /** Hand-computed pins for the round-9 data-card operators. */
@@ -41,7 +41,9 @@ class Round9OpsSpec extends SparkSpec {
       (1L, "PR:000000001", 2L, "protein", 6L, 13L),
       (1L, "GO:0008150", 3L, "process", 14L, 21L))
       .toDF("doc_id", "concept_id", "ord", "tok", "char_start", "char_end")
-    val r = KnowledgeGraph.degreeDist(annots).collect()
+    val r = KnowledgeGraph.degreeDistFromPairs(
+        Cooccurrence.pairCounts(Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")))
+      .collect()
       .map(x => x.getAs[Long]("degree") -> x.getAs[Long]("n_nodes")).toMap
     // ancestor expansion may add nodes, but the raw triangle guarantees
     // at least one degree bucket and total node count >= 3
@@ -97,10 +99,10 @@ class Round9OpsSpec extends SparkSpec {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     val annots = operators.Concepts.postProcess(operators.Concepts.recognize(docs))
     // handshake lemma: sum(degree * n_nodes) == 2 |E| over the same pair graph
-    val dd = KnowledgeGraph.degreeDist(annots)
+    val pairs = Cooccurrence.pairCounts(Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id"))
+    val dd = KnowledgeGraph.degreeDistFromPairs(pairs)
       .agg(sum(col("degree") * col("n_nodes"))).as[Long].head()
-    val nEdges = operators.Cooccurrence.pairCounts(
-      operators.Cooccurrence.unitConcepts(annots, Seq("doc_id")), Seq("doc_id")).count()
+    val nEdges = pairs.count()
     assert(dd == 2 * nEdges, s"degree sum $dd != 2*|E| ${2 * nEdges}")
     // tokenPacking is start-offset-quantized: a sentence starting inside
     // the budget stays with its pack, so a pack may overrun by up to

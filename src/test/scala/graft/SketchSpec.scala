@@ -10,10 +10,8 @@ import org.apache.spark.sql.functions._
   * not a byte-identical oracle hash. */
 class SketchSpec extends SparkSpec {
 
-  private lazy val events = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private lazy val events =
     Tables.events(spark, "/root/testdata/sf0.001")
-  }
 
   test("approx quantiles track the exact sort-based quantiles") {
     val exact = Relational.eventsQuantiles(events).collect()

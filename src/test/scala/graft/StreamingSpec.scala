@@ -55,7 +55,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source streaming: readStream over the real events parquet → windowed counts") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // file stream source needs a directory — stage the real file into one
     val dir = java.nio.file.Files.createTempDirectory("graft-stream")
     java.nio.file.Files.copy(
@@ -76,7 +75,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming windowed counts ≡ batch eventsHourly on the same real data") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = java.nio.file.Files.createTempDirectory("graft-equiv")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),

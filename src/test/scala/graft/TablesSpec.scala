@@ -95,4 +95,18 @@ class TablesSpec extends SparkSpec {
       assert(got == us, s"canonicalized $got != $us for source type ${df.schema("ts").dataType}")
     }
   }
+
+  test("a real TIMESTAMP(NANOS) events parquet loads through Tables.events in the shared session") {
+    // events_nanos/events.parquet: three rows whose ts is parquet
+    // TIMESTAMP(NANOS) with sub-µs digits, the legacy layout the session's
+    // nanos-as-long policy and the LongType canonicalizer branch exist for
+    import spark.implicits._
+    val dir = new java.io.File(getClass.getResource("/events_nanos/events.parquet").toURI).getParent
+    // the raw read takes the legacy branch: NANOS arrives as a long, not a timestamp
+    assert(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType == LongType)
+    val ev = Tables.events(spark, dir)
+    assert(ev.schema("ts").dataType == LongType)
+    val got = ev.orderBy("event_id").select("ts").as[Long].collect().toSeq
+    assert(got == Seq(1704326400123456L, 1704330000000000L, 1704412800999999L))
+  }
 }

@@ -81,6 +81,12 @@ class TextOpsSpec extends SparkSpec {
     assert(r.init.forall(_.length == 50))
   }
 
+  /** The staged compression-quality operator over `df`, staged under a
+    * fresh directory so every call computes its own ratios. */
+  private def compressionQuality(df: org.apache.spark.sql.DataFrame) =
+    graft.operators.TextStats.compressionQualityStaged(df,
+      graft.infra.Staging.tempDir("graft-compression").toString)
+
   test("compression ratio separates repetitive text, prose, and noise") {
     import spark.implicits._
     val rep = "the same thing " * 200
@@ -88,7 +94,7 @@ class TextOpsSpec extends SparkSpec {
       "footer statistics exclude the predicate, which is the cheapest IO there is. " * 5
     val noise = new scala.util.Random(42).alphanumeric.take(4000).mkString
     val df = Seq((1L, rep), (2L, prose), (3L, noise)).toDF("doc_id", "text")
-    val r = graft.operators.TextStats.compressionQuality(df).collect()
+    val r = compressionQuality(df).collect()
       .map(x => x.getLong(0) -> (x.getDouble(1), x.getBoolean(2), x.getBoolean(3))).toMap
     assert(r(1L)._1 < r(2L)._1 && r(2L)._1 < r(3L)._1)
     assert(r(1L)._2, s"repetitive text should flag is_repetitive: ${r(1L)}")
@@ -98,9 +104,9 @@ class TextOpsSpec extends SparkSpec {
   test("compression ratio is deterministic and 1.0 on empty text") {
     import spark.implicits._
     val df = Seq((1L, ""), (2L, "abc")).toDF("doc_id", "text")
-    val a = graft.operators.TextStats.compressionQuality(df).collect()
+    val a = compressionQuality(df).collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
-    val b = graft.operators.TextStats.compressionQuality(df).collect()
+    val b = compressionQuality(df).collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(a == b)
     assert(a(1L) == 1.0)

@@ -6,7 +6,10 @@ diff, not a hand-maintained list (ADVICE r17 item 5).
 Normalization strips run-varying tokens that do not change the plan's
 shape: expression ids (#123), codegen/plan ids, subquery ids, staging
 temp-dir paths and hash-suffixed staged table names, InMemoryFileIndex
-paths, AQE isFinalPlan markers.
+paths, random-suffixed graft temp dirs, JVM lambda identities, RDD ids
+and source lines of checkpointed-RDD scans, AQE
+isFinalPlan markers, and the expression-id-dependent operand order of the
+Expand/Aggregate lines Spark generates for several count_distinct.
 
 Usage:
   # produce fingerprints from an ExplainDump all-queries dump
@@ -28,11 +31,24 @@ def normalize(body: str) -> str:
     # staged artifacts: per-sfdir hash-suffixed table names + temp dirs
     b = re.sub(r"graft_[a-z0-9_]+_[0-9a-f]{6,}", "graft_staged", b)
     b = re.sub(r"file:[^\],\s]+", "file:PATH", b)
+    # per-run temp dirs outside file: URIs (e.g. BioNlpScan(path=...)):
+    # createTempDirectory appends a random number to the graft- prefix
+    b = re.sub(r"(/graft-[A-Za-z_-]*?)-?\d{5,}", r"\1-N", b)
+    # JVM lambda identities in object-operator arguments
+    b = re.sub(r"\$\$Lambda[$/\w]*@[0-9a-f]+", "$$Lambda", b)
+    # scans of checkpointed RDDs name the RDD id and the creating source line
+    b = re.sub(r"(\w+RDD)\[\d+\] at (\w+) at ([\w.]+):\d+", r"\1[n] at \2 at \3", b)
     b = re.sub(r"Location: \w+ \[[^\]]*\]", "Location: X", b)
     b = re.sub(r"isFinalPlan=\w+", "", b)
     # operator numbering shifts when subtrees reorder identically
     b = re.sub(r"^\((\d+)\) ", "() ", b, flags=re.M)
     b = re.sub(r"\(\d+\)", "(n)", b)
+    # several count_distinct in one aggregate: Spark's distinct-aggregate
+    # rewrite orders the Expand's groups (and the gid literal each group
+    # gets) by expression id, so every line carrying its generated gid
+    # column permutes between runs. Compare those lines as token multisets.
+    b = "\n".join(" ".join(sorted(re.findall(r"\w+|[^\w\s]", ln))) if "gid#x" in ln else ln
+                  for ln in b.split("\n"))
     return b
 
 

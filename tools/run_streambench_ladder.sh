@@ -4,20 +4,16 @@
 # output JSONL — the r15 ladder stopped at sf1.0; this one climbs both
 # decades (sf0.1 → sf1.0 → sf3.0 → sf10). Work column should stay
 # sub-linear in bytes; floors should stay flat (scheduling, not data).
+# Each rung goes through tools/launch.sh (environment gate, cores, heap).
 # Usage: tools/run_streambench_ladder.sh <out.jsonl> [sfDir ...]
 set -u
-bash "$(dirname "$0")/probe_env_gate.sh" || exit 1
 OUT=${1:-baselines/streambench_scale_r17.jsonl}
 shift || true
 RUNGS=${@:-/root/testdata/sf0.1 /tmp/graft-scale/sf1.0 /tmp/graft-scale/sf3.0 /tmp/graft-scale/sf10}
-ADD_OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 : > "$OUT"
 for sf in $RUNGS; do
   echo "[stream-ladder] $sf" >&2
-  SPARK_GRAFT_SF_DIR="$sf" SPARK_GRAFT_CPUS=32 \
-  java $ADD_OPENS -Xmx48g -Dspark.ui.enabled=false \
-    -Dspark.sql.session.timeZone=UTC \
-    -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-    graft.StreamBench 2>/dev/null | grep '"metric":"stream_floor"' >> "$OUT"
+  SPARK_GRAFT_SF_DIR="$sf" "$(dirname "$0")/launch.sh" graft.StreamBench 2>/dev/null \
+    | grep '"metric":"stream_floor"' >> "$OUT"
 done
 echo "[stream-ladder] wrote $(wc -l < "$OUT") rungs to $OUT" >&2
