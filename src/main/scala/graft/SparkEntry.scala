@@ -63,6 +63,10 @@ object SparkEntry {
     * (ConceptCooccurrenceCountsPipeline → BigQuery cooccurrence schema) and
     * the KG family consumes the published tables; re-running the pair join
     * inside every KG query was the r14 trapi_edges drift mechanism. */
+  private def docPairCounts(s: SparkSession, d: String): DataFrame =
+    Cooccurrence.pairCounts(unitsAt(s, d, "document"), Seq("doc_id"))
+      .select(col("concept1"), col("concept2"), col("pair_count"))
+
   private def pairsAt(s: SparkSession, d: String): DataFrame =
     Cooccurrence.stagedPairCounts(unitsAt(s, d, "document"), d, "document", Seq("doc_id"))
 
@@ -132,13 +136,11 @@ object SparkEntry {
       val aug = docs(s, d).select(col("doc_id"),
         concat(col("text"), lit("\n\n@@AUG@@ "),
           array_join(slice(split(col("text"), " "), 1, 5), " ")).as("text"))
-      // tokensOrdered: the marker-boundary filter references char_start,
-      // and row-local span expressions get substituted into every pushed
-      // predicate (isnotnull inference included) — measured 0.36→1.37 s
-      // isolated; with window-attribute spans the filter is an attribute
-      // comparison (see TextOps.tokensOrdered)
+      // the marker-boundary filter compares char_start, a Generate output
+      // of tokens(): pushdown and null-filter inference read the attribute,
+      // they cannot re-substitute a span derivation into each predicate
       Concepts.filterAugmented(
-        Concepts.recognizeTokens(TextOps.tokensOrdered(aug)), aug)
+        Concepts.recognizeTokens(TextOps.tokens(aug)), aug)
     }),
     "concepts_pp_strict" -> ((s, d) => {
       // noisy channel: stopword-covered and bracket-broken annots that the
@@ -319,10 +321,10 @@ object SparkEntry {
       Relay.stagedParsedSampleSentences(Tables.orders(s, d), d))),
     "abbrev" -> ((s, d) => Abbreviations.partAbbreviations(Tables.part(s, d))),
     // C. cooccurrence & corpus stats
-    "cooccur_counts_doc" -> ((s, d) =>
-      Cooccurrence.pairCounts(unitsAt(s, d, "document"), Seq("doc_id"))
-        .select(col("concept1"), col("concept2"), col("pair_count"))),
-    "cooccur_counts_bucketed" -> ((s, d) => Cooccurrence.pairCountsBucketed(pp(s, d), d)),
+    "cooccur_counts_doc" -> docPairCounts,
+    // the doc-level pair self-join over the doc_id-bucketed units artifact,
+    // the path the production chain runs (same oracle as cooccur_counts_doc)
+    "cooccur_counts_bucketed" -> docPairCounts,
     "cooccur_counts_sent" -> ((s, d) =>
       Cooccurrence.pairCounts(unitsAt(s, d, "sentence"), Seq("doc_id", "sent_id"))
         .select(col("concept1"), col("concept2"), col("pair_count"))),

@@ -106,14 +106,20 @@ object Staging {
     * (measured 17 → 1 exchanges on the cooccurrence
     * pair join). Same canonical-inputs contract as [[stageOnce]].
     *
+    * Bucket width = the session's `spark.sql.shuffle.partitions`:
+    * GraftSession sets it to the local core count, spark-submit to the
+    * cluster's. The write, every scan of the artifact and every consumer
+    * join or aggregation that inherits its partitioning then run one task
+    * per core, the same width as the shuffles around them; a fixed count
+    * above the core count only multiplies per-task constants.
+    *
     * The table lives in a process-lifetime temp dir (registered for exit
     * cleanup) and its catalog entry in the session's SharedState, so the key
     * includes the SharedState identity: a second SparkContext in one JVM
     * (test suites) re-derives rather than reading a table its catalog has
     * never heard of. */
   def stageOnceBucketed(name: String, sfDir: String, derive: => DataFrame,
-                        spark: SparkSession, bucketCol: String,
-                        buckets: Int = 32): DataFrame = {
+                        spark: SparkSession, bucketCol: String): DataFrame = {
     val canon = try new java.io.File(sfDir).getCanonicalPath
                 catch { case _: java.io.IOException => new java.io.File(sfDir).getAbsolutePath }
     // sanitized path + hash, same injectivity discipline as oracleStagePath
@@ -138,6 +144,7 @@ object Staging {
         // re-sorted the scan per query (at sf10 the zone-containment join
         // paid ~100M-row external sorts per side, the dominant constant of
         // its last probe decade).
+        val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
         derive.repartition(buckets, org.apache.spark.sql.functions.col(bucketCol))
           .write.mode("overwrite")
           .option("path", dir.resolve(table).toString)

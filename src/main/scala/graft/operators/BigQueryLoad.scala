@@ -177,12 +177,10 @@ object BigQueryLoad {
     * head/deprel columns, made synthetic the same way the CoNLL-U builder
     * synthesizes upos). */
   def relationTable(docs: DataFrame): DataFrame = {
-    // tokensOrdered: the lag window below already costs the (doc_id, ord)
-    // Exchange + Sort; the running-sum spans ride it as attributes, where
-    // row-local substring_index spans would be re-evaluated per reference
-    // (annotId hash input + inferred null filters) — measured 1.0→1.5 s
-    // isolated on the row-local form
-    val toks = TextOps.tokensOrdered(docs)
+    // spans are Generate outputs of tokens(), i.e. attributes: the
+    // annotId hash input and the inferred null filters read them, they do
+    // not re-derive them per reference
+    val toks = TextOps.tokens(docs)
       .withColumn("sent_id", expr(s"(ord - 1) div ${TextOps.SentWindow}"))
       .withColumn("tok_id", ((col("ord") - 1) % TextOps.SentWindow + 1).cast("long"))
       .withColumn("annotation_id", annotId(col("doc_id"), col("char_start"),

@@ -83,14 +83,20 @@ object Cooccurrence {
   /** The level's metrics table staged ONCE per (process, corpus) — the
     * exported cooccurrence SCORES artifact (the reference publishes NGD/
     * NPMI per pair; KG edge builds and the distant-supervision KB read the
-    * published table). Same canonical-inputs contract as
-    * [[stagedPairCounts]]. The cooccur_metrics_* queries themselves stay
-    * honest computations from the unit table — only downstream CONSUMERS
-    * of the scores read the staged artifact. */
+    * published table). As in the reference's metrics pipeline, which reads
+    * the counts pipeline's output, the pairs are the staged
+    * [[stagedPairCounts]] table (staged here first if no one has): the
+    * pair self-join runs once per level, not once per artifact. The unit
+    * table contributes only the singleton counts and N. Same
+    * canonical-inputs contract as [[stagedPairCounts]]. The
+    * cooccur_metrics_* queries themselves stay honest computations from
+    * the unit table ([[metricsFromUnits]]) — only downstream CONSUMERS of
+    * the scores read the staged artifact. */
   def stagedMetrics(units: DataFrame, sfDir: String, level: String,
                     unitCols: Seq[String]): DataFrame =
     graft.infra.Staging.stageOnce(s"cooccur_scores_$level", sfDir,
-      metricsFromUnits(units, unitCols), units.sparkSession)
+      scorePairs(stagedPairCounts(units, sfDir, level, unitCols), units, unitCols),
+      units.sparkSession)
 
   /** concept1, concept2, pair_count over units. */
   def pairCounts(unitsIn: DataFrame, unitCols: Seq[String]): DataFrame = {
@@ -103,37 +109,6 @@ object Cooccurrence {
       .where(col("concept1") < col("concept2"))
       .groupBy("concept1", "concept2")
       .agg(count(lit(1)).as("pair_count"))
-  }
-
-  // per-process staging of the doc_id-bucketed unit-concepts table
-  private val unitsBucketed = scala.collection.mutable.Map[String, String]()
-  val UnitsBuckets = 8
-
-  /** [[pairCounts]] over a PERSISTED doc_id-bucketed unit-concepts table —
-    * the storage layout the 100 TB cooccurrence family reads (the in-session
-    * `repartition + persist` in [[unitConcepts]] is this layout's transient
-    * analog; SURVEY §7 records the difference at 17→1 exchanges /
-    * 29.4→3.6 s). With both sides of the pair self-join coming from the same
-    * bucketed table, the join plans with ZERO exchanges — only the final
-    * (concept1, concept2) aggregation shuffles. Same result and oracle as
-    * `cooccur_counts_doc`; BucketingSpec pins the plan shape. */
-  def pairCountsBucketed(annots: DataFrame, sfDir: String): DataFrame = {
-    val spark = annots.sparkSession
-    val table = unitsBucketed.synchronized {
-      unitsBucketed.getOrElseUpdate(sfDir, {
-        val t = f"graft_units_doc_${sfDir.hashCode & 0x7fffffff}%x"
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val dir = graft.infra.Staging.tempDir("graft-units-bucketed")
-        unitConcepts(annots, Seq("doc_id"))
-          .write.mode("overwrite")
-          .option("path", dir.resolve(t).toString)
-          .bucketBy(UnitsBuckets, "doc_id")
-          .format("parquet").saveAsTable(t)
-        t
-      })
-    }
-    pairCounts(spark.table(table), Seq("doc_id"))
-      .select(col("concept1"), col("concept2"), col("pair_count"))
   }
 
   /** concept_id, unit_count (number of units containing the concept). */
@@ -151,11 +126,17 @@ object Cooccurrence {
     * [[stagedUnitConcepts]] for the eviction-immune bucketed artifact
     * (query wiring), or [[unitConcepts]] for a one-shot in-session run. */
   def metricsFromUnits(unitsIn: DataFrame, unitCols: Seq[String]): DataFrame = {
-    // reused 4x below (pair l/r, singletons, total) — one managed per-query
+    // reused 4x (pair l/r, singletons, total) — one managed per-query
     // cache whether the input is the staged file scan or already cached
     // (managed is idempotent on a cached Dataset)
     val units = graft.infra.Caches.managed(unitsIn)
-    val pairs = pairCounts(units, unitCols)
+    scorePairs(pairCounts(units, unitCols), units, unitCols)
+  }
+
+  /** The metrics of [[metricsFromUnits]] for pair counts already in hand
+    * (concept1, concept2, pair_count over the units of `units`): singleton
+    * counts and the unit total N come from `units`. */
+  private def scorePairs(pairs: DataFrame, units: DataFrame, unitCols: Seq[String]): DataFrame = {
     val singles = singletonCounts(units)
     // total unit count as a 1-row aggregate cross-joined (broadcast) into the
     // pair table — N stays inside the plan; no job launches at DataFrame

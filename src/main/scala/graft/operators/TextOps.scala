@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.functions.Agg
+import graft.functions.TokenWindows.tokenWindows
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document preparation + token/sentence structure.
@@ -43,46 +43,17 @@ object TextOps {
   /** doc_id, ord (1-based), tok, char_start, char_end — spans index into text
     * with single-space separators, validated in tests à la SpanValidator.
     *
-    * Fully row-local (scan → explode → project): a token's char span is a
-    * prefix length of its own document's text — char_start of token ord is
-    * one past the (ord−1)-token prefix, char_end = char_start + len(tok) —
-    * so no running-sum Window (Exchange + Sort of the full token stream per
-    * derivation; guide §2.4) is needed. Per-token substring_index costs
-    * O(prefix chars) — quadratic in DOC length with a memchr-sized constant,
-    * the deliberate shuffle-for-bounded-CPU trade of the r17 sentences()
-    * rewrite (docs here are abstract-sized; the removed corpus-wide
-    * Exchange+Sort is the term that grows with corpus size, the per-doc
-    * scan term only with document length). */
+    * Fully row-local (scan → Generate → project): the [[TokenWindows]]
+    * kernel walks each document once and emits every token with its span,
+    * so cost is linear in document length and no running-sum Window
+    * (Exchange + Sort of the full token stream; guide §2.4) is needed. The
+    * spans are Generate outputs, i.e. attributes: filter pushdown and
+    * null-filter inference read them, they never re-derive them. A null
+    * text yields no tokens. */
   def tokens(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("ord"), col("tok"),
-        when(col("pos") === 0, lit(0L))
-          .otherwise(expr("CAST(length(substring_index(text, ' ', pos)) AS BIGINT) + 1"))
-          .as("char_start"))
-      .select(col("doc_id"), col("ord"), col("tok"), col("char_start"),
-        (col("char_start") + length(col("tok")).cast("long")).as("char_end"))
-
-  /** [[tokens]] with char spans derived by the doc-partitioned running-sum
-    * Window (the pre-r18 tokens() implementation) — ONLY for consumers
-    * whose own plan already requires an Exchange + Sort by (doc_id, ord)
-    * (BigQueryLoad.relationTable's lag window) or that reference the span
-    * columns from multiple filters (concepts_aug_filter's boundary
-    * filter): there the spans ride the one exchange as plain ATTRIBUTES —
-    * a running sum, evaluated exactly once — where the row-local
-    * substring_index form is an O(prefix)-per-row EXPRESSION that filter
-    * pushdown and isnotnull-inference re-substitute per reference
-    * (measured: recognize-over-augmented 0.40→0.88 s, aug_filter
-    * 0.36→1.37 s isolated noop probes on the row-local form; back to base
-    * with this variant). Every other call site wants [[tokens]]: same
-    * rows, scan-shaped, no corpus-wide token shuffle. */
-  def tokensOrdered(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("ord")
-    docs.select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-      .withColumn("ord", (col("pos") + 1).cast("long")).drop("pos")
-      .withColumn("char_end", sum(length(col("tok")) + 1).over(w).cast("long") - 1)
-      .withColumn("char_start", col("char_end") - length(col("tok")))
-      .select(col("doc_id"), col("ord"), col("tok"), col("char_start").cast("long"), col("char_end"))
-  }
+    docs.select(col("doc_id"), tokenWindows(col("text"), 1))
+      .select(col("doc_id"), (col("idx") + 1L).as("ord"), col("span").as("tok"),
+        col("char_start"), col("char_end"))
 
   /** [[tokens]] with the DOCUMENT stream explicitly co-partitioned by
     * doc_id before the explode. The pre-r18 tokens() ran a running-sum
@@ -179,34 +150,17 @@ object TextOps {
   }
 
   /** Fixed-window segmentation: sentence = SentWindow consecutive tokens.
-    * doc_id, sent_id (0-based), sent_text, n_tokens, char_start, char_end. */
-  def sentences(docs: DataFrame): DataFrame = {
-    // Fully row-local (scan → explode → project): a window's char span is a
-    // prefix length of the single-space-separated text — char_end of token
-    // m is length(substring_index(text, ' ', m)) and the next token starts
-    // one past it — and its covered text is the substring between the two
-    // boundaries, so every output column derives inside the document's own
-    // row. The explode-tokens → groupBy(doc_id, sent_id) form paid an
-    // Exchange + Sort + ordered-aggregation over the FULL TOKEN STREAM per
-    // derivation (guide §2.4: remove shuffles outright); exact same rows:
-    // min(char_start) is the first window token's start, max(char_end) the
-    // last's end, and the ordered string agg is the text between them.
-    val w = SentWindow
-    docs
-      .select(col("doc_id"), col("text"), size(split(col("text"), " ")).as("n"))
-      .select(col("doc_id"), col("text"), col("n"),
-        explode(sequence(lit(0L), expr(s"CAST((n - 1) DIV $w AS BIGINT)"))).as("sent_id"))
-      .withColumn("m_end", least(col("n").cast("long"), (col("sent_id") + 1) * w))
-      .withColumn("char_end",
-        expr("CAST(length(substring_index(text, ' ', CAST(m_end AS INT))) AS BIGINT)"))
-      .withColumn("char_start", when(col("sent_id") === 0, lit(0L))
-        .otherwise(expr(
-          s"CAST(length(substring_index(text, ' ', CAST(sent_id * $w AS INT))) AS BIGINT) + 1")))
-      .select(col("doc_id"), col("sent_id"),
-        expr("substring(text, char_start + 1, char_end - char_start)").as("sent_text"),
-        (col("m_end") - col("sent_id") * w).cast("long").as("n_tokens"),
-        col("char_start"), col("char_end"))
-  }
+    * doc_id, sent_id (0-based), sent_text, n_tokens, char_start, char_end.
+    *
+    * The same one-pass [[TokenWindows]] kernel as [[tokens]], with windows
+    * of SentWindow tokens: each window's covered text and span come out of
+    * the document's own row (scan → Generate → project), linear in document
+    * length and with no Exchange over the token stream. The last window of
+    * a document holds the remaining 1..SentWindow tokens. */
+  def sentences(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokenWindows(col("text"), SentWindow))
+      .select(col("doc_id"), col("idx").as("sent_id"), col("span").as("sent_text"),
+        col("n_tokens"), col("char_start"), col("char_end"))
 
   /** Derive a deterministic punctuated text column (doc_id, punct_text):
     * sentence windows joined with cycling terminators ('. ', '! ', '? ',

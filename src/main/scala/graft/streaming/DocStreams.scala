@@ -11,11 +11,10 @@ import org.apache.spark.sql.streaming.OutputMode
   * our recognition chain is declarative and stateless — tokenize, row-local
   * hygiene filters, broadcast dictionary join — the identical operator
   * pipeline also runs incrementally over a document stream, giving
-  * ingest-time concept annotation with no reprocessing. The only batch-only
-  * construct in the batch path is the running-offset window in
-  * TextOps.tokens; [[streamTokens]] replaces it with a per-document
-  * prefix-sum over the token array (a linear higher-order `aggregate`),
-  * which is stateless and therefore streaming-legal.
+  * ingest-time concept annotation with no reprocessing. Tokenization is
+  * already streaming-legal: TextOps.tokens derives every span inside the
+  * document's own row (one Generate, no window), so [[streamTokens]] is
+  * that same operator.
   */
 object DocStreams {
 
@@ -45,21 +44,10 @@ object DocStreams {
     spark.readStream.schema(schema).parquet(dir.toString)
   }
 
-  /** Streaming-safe dual of TextOps.tokens: identical output columns
-    * (doc_id, ord, tok, char_start, char_end), but the running character
-    * offset comes from a per-document array prefix-sum instead of a window
-    * function (windows are not allowed on streams). */
-  def streamTokens(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("starts",
-        expr("slice(aggregate(toks, array(0L), " +
-          "(acc, t) -> array_append(acc, element_at(acc, -1) + length(t) + 1)), 1, size(toks))"))
-      .select(col("doc_id"), posexplode(arrays_zip(col("toks"), col("starts"))).as(Seq("pos", "z")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("ord"),
-        col("z.toks").as("tok"),
-        col("z.starts").as("char_start"),
-        (col("z.starts") + length(col("z.toks"))).cast("long").as("char_end"))
+  /** The token stream of a document stream: TextOps.tokens itself
+    * (doc_id, ord, tok, char_start, char_end). Its span kernel is a
+    * stateless per-row Generate, which Structured Streaming runs as is. */
+  def streamTokens(docs: DataFrame): DataFrame = graft.operators.TextOps.tokens(docs)
 
   /** Dictionary concept recognition executed by the real streaming engine
     * over the staged documents stream; append-mode, stateless, so the

@@ -139,10 +139,13 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("bucketed unit-concepts pair self-join plans zero join exchanges") {
-    // cooccur_counts_bucketed: both sides of the pair self-join read the
-    // same doc_id-bucketed table, so the only Exchange in the whole plan is
-    // the final (concept1, concept2) aggregation — the cooccurrence family's
-    // 100 TB layout (SURVEY §7 records 17→1 exchanges)
+    // the chain's path (stagedUnitConcepts → pairCounts, which
+    // cooccur_counts_doc/_bucketed and stagedPairCounts run): both sides of
+    // the pair self-join read the same doc_id-bucketed table, so the only
+    // Exchange in the whole plan is the final (concept1, concept2)
+    // aggregation — the cooccurrence family's 100 TB layout (SURVEY §7
+    // records 17→1 exchanges)
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val docs = sources.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -152,7 +155,17 @@ class BucketingSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = operators.Cooccurrence.pairCountsBucketed(annots, "/root/testdata/sf0.001")
+      // a fresh corpus key: the artifact is derived here, never reused
+      val stageDir = graft.infra.Staging.tempDir("graft-bucket-units").toString
+      val units = operators.Cooccurrence.stagedUnitConcepts(
+        annots, stageDir, "document", Seq("doc_id"))
+      val scan = units.queryExecution.executedPlan
+      val buckets = scan.collect { case s: FileSourceScanExec => s.relation.bucketSpec }
+      assert(buckets.nonEmpty && buckets.forall(_.map(_.numBuckets).contains(
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)),
+        s"staged units must carry one bucket per shuffle partition:\n$scan")
+      val df = operators.Cooccurrence.pairCounts(units, Seq("doc_id"))
+        .select("concept1", "concept2", "pair_count")
       val plan = df.queryExecution.executedPlan
       val joins = plan.collect { case j: SortMergeJoinExec => j }
       assert(joins.nonEmpty, s"expected a sort-merge pair join:\n$plan")
@@ -170,6 +183,7 @@ class BucketingSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      graft.infra.Caches.unpersistManaged()
     }
   }
 
@@ -185,8 +199,8 @@ class BucketingSpec extends SparkSpec {
       (1L to 500L).map(i => (i % 23, s"c${i % 7}")).toDF("doc_id", "concept_id")
     }
     val dir = graft.infra.Staging.tempDir("graft-stage-spec").toString
-    val a = graft.infra.Staging.stageOnceBucketed("bucketspec_pp", dir, derive, spark, "doc_id", 4)
-    val b = graft.infra.Staging.stageOnceBucketed("bucketspec_pp", dir, derive, spark, "doc_id", 4)
+    val a = graft.infra.Staging.stageOnceBucketed("bucketspec_pp", dir, derive, spark, "doc_id")
+    val b = graft.infra.Staging.stageOnceBucketed("bucketspec_pp", dir, derive, spark, "doc_id")
     assert(derivations == 1, "second call must read the artifact, not re-derive")
     assert(b.count() == 500L)
     val distinctPlan = a.select("doc_id", "concept_id").distinct()

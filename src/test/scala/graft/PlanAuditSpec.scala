@@ -369,6 +369,25 @@ class PlanAuditSpec extends SparkSpec {
       "bare .persist() outside Caches.managed:\n" + offenders.mkString("\n"))
   }
 
+  test("no span derivation re-scans a text prefix per token (source gate)") {
+    // Token and sentence spans come from the one-pass TokenWindows kernel.
+    // A `substring_index(text, ' ', k)` span re-reads the document's first
+    // k tokens for every token or window, so a document costs the square
+    // of its length (the pre-kernel tokens()/sentences() form, whose
+    // per-token prefix scan dominated full-text profiles).
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("substring_index(text") => s"$p:${i + 1}: ${l.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty,
+      "prefix-scan span derivation under src/main:\n" + offenders.mkString("\n"))
+  }
+
   test("managed caches drain to an empty CacheManager after each query (runtime gate)") {
     // Representative members of every cache-carrying family (dedup shingle
     // sets, cooccurrence unit sets, embedding cell ranks, export batches,
