@@ -9,10 +9,13 @@ import org.apache.spark.sql.SparkSession
   * (Verify/Bench) drain them after each query, so no persist's lifetime
   * outlives the query that created it and no query's latency depends on
   * what earlier queries pinned (the r9–r13 eviction-wave class). Plans
-  * shared ACROSS queries are staged file artifacts (Staging.stageOnce*),
-  * never caches: the concept-pipeline prefix, the per-level cooccurrence
-  * unit-concept tables, the MinHash signature table, the window-id table,
-  * the near-dup band index. A long-lived service embedding these operators
+  * shared ACROSS queries are staged file artifacts (Staging.stage, keyed
+  * by the plan they materialize), never caches: the concept-pipeline
+  * prefix, the per-level cooccurrence unit-concept tables, the MinHash
+  * signature table, the window-id table, the near-dup band index. A bare
+  * scan of such an artifact is never cached — a second scan of the file
+  * costs what reading an in-memory copy would, without building the copy.
+  * A long-lived service embedding these operators
   * calls [[unpersistAll]] between corpora (or at request boundaries) for
   * the same storage hygiene.
   */
@@ -46,14 +49,16 @@ object Caches {
     * class, closed per VERDICT r13 item 2). Within one query the timing
     * is unchanged — the cold pass establishes the cache, the same plan
     * reuses it, the drain runs after. Plans meant to be shared ACROSS
-    * queries are staged file artifacts (Staging.stageOnce*), not caches. */
+    * queries are staged file artifacts (Staging.stage), not caches; a
+    * bare artifact scan is returned as it is. */
   def managed[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
     // idempotent: composed operators each wrap their multiply-read inputs
     // (metricsFromUnits → pairCounts hand the same Dataset down), so a plan
     // may arrive here already cached — skip the re-persist (CacheManager
     // would WARN and no-op) and the duplicate registration (unpersist on a
     // drained duplicate is itself a no-op, but the queue needn't grow)
-    if (ds.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+    if (ds.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
+        !Staging.isArtifactScan(ds.queryExecution.analyzed)) {
       ds.persist()
       registerManaged(ds)
     }

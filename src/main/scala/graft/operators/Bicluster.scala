@@ -78,22 +78,18 @@ object Bicluster {
     header.unionByName(data)
   }
 
-  private def stage(name: String, sfDir: String, derive: => DataFrame,
-                    spark: org.apache.spark.sql.SparkSession): DataFrame =
-    graft.infra.Staging.stageOnce(name, sfDir, derive, spark)
-
   /** [[serializePartI]] staged ONCE per (process, corpus). The reference
     * models FILES written once by the Percha-Altman pipeline and read by
     * every consumer (PerchaAltmanPartIFileParser.java:88-179 takes a path);
     * the three bicluster queries each re-derived the serialize chain per
     * query — 3× the part-i cost per bench pass (VERDICT r11 item 4). */
   def stagedPartI(annots: DataFrame, sfDir: String): DataFrame =
-    stage("bicluster_part_i", sfDir, serializePartI(annots), annots.sparkSession)
+    graft.infra.Staging.stageOnce("bicluster_part_i", sfDir, serializePartI(annots), annots.sparkSession)
 
   /** [[serializePartII]] staged ONCE per (process, corpus) — same file
     * contract (PerchaAltmanPartIIFileParser.java reads the written file). */
   def stagedPartII(docs: DataFrame, annots: DataFrame, sfDir: String): DataFrame =
-    stage("bicluster_part_ii", sfDir, serializePartII(docs, annots), docs.sparkSession)
+    graft.infra.Staging.stageOnce("bicluster_part_ii", sfDir, serializePartII(docs, annots), docs.sparkSession)
 
   /** path, theme, score — the flagship (path, theme) rows parsed back from
     * the part-i lines (getFlagshipPaths:88-117 + getFlagshipThemeScore:

@@ -220,23 +220,14 @@ object Bpe {
       })
       .groupBy("doc_id").agg(sum(size(col("syms"))).cast("long").as("n_bpe_tokens"))
 
-  // per-process staging of the merge-table artifact (written once per
-  // process+sfDir; canonical-path-keyed like every oracle stage)
-  private val mergesStaged = scala.collection.mutable.Map[String, String]()
-
-  /** Stage (once per process+sfDir) the learned merge table as a parquet
-    * artifact — the tokenizer-model handoff point: training writes it,
-    * every downstream encode job reads it. */
-  def stageMerges(docs: DataFrame, sfDir: String, k: Int = 8): String = {
-    val path = graft.infra.Staging.oracleStagePath("bpe_merges", sfDir)
-    mergesStaged.synchronized {
-      if (!mergesStaged.contains(path)) {
-        merges(docs, k).coalesce(1).write.mode("overwrite").parquet(path)
-        mergesStaged(path) = path
-      }
-    }
-    path
-  }
+  /** The learned merge table staged once per (process, corpus, k) as a
+    * parquet artifact — the tokenizer-model handoff point: training writes
+    * it, every downstream encode job reads it. Learning runs jobs while
+    * the plan is built, so the artifact is keyed by the `docs` plan and
+    * [[merges]] runs only on a miss. */
+  def stagedMerges(docs: DataFrame, sfDir: String, k: Int = 8): DataFrame =
+    graft.infra.Staging.stage(s"bpe_merges_k$k", sfDir, graft.infra.Staging.Layout.SingleFile,
+      docs, merges(_, k)).read(docs.sparkSession)
 
   /** [[encodeCounts]] with the merge table read from the STAGED ARTIFACT at
     * runtime (r8 verdict item 7): the merges arrive as DATA — the artifact
@@ -249,11 +240,9 @@ object Bpe {
     * constant and the artifact swaps without recompiling. Same result (and
     * oracle) as bpe_encode: the trajectory is deterministic. */
   def encodeCountsFromArtifact(docs: DataFrame, sfDir: String, k: Int = 8): DataFrame = {
-    val spark = docs.sparkSession
-    val path = stageMerges(docs, sfDir, k)
     // one row: the merge table as an array sorted by merge_ord (struct sort
     // is field-order lexicographic, so merge_ord leads)
-    val mergeRow = spark.read.parquet(path)
+    val mergeRow = stagedMerges(docs, sfDir, k)
       .agg(array_sort(collect_list(
         struct(col("merge_ord"), col("left").as("a"), col("right").as("b")))).as("ms"))
     docs

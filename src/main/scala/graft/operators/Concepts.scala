@@ -77,8 +77,7 @@ object Concepts {
     * had evicted it (the recurring r9-r12 driver flag waves, VERDICT r12
     * item 2); a file artifact is eviction-immune, and the doc_id bucketing
     * means every doc-keyed consumer join/aggregation reads it exchange-free
-    * on this side. Canonical-inputs contract per Staging.stageOnce: `docs`
-    * must be the corpus's full documents table. */
+    * on this side. Keyed by its plan (Staging.stage). */
   def stagedPostProcessed(docs: DataFrame, sfDir: String): DataFrame =
     graft.infra.Staging.stageOnceBucketed("concepts_pp", sfDir,
       postProcess(recognize(docs)), docs.sparkSession, "doc_id")

@@ -60,9 +60,7 @@ object Cooccurrence {
     * by doc_id: the pair self-join and per-doc aggregations scan it
     * exchange-free on the scan sides (hash(doc_id) clustering satisfies the
     * (doc_id[, sent_id]) join requirement), which is the 100 TB layout.
-    * Canonical-inputs contract per Staging.stageOnce: `annots` must be the
-    * corpus's standard level restriction of the concepts-pp table; `level`
-    * keys the artifact. */
+    * Keyed by its plan (Staging.stage) and named by `level`. */
   def stagedUnitConcepts(annots: DataFrame, sfDir: String, level: String,
                          unitCols: Seq[String]): DataFrame =
     graft.infra.Staging.stageOnceBucketed(s"units_$level", sfDir,
@@ -73,8 +71,7 @@ object Cooccurrence {
     * table (ConceptCooccurrenceCountsPipeline → BigQuery `cooccurrence`
     * schema): the KG family (pagerank/k-hop/triangles/jaccard/degree/KGX)
     * consumes the graph as a load artifact, it does not re-run the pair
-    * join per query. `units` must be the canonical staged unit-concept
-    * table for the level (Staging.stageOnce contract). */
+    * join per query. Keyed by its plan (Staging.stage). */
   def stagedPairCounts(units: DataFrame, sfDir: String, level: String,
                        unitCols: Seq[String]): DataFrame =
     graft.infra.Staging.stageOnce(s"cooccur_pairs_$level", sfDir,
@@ -87,8 +84,8 @@ object Cooccurrence {
     * the counts pipeline's output, the pairs are the staged
     * [[stagedPairCounts]] table (staged here first if no one has): the
     * pair self-join runs once per level, not once per artifact. The unit
-    * table contributes only the singleton counts and N. Same
-    * canonical-inputs contract as [[stagedPairCounts]]. The
+    * table contributes only the singleton counts and N. Keyed by its plan
+    * like [[stagedPairCounts]]. The
     * cooccur_metrics_* queries themselves stay honest computations from
     * the unit table ([[metricsFromUnits]]) — only downstream CONSUMERS of
     * the scores read the staged artifact. */
@@ -407,8 +404,8 @@ object Cooccurrence {
     * card, the RRF fusion re-rank) read the staged table — the exact
     * contract the document-level cooccurrence scores already follow
     * ([[stagedMetrics]]: metrics queries compute, KG consumers read).
-    * Canonical-inputs contract per Staging.stageOnce: `annots` must be the
-    * corpus's concepts-pp table and `k` the family default. */
+    * Keyed by its plan (Staging.stage): another `annots` or `k` gets its
+    * own artifact. */
   def stagedBm25TopK(annots: DataFrame, sfDir: String, k: Int = 10): DataFrame =
     graft.infra.Staging.stageOnce("bm25_topk_pool", sfDir, bm25TopK(annots, k),
       annots.sparkSession)

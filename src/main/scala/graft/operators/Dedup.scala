@@ -405,8 +405,7 @@ object Dedup {
     * same 12 longs per doc), and at 100 TB they are exactly what a
     * deployment persists beside the corpus rather than recomputing from the
     * shingle stream (one tokenize+shingle+min-agg corpus pass each time).
-    * Canonical-inputs contract per Staging.stageOnce: `docs` must be the
-    * corpus documents table for `sfDir`. */
+    * Keyed by its plan (Staging.stage). */
   def stagedMinhashValues(docs: DataFrame, sfDir: String): DataFrame =
     graft.infra.Staging.stageOnceBucketed("minhash_sig", sfDir,
       minhashValues(shingleSets(docs)), docs.sparkSession, "doc_id")
@@ -433,59 +432,19 @@ object Dedup {
       .groupBy("new_id", "old_id").agg(count(lit(1)).as("shared_bands"))
   }
 
-  // per-process band-index staging: sfDir -> staged table name (the driver
-  // re-invokes each query fn several times; the index is written once)
-  private val bandIndexStaged = scala.collection.mutable.Map[String, String]()
-  val BandIndexBuckets = 8
-
-  /** Stage (once per process+sfDir+layout) the existing-corpus band table
-    * as a parquet table bucketed AND sorted by (band, band_key); returns
-    * the table name. Shared by the batch probe
-    * ([[minhashIncrementalStaged]]) and the streaming ingest gate
-    * (DocStreams.neardupViaStream).
-    *
-    * The sort-skipping probe needs exactly ONE file per bucket (Spark
-    * honors bucket sortBy ordering only then). Two writers provide it:
-    *   - `wide = false`: `coalesce(1)` — a single writer task emits every
-    *     bucket's one file. Sound at sandbox scale, a serial bottleneck at
-    *     corpus scale.
-    *   - `wide = true` (the PRODUCTION shape): repartition on the bucket
-    *     key with numPartitions = numBuckets. Spark's shuffle
-    *     HashPartitioning and the bucketBy bucket-id function are the same
-    *     `pmod(murmur3(cols), n)`, so every writer task holds exactly one
-    *     bucket's rows and emits exactly one file — numBuckets parallel
-    *     writers, same one-file-per-bucket invariant. BucketingSpec proves
-    *     the sort-skipping probe survives the multi-task write. */
-  def stageBandIndex(docs: DataFrame, sfDir: String, batchMod: Long = 10L,
-                     wide: Boolean = false): String = {
-    val spark = docs.sparkSession
-    val isNew = pmod(col("doc_id"), lit(batchMod)) === 0
-    val key = s"$sfDir|wide=$wide"
-    bandIndexStaged.synchronized {
-      bandIndexStaged.getOrElseUpdate(key, {
-        // sanitized path + hash, the same injectivity discipline as
-        // Staging.stageOnceBucketed (ADVICE r13: a 32-bit hash alone can
-        // collide across corpus dirs and silently serve the wrong index)
-        val pathKey = sfDir.toLowerCase.replaceAll("[^a-z0-9_]", "_")
-          .dropWhile(_ == '_').takeRight(64)
-        val t = f"graft_band_index_${if (wide) "w" else "n"}_${pathKey}_${sfDir.hashCode & 0x7fffffff}%x"
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        // external location under managed temp staging (removed at JVM exit)
-        val dir = graft.infra.Staging.tempDir("graft-band-index")
-        val bands = minhashBands(shingleSets(docs.where(!isNew)))
-        val laidOut =
-          if (wide) bands.repartition(BandIndexBuckets, col("band"), col("band_key"))
-          else bands.coalesce(1)
-        laidOut
-          .write.mode("overwrite")
-          .option("path", dir.resolve(t).toString)
-          .bucketBy(BandIndexBuckets, "band", "band_key")
-          .sortBy("band", "band_key")
-          .format("parquet").saveAsTable(t)
-        t
-      })
-    }
-  }
+  /** Stage (once per process, corpus and batch split) the existing-corpus
+    * band table as a table bucketed AND sorted by (band, band_key) at the
+    * session width, one file per bucket; returns the table name. Shared by
+    * the batch probe ([[minhashIncrementalStaged]]) and the streaming
+    * ingest gate (DocStreams.neardupViaStream). The sort-skipping probe
+    * needs exactly ONE file per bucket (Spark honors bucket sortBy
+    * ordering only then), which the bucketed layout's write provides with
+    * one writer task per bucket. */
+  def stageBandIndex(docs: DataFrame, sfDir: String, batchMod: Long = 10L): String =
+    graft.infra.Staging.stage("band_index", sfDir,
+      graft.infra.Staging.Layout.Bucketed("band", "band_key"),
+      minhashBands(shingleSets(docs.where(pmod(col("doc_id"), lit(batchMod)) =!= 0))))
+      .table.get
 
   /** Same output (and oracle) as [[minhashIncremental]], through the REAL
     * stored-index layout: the existing corpus's band table is persisted as
@@ -496,16 +455,14 @@ object Dedup {
     * side shuffles to meet the buckets. The per-bucket sort is also
     * skippable when the scan is allowed to trust the sortBy metadata
     * (`spark.sql.legacy.bucketedTableScan.outputOrdering`, safe exactly
-    * when each bucket is one file, which both index writers guarantee —
+    * when each bucket is one file, which the bucketed layout guarantees —
     * see [[stageBandIndex]]). That asymmetry is the nightly-ingest
     * contract at 100 TB: ingest cost scales with the batch, not the
-    * corpus. BucketingSpec asserts the index-side plan shape mechanically
-    * for both the narrow and the wide index write. */
-  def minhashIncrementalStaged(docs: DataFrame, sfDir: String, batchMod: Long = 10L,
-                               wide: Boolean = false): DataFrame = {
+    * corpus. BucketingSpec asserts the index-side plan shape mechanically. */
+  def minhashIncrementalStaged(docs: DataFrame, sfDir: String, batchMod: Long = 10L): DataFrame = {
     val spark = docs.sparkSession
     val isNew = pmod(col("doc_id"), lit(batchMod)) === 0
-    val table = stageBandIndex(docs, sfDir, batchMod, wide)
+    val table = stageBandIndex(docs, sfDir, batchMod)
     val newBands = minhashBands(shingleSets(docs.where(isNew)))
       .select(col("band"), col("band_key"), col("doc_id").as("new_id"))
     val index = spark.table(table)
@@ -514,17 +471,6 @@ object Dedup {
       .groupBy("new_id", "old_id").agg(count(lit(1)).as("shared_bands"))
   }
 
-  // per-process staging for the xxhash64 shingle-id sets (written once per
-  // process; the path is DETERMINISTIC and outside Staging's exit cleanup
-  // because the driver's DuckDB compare reads it AFTER this JVM exits)
-  private val hashedSetsStaged = scala.collection.mutable.Set[String]()
-  def hashedSetsStagePath(sfDir: String): String =
-    graft.infra.Staging.oracleStagePath("hashed_shingle_sets", sfDir)
-  /** Staged-parquet location of the last hashed shingle-id set written —
-    * read by the oracle SQL builder at dump time (Verify runs queries
-    * before dumping SQL, so this always points at the verified sf dir). */
-  @volatile var lastHashedSetsStage: String = hashedSetsStagePath("/root/testdata/sf0.01")
-
   /** [[minhashCandidatesHashed]] through a STAGED id table: the xxhash64
     * shingle-id sets (the cheapest 100 TB id path — one codegen'd hash call,
     * no md5+conv) are written to parquet once, and BOTH engines derive
@@ -532,17 +478,9 @@ object Dedup {
     * staging is what puts the hashed path under the full oracle instead of
     * a spec-only check: the id computation itself is Spark-native, the
     * banding arithmetic downstream of it is verified cross-engine. */
-  def minhashCandidatesHashedStaged(docs: DataFrame, sfDir: String): DataFrame = {
-    val path = hashedSetsStagePath(sfDir)
-    hashedSetsStaged.synchronized {
-      if (!hashedSetsStaged.contains(path)) {
-        shingleSetsHashed(docs).coalesce(1).write.mode("overwrite").parquet(path)
-        hashedSetsStaged.add(path)
-      }
-    }
-    lastHashedSetsStage = path
-    minhashCandidatesFrom(docs.sparkSession.read.parquet(path))
-  }
+  def minhashCandidatesHashedStaged(docs: DataFrame, sfDir: String): DataFrame =
+    minhashCandidatesFrom(graft.infra.Staging.stage("hashed_shingle_sets", sfDir,
+      graft.infra.Staging.Layout.SingleFile, shingleSetsHashed(docs)).read(docs.sparkSession))
 
   /** doc_a, doc_b, jaccard — exact shingle-set Jaccard, evaluated ONLY on LSH
     * candidate pairs (integer counts → deterministic division, round 6). */
@@ -812,10 +750,6 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
   }
 
-  // per-process staging of the confirmed cluster-label table (see
-  // stagedClusters; same pattern as the band index / winsor thresholds)
-  private val clustersStaged = scala.collection.mutable.Set[String]()
-
   /** [[clusters]] through a table STAGED once per (process, corpus,
     * threshold): the connected-components fixpoint is the expensive stage
     * of the near-dup path (iterative joins; localCheckpoint truncates
@@ -829,21 +763,14 @@ object Dedup {
     * table: a production pipeline materializes cluster assignments as a
     * versioned table, it does not re-derive them per downstream job.
     * Output (and oracle) identical to [[clusters]] — min-label CC is
-    * deterministic. */
-  def stagedClusters(docs: DataFrame, sfDir: String, threshold: Double = 0.6): DataFrame = {
-    val path = graft.infra.Staging.oracleStagePath(
-      s"dedup_clusters_t${graft.infra.Staging.thresholdKey(threshold)}", sfDir)
-    clustersStaged.synchronized {
-      if (!clustersStaged.contains(path)) {
-        // natural write parallelism — the label table is corpus-row-sized,
-        // so no coalesce(1) here (unlike the tiny oracle-read stages):
-        // only Spark reads this artifact and a multi-file layout is fine
-        clusters(docs, threshold).write.mode("overwrite").parquet(path)
-        clustersStaged.add(path)
-      }
-    }
-    docs.sparkSession.read.parquet(path)
-  }
+    * deterministic. The CC loop runs jobs while its plan is built, so the
+    * artifact is keyed by the `docs` plan and the loop runs only on a
+    * miss. */
+  def stagedClusters(docs: DataFrame, sfDir: String, threshold: Double = 0.6): DataFrame =
+    graft.infra.Staging.stage(
+      s"dedup_clusters_t${graft.infra.Staging.thresholdKey(threshold)}", sfDir,
+      graft.infra.Staging.Layout.Parquet, docs, clusters(_, threshold))
+      .read(docs.sparkSession)
 
   /** doc_id, cluster_id, cluster_size, weight — SOFT deduplication
     * (SoftDeDup: down-weight duplicated content instead of deleting it —
@@ -982,7 +909,7 @@ object Dedup {
     * leakage is corpus↔corpus. */
   /** distinct (doc_id, wid) over `windowTokens`-token windows — the
     * shared shingle-id table of [[splitLeakage]] and its staged train-side
-    * probe index ([[stageTrainShingles]]). */
+    * probe index ([[stagedTrainShingles]]). */
   private[graft] def windowIds(docs: DataFrame, windowTokens: Int): DataFrame =
     TextOps.ngramExplode(docs, windowTokens, "win", Seq("doc_id"))
       .select(col("doc_id"), (Hash60.id(col("win")) % MinhashP).as("wid"))
@@ -990,7 +917,7 @@ object Dedup {
 
   /** [[windowIds]] staged ONCE per (process, corpus) as a wid-bucketed
     * parquet artifact — the shared shingle table of [[windowDupPairs]],
-    * [[splitLeakage]], and [[stageTrainShingles]] (so `window_dup`,
+    * [[splitLeakage]], and [[stagedTrainShingles]] (so `window_dup`,
     * `split_leakage`, and the streaming gate all read ONE derivation of
     * the 7-lead token-window chain per corpus). This was a per-query
     * `persist()` through r13; under end-of-suite cache pressure the
@@ -999,36 +926,25 @@ object Dedup {
     * local `window_dup` reading, VERDICT r13 item 1). A file artifact is
     * eviction-immune, and wid-bucketing makes every wid-keyed
     * aggregation/self-join downstream exchange-free on this side — the
-    * same layout the incremental near-dup index uses (stageOnceBucketed).
-    * Canonical-inputs contract per Staging.stageOnce: `docs` must be the
-    * corpus's full documents table. */
+    * same layout the incremental near-dup index uses (Staging.Layout.Bucketed).
+    * Keyed by its plan (Staging.stage). */
   def stagedWindowIds(docs: DataFrame, sfDir: String, windowTokens: Int = 8): DataFrame =
     graft.infra.Staging.stageOnceBucketed(s"winids$windowTokens", sfDir,
       windowIds(docs, windowTokens), docs.sparkSession, "wid")
 
-  // per-process staging of the train-side shingle-id table (the static
-  // probe side of the streaming split-leakage gate)
-  private val trainShingleStaged = scala.collection.mutable.Map[String, String]()
-
-  /** Stage (once per process+sfDir) the DISTINCT train-side shingle ids as
-    * parquet — the static probe table the continuous decontamination gate
-    * (DocStreams.splitLeakageViaStream) reads every micro-batch. Derives
-    * from [[stagedWindowIds]], so the window chain runs once per corpus
-    * no matter which of the four consumers asks first. */
-  def stageTrainShingles(docs: DataFrame, sfDir: String, evalMod: Long = 10L,
-                         windowTokens: Int = 8): String = {
-    val path = graft.infra.Staging.oracleStagePath("train_shingles", sfDir)
-    trainShingleStaged.synchronized {
-      if (!trainShingleStaged.contains(path)) {
-        stagedWindowIds(docs, sfDir, windowTokens)
-          .where(pmod(col("doc_id"), lit(evalMod)) =!= 0)
-          .select("wid").distinct()
-          .coalesce(1).write.mode("overwrite").parquet(path)
-        trainShingleStaged(path) = path
-      }
-    }
-    path
-  }
+  /** Stage (once per process, corpus and split) the DISTINCT train-side
+    * shingle ids as parquet — the static probe table the continuous
+    * decontamination gate (DocStreams.splitLeakageViaStream) reads every
+    * micro-batch. Derives from [[stagedWindowIds]], so the window chain
+    * runs once per corpus no matter which of the four consumers asks
+    * first. */
+  def stagedTrainShingles(docs: DataFrame, sfDir: String, evalMod: Long = 10L,
+                          windowTokens: Int = 8): DataFrame =
+    graft.infra.Staging.stage("train_shingles", sfDir, graft.infra.Staging.Layout.SingleFile,
+      stagedWindowIds(docs, sfDir, windowTokens)
+        .where(pmod(col("doc_id"), lit(evalMod)) =!= 0)
+        .select("wid").distinct())
+      .read(docs.sparkSession)
 
   /** [[splitLeakage]] over a prebuilt distinct (doc_id, wid) table — pass
     * [[stagedWindowIds]] for the eviction-immune artifact (query wiring)

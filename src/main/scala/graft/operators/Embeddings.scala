@@ -131,9 +131,8 @@ object Embeddings {
     * (ann_recall, ann_ndcg, ivf_probe_sweep, index_recall_matrix) read one
     * staged artifact instead of each re-running the brute-force Q×N pass.
     * emb_topk / emb_topk_native stay the honest computations of the same
-    * derivation (the bm25_topk / stagedBm25TopK contract). Canonical-inputs
-    * contract per Staging.stageOnce: `embeddings` must be the corpus's
-    * embeddings table and (numQueries, k) the family defaults. */
+    * derivation (the bm25_topk / stagedBm25TopK contract). Keyed by its
+    * plan (Staging.stage): other (numQueries, k) get their own artifact. */
   def stagedBruteTruth(embeddings: DataFrame, sfDir: String,
                        numQueries: Int = 8, k: Int = 5): DataFrame =
     graft.infra.Staging.stageOnce("ann_truth", sfDir,
@@ -705,10 +704,6 @@ object Embeddings {
       .where(col("cosine") >= threshold)
   }
 
-  // per-process staging of the confirmed near-dup pair graph (see
-  // stagedDupPairs; same pattern as Dedup.stagedClusters)
-  private val dupPairsStaged = scala.collection.mutable.Set[String]()
-
   /** [[dupPairs]] through a table STAGED once per (process, corpus,
     * threshold): the confirmed pair graph is the expensive stage of the
     * embedding near-dup path (LSH bucket self-join + cosine confirm over
@@ -722,20 +717,15 @@ object Embeddings {
     * its labels — so the pairs are written to parquet once per (process,
     * corpus, threshold) and every consumer reads the artifact. Output (and
     * oracle) identical to [[dupPairs]]: the r6-rounded cosine round-trips
-    * parquet exactly. */
+    * parquet exactly. Keyed by the `embeddings` plan: [[dupPairs]]
+    * registers a managed cache as its plan is built, which only a miss
+    * needs. */
   def stagedDupPairs(embeddings: DataFrame, sfDir: String,
-                     threshold: Double = 0.35): DataFrame = {
-    val path = graft.infra.Staging.oracleStagePath(
-      s"emb_dup_pairs_t${graft.infra.Staging.thresholdKey(threshold)}", sfDir)
-    dupPairsStaged.synchronized {
-      if (!dupPairsStaged.contains(path)) {
-        // corpus-pair-sized artifact: natural write parallelism, no coalesce
-        dupPairs(embeddings, threshold).write.mode("overwrite").parquet(path)
-        dupPairsStaged.add(path)
-      }
-    }
-    embeddings.sparkSession.read.parquet(path)
-  }
+                     threshold: Double = 0.35): DataFrame =
+    graft.infra.Staging.stage(
+      s"emb_dup_pairs_t${graft.infra.Staging.thresholdKey(threshold)}", sfDir,
+      graft.infra.Staging.Layout.Parquet, embeddings, dupPairs(_, threshold))
+      .read(embeddings.sparkSession)
 
   /** vec_id, cluster_id for EVERY vector — embedding near-dup groups as
     * canonical clusters: LSH-candidate cosine pairs → ALTERNATING
@@ -747,10 +737,6 @@ object Embeddings {
   def semanticClusters(embeddings: DataFrame, threshold: Double = 0.35): DataFrame =
     semanticClustersFrom(dupPairs(embeddings, threshold), embeddings)
 
-  // per-process staging of the semantic cluster-label table (see
-  // stagedSemanticClusters; twin of Dedup.stagedClusters)
-  private val semClustersStaged = scala.collection.mutable.Set[String]()
-
   /** [[semanticClusters]] through a label table STAGED once per (process,
     * corpus, threshold) — the embedding-side twin of
     * [[Dedup.stagedClusters]]: the CC fixpoint is the expensive stage
@@ -760,21 +746,16 @@ object Embeddings {
     * table rather than re-deriving them per downstream job. Pairs come from
     * the [[stagedDupPairs]] artifact, labels land in their own artifact;
     * output (and oracle) identical — alternating-star CC with smallest-
-    * member labels is deterministic. */
+    * member labels is deterministic. The star CC runs jobs while its plan
+    * is built, so the artifact is keyed by the `embeddings` plan and the
+    * CC runs only on a miss. */
   def stagedSemanticClusters(embeddings: DataFrame, sfDir: String,
-                             threshold: Double = 0.35): DataFrame = {
-    val path = graft.infra.Staging.oracleStagePath(
-      s"semantic_clusters_t${graft.infra.Staging.thresholdKey(threshold)}", sfDir)
-    semClustersStaged.synchronized {
-      if (!semClustersStaged.contains(path)) {
-        // corpus-row-sized label table: natural write parallelism
-        semanticClustersFrom(stagedDupPairs(embeddings, sfDir, threshold), embeddings)
-          .write.mode("overwrite").parquet(path)
-        semClustersStaged.add(path)
-      }
-    }
-    embeddings.sparkSession.read.parquet(path)
-  }
+                             threshold: Double = 0.35): DataFrame =
+    graft.infra.Staging.stage(
+      s"semantic_clusters_t${graft.infra.Staging.thresholdKey(threshold)}", sfDir,
+      graft.infra.Staging.Layout.Parquet, embeddings,
+      e => semanticClustersFrom(stagedDupPairs(e, sfDir, threshold), e))
+      .read(embeddings.sparkSession)
 
   /** [[semanticClusters]] over an existing confirmed-pair table (e.g. the
     * [[stagedDupPairs]] artifact). */

@@ -205,19 +205,6 @@ object Relational {
     events.groupBy("event_type")
       .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"))
 
-  // per-process staging of sketch outputs (deterministic paths outside the
-  // exit-cleaned temp staging: the driver's DuckDB compare reads them after
-  // this JVM exits — same discipline as the compression-ratio stage)
-  private val sketchStaged = scala.collection.mutable.Set[String]()
-  private def sketchStagePath(kind: String, sfDir: String): String =
-    graft.infra.Staging.oracleStagePath(kind, sfDir)
-  @volatile var lastQuantileSketchStage: String = ""
-  @volatile var lastHllStage: String = ""
-  private def stageOnce(path: String)(write: => Unit): Unit =
-    sketchStaged.synchronized {
-      if (!sketchStaged.contains(path)) { write; sketchStaged.add(path) }
-    }
-
   /** The sketch-quantile path under the FULL oracle: the
     * [[eventsQuantilesApprox]] summary is staged to parquet (sketch
     * internals aren't cross-engine reproducible, but the staged thresholds
@@ -228,12 +215,9 @@ object Relational {
     * row. Threshold table is dimension-sized → broadcast; one shuffle for
     * the final (type, bucket) count. */
   def eventsQuantileBuckets(events: DataFrame, sfDir: String): DataFrame = {
-    val path = sketchStagePath("quantile_sketch", sfDir)
-    stageOnce(path) {
-      eventsQuantilesApprox(events).coalesce(1).write.mode("overwrite").parquet(path)
-    }
-    lastQuantileSketchStage = path
-    val th = events.sparkSession.read.parquet(path)
+    val th = graft.infra.Staging.stage("quantile_sketch", sfDir,
+        graft.infra.Staging.Layout.SingleFile, eventsQuantilesApprox(events))
+      .read(events.sparkSession)
       .select("event_type", "p50", "p90", "p99")
     events.join(broadcast(th), "event_type")
       .withColumn("bucket",
@@ -248,7 +232,7 @@ object Relational {
   /** Oracle twin of [[eventsQuantileBuckets]], rebuilt per dump. */
   def quantileBucketsOracleSql: String =
     s"""WITH th AS (SELECT event_type, p50, p90, p99
-       |  FROM read_parquet('$lastQuantileSketchStage/*.parquet'))
+       |  FROM read_parquet('${graft.infra.Staging.lastPath("quantile_sketch")}/*.parquet'))
        |SELECT e.event_type,
        |  CASE WHEN e.value <= th.p50 THEN 'low'
        |       WHEN e.value <= th.p90 THEN 'mid'
@@ -265,12 +249,9 @@ object Relational {
     * so both engines decide identically). The estimate, the exact count,
     * and the bound verdict all land in the correctness hash. */
   def hllUsersBound(events: DataFrame, sfDir: String): DataFrame = {
-    val path = sketchStagePath("hll_users", sfDir)
-    stageOnce(path) {
-      distinctUsersApprox(events).coalesce(1).write.mode("overwrite").parquet(path)
-    }
-    lastHllStage = path
-    val est = events.sparkSession.read.parquet(path)
+    val est = graft.infra.Staging.stage("hll_users", sfDir,
+        graft.infra.Staging.Layout.SingleFile, distinctUsersApprox(events))
+      .read(events.sparkSession)
     events.groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("n_users_exact"))
       .join(broadcast(est), "event_type")
@@ -282,7 +263,7 @@ object Relational {
   /** Oracle twin of [[hllUsersBound]], rebuilt per dump. */
   def hllUsersOracleSql: String =
     s"""WITH est AS (SELECT event_type, n_users_approx
-       |  FROM read_parquet('$lastHllStage/*.parquet')),
+       |  FROM read_parquet('${graft.infra.Staging.lastPath("hll_users")}/*.parquet')),
        |ex AS (SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users_exact
        |  FROM events GROUP BY 1)
        |SELECT ex.event_type, ex.n_users_exact, est.n_users_approx,

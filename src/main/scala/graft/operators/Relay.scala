@@ -263,10 +263,6 @@ object Relay {
       (subjOk && objOk).as("valid"))
   }
 
-  private def stage(name: String, sfDir: String, derive: => DataFrame,
-                    spark: org.apache.spark.sql.SparkSession): DataFrame =
-    graft.infra.Staging.stageOnce(name, sfDir, derive, spark)
-
   /** [[serializeResults]] staged ONCE per (process, corpus): the reference
     * compiles a results FILE, and every rollup here references the parsed
     * rows several times (resolution + winners + counts) — without the
@@ -274,11 +270,11 @@ object Relay {
     * (measured 5.1 s isolated for relay_improvements; file-backed, the
     * re-references are cheap parquet scans). */
   def stagedResults(orders: DataFrame, sfDir: String): DataFrame =
-    stage("relay_results", sfDir, serializeResults(orders), orders.sparkSession)
+    graft.infra.Staging.stageOnce("relay_results", sfDir, serializeResults(orders), orders.sparkSession)
 
   /** [[serializeMetadata]] staged ONCE per (process, corpus). */
   def stagedMetadata(orders: DataFrame, sfDir: String): DataFrame =
-    stage("relay_metadata", sfDir, serializeMetadata(orders), orders.sparkSession)
+    graft.infra.Staging.stageOnce("relay_metadata", sfDir, serializeMetadata(orders), orders.sparkSession)
 
   /** The PARSED results table staged once per (process, corpus), BUCKETED
     * by predication_id: the reference's compiler reads the CSV once into
@@ -306,7 +302,7 @@ object Relay {
 
   /** [[serializeSampleSentences]] staged ONCE per (process, corpus). */
   def stagedSampleSentences(orders: DataFrame, sfDir: String): DataFrame =
-    stage("relay_sample_sentences", sfDir, serializeSampleSentences(orders),
+    graft.infra.Staging.stageOnce("relay_sample_sentences", sfDir, serializeSampleSentences(orders),
       orders.sparkSession)
 
   // ----------------------------------------------------------------- parse

@@ -114,9 +114,8 @@ object Sheets {
     * batch, the IAA overlap batch, the BERT back-conversion) reads the
     * EXISTING sheet/ids file, it does not re-create batch 1. The
     * sheets_batch query itself stays the honest computation of exactly
-    * this derivation. Canonical-inputs contract per Staging.stageOnce:
-    * `rows` must be [[stagedCandidateRows]] for `sfDir` and the batch the
-    * family default. */
+    * this derivation. Keyed by its plan (Staging.stage): other `rows` get
+    * their own artifact. */
   def stagedFirstBatch(rows: DataFrame, sfDir: String): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._

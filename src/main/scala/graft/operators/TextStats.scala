@@ -254,13 +254,6 @@ object TextStats {
           .as("share_of_source"))
   }
 
-  // per-sf-dir staging of the winsorization thresholds (the sketch-staging
-  // discipline of events_quantile_buckets: both engines consume the SAME
-  // staged thresholds, so the sketch's internals never enter the compare)
-  private val winsorStaged = scala.collection.mutable.Map[String, String]()
-  @volatile var lastWinsorStage: String =
-    graft.infra.Staging.oracleStagePath("winsor", "/root/testdata/sf0.01")
-
   /** doc_id, source, quality, q_lo, q_hi, quality_winsorized, is_clipped —
     * robust per-source quality clipping (winsorization at the approximate
     * p05/p95): the outlier treatment a downstream quality-weighted sampler
@@ -272,20 +265,14 @@ object TextStats {
   def qualityWinsorize(docs: DataFrame, sfDir: String): DataFrame = {
     val spark = docs.sparkSession
     val scored = quality(docs).join(docs.select("doc_id", "source"), "doc_id")
-    // a NON-self-deleting, canonical-path-keyed stage (Staging.tempDir dies
-    // with the JVM; the driver's DuckDB compare runs after we exit)
-    val path = graft.infra.Staging.oracleStagePath("winsor", sfDir)
-    winsorStaged.synchronized {
-      if (!winsorStaged.contains(path)) {
-        scored.groupBy("source")
-          .agg(percentile_approx(col("quality"), lit(0.05), lit(10000)).as("q_lo"),
-            percentile_approx(col("quality"), lit(0.95), lit(10000)).as("q_hi"))
-          .coalesce(1).write.mode("overwrite").parquet(path)
-        winsorStaged(path) = path
-      }
-    }
-    lastWinsorStage = path
-    val th = spark.read.parquet(path)
+    // the sketch-staging discipline of events_quantile_buckets: both engines
+    // consume the SAME staged thresholds, so the sketch's internals never
+    // enter the compare
+    val th = graft.infra.Staging.stage("winsor", sfDir, graft.infra.Staging.Layout.SingleFile,
+      scored.groupBy("source")
+        .agg(percentile_approx(col("quality"), lit(0.05), lit(10000)).as("q_lo"),
+          percentile_approx(col("quality"), lit(0.95), lit(10000)).as("q_hi")))
+      .read(spark)
     scored.join(broadcast(th), "source")
       .select(col("doc_id"), col("source"), col("quality"), col("q_lo"), col("q_hi"),
         greatest(col("q_lo"), least(col("q_hi"), col("quality"))).as("quality_winsorized"),
@@ -297,7 +284,7 @@ object TextStats {
   def qualityWinsorizeOracleSql(qualityScoreSql: String): String =
     s"""WITH q AS (SELECT doc_id, quality FROM ($qualityScoreSql)),
        |s AS (SELECT d.doc_id, d.source, q.quality FROM documents d JOIN q USING (doc_id)),
-       |th AS (SELECT source, q_lo, q_hi FROM read_parquet('$lastWinsorStage/*.parquet'))
+       |th AS (SELECT source, q_lo, q_hi FROM read_parquet('${graft.infra.Staging.lastPath("winsor")}/*.parquet'))
        |SELECT s.doc_id, s.source, s.quality, th.q_lo, th.q_hi,
        |  greatest(th.q_lo, least(th.q_hi, s.quality)) AS quality_winsorized,
        |  (s.quality < th.q_lo OR s.quality > th.q_hi) AS is_clipped
@@ -889,18 +876,10 @@ object TextStats {
 
   // DuckDB has no deflate, so the ratio NUMBER can never be oracle-checked;
   // the GATE DERIVATION can. The engine-computed ratios are staged once per
-  // (process, sf dir) to a fixed overwrite-per-run path, and both the Spark
-  // query and the DuckDB oracle derive the both-tails flags from that same
-  // staged parquet — the oracle then genuinely verifies the flag logic while
-  // the zlib number itself stays spec-pinned (CompressionRatioSpec).
-  // Deliberately NOT a Staging.tempDir: the driver's DuckDB compare runs
-  // after this JVM exits, and the fixed path keeps /tmp growth bounded.
-  private val compressionStaged = scala.collection.concurrent.TrieMap[String, Unit]()
-  @volatile private var lastCompressionStage: String =
-    compressionStagePath("/root/testdata/sf0.01")
-
-  def compressionStagePath(sfDir: String): String =
-    graft.infra.Staging.oracleStagePath("compression_ratio", sfDir)
+  // (process, sf dir), and both the Spark query and the DuckDB oracle derive
+  // the both-tails flags from that same staged parquet — the oracle then
+  // genuinely verifies the flag logic while the zlib number itself stays
+  // spec-pinned (CompressionRatioSpec).
 
   /** doc_id, compression_ratio, is_repetitive, is_noise — the deflate
     * compression-ratio quality signal (Gopher/RefinedWeb lineage): text that
@@ -909,21 +888,13 @@ object TextStats {
     * The ratio comes from a codegen'd expression over zlib level 6
     * (deterministic output size) and is spec-pinned; the oracle checks the
     * gate flags over the staged ratios. */
-  def compressionQualityStaged(docs: DataFrame, sfDir: String): DataFrame = {
-    val path = compressionStagePath(sfDir)
-    compressionStaged.synchronized {
-      if (!compressionStaged.contains(path)) {
-        docs.select(col("doc_id"),
-            graft.functions.CompressionRatio.compressionRatio(col("text")).as("compression_ratio"))
-          .coalesce(1).write.mode("overwrite").parquet(path)
-        compressionStaged.put(path, ())
-      }
-    }
-    lastCompressionStage = path
-    docs.sparkSession.read.parquet(path)
+  def compressionQualityStaged(docs: DataFrame, sfDir: String): DataFrame =
+    graft.infra.Staging.stage("compression_ratio", sfDir, graft.infra.Staging.Layout.SingleFile,
+      docs.select(col("doc_id"),
+        graft.functions.CompressionRatio.compressionRatio(col("text")).as("compression_ratio")))
+      .read(docs.sparkSession)
       .withColumn("is_repetitive", col("compression_ratio") < CompressionRepetitiveBelow)
       .withColumn("is_noise", col("compression_ratio") > CompressionNoiseAbove)
-  }
 
   /** Oracle twin of [[compressionQualityStaged]] over the same staged
     * ratios (rebuilt per dump — Verify runs queries before dumping SQL, so
@@ -932,7 +903,7 @@ object TextStats {
     s"""SELECT doc_id, compression_ratio,
        |  compression_ratio < $CompressionRepetitiveBelow AS is_repetitive,
        |  compression_ratio > $CompressionNoiseAbove AS is_noise
-       |FROM read_parquet('$lastCompressionStage/*.parquet')""".stripMargin
+       |FROM read_parquet('${graft.infra.Staging.lastPath("compression_ratio")}/*.parquet')""".stripMargin
 
   /** Rule-based quality filter (Gopher-rule shape): keep/drop decision plus
     * the firing reasons, so filtering is auditable. */

@@ -2511,7 +2511,7 @@ object OracleSql {
     * downstream is what gets verified. Built per dump (the staged path is
     * recorded when the query runs; Verify runs queries before dumping SQL). */
   def dedupMinhashHashed: String =
-    s"""WITH ss AS (SELECT doc_id, sid FROM read_parquet('${Dedup.lastHashedSetsStage}/*.parquet')),
+    s"""WITH ss AS (SELECT doc_id, sid FROM read_parquet('${graft.infra.Staging.lastPath("hashed_shingle_sets")}/*.parquet')),
        |$minhashFromSsCtes
        |SELECT doc_a, doc_b, shared_bands FROM cand""".stripMargin
 

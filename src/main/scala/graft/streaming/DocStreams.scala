@@ -246,7 +246,7 @@ object DocStreams {
     * token array with the same Hash60-mod-P arithmetic as the batch
     * lead-window path — same split, same ids), and the shingle stream
     * left-outer probes the STATIC train shingle table staged once from the
-    * corpus (Dedup.stageTrainShingles) — a stateless stream-static join,
+    * corpus (Dedup.stagedTrainShingles) — a stateless stream-static join,
     * no watermark or join state; the per-doc rollup is the one stateful
     * aggregation. Run-to-completion equals the batch report and shares
     * its oracle. At 100 TB this is the shape where screening an incoming
@@ -277,7 +277,7 @@ object DocStreams {
 
   def splitLeakageViaStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Num
-    val trainPath = graft.operators.Dedup.stageTrainShingles(
+    val trainShingles = graft.operators.Dedup.stagedTrainShingles(
       graft.sources.Tables.documents(spark, sfDir), sfDir)
     val evalShingles = inRowWindowIds(
       stagedDocsStream(spark, sfDir).where(pmod(col("doc_id"), lit(10L)) === 0))
@@ -286,7 +286,7 @@ object DocStreams {
     // megabytes at any corpus size a broadcast can carry, and a corpus too
     // big for that swaps in the bucketed-index probe (streaming_neardup's
     // layout) — either way the stream side never waits on a static shuffle
-    val train = broadcast(spark.read.parquet(trainPath).withColumn("hit", lit(1)))
+    val train = broadcast(trainShingles.withColumn("hit", lit(1)))
     EventStreams.runToTable(
       evalShingles.join(train, Seq("wid"), "left_outer")
         .groupBy("doc_id", "n_shingles")
@@ -314,33 +314,27 @@ object DocStreams {
     * (from_xml + explode — stateless, streaming-legal) and appended to the
     * update log; the batch-side merge then applies upsert + delete so
     * retracted PMIDs vanish from the served corpus. This is the streaming
-    * dual of doc_upsert_delete, same oracle. */
-  /** Per-(process, corpus) staging for [[upsertDeleteViaStream]]: the
-    * nightly update FILES are a write-once input artifact, and the parse
-    * stream keeps ONE durable checkpoint + append log — a later invocation
-    * RESTARTS the stream from the checkpoint and processes only files it
-    * has not seen (none, unless a new night landed). r14 telemetry read
-    * this query at ~70% scheduling floor (floor_s 1.51 of wall 1.93)
-    * precisely because every invocation re-serialized the files into a
-    * fresh dir and replayed the whole stream against a fresh checkpoint —
-    * the restructure VERDICT r14 item 7 asks for. */
-  private val upsertDelStage = scala.collection.mutable.Map[String, (String, String, String)]()
-
+    * dual of doc_upsert_delete, same oracle.
+    *
+    * The update files are a write-once input artifact staged per
+    * (process, corpus, derivation), and the parse
+    * stream keeps ONE durable checkpoint + append log beside them — a later
+    * invocation RESTARTS the stream from the checkpoint and processes only
+    * files it has not seen (none, unless a new night landed). r14
+    * telemetry read this query at ~70% scheduling floor (floor_s 1.51 of
+    * wall 1.93) precisely because every invocation re-serialized the files
+    * into a fresh dir and replayed the whole stream against a fresh
+    * checkpoint — the restructure VERDICT r14 item 7 asks for. */
   def upsertDeleteViaStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.XmlIngest
     val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
     val docs = spark.read.schema(docSchema).parquet(s"$sfDir/documents.parquet")
-    val (filesDir, log, ckpt) = upsertDelStage.synchronized {
-      upsertDelStage.getOrElseUpdate(sfDir, {
-        val files = graft.infra.Staging.tempDir("graft-upsertdel-files").toString
-        XmlIngest.serializeMedlineUpdateFiles(docs)
-          .coalesce(1).write.mode("overwrite").parquet(files)
-        (files,
-          graft.infra.Staging.tempDir("graft-upsertdel-log").toString,
-          graft.infra.Staging.tempDir("graft-upsertdel-ckpt").toString)
-      })
-    }
+    val stage = graft.infra.Staging.stage("upsert_delete_files", sfDir,
+      graft.infra.Staging.Layout.Files("update_files") { (df, out) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$out/files")
+      }, XmlIngest.serializeMedlineUpdateFiles(docs)).path
+    val (filesDir, log, ckpt) = (s"$stage/files", s"$stage/log", s"$stage/ckpt")
     val fileSchema = org.apache.spark.sql.types.StructType.fromDDL("file_id BIGINT, xml STRING")
     val q = XmlIngest.parseUpdateFileArticles(
         spark.readStream.schema(fileSchema).parquet(filesDir))

@@ -108,8 +108,7 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.softDedupWeightsFrom(staged).collect().toSeq.map(_.toSeq).toSet
       == Dedup.softDedupWeights(dd).collect().toSeq.map(_.toSeq).toSet)
     // second call reads the artifact: the staged file's mtime must not move
-    val path = graft.infra.Staging.oracleStagePath(
-      s"dedup_clusters_t${graft.infra.Staging.thresholdKey(0.6)}", sfKey)
+    val path = graft.infra.Staging.lastPath(s"dedup_clusters_t${graft.infra.Staging.thresholdKey(0.6)}")
     val before = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
       .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
     val mtime = java.nio.file.Files.getLastModifiedTime(before)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Concepts, Exports, TextOps}
+import graft.operators.{Concepts, Exports}
 import graft.streaming.DocStreams
 
 /** streamTokens / bratImport invariants (SURVEY H6, E1e). */
@@ -14,9 +14,11 @@ class DocStreamsSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("streamTokens equals the window-based batch tokenizer") {
-    val a = TextOps.tokens(docs).collect().map(_.toSeq).toSet
+    // the running-sum window reference, not TextOps.tokens (which
+    // streamTokens now is)
+    val a = SpanReference.tokensBySum(docs).collect().map(_.toSeq).toSet
     val b = DocStreams.streamTokens(docs).collect().map(_.toSeq).toSet
-    assert(a == b)
+    assert(a.nonEmpty && a == b)
   }
 
   test("brat import is the exact inverse of brat export") {

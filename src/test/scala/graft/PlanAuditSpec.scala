@@ -415,6 +415,28 @@ class PlanAuditSpec extends SparkSpec {
       s"queries leaving undrained CacheManager entries: $leftovers")
   }
 
+  test("cooccurrence queries scan the staged units artifact, not an in-memory copy of it") {
+    // a bare scan of a staged file is read twice as cheaply as a cache
+    // would serve it; Caches.managed returns it uncached
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def cachedUnits(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => cachedUnits(a.inputPlan)
+      case m: InMemoryTableScanExec
+          if m.relation.cacheBuilder.cachedPlan.toString.contains("graft_units_") =>
+        Seq(m.relation.toString)
+      case other => other.children.flatMap(cachedUnits)
+    }
+    val offenders = Seq("cooccur_counts_doc", "cooccur_metrics_doc", "concept_idf").flatMap { q =>
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      df.count()
+      cachedUnits(df.queryExecution.executedPlan).map(r => s"$q: $r")
+    }
+    graft.infra.Caches.unpersistManaged()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("staged-artifact consumers plan a file scan of the stage, not a recompute (mechanism gate)") {
     // VERDICT r14 item 8: the r13/r14 driver-flag mechanisms were all of
     // one class — a query that SHOULD read a cross-query staged artifact

@@ -3,7 +3,6 @@ package graft
 import graft.operators.TextOps
 import graft.streaming.DocStreams
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The one-pass span kernel behind TextOps.tokens / sentences and
@@ -54,20 +53,6 @@ class SpanKernelSpec extends SparkSpec {
     (15L, "exact duplicate row")
   ).toDF("doc_id", "text")
 
-  /** The running-sum window form of token spans (TextOps.tokensOrdered before
-    * the kernel). Partitioned by a per-row key rather than doc_id: with
-    * duplicate doc_ids, a doc_id partition puts two documents' equal
-    * ordinals into one window frame and sums their lengths together. */
-  private def tokensBySum(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("row").orderBy("ord")
-    docs.withColumn("row", monotonically_increasing_id())
-      .select(col("doc_id"), col("row"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-      .withColumn("ord", (col("pos") + 1).cast("long")).drop("pos")
-      .withColumn("char_end", sum(length(col("tok")) + 1).over(w).cast("long") - 1)
-      .withColumn("char_start", col("char_end") - length(col("tok")))
-      .select(col("doc_id"), col("ord"), col("tok"), col("char_start").cast("long"), col("char_end"))
-  }
-
   /** The prefix-length sentence formula (TextOps.sentences before the
     * kernel): window bounds from substring_index prefixes of the text. */
   private def sentencesByPrefix(docs: DataFrame): DataFrame = {
@@ -99,7 +84,7 @@ class SpanKernelSpec extends SparkSpec {
 
   test("tokens, streamTokens and sentences equal the prefix-based derivations on adversarial texts") {
     val docs = adversarial
-    val tokRef = rows(tokensBySum(docs))
+    val tokRef = rows(SpanReference.tokensBySum(docs))
     assert(tokRef.size > 8000, s"the 50k-char document must be tokenized: ${tokRef.size} rows")
     for ((name, got) <- Seq("tokens" -> TextOps.tokens(docs),
                             "streamTokens" -> DocStreams.streamTokens(docs))) {

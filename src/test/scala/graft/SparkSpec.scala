@@ -7,6 +7,29 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for specs: the engine's own GraftSession. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs started while `body` runs. A fence job run afterwards is
+    * delivered after every earlier job start (the listener bus is FIFO),
+    * so once it is seen the count is complete. */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.fence") != null)) fenced.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.fence", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "fence job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** VERDICT r16 item 9 — institutionalize the staged-artifact discipline.
   *
-  * Every staged file artifact (`Staging.stageOnce*` call site, plus the
-  * direct `oracleStagePath`-writing staged methods) must carry a
+  * Every staged file artifact (a `Staging.stage` call site, or one of its
+  * `stageOnce*` one-line forms) must carry a
   * plan-shape/parity pin somewhere in the test suite, or the next staged
   * artifact can land ungated and quietly re-derive per consumer — the
   * r9–r14 driver-flag mechanism the staging discipline exists to prevent.
@@ -37,24 +37,12 @@ class StagedGateAuditSpec extends AnyFunSuite {
     * firstArg is the raw matched token: `"lit"`, `s"lit$x"`, or a bare
     * identifier (a forwarder parameter). */
   private def callSites(): Seq[(String, String)] = {
-    // qualified Staging.* calls (Relational has its own private
-    // stageOnce(path) — the qualifier keeps it out of scope), plus the
-    // known forwarder wrappers that take the artifact name as `name`/`kind`
     val staging =
-      """Staging\.(?:stageOnce|stageOnceBucketed|oracleStagePath)\(\s*(s?"[^"]*"|[A-Za-z_][A-Za-z0-9_]*)""".r
-    val relayBiclusterFwd = """(?m)^\s*(?:Relay\.)?stage\(\s*(s?"[^"]*")""".r
-    val sketchFwd = """sketchStagePath\(\s*(s?"[^"]*")""".r
+      """Staging\.(?:stage|stageOnce|stageOnceBucketed)\(\s*(s?"[^"]*"|[A-Za-z_][A-Za-z0-9_]*)""".r
     scalaFiles(mainDir).filterNot(_.getName == "Staging.scala").flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val text = try src.mkString finally src.close()
-      val base = staging.findAllMatchIn(text).map(m => f.getName -> m.group(1)).toSeq
-      val fwd =
-        if (f.getName == "Relay.scala" || f.getName == "Bicluster.scala")
-          relayBiclusterFwd.findAllMatchIn(text).map(m => f.getName -> m.group(1)).toSeq
-        else if (f.getName == "Relational.scala")
-          sketchFwd.findAllMatchIn(text).map(m => f.getName -> m.group(1)).toSeq
-        else Seq.empty
-      base ++ fwd
+      staging.findAllMatchIn(text).map(m => f.getName -> m.group(1)).toSeq
     }
   }
 
@@ -68,9 +56,7 @@ class StagedGateAuditSpec extends AnyFunSuite {
   /** Forwarder parameters whose call sites are themselves scanned above —
     * a bare-identifier first arg is legal ONLY from these (file, ident)
     * pairs; anywhere else it is an unauditable staging path. */
-  private val knownForwarders = Set(
-    ("Relay.scala", "name"), ("Bicluster.scala", "name"),
-    ("Relational.scala", "kind"))
+  private val knownForwarders = Set.empty[(String, String)]
 
   /** artifact-key prefix -> (gate spec file, token that must appear there).
     * The token is the gated consumer query's name (PlanAuditSpec's
@@ -95,6 +81,7 @@ class StagedGateAuditSpec extends AnyFunSuite {
     ("bicluster_part_ii", "PlanAuditSpec.scala", "bicluster_sentences"),
     ("bigquery_universe", "BucketingSpec.scala", "staged universe"),
     ("bpe_merges", "PlanAuditSpec.scala", "bpe_encode_artifact"),
+    ("band_index", "BucketingSpec.scala", "staged band-index probe join"),
     ("concept_pairs_file", "PlanAuditSpec.scala", "concept_pairs_pos"),
     ("concept_pair_mentions", "PlanAuditSpec.scala", "concept_pair_sentences"),
     ("concepts_pp", "PlanAuditSpec.scala", "crf_overlap"),
@@ -130,7 +117,15 @@ class StagedGateAuditSpec extends AnyFunSuite {
     ("winsor", "GraphRetrievalSpec.scala", "qualityWinsorize"),
     ("compression_ratio", "PlanAuditSpec.scala", "compression_quality"),
     ("quantile_sketch", "SketchSpec.scala", "quantile"),
-    ("hll_users", "SketchSpec.scala", "HLL distinct user counts"))
+    ("hll_users", "SketchSpec.scala", "HLL distinct user counts"),
+    // the file round trips and the update-file stream input, staged through
+    // the same registry; their readers are gated where the format is
+    ("orc_roundtrip", "StagingSpec.scala", "file round-trip dirs"),
+    ("tsv_roundtrip", "InfraSpec.scala", "tsv and jsonl that read back"),
+    ("jsonl_roundtrip", "InfraSpec.scala", "tsv and jsonl that read back"),
+    ("conllu_files", "TextFilesSpec.scala", "conlluFiles feed Conllu.parse end-to-end"),
+    ("bionlp_source", "BioNlpSourceSpec.scala", "round-trips the exported annotation fields"),
+    ("upsert_delete_files", "XmlIngestSpec.scala", "DeleteCitation lists retracted pmids"))
 
   /** Longest-prefix match: `relay_results` must not shadow
     * `relay_results_parsed` — a key matches its most specific row, and is
