@@ -646,10 +646,9 @@ object SparkEntry {
     "label_overlap" -> ((s, _) => LabelQa.labelOverlap(s)),
     "label_english_word" -> ((s, d) => LabelQa.labelEnglishWords(docs(s, d))),
     "label_filter_embedding" -> ((s, d) => LabelQa.labelFilterByEmbedding(Tables.embeddings(s, d))),
-    // the closure is an ontology constant — the fixpoint runs once per
-    // process (the reference's ancestor-map file contract); same staged-
-    // result discipline as dedup_clusters/semantic_clusters
-    "ontology_closure" -> ((s, _) => KnowledgeGraph.stagedOntologyClosure(s)),
+    // the closure is an ontology constant, walked once on the driver (the
+    // reference's ancestor-map contract) and served as a local relation
+    "ontology_closure" -> ((s, _) => KnowledgeGraph.ontologyClosure(s)),
     "kg_edges" -> ((s, d) => KnowledgeGraph.edgesFromMetrics(metricsAt(s, d))),
     "kg_pagerank" -> ((s, d) => KnowledgeGraph.pageRankFromPairs(pairsAt(s, d))),
     "kg_khop" -> ((s, d) => KnowledgeGraph.kHopFromPairs(pairsAt(s, d))),

@@ -28,21 +28,44 @@ object ConceptDict {
   val entries: Seq[(String, String)] =
     for ((p, ts) <- groups; t <- ts.sorted) yield (t, s"$p:$t")
 
-  /** (concept_id, ancestor_id): every concept has its group ROOT ancestor;
-    * join/merge additionally roll up to OP:JOINLIKE (multi-ancestor case). */
-  val ancestors: Seq[(String, String)] =
-    entries.map { case (_, c) => (c, c.takeWhile(_ != ':') + ":ROOT") } ++
-      Seq("OP:join" -> "OP:JOINLIKE", "OP:merge" -> "OP:JOINLIKE")
-
-  /** DIRECT subclass edges (child, parent) — the raw hierarchy the reference
-    * derives closures from (util/CreateUmlsSubclassOntology,
-    * OntologyClassAncestorMapFactory builds the flat `ancestors` map by
-    * walking these). join/merge go through the JOINLIKE mid-level. */
+  /** DIRECT subclass edges (child, parent) — the one declaration of the
+    * hierarchy, the raw form the reference derives closures from
+    * (util/CreateUmlsSubclassOntology). join/merge go through the JOINLIKE
+    * mid-level. */
   val directEdges: Seq[(String, String)] =
     entries.map { case (_, c) =>
       if (c == "OP:join" || c == "OP:merge") (c, "OP:JOINLIKE")
       else (c, c.takeWhile(_ != ':') + ":ROOT")
     } :+ ("OP:JOINLIKE" -> "OP:ROOT")
+
+  /** (child, ancestor) — transitive closure of a (child, parent) edge set,
+    * walked on the driver the way util/OntologyClassAncestorMapFactory walks
+    * the hierarchy once in one JVM: an ontology is constant map data, so a
+    * distributed fixpoint over it only adds jobs. Breadth-first from each
+    * child in edge order; the visited set ends the walk on a cycle. */
+  def closure(edges: Seq[(String, String)]): Seq[(String, String)] = {
+    val parents = edges.distinct.groupMap(_._1)(_._2)
+    edges.map(_._1).distinct.flatMap { child =>
+      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+      var frontier = parents.getOrElse(child, Nil)
+      while (frontier.nonEmpty) {
+        val fresh = frontier.filter(seen.add)
+        frontier = fresh.flatMap(parents.getOrElse(_, Nil))
+      }
+      seen.toSeq.map(child -> _)
+    }
+  }
+
+  /** (child, ancestor) closure of [[directEdges]]. */
+  val ontologyClosure: Seq[(String, String)] = closure(directEdges)
+
+  /** (concept_id, ancestor_id): the closure rows of dictionary concepts —
+    * every concept has its group ROOT ancestor; join/merge also roll up to
+    * OP:JOINLIKE (multi-ancestor case). */
+  val ancestors: Seq[(String, String)] = {
+    val concepts = entries.map(_._2).toSet
+    ontologyClosure.filter { case (c, _) => concepts(c) }
+  }
 
   def directEdgesValuesSql(alias: String = "edges"): String =
     directEdges.map { case (c, p) => s"('$c','$p')" }

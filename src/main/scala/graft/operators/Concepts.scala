@@ -237,15 +237,15 @@ object Concepts {
     * corpora/craft/ExcludeCraftConceptsByOntologyId.java:61-110 — the
     * excluded-class set is the individually-listed classes PLUS every
     * descendant of the listed root classes, and annotations of excluded
-    * classes are removed from the standoff files). The descendant walk is
-    * the transitive closure the engine already computes
-    * (KnowledgeGraph.ontologyClosure); the removal is one broadcast
-    * anti-join — the excluded set is ontology-sized, never corpus-sized. */
+    * classes are removed from the standoff files). The descendant walk
+    * reads the ontology closure (KnowledgeGraph.ontologyClosure, a local
+    * relation); the removal is one broadcast anti-join — the excluded set
+    * is ontology-sized, never corpus-sized. */
   def excludeSubtrees(annots: DataFrame, roots: Seq[String],
                       individuals: Seq[String]): DataFrame = {
     val spark = annots.sparkSession
     import spark.implicits._
-    val descendants = KnowledgeGraph.stagedOntologyClosure(spark)
+    val descendants = KnowledgeGraph.ontologyClosure(spark)
       .where(col("parent").isin(roots: _*))
       .select(col("child").as("concept_id"))
     val listed = (roots ++ individuals).toDF("concept_id")

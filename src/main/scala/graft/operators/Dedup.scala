@@ -617,97 +617,59 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** id, cluster_id — connected components over an undirected pair list by
-    * iterative min-label propagation: each round every node takes the min of
-    * its own and its neighbors' labels; fixpoint = every component labeled
-    * with its smallest member. Rounds needed = graph diameter; near-dup
-    * graphs are dense blobs with tiny diameters, so this converges in a few
-    * rounds (for pathological chain shapes use [[connectedComponentsStar]],
-    * which converges in O(log n) rounds at the same per-round join cost).
-    * Each round is one equi-join + groupBy per direction; the per-round
-    * fixpoint check is a limit(1) existence probe, not a full count. */
-  def connectedComponents(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
-    val fwd = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val edges = graft.infra.Caches.managed(
-      fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    // localCheckpoint, not persist: persist caches data but keeps the full
-    // lineage, so each round's plan would embed the previous round's twice
-    // (once in next, once in the change probe) — exponential plan growth.
-    // Checkpointing truncates lineage per round, the standard shape for
-    // iterative graph algorithms (a cluster deployment with lineage-based
-    // recovery needs would use reliable checkpoint() to a checkpoint dir).
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    var iter = 0
-    var changed = true
-    // labels only ever decrease, so Σlabel strictly decreases iff any node
-    // changed — the fixpoint probe is a one-row aggregate over the (already
-    // checkpointed) label table, not a join
-    // coalesce: sum over zero rows is null — an empty edge list must read
-    // as fixpoint-at-zero, not NPE
-    def sumLabels(df: DataFrame): Long =
-      df.agg(coalesce(sum("label"), lit(0L))).head.getLong(0)
-    var labelSum = sumLabels(labels)
-    while (changed && iter < maxIterations) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label").as("nl")), "dst")
-        .groupBy("src").agg(min(col("nl")).as("nbr_min"))
-      val next = labels
-        .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .localCheckpoint()
-      val nextSum = sumLabels(next)
-      changed = nextSum != labelSum
-      labelSum = nextSum
-      labels = next
-      iter += 1
-    }
-    labels.select(col("id"), col("label").as("cluster_id"))
-  }
+  /** Round cap of [[connectedComponents]]. Alternating stars converge in
+    * O(log n) rounds (ComponentsSpec holds a 1000-node path to 15), so a
+    * graph still changing after this many rounds is an error, never a
+    * partial labeling. */
+  private val CcMaxRounds = 30
 
-  /** id, cluster_id — connected components by ALTERNATING LARGE-STAR /
+  /** id, cluster_id — connected components of an undirected pair list, each
+    * component labeled with its smallest member, by ALTERNATING LARGE-STAR /
     * SMALL-STAR (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14): converges in O(log n) rounds on ANY graph shape,
-    * including the long-chain graphs where min-label propagation needs
-    * diameter rounds. Per round it is the same cost envelope as one
-    * propagation step (a groupBy-min plus an equi-join per star op), so at
-    * 100 TB this is the variant to reach for when cluster shapes are unknown.
+    * Beyond", SoCC'14): O(log n) rounds on any graph shape, long chains
+    * included.
     *
     *  - large-star: every node links its LARGER neighbors to the smallest
     *    node of its closed neighborhood;
     *  - small-star: every node links its smaller-or-equal neighbors to that
     *    minimum.
     * Fixpoint = the edge set is a forest of depth-1 stars rooted at each
-    * component's minimum. */
-  def connectedComponentsStar(pairs: DataFrame, maxIterations: Int = 30): DataFrame =
-    starComponents(pairs, maxIterations)._1
+    * component's minimum.
+    *
+    * The pair plan is checkpointed once and both the node list and the
+    * round-0 edges read that checkpoint, so a costly pair derivation (the
+    * n-gram Jaccard confirmation behind [[clusters]]) runs once. A star's
+    * per-node minimum is a window min over the `src` partition — one
+    * shuffle, no aggregate joined back. Each round is localCheckpointed
+    * (lineage stays one round deep instead of doubling per round) and
+    * probed once. */
+  def connectedComponents(pairs: DataFrame): DataFrame = starComponents(pairs)._1
 
-  private[graft] def starComponents(pairs: DataFrame, maxIterations: Int = 30): (DataFrame, Int) = {
-    val ids = pairs.select(col("doc_a").as("id"))
-      .unionByName(pairs.select(col("doc_b").as("id"))).distinct()
+  /** [[connectedComponents]] and the number of rounds it ran. */
+  private[graft] def starComponents(pairs: DataFrame): (DataFrame, Int) = {
+    val checkpointed = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .localCheckpoint()
+    val ids = checkpointed.select(col("src").as("id"))
+      .unionByName(checkpointed.select(col("dst").as("id"))).distinct()
+    val bySrc = Window.partitionBy("src")
 
-    def largeStar(e: DataFrame): DataFrame = {
-      val both = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      val mins = both.groupBy("src").agg(min("dst").as("mn"))
-        .select(col("src"), least(col("mn"), col("src")).as("m"))
-      both.join(mins, "src")
+    // self-loops and duplicate or reversed pairs emit nothing extra: no
+    // cleanup pass before the first round. The output points larger ->
+    // smaller (src > dst) and may repeat rows; small-star's minima ignore
+    // repeats and its distinct drops them.
+    def largeStar(e: DataFrame): DataFrame =
+      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+        .select(col("src"), col("dst"), least(min("dst").over(bySrc), col("src")).as("m"))
         .where(col("dst") > col("src"))
         .select(col("dst").as("src"), col("m").as("dst"))
-        .distinct()
-    }
 
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.where(col("src") =!= col("dst"))
-        .select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst"))
-      val mins = dir.groupBy("src").agg(min("dst").as("m"))
-      dir.join(mins, "src")
-        .where(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(mins.select(col("src"), col("m").as("dst")))
+    // each row (src > dst >= m) links both endpoints to m: src always, dst
+    // unless it is m itself
+    def smallStar(e: DataFrame): DataFrame =
+      e.select(col("src"), col("dst"), min("dst").over(bySrc).as("m"))
+        .select(explode(array(col("src"), col("dst"))).as("src"), col("m").as("dst"))
+        .where(col("src") =!= col("dst"))
         .distinct()
-    }
 
     // fixpoint probe: (row count, order-insensitive xor of row hashes) of
     // the edge set — xor can't overflow under ANSI arithmetic, and coalesce
@@ -718,24 +680,27 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
 
-    var edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-    var sig = probe(edges)
-    var iter = 0
+    // round 0 is not probed: pair lists put the smaller id first, the
+    // reverse of the star form a round emits, so they never match it
+    var edges = checkpointed
+    var sig: Option[(Long, Long)] = None
+    var rounds = 0
     var converged = false
-    while (!converged && iter < maxIterations) {
+    while (!converged && rounds < CcMaxRounds) {
       val next = smallStar(largeStar(edges)).localCheckpoint()
-      val nextSig = probe(next)
+      val nextSig = Some(probe(next))
       converged = nextSig == sig
       sig = nextSig
       edges = next
-      iter += 1
+      rounds += 1
     }
+    if (!converged)
+      throw new IllegalStateException(s"connected components still changing after $CcMaxRounds rounds")
     // stars point child -> root; roots and isolated nodes label themselves
     val out = ids
       .join(edges.select(col("src").as("id"), col("dst").as("root")), Seq("id"), "left")
       .groupBy("id").agg(min(coalesce(col("root"), col("id"))).as("cluster_id"))
-    (out, iter)
+    (out, rounds)
   }
 
   /** doc_id, cluster_id for EVERY document — canonical near-dup clusters:
@@ -762,10 +727,10 @@ object Dedup {
     * staged-artifact contract as [[stageBandIndex]] and the BPE merge
     * table: a production pipeline materializes cluster assignments as a
     * versioned table, it does not re-derive them per downstream job.
-    * Output (and oracle) identical to [[clusters]] — min-label CC is
-    * deterministic. The CC loop runs jobs while its plan is built, so the
-    * artifact is keyed by the `docs` plan and the loop runs only on a
-    * miss. */
+    * Output (and oracle) identical to [[clusters]] — smallest-member CC
+    * labels are deterministic. The CC loop runs jobs while its plan is
+    * built, so the artifact is keyed by the `docs` plan and the loop runs
+    * only on a miss. */
   def stagedClusters(docs: DataFrame, sfDir: String, threshold: Double = 0.6): DataFrame =
     graft.infra.Staging.stage(
       s"dedup_clusters_t${graft.infra.Staging.thresholdKey(threshold)}", sfDir,
@@ -776,14 +741,9 @@ object Dedup {
     * (SoftDeDup: down-weight duplicated content instead of deleting it —
     * dup groups keep their aggregate sampling mass but no single document
     * dominates): every member of a near-dup cluster gets sampling weight
-    * 1/cluster_size, singletons weight 1. Two cheap aggregations over
-    * [[clusters]]; the weight column feeds the corpus_mix/doc_sample draw
-    * directly. */
-  def softDedupWeights(docs: DataFrame, threshold: Double = 0.6): DataFrame =
-    softDedupWeightsFrom(clusters(docs, threshold))
-
-  /** [[softDedupWeights]] over an existing cluster-label table (e.g. the
-    * [[stagedClusters]] artifact). */
+    * 1/cluster_size, singletons weight 1. Two cheap aggregations over a
+    * cluster-label table ([[clusters]] or the [[stagedClusters]] artifact);
+    * the weight column feeds the corpus_mix/doc_sample draw directly. */
   def softDedupWeightsFrom(cl: DataFrame): DataFrame = {
     val sizes = cl.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cl.join(sizes, "cluster_id")
@@ -794,13 +754,10 @@ object Dedup {
   /** cluster_size, n_clusters, n_docs — near-dup cluster size distribution
     * (the dedup data-card number: how much of the corpus sits in dup
     * clusters of each size, i.e. what keep-one-per-cluster will delete).
-    * Two cheap aggregations over [[clusters]] — one shuffle on cluster_id,
-    * then a size-cardinality groupBy whose key space is at most the
-    * largest cluster size. */
-  def clusterStats(docs: DataFrame, threshold: Double = 0.6): DataFrame =
-    clusterStatsFrom(clusters(docs, threshold))
-
-  /** [[clusterStats]] over an existing cluster-label table. */
+    * Two cheap aggregations over a cluster-label table ([[clusters]] or
+    * the [[stagedClusters]] artifact) — one shuffle on cluster_id, then a
+    * size-cardinality groupBy whose key space is at most the largest
+    * cluster size. */
   def clusterStatsFrom(cl: DataFrame): DataFrame =
     cl
       .groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
@@ -815,11 +772,8 @@ object Dedup {
     * lowest doc_id tie-break) via a struct max — per the suite's argmin/
     * argmax convention, only ROUNDED values are ever compared, so
     * summation-order fp noise cannot flip a winner. One groupBy per
-    * cluster plus one co-keyed join; clusters come from [[clusters]]. */
-  def clusterKeepBest(docs: DataFrame, threshold: Double = 0.6): DataFrame =
-    clusterKeepBestFrom(docs, clusters(docs, threshold))
-
-  /** [[clusterKeepBest]] over an existing cluster-label table. */
+    * cluster plus one co-keyed join over a cluster-label table
+    * ([[clusters]] or the [[stagedClusters]] artifact). */
   def clusterKeepBestFrom(docs: DataFrame, cl: DataFrame): DataFrame = {
     val q = graft.operators.TextStats.quality(docs).select(col("doc_id"), col("quality"))
     val joined = cl.join(q, "doc_id")

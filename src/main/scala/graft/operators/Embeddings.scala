@@ -628,7 +628,7 @@ object Embeddings {
     * double[] buffer per cell, map-side combined — no dim explode
     * anywhere). Only the k×dim centroid matrix (a few KB) ever reaches the
     * driver, once per round — the standard iterative-refinement shape, same
-    * cost envelope as connectedComponents' fixpoint loop. Centroids round
+    * cost envelope as Dedup.connectedComponents' fixpoint loop. Centroids round
     * to 6dp each round so the trajectory is cross-engine reproducible;
     * empty cells keep their previous centroid. */
   def kmeansCentroids(embeddings: DataFrame, k: Int = NumCells,
@@ -727,28 +727,18 @@ object Embeddings {
       graft.infra.Staging.Layout.Parquet, embeddings, dupPairs(_, threshold))
       .read(embeddings.sparkSession)
 
-  /** vec_id, cluster_id for EVERY vector — embedding near-dup groups as
-    * canonical clusters: LSH-candidate cosine pairs → ALTERNATING
-    * LARGE-STAR/SMALL-STAR connected components (Dedup.connectedComponentsStar,
-    * O(log n) rounds on any cluster shape) → smallest-member labels;
-    * vectors in no pair are their own singleton cluster. The embedding-side
-    * twin of Dedup.clusters, and the driver-query surface for the star
-    * variant (the text-side clusters query pins min-label propagation). */
-  def semanticClusters(embeddings: DataFrame, threshold: Double = 0.35): DataFrame =
-    semanticClustersFrom(dupPairs(embeddings, threshold), embeddings)
-
-  /** [[semanticClusters]] through a label table STAGED once per (process,
-    * corpus, threshold) — the embedding-side twin of
+  /** [[semanticClustersFrom]] through a label table STAGED once per
+    * (process, corpus, threshold) — the embedding-side twin of
     * [[Dedup.stagedClusters]]: the CC fixpoint is the expensive stage
     * (iterative joins; localCheckpoint truncates lineage but breaks
     * CacheManager plan-matching, so nothing shares across queries), and a
     * production pipeline materializes cluster assignments as a versioned
     * table rather than re-deriving them per downstream job. Pairs come from
     * the [[stagedDupPairs]] artifact, labels land in their own artifact;
-    * output (and oracle) identical — alternating-star CC with smallest-
-    * member labels is deterministic. The star CC runs jobs while its plan
-    * is built, so the artifact is keyed by the `embeddings` plan and the
-    * CC runs only on a miss. */
+    * output (and oracle) identical — smallest-member CC labels are
+    * deterministic. The CC runs jobs while its plan is built, so the
+    * artifact is keyed by the `embeddings` plan and the CC runs only on a
+    * miss. */
   def stagedSemanticClusters(embeddings: DataFrame, sfDir: String,
                              threshold: Double = 0.35): DataFrame =
     graft.infra.Staging.stage(
@@ -757,11 +747,15 @@ object Embeddings {
       e => semanticClustersFrom(stagedDupPairs(e, sfDir, threshold), e))
       .read(embeddings.sparkSession)
 
-  /** [[semanticClusters]] over an existing confirmed-pair table (e.g. the
-    * [[stagedDupPairs]] artifact). */
+  /** vec_id, cluster_id for EVERY vector — embedding near-dup groups as
+    * canonical clusters: confirmed cosine pairs (e.g. the [[stagedDupPairs]]
+    * artifact) → [[Dedup.connectedComponents]] (alternating large-star/
+    * small-star, O(log n) rounds on any cluster shape) → smallest-member
+    * labels; vectors in no pair are their own singleton cluster. The
+    * embedding-side twin of Dedup.clusters. */
   def semanticClustersFrom(pairs: DataFrame, embeddings: DataFrame): DataFrame = {
     val edges = pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val comp = Dedup.connectedComponentsStar(edges)
+    val comp = Dedup.connectedComponents(edges)
       .withColumnRenamed("id", "vec_id")
     embeddings.select(col("vec_id"))
       .join(comp, Seq("vec_id"), "left")

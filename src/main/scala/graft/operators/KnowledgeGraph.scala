@@ -130,60 +130,17 @@ object KnowledgeGraph {
       .drop(pfx, s"__cat_$outCol")
   }
 
-  /** Transitive closure of a (child, parent) edge set by iterative
-    * self-join to fixpoint (reference: corpora/semmed/CreateUmlsSubclassOntology
-    * + util/OntologyClassAncestorMapFactory derive ancestor closures from
-    * direct subclass edges). Spark has no recursive CTE; the idiomatic
-    * formulation is a driver loop of join+union+distinct, O(depth)
-    * iterations. At 100 TB each iteration is one shuffle and intermediate
-    * results should be checkpointed every few rounds to cut lineage. */
-  def transitiveClosure(edges: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // localCheckpoint truncates lineage per round (persist alone would let
-    // the plan double every iteration on deep graphs — see
-    // Dedup.connectedComponents for the same pattern)
-    var closure = edges.select(col("child"), col("parent")).distinct().localCheckpoint()
-    var n = closure.count()
-    var grew = true
-    var iter = 0
-    while (grew && iter < maxIterations) {
-      val step = closure.as("c")
-        .join(edges.as("e"), col("c.parent") === col("e.child"))
-        .select(col("c.child").as("child"), col("e.parent").as("parent"))
-      val next = closure.unionByName(step).distinct().localCheckpoint()
-      val m = next.count()
-      grew = m > n
-      n = m
-      closure = next
-      iter += 1
-    }
-    closure
-  }
-
-  /** The dictionary ontology's ancestor closure from its direct edges. */
+  /** child, parent — the dictionary ontology's ancestor closure
+    * ([[graft.functions.ConceptDict.ontologyClosure]], walked once on the
+    * driver from the direct subclass edges, as the reference's
+    * util/OntologyClassAncestorMapFactory builds its ancestor map) as a
+    * local relation: no Spark job builds it, and every consumer
+    * (ancestor_table, ontology_closure, concepts_exclude_subtree) reads the
+    * same constant rows. */
   def ontologyClosure(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
-    transitiveClosure(graft.functions.ConceptDict.directEdges.toDF("child", "parent"))
+    graft.functions.ConceptDict.ontologyClosure.toDF("child", "parent")
   }
-
-  /** [[ontologyClosure]] computed ONCE per (process, session state) and
-    * served from a localCheckpoint — the closure is a pure ONTOLOGY
-    * constant (no corpus input), and the reference builds its ancestor-map
-    * artifact once per ontology release
-    * (util/OntologyClassAncestorMapFactory writes the map file the
-    * deployment reads), so the fixpoint's O(depth) job chain runs once per
-    * process instead of once per consumer invocation (ancestor_table /
-    * ontology_closure / concepts_exclude_subtree each re-ran the loop).
-    * Keyed by SharedState identity so a second SparkContext in one JVM
-    * (test suites) re-derives instead of reading another context's blocks.
-    * Ontology-sized (hundreds of rows) — the checkpoint blocks are
-    * negligible and live for the process, the same lifetime as the staged
-    * file artifacts. */
-  private val closureMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  def stagedOntologyClosure(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    closureMemo.computeIfAbsent(
-      System.identityHashCode(spark.sharedState).toString,
-      _ => ontologyClosure(spark).localCheckpoint())
 
   /** Node table: concept_id, name, category (category via the broadcast
     * mapping table, name from the dictionary data itself). */
@@ -239,8 +196,8 @@ object KnowledgeGraph {
     * final display division.
     *
     * Scale shape: the edge list materializes once (localCheckpoint — also
-    * truncates lineage so the plan doesn't double per round, cf.
-    * Dedup.connectedComponents); each round is ONE equi-join of the edge
+    * truncates lineage so the plan doesn't double per round, as each
+    * Dedup.connectedComponents round does); each round is ONE equi-join of the edge
     * list against the (small) rank table plus one groupBy shuffle on the
     * destination key — the Pregel cost model. Degrees are computed once.
     * Rounds are a fixed constant, so total cost is O(iters · |E|) with no
@@ -441,13 +398,12 @@ object KnowledgeGraph {
     * oger/util/AncestorTableFileFactory.java:22-41: for every class in the
     * target namespace (the reference filters IRIs containing "DOID"; the
     * prefix parameter is that namespace filter), one self row plus one row
-    * per ancestor from the ontology closure. Built from the same direct
-    * subclass edges [[ontologyClosure]] iterates — one closure + one
-    * prefix filter, no per-class work. */
+    * per ancestor from the ontology closure — the local
+    * [[ontologyClosure]] rows plus one prefix filter, no per-class work. */
   def ancestorTable(spark: org.apache.spark.sql.SparkSession,
                     prefix: String = "OP"): DataFrame = {
     import spark.implicits._
-    val closure = stagedOntologyClosure(spark)
+    val closure = ontologyClosure(spark)
     val classes = graft.functions.ConceptDict.labelEntries.map(_._1).toDF("concept_id")
       .where(substring_index(col("concept_id"), ":", 1) === prefix)
     val selfRows = classes.select(col("concept_id"), col("concept_id").as("ancestor_id"))

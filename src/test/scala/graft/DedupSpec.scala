@@ -55,9 +55,9 @@ class DedupSpec extends SparkSpec {
 
   test("cluster stats roll a 3-doc cluster and singletons into the size histogram") {
     // base ×3 → one size-3 cluster; two unrelated docs → two size-1 clusters
-    val r = Dedup.clusterStats(docs(base, base, base,
+    val r = Dedup.clusterStatsFrom(Dedup.clusters(docs(base, base, base,
         "completely different content with many other tokens in this string ok",
-        "another unrelated document about nothing in particular at all")).collect()
+        "another unrelated document about nothing in particular at all"))).collect()
       .map(x => x.getAs[Long]("cluster_size") ->
         ((x.getAs[Long]("n_clusters"), x.getAs[Long]("n_docs")))).toMap
     assert(r == Map(3L -> ((1L, 3L)), 1L -> ((2L, 2L))))
@@ -97,16 +97,17 @@ class DedupSpec extends SparkSpec {
       "completely different content with many other tokens in this string ok",
       "another unrelated document about nothing in particular at all")
     val sfKey = java.nio.file.Files.createTempDirectory("graft-cluster-stage-spec").toString
-    val direct = Dedup.clusters(dd).collect()
+    val directDf = Dedup.clusters(dd)
+    val direct = directDf.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     val staged = Dedup.stagedClusters(dd, sfKey)
     assert(staged.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
       == direct)
     // consumers over the staged table match their direct formulations
     assert(Dedup.clusterStatsFrom(staged).collect().toSeq.map(_.toSeq).toSet
-      == Dedup.clusterStats(dd).collect().toSeq.map(_.toSeq).toSet)
+      == Dedup.clusterStatsFrom(directDf).collect().toSeq.map(_.toSeq).toSet)
     assert(Dedup.softDedupWeightsFrom(staged).collect().toSeq.map(_.toSeq).toSet
-      == Dedup.softDedupWeights(dd).collect().toSeq.map(_.toSeq).toSet)
+      == Dedup.softDedupWeightsFrom(directDf).collect().toSeq.map(_.toSeq).toSet)
     // second call reads the artifact: the staged file's mtime must not move
     val path = graft.infra.Staging.lastPath(s"dedup_clusters_t${graft.infra.Staging.thresholdKey(0.6)}")
     val before = java.nio.file.Files.walk(java.nio.file.Paths.get(path))

@@ -95,6 +95,16 @@ class FunctionsSpec extends SparkSpec {
     assert(m.keySet == universe)
   }
 
+  test("ancestors are the closure rows of dictionary concepts") {
+    import graft.functions.ConceptDict
+    // the ancestor map as it was declared by hand before it was derived
+    // from the direct edges
+    val declared = ConceptDict.entries.map { case (_, c) => (c, c.takeWhile(_ != ':') + ":ROOT") } ++
+      Seq("OP:join" -> "OP:JOINLIKE", "OP:merge" -> "OP:JOINLIKE")
+    assert(ConceptDict.ancestors.size == declared.size)
+    assert(ConceptDict.ancestors.toSet == declared.toSet)
+  }
+
   test("label map strips exactly one trailing quote (reference rule)") {
     import spark.implicits._
     // the rule lives in the DF derivation; exercise it on raw rows directly

@@ -171,12 +171,19 @@ class Round17OpsSpec extends SparkSpec {
     graft.infra.Caches.unpersistManaged()
   }
 
-  test("stagedOntologyClosure serves the fixpoint's exact rows and memoizes per process") {
+  test("ontologyClosure returns the dictionary ontology's rows without a Spark job") {
+    import graft.functions.ConceptDict
     import graft.operators.KnowledgeGraph
-    val staged = KnowledgeGraph.stagedOntologyClosure(spark)
-    assertSameRows(staged, KnowledgeGraph.ontologyClosure(spark))
-    // second call returns the memoized checkpoint, not a fresh fixpoint
-    assert(KnowledgeGraph.stagedOntologyClosure(spark) eq staged)
+    var rows = Set.empty[(String, String)]
+    val jobs = jobsDuring {
+      rows = KnowledgeGraph.ontologyClosure(spark).as[(String, String)].collect().toSet
+    }
+    assert(jobs == 0, s"ontology closure ran $jobs Spark jobs")
+    // every dictionary concept reaches its group root, join/merge through
+    // the JOINLIKE mid-level, which itself rolls up to OP:ROOT
+    val expected = ConceptDict.entries.map { case (_, c) => c -> (c.takeWhile(_ != ':') + ":ROOT") }.toSet ++
+      Set("OP:join" -> "OP:JOINLIKE", "OP:merge" -> "OP:JOINLIKE", "OP:JOINLIKE" -> "OP:ROOT")
+    assert(rows == expected)
   }
 
   test("ngramJaccard candidates come from the managed shingle table (single shingle derivation)") {

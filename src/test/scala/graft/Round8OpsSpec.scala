@@ -116,8 +116,8 @@ class Round8OpsSpec extends SparkSpec {
 
   test("soft dedup weights split a cluster's mass and leave singletons whole") {
     val base = "the quick fox jumps over a lazy dog near the old red barn today"
-    val r = Dedup.softDedupWeights(docs(base, base, base,
-      "a completely different document with many other tokens in this string ok"))
+    val r = Dedup.softDedupWeightsFrom(Dedup.clusters(docs(base, base, base,
+      "a completely different document with many other tokens in this string ok")))
       .orderBy("doc_id").collect()
     assert(r.length == 4)
     assert(r.take(3).forall(_.getAs[Long]("cluster_size") == 3L))

@@ -31,13 +31,11 @@ class SkewSpec extends SparkSpec {
     assert(cands.head.getAs[Long]("shared_bands") == (Dedup.NumHashes / Dedup.RowsPerBand).toLong)
   }
 
-  test("transitiveClosure reaches fixpoint on a 4-deep chain with a diamond") {
+  test("ConceptDict.closure reaches fixpoint on a 4-deep chain with a diamond") {
     val edges = Seq(
       ("a", "b"), ("b", "c"), ("c", "d"),   // chain a→b→c→d
       ("a", "x"), ("x", "d"))               // diamond a→x→d
-      .toDF("child", "parent")
-    val closure = graft.operators.KnowledgeGraph.transitiveClosure(edges)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val closure = graft.functions.ConceptDict.closure(edges).toSet
     assert(closure == Set(
       ("a", "b"), ("a", "c"), ("a", "d"), ("a", "x"),
       ("b", "c"), ("b", "d"), ("c", "d"), ("x", "d")))

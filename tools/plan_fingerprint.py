@@ -6,8 +6,11 @@ diff, not a hand-maintained list (ADVICE r17 item 5).
 Normalization strips run-varying tokens that do not change the plan's
 shape: expression ids (#123), codegen/plan ids, subquery ids, staging
 temp-dir paths and hash-suffixed staged table names, InMemoryFileIndex
-paths, random-suffixed graft temp dirs, JVM lambda identities, RDD ids
-and source lines of checkpointed-RDD scans, AQE
+paths, random-suffixed graft temp dirs, JVM lambda identities, the
+counter suffix of generated lambda-variable names (`lambda x_298#x` ->
+`lambda x_N#x`: a JVM-wide counter numbers them, so it moves whenever an
+earlier plan in the dump built more or fewer lambdas), RDD ids and source
+lines of checkpointed-RDD scans, AQE
 isFinalPlan markers, and the expression-id-dependent operand order of the
 Expand/Aggregate lines Spark generates for several count_distinct.
 
@@ -36,6 +39,8 @@ def normalize(body: str) -> str:
     b = re.sub(r"(/graft-[A-Za-z_-]*?)-?\d{5,}", r"\1-N", b)
     # JVM lambda identities in object-operator arguments
     b = re.sub(r"\$\$Lambda[$/\w]*@[0-9a-f]+", "$$Lambda", b)
+    # generated higher-order-function variables: x_298 -> x_N
+    b = re.sub(r"(lambda \w+?)_\d+#", r"\1_N#", b)
     # scans of checkpointed RDDs name the RDD id and the creating source line
     b = re.sub(r"(\w+RDD)\[\d+\] at (\w+) at ([\w.]+):\d+", r"\1[n] at \2 at \3", b)
     b = re.sub(r"Location: \w+ \[[^\]]*\]", "Location: X", b)
