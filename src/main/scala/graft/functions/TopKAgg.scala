@@ -6,9 +6,11 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, RuntimeReplaceable, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -24,20 +26,29 @@ import org.apache.spark.sql.types._
   * expression (CosineSimilarity), the optimizer rule and planner strategy
   * (GraftExtensions), and the physical plan (CosineTopKPlan).
   *
-  * Ordering is (score DESC, id ASC) — or (score ASC, id ASC) when `asc` —
-  * and is NaN-CONSISTENT with Spark's SortOrder semantics: NaN compares
-  * greater than every double (java.lang.Double.compare), so a DESC heap
-  * ranks NaN first and an ASC heap ranks it last, exactly like the window
-  * formulation it replaces. Results are cross-engine deterministic.
+  * The score's type picks the lane. A BIGINT score stays a long end to end
+  * and is ordered by java.lang.Long.compare, so a composite integer order
+  * key (top-k by `(doc_id, sent_id)`) is exact at ANY magnitude, with no
+  * 2^53 caveat; the plan names it `top_k_long_agg`. Every other score is a
+  * DOUBLE (`top_k_agg`), ordered like Spark's sort and window
+  * (SQLOrderingUtil.compareDoubles): NaN greater than every double, and
+  * -0.0 tied with 0.0. A DESC heap therefore ranks NaN first and an ASC
+  * heap ranks it last, and ties on score go to the smaller id, exactly like
+  * `row_number() over (partition by g order by s [ASC|DESC], id ASC)`.
+  *
+  * Ordering is (score DESC, id ASC) — or (score ASC, id ASC) when `asc`.
+  * Both lanes keep the score as 64 bits (a double's raw bits), so the heap,
+  * its wire format and the returned values are one code path, and scores
+  * come back bit for bit.
   *
   * `payload` carries arbitrary extra columns through the heap as inert
   * cargo (ordering never looks at them), so top-N-per-group queries whose
   * projection needs more than (group, rank, score, id) — e.g. a part NAME
   * next to its price — still get the bounded plan. Entries serialize the
   * payload as an UnsafeRow; with no payload the wire format is the bare
-  * (double, long) pair.
+  * (long, long) pair.
   *
-  * Returns ARRAY<STRUCT<score: DOUBLE, id: BIGINT[, payload: STRUCT]>>
+  * Returns ARRAY<STRUCT<score: DOUBLE|BIGINT, id: BIGINT[, payload: STRUCT]>>
   * sorted best-first.
   */
 case class TopKAgg(
@@ -48,18 +59,21 @@ case class TopKAgg(
     payload: Seq[Expression] = Nil,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, Long, UnsafeRow)]] {
+  extends TypedImperativeAggregate[mutable.PriorityQueue[(Long, Long, UnsafeRow)]] {
 
-  // analysis-time contract: update() reads score as Double and id as Long.
-  // (AbstractDataType is private[sql] in Spark 4, so ExpectsInputTypes is
-  // closed to third parties; the explicit check gives the same analysis-time
-  // rejection instead of a mid-task ClassCastException, and the Column API
-  // coerces compatible inputs by casting.)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (score.dataType == DoubleType && id.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"top_k_agg expects (DOUBLE score, BIGINT id), got (${score.dataType}, ${id.dataType})")
+  // analysis-time contract: update() reads score as Long or Double and id
+  // as Long. (AbstractDataType is private[sql] in Spark 4, so
+  // ExpectsInputTypes is closed to third parties; the explicit check gives
+  // the same analysis-time rejection instead of a mid-task
+  // ClassCastException, and the Column API coerces compatible inputs.)
+  override def checkInputDataTypes(): TypeCheckResult =
+    if ((score.dataType == DoubleType || score.dataType == LongType) && id.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (DOUBLE or BIGINT score, BIGINT id), got (${score.dataType}, ${id.dataType})")
+
+  // plan strings ask for prettyName before the score is resolved too
+  private def longLane: Boolean = score.resolved && score.dataType == LongType
 
   private def payloadSchema: StructType =
     StructType(payload.zipWithIndex.map { case (e, i) =>
@@ -69,61 +83,66 @@ case class TopKAgg(
   @transient private lazy val payloadProj: UnsafeProjection =
     UnsafeProjection.create(payload)
 
-  // `compare(a, b) < 0` iff a ranks BETTER: score per direction with NaN
-  // greatest (java.lang.Double.compare — byte-for-byte Spark's SortOrder
-  // comparator for doubles), ties by id ASC. The max-heap head under this
-  // ordering is therefore the WORST kept entry — the eviction candidate.
-  private val bestFirst: Ordering[(Double, Long, UnsafeRow)] =
-    new Ordering[(Double, Long, UnsafeRow)] {
-      override def compare(a: (Double, Long, UnsafeRow),
-                           b: (Double, Long, UnsafeRow)): Int = {
-        val c =
-          if (asc) java.lang.Double.compare(a._1, b._1)
-          else java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-      }
+  // `compare(a, b) < 0` iff a ranks BETTER: score per direction in its
+  // lane, ties by id ASC. The max-heap head under this ordering is
+  // therefore the WORST kept entry — the eviction candidate.
+  @transient private lazy val bestFirst: Ordering[(Long, Long, UnsafeRow)] = {
+    val lane: (Long, Long) => Int =
+      if (longLane) java.lang.Long.compare
+      else (a, b) => SQLOrderingUtil.compareDoubles(
+        java.lang.Double.longBitsToDouble(a), java.lang.Double.longBitsToDouble(b))
+    (a, b) => {
+      val c = if (asc) lane(a._1, b._1) else lane(b._1, a._1)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
     }
+  }
 
-  override def createAggregationBuffer(): mutable.PriorityQueue[(Double, Long, UnsafeRow)] =
+  override def createAggregationBuffer(): mutable.PriorityQueue[(Long, Long, UnsafeRow)] =
     mutable.PriorityQueue.empty(bestFirst)
 
-  override def update(buffer: mutable.PriorityQueue[(Double, Long, UnsafeRow)],
-                      input: InternalRow): mutable.PriorityQueue[(Double, Long, UnsafeRow)] = {
+  override def update(buffer: mutable.PriorityQueue[(Long, Long, UnsafeRow)],
+                      input: InternalRow): mutable.PriorityQueue[(Long, Long, UnsafeRow)] = {
     val s = score.eval(input)
     val i = id.eval(input)
     if (s != null && i != null) {
+      val bits = s match {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case l: Long => l
+      }
       // copy: the projection's UnsafeRow is reused across input rows
       val p = if (payload.isEmpty) null else payloadProj(input).copy()
-      offer(buffer, (s.asInstanceOf[Double], i.asInstanceOf[Long], p))
+      offer(buffer, (bits, i.asInstanceOf[Long], p))
     }
     buffer
   }
 
-  override def merge(buffer: mutable.PriorityQueue[(Double, Long, UnsafeRow)],
-                     other: mutable.PriorityQueue[(Double, Long, UnsafeRow)]): mutable.PriorityQueue[(Double, Long, UnsafeRow)] = {
+  override def merge(buffer: mutable.PriorityQueue[(Long, Long, UnsafeRow)],
+                     other: mutable.PriorityQueue[(Long, Long, UnsafeRow)]): mutable.PriorityQueue[(Long, Long, UnsafeRow)] = {
     other.foreach(offer(buffer, _))
     buffer
   }
 
-  private def offer(buffer: mutable.PriorityQueue[(Double, Long, UnsafeRow)],
-                    e: (Double, Long, UnsafeRow)): Unit = {
+  private def offer(buffer: mutable.PriorityQueue[(Long, Long, UnsafeRow)],
+                    e: (Long, Long, UnsafeRow)): Unit = {
     if (buffer.size < k) buffer.enqueue(e)
     else if (bestFirst.compare(e, buffer.head) < 0) { buffer.dequeue(); buffer.enqueue(e) }
   }
 
-  override def eval(buffer: mutable.PriorityQueue[(Double, Long, UnsafeRow)]): Any = {
+  override def eval(buffer: mutable.PriorityQueue[(Long, Long, UnsafeRow)]): Any = {
     val best = buffer.toArray.sorted(bestFirst)
-    new GenericArrayData(best.map { case (s, i, p) =>
+    val long = longLane
+    new GenericArrayData(best.map { case (bits, i, p) =>
+      val s: Any = if (long) bits else java.lang.Double.longBitsToDouble(bits)
       if (payload.isEmpty) InternalRow(s, i) else InternalRow(s, i, p)
     })
   }
 
-  override def serialize(buffer: mutable.PriorityQueue[(Double, Long, UnsafeRow)]): Array[Byte] = {
+  override def serialize(buffer: mutable.PriorityQueue[(Long, Long, UnsafeRow)]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeInt(buffer.size)
     buffer.foreach { case (s, i, p) =>
-      out.writeDouble(s); out.writeLong(i)
+      out.writeLong(s); out.writeLong(i)
       if (payload.nonEmpty) {
         val bytes = p.getBytes
         out.writeInt(bytes.length)
@@ -134,12 +153,12 @@ case class TopKAgg(
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.PriorityQueue[(Double, Long, UnsafeRow)] = {
+  override def deserialize(bytes: Array[Byte]): mutable.PriorityQueue[(Long, Long, UnsafeRow)] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val buf = createAggregationBuffer()
     val n = in.readInt()
     (0 until n).foreach { _ =>
-      val s = in.readDouble()
+      val s = in.readLong()
       val i = in.readLong()
       val p = if (payload.isEmpty) null else {
         val len = in.readInt()
@@ -155,7 +174,7 @@ case class TopKAgg(
   }
 
   override def dataType: DataType = {
-    val base = new StructType().add("score", DoubleType).add("id", LongType)
+    val base = new StructType().add("score", score.dataType).add("id", LongType)
     val entry = if (payload.isEmpty) base else base.add("payload", payloadSchema, nullable = false)
     ArrayType(entry, containsNull = false)
   }
@@ -167,27 +186,41 @@ case class TopKAgg(
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): TopKAgg =
     copy(inputAggBufferOffset = newOffset)
-  override def prettyName: String = "top_k_agg"
+  override def prettyName: String = if (longLane) "top_k_long_agg" else "top_k_agg"
+}
+
+/** The Column API's score coercion, decided once the input is resolved: a
+  * BIGINT or DOUBLE score passes through, any other becomes
+  * `cast(score as double)`. The optimizer swaps in that replacement before
+  * planning, so physical plans show the score or its cast, never this node. */
+private case class TopKScore(child: Expression) extends RuntimeReplaceable with UnaryLike[Expression] {
+  override lazy val replacement: Expression = child.dataType match {
+    case LongType | DoubleType => child
+    case _ => Cast(child, DoubleType)
+  }
+  override def checkInputDataTypes(): TypeCheckResult = replacement.checkInputDataTypes()
+  override protected def withNewChildInternal(newChild: Expression): TopKScore = copy(child = newChild)
 }
 
 object TopKAgg {
-  /** Column API: top-k (score, id) pairs per group, best-first. Compatible
-    * inputs (int/float score, int id) are coerced by the casts; incompatible
-    * ones fail analysis in checkInputDataTypes. */
-  def topK(score: Column, id: Column, k: Int): Column =
-    ColumnBridge.column(
-      TopKAgg(ColumnBridge.expression(score.cast("double")),
-        ColumnBridge.expression(id.cast("long")), k)
-        .toAggregateExpression())
+  /** Column API: top-k (score, id) pairs per group, best-first; bottom-k
+    * when `asc`. A BIGINT score takes the exact long lane, any other
+    * numeric score the double lane; an int id is cast to BIGINT, and
+    * incompatible inputs fail analysis in checkInputDataTypes. */
+  def topK(score: Column, id: Column, k: Int, asc: Boolean = false): Column =
+    column(score, id, k, asc, Nil)
 
   /** Column API with payload cargo: top-k (score, id, payload-struct)
     * entries per group. The payload rides through the heap untouched — the
     * bounded-plan answer to "top-N per group, but I also need these other
     * columns of the winning rows". */
   def topKWith(score: Column, id: Column, k: Int, payload: Column*): Column =
+    column(score, id, k, asc = false, payload)
+
+  private def column(score: Column, id: Column, k: Int, asc: Boolean, payload: Seq[Column]): Column =
     ColumnBridge.column(
-      TopKAgg(ColumnBridge.expression(score.cast("double")),
-        ColumnBridge.expression(id.cast("long")), k,
-        payload = payload.map(ColumnBridge.expression))
+      TopKAgg(TopKScore(ColumnBridge.expression(score)),
+        ColumnBridge.expression(id.cast("long")), k, asc,
+        payload.map(ColumnBridge.expression))
         .toAggregateExpression())
 }

@@ -28,8 +28,8 @@ object Caches {
   def unpersistAll(spark: SparkSession): Unit = spark.catalog.clearCache()
 
   // Operator-internal persists whose lifetime outlives the returned plan
-  // (e.g. splitLeakage's window-id table, read by both the eval and train
-  // sides of the final join). Re-invoking with the SAME plan does not
+  // (e.g. windowDupPairsFrom's df-capped window set, read by both sides of
+  // the pair self-join). Re-invoking with the SAME plan does not
   // accumulate entries — CacheManager dedups by canonicalized logical plan —
   // but each distinct corpus pins one copy until eviction, so they register
   // here (ADVICE r9) and a long-lived service drops exactly these between

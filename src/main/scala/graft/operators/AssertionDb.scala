@@ -84,9 +84,6 @@ object AssertionDb {
       evidenceBase(docs, annots), docs.sparkSession, "doc_id")
 
   /** assertion_id, subject_curie, object_curie, association_curie. */
-  def assertions(docs: DataFrame, annots: DataFrame): DataFrame =
-    assertionsFrom(evidenceBase(docs, annots))
-
   def assertionsFrom(base: DataFrame): DataFrame =
     base
       .select(col("assertion_id"), col("concept_x").as("subject_curie"),
@@ -100,9 +97,6 @@ object AssertionDb {
     * "PMID:"+doc_id), so the dedup groups never cross documents — doc_id
     * rides in the grouping keys and the distinct becomes a doc-local
     * aggregate the bucketed base satisfies WITHOUT an exchange. */
-  def evidence(docs: DataFrame, annots: DataFrame): DataFrame =
-    evidenceFrom(evidenceBase(docs, annots))
-
   def evidenceFrom(base: DataFrame): DataFrame =
     docLocalDistinct(evidenceProjected(base))
 
@@ -121,9 +115,6 @@ object AssertionDb {
     * (entity_id = sha over doc_id|ord|concept — never cross-doc); a
     * two-branch Union would reset the output partitioning and force the
     * dedup to shuffle. */
-  def entities(docs: DataFrame, annots: DataFrame): DataFrame =
-    entitiesFrom(evidenceBase(docs, annots))
-
   def entitiesFrom(base: DataFrame): DataFrame =
     docLocalDistinct(entitiesProjected(base))
 
@@ -165,11 +156,9 @@ object AssertionDb {
   /** One row of orphan counts — the FK integrity the MySQL schema's
     * foreign keys enforce, asserted relationally: evidence rows without
     * their assertion, scores without their evidence, evidence without its
-    * entity rows, plus duplicate-PK counts. All zero on a correct build. */
-  def integrity(docs: DataFrame, annots: DataFrame): DataFrame =
-    integrityFrom(evidenceBase(docs, annots))
-
-  /** Every id except the assertion digest embeds doc_id, so the orphan
+    * entity rows, plus duplicate-PK counts. All zero on a correct build.
+    *
+    * Every id except the assertion digest embeds doc_id, so the orphan
     * checks are DOC-LOCAL joins: both sides keep doc_id, the join keys are
     * (doc_id, id) — semantically identical to joining on the id alone —
     * and every branch reads the bucketed base with zero exchanges. The one

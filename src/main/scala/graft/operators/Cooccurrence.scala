@@ -265,12 +265,9 @@ object Cooccurrence {
     * aggregate. Every input is an exact integer; the float expressions are
     * written with IDENTICAL operation order in the oracle so 6dp rounding
     * agrees bit-for-bit. Concepts present in every unit are excluded
-    * (degenerate zero denominator — no marginal variance). */
-  def chi2Metrics(annots: DataFrame, unitCols: Seq[String]): DataFrame =
-    chi2FromUnits(unitConcepts(annots, unitCols), unitCols)
-
-  /** [[chi2Metrics]] over a prebuilt unit-concept table
-    * ([[stagedUnitConcepts]] in the query wiring). */
+    * (degenerate zero denominator — no marginal variance). `unitsIn` is the
+    * unit-concept table ([[unitConcepts]]; [[stagedUnitConcepts]] in the
+    * query wiring). */
   def chi2FromUnits(unitsIn: DataFrame, unitCols: Seq[String]): DataFrame = {
     val units = graft.infra.Caches.managed(unitsIn)
     val pairs = pairCounts(units, unitCols)
@@ -295,7 +292,7 @@ object Cooccurrence {
         Num.r6(n * pow(adbc, 2.0) / (fx * fy * (n - fx) * (n - fy))).as("chi2"))
   }
 
-  /** Similarity floor for [[tfidfDocSim]]. */
+  /** Similarity floor for [[tfidfDocSimFrom]]. */
   val DocSimTau = 0.3
 
   /** doc_a, doc_b, dot_u, cosine — sparse lexical document similarity:
@@ -310,19 +307,14 @@ object Cooccurrence {
     * empty or quadratic — candidates are the correct 100 TB source).
     * Weights are floored to integer micro-units BEFORE the dot product,
     * so pair sums are exact longs (order-independent); norms are over the
-    * full vector; one rounded division per candidate pair. */
-  def tfidfDocSim(docs: DataFrame, annots: DataFrame,
-                  tau: Double = DocSimTau): DataFrame =
-    tfidfDocSimFrom(tfidf(annots),
-      Dedup.minhashCandidates(docs).select("doc_a", "doc_b"), tau)
-
-  /** [[tfidfDocSim]] over prebuilt parts (query wiring): the tf-idf vectors
-    * from [[tfidfFromIdf]] + the staged concept-IDF artifact, and the
-    * candidate pairs re-banded from the staged MinHash signature table
-    * (Dedup.stagedMinhashValues — 12 longs per doc; the inline
-    * [[Dedup.minhashCandidates]] re-ran the tokenize+shingle+min-agg corpus
-    * pass this family stages precisely to avoid). The pair scoring itself
-    * — the query's own work — is unchanged. */
+    * full vector; one rounded division per candidate pair.
+    *
+    * Inputs: the tf-idf vectors ([[tfidf]]; [[tfidfFromIdf]] over the
+    * staged concept-IDF artifact in the query wiring) and the candidate
+    * pairs ([[Dedup.minhashCandidates]]; in the query wiring re-banded from
+    * the staged MinHash signature table, Dedup.stagedMinhashValues — 12
+    * longs per doc — so the tokenize+shingle+min-agg corpus pass is not
+    * re-run). */
   def tfidfDocSimFrom(tfidfVecs: DataFrame, candidates: DataFrame,
                       tau: Double = DocSimTau): DataFrame = {
     val vec = tfidfVecs
@@ -420,14 +412,9 @@ object Cooccurrence {
     * label table and two bounded aggregations — candidate generation stays
     * the heap-based [[bm25TopK]]; no corpus-wide sort. Macro-MRR@k =
     * avg(rr) over these rows, left to the consumer so the per-query
-    * diagnostics survive. */
-  def bm25Mrr(annots: DataFrame, k: Int = 10, relTf: Long = 2L): DataFrame =
-    bm25MrrFromPool(annots, bm25TopK(annots, k), relTf)
-
-  /** [[bm25Mrr]] over a prebuilt retrieval pool ([[stagedBm25TopK]] in the
-    * query wiring): the eval's own work — the relevance-label aggregation
-    * and the pool join — still computes from `annots`; only the ≤ k-per-
-    * concept candidate pool comes from the staged index artifact. */
+    * diagnostics survive. `pool` is the [[bm25TopK]] retrieval pool
+    * ([[stagedBm25TopK]] in the query wiring); the relevance labels and the
+    * pool join compute from `annots`. */
   def bm25MrrFromPool(annots: DataFrame, pool: DataFrame, relTf: Long = 2L): DataFrame = {
     val rel = graft.infra.Caches.managed(
       annots.groupBy("doc_id", "concept_id").agg(count(lit(1)).as("tf"))
@@ -457,14 +444,10 @@ object Cooccurrence {
     * don't re-sort the corpus), so every window here partitions a ≤ k-row
     * group — candidate generation stays the bounded-heap [[bm25TopK]]
     * aggregate and no df-wide or corpus-wide sort appears at any scale.
-    * 1/(60+r) sums are identical IEEE double chains in both engines. */
-  def hybridRrf(docs: DataFrame, annots: DataFrame, k: Int = 10): DataFrame =
-    hybridRrfFromPool(docs, bm25TopK(annots, k))
-
-  /** [[hybridRrf]] over a prebuilt retrieval pool ([[stagedBm25TopK]] in
-    * the query wiring): the fusion's own work — the quality prior over the
-    * corpus and the pool-bounded windows — still computes per run; only
-    * the BM25 candidate pool comes from the staged index artifact. */
+    * 1/(60+r) sums are identical IEEE double chains in both engines.
+    * `bm25Pool` is the [[bm25TopK]] pool ([[stagedBm25TopK]] in the query
+    * wiring); the quality prior and the pool-bounded windows compute per
+    * run. */
   def hybridRrfFromPool(docs: DataFrame, bm25Pool: DataFrame): DataFrame = {
     val pool = bm25Pool
       .join(TextStats.quality(docs).select(col("doc_id"), col("quality")), "doc_id")

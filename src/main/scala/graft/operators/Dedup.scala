@@ -283,13 +283,10 @@ object Dedup {
     * (ngramJaccard) — signatures are what the candidate join already
     * carries, so estimation adds no extra corpus scan. Caches here are
     * managed (drained after the query) — the cross-query share in this
-    * family is the staged signature artifact [[stagedMinhashValues]]. */
-  def minhashEstimate(docs: DataFrame): DataFrame =
-    minhashEstimateFrom(graft.infra.Caches.managed(
-      minhashValues(graft.infra.Caches.managed(shingleSets(docs)))))
-
-  /** [[minhashEstimate]] over a prebuilt (doc_id, j, mh) signature table —
-    * pass [[stagedMinhashValues]] (query wiring) and the whole estimate runs
+    * family is the staged signature artifact [[stagedMinhashValues]].
+    *
+    * Input: a (doc_id, j, mh) signature table ([[minhashValues]]). Pass
+    * [[stagedMinhashValues]] (query wiring) and the whole estimate runs
     * off 12 longs per doc with no shingle-stream scan: bands re-derive from
     * the signatures, candidates from the bands, and the component-match
     * count from the same table on both pair sides. */
@@ -306,7 +303,7 @@ object Dedup {
           .as("est_jaccard"))
   }
 
-  /** rows-per-band shapes swept by [[lshBandTuning]] (divisors of the 12
+  /** rows-per-band shapes swept by [[lshBandTuningFromValues]] (divisors of the 12
     * signature components: 6×2 / 4×3 / 3×4 / 2×6 bands×rows). */
   val BandTuningConfigs: Seq[Int] = Seq(2, 3, 4, 6)
 
@@ -330,15 +327,9 @@ object Dedup {
     * — the expensive part); each shape then re-bands 12 longs per doc and
     * its candidate join is band-bucket-bounded exactly like the production
     * path. Estimates come from the signatures the joins already carry, so
-    * the whole sweep adds zero corpus scans. */
-  def lshBandTuning(docs: DataFrame,
-                    rowsPerBandShapes: Seq[Int] = BandTuningConfigs): DataFrame =
-    lshBandTuningFromValues(
-      graft.infra.Caches.managed(minhashValues(shingleSets(docs))), rowsPerBandShapes)
-
-  /** [[lshBandTuning]] over a prebuilt signature table
-    * ([[stagedMinhashValues]] in the query wiring — the sweep then runs
-    * entirely off the staged 12-longs-per-doc artifact). */
+    * the whole sweep adds zero corpus scans. Input: the signature table
+    * ([[minhashValues]]; [[stagedMinhashValues]] in the query wiring, so
+    * the sweep runs entirely off the staged 12-longs-per-doc artifact). */
   def lshBandTuningFromValues(mhIn: DataFrame,
                               rowsPerBandShapes: Seq[Int] = BandTuningConfigs): DataFrame = {
     val sig = graft.infra.Caches.managed(sigArrays(mhIn))
@@ -380,10 +371,8 @@ object Dedup {
   def minhashCandidates(docs: DataFrame): DataFrame =
     minhashCandidatesFrom(shingleSets(docs))
 
-  /** Same pipeline over hashed ids (the 100 TB path). */
-  def minhashCandidatesHashed(docs: DataFrame): DataFrame =
-    minhashCandidatesFrom(shingleSetsHashed(docs))
-
+  /** The same pipeline over any shingle-id set table: [[shingleSets]], or
+    * [[shingleSetsHashed]] for the hashed ids of the 100 TB path. */
   def minhashCandidatesFrom(sets: DataFrame): DataFrame =
     minhashCandidatesFromBands(graft.infra.Caches.managed(minhashBands(sets)))
 
@@ -471,7 +460,7 @@ object Dedup {
       .groupBy("new_id", "old_id").agg(count(lit(1)).as("shared_bands"))
   }
 
-  /** [[minhashCandidatesHashed]] through a STAGED id table: the xxhash64
+  /** [[minhashCandidatesFrom]] over a STAGED hashed id table: the xxhash64
     * shingle-id sets (the cheapest 100 TB id path — one codegen'd hash call,
     * no md5+conv) are written to parquet once, and BOTH engines derive
     * bands/candidates from the staged ids. DuckDB has no xxhash64, so this
@@ -525,7 +514,7 @@ object Dedup {
     * fraction of the LSH candidate pairs the exact shingle-Jaccard confirm
     * actually keeps (the confirm-stage cost/selectivity number an operator
     * of the dedup pipeline watches — low precision means the band shape
-    * wastes confirm-join work; [[lshBandTuning]] is the knob, this is the
+    * wastes confirm-join work; [[lshBandTuningFromValues]] is the knob, this is the
     * gauge). Candidates with NO shared shingle survive the outer join at
     * J = 0 — they are exactly the false-positive mass the report exists to
     * count. Same band-bounded joins as the production path; one 1-row
@@ -850,19 +839,8 @@ object Dedup {
       .select("doc_id", "eval_id", "containment")
   }
 
-  /** doc_id, n_shingles, n_leaked, leak_fraction, leaked — train/eval
-    * SPLIT-LEAKAGE report (the data card a pre-training run publishes for
-    * its held-out split: which eval docs share verbatim `windowTokens`-run
-    * text with ANY train doc, and how much of each eval doc is covered).
-    * The eval side is the deterministic 1-in-`evalMod` doc subsample
-    * (integer key, never rand()); shingles travel as Hash60 ids, never
-    * strings; the probe is one semi-join of the (small) eval shingle set
-    * against the distinct train shingles, then two bounded per-doc
-    * rollups. The decontamination dual of the eval-item scans: there the
-    * contaminant list is external, here the split is internal and the
-    * leakage is corpus↔corpus. */
   /** distinct (doc_id, wid) over `windowTokens`-token windows — the
-    * shared shingle-id table of [[splitLeakage]] and its staged train-side
+    * shared shingle-id table of [[splitLeakageFrom]] and its staged train-side
     * probe index ([[stagedTrainShingles]]). */
   private[graft] def windowIds(docs: DataFrame, windowTokens: Int): DataFrame =
     TextOps.ngramExplode(docs, windowTokens, "win", Seq("doc_id"))
@@ -870,14 +848,14 @@ object Dedup {
       .distinct()
 
   /** [[windowIds]] staged ONCE per (process, corpus) as a wid-bucketed
-    * parquet artifact — the shared shingle table of [[windowDupPairs]],
-    * [[splitLeakage]], and [[stagedTrainShingles]] (so `window_dup`,
+    * parquet artifact — the shared shingle table of [[windowDupPairsFrom]],
+    * [[splitLeakageFrom]], and [[stagedTrainShingles]] (so `window_dup`,
     * `split_leakage`, and the streaming gate all read ONE derivation of
     * the 7-lead token-window chain per corpus). This was a per-query
     * `persist()` through r13; under end-of-suite cache pressure the
     * persist evicted MID-QUERY and the window chain recomputed once per
-    * read (3× in windowDupPairs — the driver-flagged 12.8 s vs 0.9 s
-    * local `window_dup` reading, VERDICT r13 item 1). A file artifact is
+    * read (3× in the window-dup pair query — 12.8 s vs a 0.9 s local
+    * `window_dup` reading, VERDICT r13 item 1). A file artifact is
     * eviction-immune, and wid-bucketing makes every wid-keyed
     * aggregation/self-join downstream exchange-free on this side — the
     * same layout the incremental near-dup index uses (Staging.Layout.Bucketed).
@@ -900,9 +878,20 @@ object Dedup {
         .select("wid").distinct())
       .read(docs.sparkSession)
 
-  /** [[splitLeakage]] over a prebuilt distinct (doc_id, wid) table — pass
-    * [[stagedWindowIds]] for the eviction-immune artifact (query wiring)
-    * or any windowIds-shaped frame (tests, ad-hoc splits). */
+  /** doc_id, n_shingles, n_leaked, leak_fraction, leaked — train/eval
+    * SPLIT-LEAKAGE report (the data card a pre-training run publishes for
+    * its held-out split: which eval docs share verbatim `windowTokens`-run
+    * text with ANY train doc, and how much of each eval doc is covered).
+    * The eval side is the deterministic 1-in-`evalMod` doc subsample
+    * (integer key, never rand()); shingles travel as Hash60 ids, never
+    * strings; the probe is one semi-join of the (small) eval shingle set
+    * against the distinct train shingles, then two bounded per-doc
+    * rollups. The decontamination dual of the eval-item scans: there the
+    * contaminant list is external, here the split is internal and the
+    * leakage is corpus↔corpus.
+    *
+    * Input: a distinct (doc_id, wid) table ([[windowIds]]) — pass
+    * [[stagedWindowIds]] for the eviction-immune artifact (query wiring). */
   def splitLeakageFrom(wins: DataFrame, evalMod: Long = 10L): DataFrame = {
     val isEval = pmod(col("doc_id"), lit(evalMod)) === 0
     val evalW = wins.where(isEval)
@@ -918,23 +907,6 @@ object Dedup {
       .withColumn("leaked", col("n_leaked") > 0)
   }
 
-  def splitLeakage(docs: DataFrame, evalMod: Long = 10L, windowTokens: Int = 8): DataFrame = {
-    // eval and train sides both read it; managed = drained after the query
-    val wins = graft.infra.Caches.managed(windowIds(docs, windowTokens))
-    splitLeakageFrom(wins, evalMod)
-  }
-
-  /** doc_a, doc_b, n_shared — cross-document exact-substring duplication
-    * (the relational re-expression of the suffix-array pass in Lee et al.
-    * 2022, "Deduplicating Training Data Makes Language Models Better",
-    * arXiv:2107.06499): flag a pair when the two docs share at least
-    * `minShared` distinct `windowTokens`-token windows verbatim. Window id =
-    * Hash60 of the window text mod MinhashP (per-row, oracle-reproducible).
-    * Windows occurring in more than `maxDf` documents are dropped before
-    * pairing — the boilerplate cap that bounds every bucket's join fan-out
-    * (a window in F docs contributes F² pairs; capping F is what makes the
-    * equi-join viable at corpus scale, and such windows are boilerplate,
-    * not duplication evidence). */
   /** doc_id, clean_text, n_tokens_kept, n_tokens_removed — the DELETION
     * step of exact-substring dedup (Lee et al. 2022, arXiv:2107.06499:
     * after the suffix-array pass finds duplicated spans, all but one
@@ -949,7 +921,7 @@ object Dedup {
     * documents are exempt here — corpus-chrome at that frequency is
     * [[boilerplateStrip]]'s job (delete ALL occurrences), and the cap is
     * what bounds the occurrence join at corpus scale, exactly as in
-    * [[windowDupPairs]]. One groupBy over window occurrences, one
+    * [[windowDupPairsFrom]]. One groupBy over window occurrences, one
     * bounded ×windowTokens explode of the deleted occurrences, one
     * anti-join, one per-doc reassembly. */
   def windowDedupApply(docs: DataFrame, windowTokens: Int = 8, maxDf: Int = 20): DataFrame = {
@@ -991,11 +963,23 @@ object Dedup {
         (col("n_tokens") - coalesce(col("n_tokens_kept"), lit(0L))).as("n_tokens_removed"))
   }
 
-  /** [[windowDupPairs]] over a prebuilt distinct (doc_id, wid) table —
-    * pass [[stagedWindowIds]] for the eviction-immune wid-bucketed
-    * artifact: the df-cap aggregation and both sides of the pair
-    * self-join are wid-keyed, so they scan the bucketed table with zero
-    * exchanges on this side. */
+  /** doc_a, doc_b, n_shared — cross-document exact-substring duplication
+    * (the relational re-expression of the suffix-array pass in Lee et al.
+    * 2022, "Deduplicating Training Data Makes Language Models Better",
+    * arXiv:2107.06499): flag a pair when the two docs share at least
+    * `minShared` distinct `windowTokens`-token windows verbatim. Window id =
+    * Hash60 of the window text mod MinhashP (per-row, oracle-reproducible).
+    * Windows occurring in more than `maxDf` documents are dropped before
+    * pairing — the boilerplate cap that bounds every bucket's join fan-out
+    * (a window in F docs contributes F² pairs; capping F is what makes the
+    * equi-join viable at corpus scale, and such windows are boilerplate,
+    * not duplication evidence).
+    *
+    * Input: a distinct (doc_id, wid) table of `windowTokens`-token windows
+    * ([[windowIds]]). Pass [[stagedWindowIds]] for the eviction-immune
+    * wid-bucketed artifact: the df-cap aggregation and both sides of the
+    * pair self-join are wid-keyed, so they scan the bucketed table with
+    * zero exchanges on this side. */
   def windowDupPairsFrom(wins: DataFrame, minShared: Int = 2, maxDf: Int = 20): DataFrame = {
     val keepWids = wins.groupBy("wid").agg(count(lit(1)).as("df"))
       .where(col("df") >= 2 && col("df") <= maxDf)
@@ -1010,11 +994,5 @@ object Dedup {
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
-  }
-
-  def windowDupPairs(docs: DataFrame, windowTokens: Int = 8,
-                     minShared: Int = 2, maxDf: Int = 20): DataFrame = {
-    val wins = graft.infra.Caches.managed(windowIds(docs, windowTokens))
-    windowDupPairsFrom(wins, minShared, maxDf)
   }
 }

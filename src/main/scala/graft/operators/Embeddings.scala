@@ -56,7 +56,7 @@ object Embeddings {
     * vector count is a property of the corpus (at 100 TB it's the table
     * stats a deployment reads once per corpus version), so the sizing job
     * runs once per (process, corpus), not once per query invocation — the
-    * same per-process memo discipline as decontaminateBloom's NDV count.
+    * same per-process memo discipline as decontaminateBloomFromBigrams' NDV count.
     *
     * INVALIDATION HAZARD (ADVICE r15, same caveat as the Bloom NDV memo):
     * the key is the canonicalized READ PLAN, so regenerating the parquet at
@@ -219,14 +219,10 @@ object Embeddings {
     * publishes before swapping brute for approximate at scale). The truth
     * set is Q·k rows (numQueries is a parameter, not the corpus), so the
     * hit join is tiny however large the corpus; queries with zero hits are
-    * kept through the outer join. */
-  def annRecall(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame =
-    annRecallFromTruth(embeddings, cosineTopK(embeddings, numQueries, k), numQueries, k)
-
-  /** [[annRecall]] over a prebuilt truth table ([[stagedBruteTruth]] in the
-    * query wiring — the exact-search ground truth is computed once per
-    * corpus version; the eval's own work, the IVF branch and the hit join,
-    * still computes from `embeddings`). */
+    * kept through the outer join. `truthIn` is the brute-force top-k
+    * ([[cosineTopK]]; [[stagedBruteTruth]] in the query wiring, computed
+    * once per corpus version); the IVF branch and the hit join compute from
+    * `embeddings`. */
   def annRecallFromTruth(embeddings: DataFrame, truthIn: DataFrame,
                          numQueries: Int = 8, k: Int = 5): DataFrame = {
     val truth = truthIn.select("query_id", "neighbor_id")
@@ -244,18 +240,14 @@ object Embeddings {
 
   /** query_id, dcg_u, idcg_u, ndcg — nDCG@k of the IVF approximate ranking
     * against the brute-force ground truth (the rank-aware companion of
-    * [[annRecall]]: recall@k says WHAT the index found, nDCG says whether
+    * [[annRecallFromTruth]]: recall@k says WHAT the index found, nDCG says whether
     * it kept the order right). Graded relevance = k+1−brute_rank. Each
     * discount term rel/log2(pos+1) is floored to integer micro-units
     * BEFORE summation (the repo's integer-sum discipline — double sums are
     * order-sensitive, integer sums are not), so per-query DCG/IDCG are
     * exact integers and ndcg is one rounded division. Same bounded join
-    * shapes as annRecall: nothing here outgrows Q·k rows. */
-  def annNdcg(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame =
-    annNdcgFromTruth(embeddings, cosineTopK(embeddings, numQueries, k), numQueries, k)
-
-  /** [[annNdcg]] over a prebuilt truth table ([[stagedBruteTruth]] in the
-    * query wiring — same contract as [[annRecallFromTruth]]). */
+    * shapes and truth contract as annRecallFromTruth: nothing here outgrows
+    * Q·k rows. */
   def annNdcgFromTruth(embeddings: DataFrame, truthIn: DataFrame,
                        numQueries: Int = 8, k: Int = 5): DataFrame = {
     def termU(rel: Column, pos: Column): Column =
@@ -319,14 +311,8 @@ object Embeddings {
     * candidate setting, recall monotone in nprobe). The truth set (Q·k
     * rows) materializes once and every branch's hit join is against that
     * tiny set; each IVF branch is cell-bounded candidate generation, so
-    * the sweep costs maxProbes small plans, not maxProbes corpus scans. */
-  def ivfProbeSweep(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5,
-                    maxProbes: Int = NumProbes): DataFrame =
-    ivfProbeSweepFromTruth(embeddings, cosineTopK(embeddings, numQueries, k),
-      numQueries, k, maxProbes)
-
-  /** [[ivfProbeSweep]] over a prebuilt truth table ([[stagedBruteTruth]] in
-    * the query wiring — same contract as [[annRecallFromTruth]]). */
+    * the sweep costs maxProbes small plans, not maxProbes corpus scans.
+    * Same truth contract as [[annRecallFromTruth]]. */
   def ivfProbeSweepFromTruth(embeddings: DataFrame, truthIn: DataFrame,
                              numQueries: Int = 8, k: Int = 5,
                              maxProbes: Int = NumProbes): DataFrame = {
@@ -353,13 +339,8 @@ object Embeddings {
     * reads before picking its index. Truth materializes once (Q·k rows);
     * each branch is that index's own bounded plan plus a tiny hit join.
     * SQ8's rounding-only degradation and PQ's coarser 8-byte codes order
-    * themselves in this table exactly as the FAISS docs predict. */
-  def indexRecallMatrix(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame =
-    indexRecallMatrixFromTruth(embeddings, cosineTopK(embeddings, numQueries, k),
-      numQueries, k)
-
-  /** [[indexRecallMatrix]] over a prebuilt truth table ([[stagedBruteTruth]]
-    * in the query wiring — same contract as [[annRecallFromTruth]]). */
+    * themselves in this table exactly as the FAISS docs predict. Same
+    * truth contract as [[annRecallFromTruth]]. */
   def indexRecallMatrixFromTruth(embeddings: DataFrame, truthIn: DataFrame,
                                  numQueries: Int = 8, k: Int = 5): DataFrame = {
     val truth = graft.infra.Caches.managed(truthIn
@@ -516,7 +497,7 @@ object Embeddings {
   }
 
   /** cell, n_vecs, frac, imbalance — IVF cell-occupancy report (the other
-    * FAISS index diagnostic beside [[annRecall]]/[[pqDistortion]]: the
+    * FAISS index diagnostic beside [[annRecallFromTruth]]/[[pqDistortion]]: the
     * imbalance factor K·Σ(n_c/N)² is 1.0 for perfectly even cells and grows
     * toward K as vectors pile into one cell — at 100 TB a hot cell IS the
     * straggler partition, so this is the number that predicts probe-time
@@ -536,7 +517,7 @@ object Embeddings {
   }
 
   /** sub, n_vecs, mse — per-subspace PQ quantization distortion (the
-    * FAISS-style index diagnostic published alongside [[annRecall]]: mean
+    * FAISS-style index diagnostic published alongside [[annRecallFromTruth]]: mean
     * squared reconstruction error of each subquantizer, the number that
     * tells you WHICH subspace's codebook underfits before you ship the
     * index). The per-subspace error is the min distance [[MatVec.pqErrs]]'s
@@ -666,7 +647,7 @@ object Embeddings {
 
   /** cell, n_vecs, majority_label, n_majority, purity — cluster-vs-label
     * contingency report over the trained k-means assignment: the third
-    * index-quality telemetry beside [[annRecall]] (retrieval) and
+    * index-quality telemetry beside [[annRecallFromTruth]] (retrieval) and
     * [[ivfBalance]] (skew). When embeddings carry a supervision column,
     * per-cluster label purity is the standard external cluster-quality
     * measure (and, in a training-data pipeline, the audit that a

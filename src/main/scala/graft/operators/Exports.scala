@@ -497,19 +497,25 @@ object Exports {
       .reduce(_ unionByName _)
   }
 
-  /** The whole annotation repo's FILE BODIES staged once per
-    * (process, corpus): the repo stats commands WALK A CHECKED-OUT REPO of
-    * already-written batch files — they never regenerate the batches — so
-    * the stats queries read the staged bodies while the generator queries
-    * (`annotation_batch`, `annotation_batch_files`) keep deriving honestly. */
+  /** The whole annotation repo's FILE BODIES: every annotator's batch
+    * written through [[annotationBatchFiles]], tagged with the annotator —
+    * the file-level twin of [[batchRepo]]. */
+  def repoFiles(docs: DataFrame, annots: DataFrame): DataFrame = {
+    val sents = TextOps.sentences(docs)
+    (0 until RepoAnnotators).map { a =>
+      annotationBatchFiles(annotatorBatch(sents, a), sents, annots)
+        .withColumn("annotator", lit(s"ann$a"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** [[repoFiles]] staged once per (process, corpus): the repo stats
+    * commands WALK A CHECKED-OUT REPO of already-written batch files — they
+    * never regenerate the batches — so the stats queries read the staged
+    * bodies while the generator queries (`annotation_batch`,
+    * `annotation_batch_files`) keep deriving honestly. */
   def stagedRepoFiles(docs: DataFrame, annots: DataFrame, sfDir: String): DataFrame =
-    graft.infra.Staging.stageOnce("annotation_repo_files", sfDir, {
-      val sents = TextOps.sentences(docs)
-      (0 until RepoAnnotators).map { a =>
-        annotationBatchFiles(annotatorBatch(sents, a), sents, annots)
-          .withColumn("annotator", lit(s"ann$a"))
-      }.reduce(_ unionByName _)
-    }, docs.sparkSession)
+    graft.infra.Staging.stageOnce("annotation_repo_files", sfDir,
+      repoFiles(docs, annots), docs.sparkSession)
 
   /** [[batchRepo]] staged once per (process, corpus) — same repo-walk
     * contract as [[stagedRepoFiles]], keyed shape (annotator, page,
@@ -523,17 +529,8 @@ object Exports {
     * RepoStatsCommand.java:72-182 — walk the repo's `.txt` files, count
     * non-blank non-`DONE` lines per (annotator, batch)). Counted from the
     * REAL file bodies ([[annotationBatchFiles]]' txt channel), exactly as
-    * the reference counts file lines. */
-  def batchStats(docs: DataFrame, annots: DataFrame): DataFrame = {
-    val sents = TextOps.sentences(docs)
-    batchStatsFromRepo((0 until RepoAnnotators).map { a =>
-      annotationBatchFiles(annotatorBatch(sents, a), sents, annots)
-        .withColumn("annotator", lit(s"ann$a"))
-    }.reduce(_ unionByName _))
-  }
-
-  /** [[batchStats]] over the staged repo file bodies — one scan + one
-    * aggregation, the repo-walk shape. */
+    * the reference counts file lines. Over [[stagedRepoFiles]] this
+    * is one scan + one aggregation, the repo-walk shape. */
   def batchStatsFromRepo(repoFiles: DataFrame): DataFrame =
     repoFiles
       .where(col("file").endsWith(".txt") && col("line") =!= "DONE" &&
@@ -545,12 +542,9 @@ object Exports {
     * RepoStatsCommand.java:184-260 — shared sentence-identifier counts
     * between batch keys; here the sparse nonzero half-matrix, keys
     * `<annotator>/batch_<page>`). One hash equi-join, never per-batch set
-    * intersection on the driver. */
-  def batchOverlap(docs: DataFrame): DataFrame =
-    batchOverlapFromRepo(graft.infra.Caches.managed(batchRepo(docs)))
-
-  /** [[batchOverlap]] over the staged repo — the repo rows are a file
-    * artifact, so the self-join's two sides are two cheap scans. */
+    * intersection on the driver. Over [[stagedBatchRepo]] the repo
+    * rows are a file artifact, so the self-join's two sides are two
+    * cheap scans. */
   def batchOverlapFromRepo(repo: DataFrame): DataFrame = {
     val b = repo.select(
       concat(col("annotator"), lit("/batch_"), col("page")).as("batch_key"),

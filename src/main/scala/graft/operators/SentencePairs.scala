@@ -98,14 +98,10 @@ object SentencePairs {
     * sentence-level pair mentions are silver-labeled positive when the pair is
     * a high-confidence knowledge-base edge — here the top cooccurrence edges
     * by NPMI stand in for the curated KB. Output: labeled training instances.
-    * The KB side is small → broadcast; mentions stream through one join. */
-  def distantSupervision(annots: DataFrame, minNpmi: Double = 0.1): DataFrame =
-    distantSupervisionFromMetrics(annots,
-      Cooccurrence.metrics(annots, Seq("doc_id")), minNpmi)
-
-  /** [[distantSupervision]] with the KB side read from the published
-    * cooccurrence-scores table (staged artifact; the mention side still
-    * reads `annots` — that IS the per-run extraction work). */
+    * The KB side is small → broadcast; mentions stream through one join.
+    * `metrics` is the document-level cooccurrence scores table
+    * (Cooccurrence.metrics; the staged artifact in the query wiring); the
+    * mention side reads `annots` — that IS the per-run extraction work. */
   def distantSupervisionFromMetrics(annots: DataFrame, metrics: DataFrame,
                                     minNpmi: Double = 0.1): DataFrame = {
     val kb = metrics
@@ -131,13 +127,8 @@ object SentencePairs {
     * arithmetic on (doc_id, sent_id), so the split is reproducible and
     * engine/oracle-exact — never a `rand()` (nondeterministic across
     * retries/partitions, the classic training-data-provenance bug).
-    * Output: doc_id, sent_id, concept_x, concept_y, y∈{0,1}. */
-  def dsTrainSplit(annots: DataFrame, minNpmi: Double = 0.1, negMod: Long = 4L): DataFrame =
-    dsTrainSplitFromMetrics(annots, Cooccurrence.metrics(annots, Seq("doc_id")),
-      minNpmi, negMod)
-
-  /** [[dsTrainSplit]] with the KB side read from the published
-    * cooccurrence-scores table — the same staged-artifact contract as
+    * Output: doc_id, sent_id, concept_x, concept_y, y∈{0,1}. The KB side
+    * follows the same scores-table contract as
     * [[distantSupervisionFromMetrics]] (the query wiring passes the staged
     * document-level scores; re-deriving the full metrics chain per
     * invocation was 2.1 s isolated at sf0.1 vs 0.8 s for the sibling

@@ -89,15 +89,6 @@ object TextOps {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** [[ngramArr]] for n=2 as (w1, w2) struct pairs — for consumers that
-    * need the bigram's sides as separate columns without re-splitting. */
-  def bigramPairArr(toks: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(size(toks) >= 2,
-      transform(sequence(lit(0), size(toks) - lit(2)),
-        i => struct(element_at(toks, i + lit(1)).as("w1"),
-          element_at(toks, i + lit(2)).as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-
   // 1-based n-gram start indices of a token array, as a plain (lambda-free)
   // expression: empty when the doc is shorter than n — the `when` guard,
   // never a `.where` on the derived array, so filter pushdown cannot
@@ -139,7 +130,7 @@ object TextOps {
       "__toks", n, out, keep, pos)
 
   /** Exploded bigram PAIRS (w1, w2 as separate columns) in the same
-    * codegen form — the lambda-free dual of explode([[bigramPairArr]]). */
+    * codegen form. */
   def bigramExplodeArr(df: DataFrame, toksCol: String, w1: String, w2: String,
                        keep: Seq[String]): DataFrame = {
     val toks = col(toksCol)

@@ -939,22 +939,16 @@ object TextStats {
 
   /** Training-data decontamination: flag documents whose bigrams overlap an
     * eval set's bigrams (the standard n-gram–overlap contamination check).
-    * The eval side is tiny → broadcast; the corpus is scanned once. */
-  def decontaminate(docs: DataFrame, evalTexts: DataFrame,
-                    evalIdCol: String, evalTextCol: String): DataFrame = {
-    val (docBg, evalBg) = bigramSides(docs, evalTexts, evalIdCol, evalTextCol)
-    decontaminateFromBigrams(docBg, evalBg)
-  }
-
-  /** [[decontaminate]] from pre-derived bigram sides — the shape a caller
-    * holding a STAGED eval-bigram artifact uses (the eval suite is a
-    * versioned file; only the corpus side is scanned per run). */
+    * The eval side is tiny → broadcast; the corpus is scanned once. The
+    * sides are [[docBigrams]] and [[evalBigrams]]; a caller holding a
+    * STAGED eval-bigram artifact passes it (the eval suite is a versioned
+    * file; only the corpus side is scanned per run). */
   def decontaminateFromBigrams(docBg: DataFrame, evalBg: DataFrame): DataFrame =
     docBg.join(broadcast(evalBg), "bigram")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_overlapping_bigrams"))
 
-  /** Same result as decontaminate, with the corpus side prefiltered through
+  /** Same result as [[decontaminateFromBigrams]], with the corpus side prefiltered through
     * an in-plan Bloom filter of the eval bigrams (`bloom_filter_agg` →
     * `might_contain`). At 100 TB the Bloom bits are what actually gets
     * broadcast to every task, and only might-contain candidates reach the
@@ -972,18 +966,9 @@ object TextStats {
     * keeping corpus bigrams that can't match away from the probe side of
     * the confirm join. At sf0.1 (~1M corpus bigrams, ~2k eval bigrams) it
     * is roughly break-even with the exact path; the win grows linearly
-    * with corpus size, which is why the 100 TB path wants it. */
-  def decontaminateBloom(docs: DataFrame, evalTexts: DataFrame,
-                         evalIdCol: String, evalTextCol: String,
-                         expectedEvalNgrams: Long = 0L,
-                         ndvMemoKey: String = null): DataFrame = {
-    val (docBg, evalBg) = bigramSides(docs, evalTexts, evalIdCol, evalTextCol)
-    decontaminateBloomFromBigrams(docBg, evalBg, expectedEvalNgrams, ndvMemoKey)
-  }
-
-  /** [[decontaminateBloom]] from pre-derived bigram sides (staged eval
-    * artifact). The NDV count over a staged evalBg is a parquet metadata
-    * read, so the memo mostly matters for the un-staged delegate above. */
+    * with corpus size, which is why the 100 TB path wants it. The NDV
+    * count over a staged evalBg is a parquet metadata read, so the memo
+    * mostly matters for an un-staged eval side. */
   def decontaminateBloomFromBigrams(docBg: DataFrame, evalBg: DataFrame,
                                     expectedEvalNgrams: Long = 0L,
                                     ndvMemoKey: String = null): DataFrame = {
@@ -1016,23 +1001,15 @@ object TextStats {
       .agg(count(lit(1)).as("n_overlapping_bigrams"))
   }
 
-  // per-process memo of the derived eval-bigram NDV (see decontaminateBloom)
+  // per-process memo of the derived eval-bigram NDV (see decontaminateBloomFromBigrams)
   private val evalNdvCache = scala.collection.mutable.Map[String, Long]()
 
-  /** (corpus distinct bigrams keyed by doc, eval distinct bigrams). */
   /** doc_id, n_bigrams, n_overlapping_bigrams, overlap_fraction — the
-    * thresholdable report behind [[decontaminate]]'s any-hit count:
+    * thresholdable report behind [[decontaminateFromBigrams]]'s any-hit count:
     * production pipelines drop documents above an overlap FRACTION
     * (n-gram-contamination share), so the gate needs the denominator and
     * the clean documents too (left join, fraction 0). Same broadcast
     * eval side and single corpus scan as the boolean path. */
-  def contaminationReport(docs: DataFrame, evalTexts: DataFrame,
-                          evalIdCol: String, evalTextCol: String): DataFrame = {
-    val (docBg, evalBg) = bigramSides(docs, evalTexts, evalIdCol, evalTextCol)
-    contaminationReportFromBigrams(docBg, evalBg)
-  }
-
-  /** [[contaminationReport]] from pre-derived bigram sides. */
   def contaminationReportFromBigrams(docBg: DataFrame, evalBg: DataFrame): DataFrame = {
     val counts = docBg.groupBy("doc_id").agg(count(lit(1)).as("n_bigrams"))
     val overlap = docBg.join(broadcast(evalBg), "bigram")
@@ -1043,10 +1020,6 @@ object TextStats {
         Num.r6(coalesce(col("n_hits"), lit(0L)).cast("double")
           / col("n_bigrams").cast("double")).as("overlap_fraction"))
   }
-
-  private def bigramSides(docs: DataFrame, evalTexts: DataFrame,
-                          evalIdCol: String, evalTextCol: String): (DataFrame, DataFrame) =
-    (docBigrams(docs), evalBigrams(evalTexts, evalIdCol, evalTextCol))
 
   /** The corpus side of the contamination check: distinct (doc_id, bigram).
     * Scanned fresh per decontamination run — at 100 TB this IS the pass

@@ -1133,7 +1133,7 @@ object OracleSql {
         "SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM units_abstr")) +
       metricsSelect
 
-  /** Cooccurrence.chi2Metrics twin (doc level): identical operation order
+  /** Cooccurrence.chi2FromUnits twin (doc level): identical operation order
     * in every float expression. */
   val cooccurChi2: String =
     docPipeline(unitsDocCte, pairCountsSql("units_doc", Seq("doc_id")),
@@ -1250,7 +1250,7 @@ object OracleSql {
         |  FROM bmw)""".stripMargin) +
       "SELECT concept_id, rk, doc_id, bm25 FROM bmr WHERE rk <= 10"
 
-  /** Cooccurrence.hybridRrf twin: BM25 pool via the window formulation,
+  /** Cooccurrence.hybridRrfFromPool twin: BM25 pool via the window formulation,
     * quality-prior rank WITHIN the pool, identical 1/(60+r) double chain. */
   val hybridRrf: String =
     docPipeline(bm25Cte,
@@ -1279,7 +1279,7 @@ object OracleSql {
         |  doc_id, rrf, rk AS bm25_rank, q_rk AS quality_rank
         |FROM fr""".stripMargin
 
-  /** Cooccurrence.bm25Mrr twin: relevance = tf >= 2, reciprocal rank of
+  /** Cooccurrence.bm25MrrFromPool twin: relevance = tf >= 2, reciprocal rank of
     * the first relevant hit in the window-formulated top-10 pool. */
   val bm25Mrr: String =
     docPipeline(bm25Cte,
@@ -1492,7 +1492,7 @@ object OracleSql {
         |LEFT JOIN kb ON least(p.concept_x, p.concept_y) = kb.concept1
         |  AND greatest(p.concept_x, p.concept_y) = kb.concept2""".stripMargin
 
-  /** SentencePairs.dsTrainSplit twin: the distant-supervision oracle
+  /** SentencePairs.dsTrainSplitFromMetrics twin: the distant-supervision oracle
     * filtered to positives plus the deterministic 1-in-4 negative hash
     * subsample, labels as 0/1. */
   val dsTrainSplit: String =
@@ -2518,7 +2518,7 @@ object OracleSql {
   val dedupMinhash: String =
     s"WITH $tokCte,\n$minhashCtes\nSELECT doc_a, doc_b, shared_bands FROM cand"
 
-  /** Cooccurrence.tfidfDocSim twin: micro-unit tf-idf vectors scored over
+  /** Cooccurrence.tfidfDocSimFrom twin: micro-unit tf-idf vectors scored over
     * the MinHash band candidates (minhashCtes provides `cand`), exact long
     * dot products, full-vector norms. */
   val tfidfDocSim: String =
@@ -2607,7 +2607,7 @@ object OracleSql {
        |FROM fan GROUP BY 1, 2""".stripMargin
   }
 
-  /** Dedup.lshBandTuning twin: the shared mh CTE re-banded per shape, one
+  /** Dedup.lshBandTuningFromValues twin: the shared mh CTE re-banded per shape, one
     * UNION ALL branch per rows-per-band; thresholds are the same
     * Scala-computed literals the engine emits. */
   val lshBandTuning: String = {
@@ -2651,7 +2651,7 @@ object OracleSql {
        |WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 <> 0
        |GROUP BY 1, 2""".stripMargin
 
-  /** Dedup.minhashEstimate twin: matching-signature-component fraction. */
+  /** Dedup.minhashEstimateFrom twin: matching-signature-component fraction. */
   val minhashEstimate: String =
     s"""WITH $tokCte,
        |$minhashCtes,
@@ -3164,7 +3164,7 @@ object OracleSql {
        |  FROM f)
        |SELECT query_id, rank, neighbor_id, cosine FROM r WHERE rank <= 5""".stripMargin
 
-  /** Embeddings.ivfProbeSweep twin: one ivfTopKAt subquery per probe
+  /** Embeddings.ivfProbeSweepFromTruth twin: one ivfTopKAt subquery per probe
     * width, each hit-joined against the shared brute-force truth. */
   val ivfProbeSweep: String = {
     val branches = (1 to Embeddings.NumProbes).map { p =>
@@ -3223,7 +3223,7 @@ object OracleSql {
        |  FROM pairs)
        |SELECT query_id, rank, neighbor_id, adc_dist FROM rk WHERE rank <= 5""".stripMargin
 
-  /** Embeddings.indexRecallMatrix twin: one branch per index, each that
+  /** Embeddings.indexRecallMatrixFromTruth twin: one branch per index, each that
     * index's composed top-k SQL hit-joined against the shared truth. */
   def indexRecallMatrixSql(branches: Seq[(String, String)]): String = {
     val parts = branches.map { case (name, sql) =>
@@ -3238,7 +3238,7 @@ object OracleSql {
        |FROM (${parts.mkString("\nUNION ALL\n")})""".stripMargin
   }
 
-  /** Embeddings.annRecall twin: the brute-force and IVF top-k oracles
+  /** Embeddings.annRecallFromTruth twin: the brute-force and IVF top-k oracles
     * composed as subqueries (each carries its own WITH), hit-joined per
     * query; zero-hit queries kept via the outer join. */
   val annRecall: String =
@@ -3253,7 +3253,7 @@ object OracleSql {
        |FROM (SELECT DISTINCT query_id FROM truth) q
        |LEFT JOIN hits h USING (query_id)""".stripMargin
 
-  /** Embeddings.annNdcg twin: brute/IVF oracles as subqueries, graded
+  /** Embeddings.annNdcgFromTruth twin: brute/IVF oracles as subqueries, graded
     * relevance k+1−brute_rank, discount terms floored to integer
     * micro-units before summation (identical expression structure). */
   val annNdcg: String =
@@ -4045,7 +4045,7 @@ object OracleSql {
        |SELECT db.doc_id, CAST(count(*) AS BIGINT) AS n_overlapping_bigrams
        |FROM db JOIN eb USING (bigram) GROUP BY 1""".stripMargin
 
-  /** TextStats.contaminationReport twin: decontaminate's CTEs plus the
+  /** TextStats.contaminationReportFromBigrams twin: decontaminate's CTEs plus the
     * per-doc denominator and a clean-docs-preserving left join. */
   val contaminationReport: String =
     s"""WITH $tokCte,
@@ -4118,7 +4118,7 @@ object OracleSql {
        |FROM tot LEFT JOIN ka USING (doc_id)""".stripMargin
   }
 
-  /** Dedup.splitLeakage twin: same Hash60 window ids, EXISTS probe. */
+  /** Dedup.splitLeakageFrom twin: same Hash60 window ids, EXISTS probe. */
   val splitLeakage: String = {
     val leads = (1 to 7).map(i =>
       s"lead(tok, $i) OVER (PARTITION BY doc_id ORDER BY ord) AS t$i").mkString(", ")

@@ -241,7 +241,7 @@ object DocStreams {
   }
 
   /** Continuous eval-feed decontamination gate — the streaming dual of
-    * Dedup.splitLeakage: candidate eval documents STREAM in, each derives
+    * Dedup.splitLeakageFrom: candidate eval documents STREAM in, each derives
     * its distinct 8-token shingle ids IN-ROW (indexed `transform` over the
     * token array with the same Hash60-mod-P arithmetic as the batch
     * lead-window path — same split, same ids), and the shingle stream

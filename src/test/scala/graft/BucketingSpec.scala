@@ -314,9 +314,11 @@ class BucketingSpec extends SparkSpec {
     try {
       val mh = operators.Dedup.stagedMinhashValues(docs, sf)
       assert(operators.Dedup.minhashEstimateFrom(mh).collect().map(_.toSeq).toSet ==
-        operators.Dedup.minhashEstimate(docs).collect().map(_.toSeq).toSet)
+        operators.Dedup.minhashEstimateFrom(
+          operators.Dedup.minhashValues(operators.Dedup.shingleSets(docs))).collect().map(_.toSeq).toSet)
       assert(operators.Dedup.lshBandTuningFromValues(mh).collect().map(_.toSeq).toSet ==
-        operators.Dedup.lshBandTuning(docs).collect().map(_.toSeq).toSet)
+        operators.Dedup.lshBandTuningFromValues(
+          operators.Dedup.minhashValues(operators.Dedup.shingleSets(docs))).collect().map(_.toSeq).toSet)
     } finally graft.infra.Caches.unpersistManaged()
   }
 
@@ -347,7 +349,7 @@ class BucketingSpec extends SparkSpec {
     // formulation derived from scratch
     val fresh = operators.AssertionDb.evidenceBase(docs, annots)
     assert(operators.AssertionDb.entitiesFrom(base).collect().map(_.toSeq).toSet ==
-      operators.AssertionDb.entities(docs, annots).collect().map(_.toSeq).toSet)
+      operators.AssertionDb.entitiesFrom(fresh).collect().map(_.toSeq).toSet)
     assert(operators.AssertionDb.evidenceFrom(base).collect().map(_.toSeq).toSet ==
       operators.AssertionDb.evidenceFrom(fresh).collect().map(_.toSeq).toSet)
     // integrity's doc-local orphan joins: with broadcast off, the

@@ -43,7 +43,8 @@ class DedupSpec extends SparkSpec {
 
   test("minhash estimate is exact 1.0 on identical docs and tracks exact jaccard on near-dups") {
     val nearDup = base.replace("today", "tonight")
-    val est = Dedup.minhashEstimate(docs(base, base, nearDup)).collect()
+    val est = Dedup.minhashEstimateFrom(
+      Dedup.minhashValues(Dedup.shingleSets(docs(base, base, nearDup)))).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) -> r.getAs[Double]("est_jaccard")).toMap
     // identical shingle sets ⇒ identical signatures ⇒ estimate exactly 1.0
     assert(est((0L, 1L)) == 1.0)
@@ -141,7 +142,7 @@ class DedupSpec extends SparkSpec {
     val nearDup = base.replace("today", "tonight")
     val d = docs(base, nearDup, "completely different content with many other tokens in this string ok")
     val byMd5 = Dedup.minhashCandidates(d).select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val byXx = Dedup.minhashCandidatesHashed(d).select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val byXx = Dedup.minhashCandidatesFrom(Dedup.shingleSetsHashed(d)).select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(byMd5.contains((0L, 1L)) && byXx.contains((0L, 1L)))
     assert(!byMd5.exists(p => p._2 == 2L) && !byXx.exists(p => p._2 == 2L))
   }

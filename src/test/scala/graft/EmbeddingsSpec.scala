@@ -260,7 +260,7 @@ class EmbeddingsSpec extends SparkSpec {
       .view.mapValues(_.map(_.getAs[Long]("neighbor_id")).toSet).toMap
     val truth = sets(Embeddings.cosineTopK(emb))
     val approx = sets(Embeddings.ivfTopK(emb))
-    val r = Embeddings.annRecall(emb).collect()
+    val r = Embeddings.annRecallFromTruth(emb, Embeddings.cosineTopK(emb)).collect()
       .map(x => x.getAs[Long]("query_id") ->
         ((x.getAs[Long]("n_hit"), x.getAs[Double]("recall_at_k")))).toMap
     assert(r.keySet == truth.keySet) // zero-hit queries must not vanish

@@ -103,9 +103,10 @@ class GraphRetrievalSpec extends SparkSpec {
   test("chi2Metrics computes lift and chi-square on the exact 2x2 contingency") {
     // 3 units, each pair cooccurs once, every concept in 2 units:
     // lift = 3*1/(2*2) = 0.75; chi2 = 3*(1*0-1*1)^2/(2*2*1*1) = 0.75
-    val r = graft.operators.Cooccurrence.chi2Metrics(
-      annots((1L, "XX:a"), (1L, "XX:b"), (2L, "XX:a"), (2L, "XX:c"),
-             (3L, "XX:b"), (3L, "XX:c")), Seq("doc_id")).collect()
+    val r = graft.operators.Cooccurrence.chi2FromUnits(
+      graft.operators.Cooccurrence.unitConcepts(
+        annots((1L, "XX:a"), (1L, "XX:b"), (2L, "XX:a"), (2L, "XX:c"),
+               (3L, "XX:b"), (3L, "XX:c")), Seq("doc_id")), Seq("doc_id")).collect()
     assert(r.length == 3)
     r.foreach { row =>
       assert(row.getAs[Long]("pair_count") == 1L)
@@ -128,7 +129,7 @@ class GraphRetrievalSpec extends SparkSpec {
 
   test("indexRecallMatrix ranks the lossless-ish codec above the coarse one") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val r = Embeddings.indexRecallMatrix(emb).collect()
+    val r = Embeddings.indexRecallMatrixFromTruth(emb, Embeddings.cosineTopK(emb)).collect()
       .map(x => x.getAs[String]("index_type") -> x.getAs[Double]("recall_at_k")).toMap
     assert(r.keySet == Set("ivf", "ivf_pq", "ivf_sq8", "pq", "sq8"))
     assert(r.values.forall(v => v >= 0.0 && v <= 1.0))
@@ -163,7 +164,8 @@ class GraphRetrievalSpec extends SparkSpec {
     val docs = textDocs(dup, dup, diff)
     val annots = graft.operators.Concepts.postProcess(
       graft.operators.Concepts.recognize(docs))
-    val r = graft.operators.Cooccurrence.tfidfDocSim(docs, annots).collect()
+    val r = graft.operators.Cooccurrence.tfidfDocSimFrom(graft.operators.Cooccurrence.tfidf(annots),
+      graft.operators.Dedup.minhashCandidates(docs).select("doc_a", "doc_b")).collect()
     // the exact-dup pair shares its full concept profile -> cosine 1
     val pair = r.find(x => x.getAs[Long]("doc_a") == 0L && x.getAs[Long]("doc_b") == 1L)
     assert(pair.isDefined && pair.get.getAs[Double]("cosine") == 1.0)
@@ -327,8 +329,9 @@ class GraphRetrievalSpec extends SparkSpec {
 
   test("lshBandTuning finds the exact dup at every shape; thresholds rise with rows") {
     val dup = "the quick fox jumps over a lazy dog near the old red barn today"
-    val r = graft.operators.Dedup.lshBandTuning(textDocs(dup, dup,
-      "a completely different document with many other tokens in this string ok"))
+    val r = graft.operators.Dedup.lshBandTuningFromValues(
+      graft.operators.Dedup.minhashValues(graft.operators.Dedup.shingleSets(textDocs(dup, dup,
+        "a completely different document with many other tokens in this string ok"))))
       .orderBy("rows_per_band").collect()
     assert(r.map(_.getAs[Long]("rows_per_band")).toSeq == Seq(2L, 3L, 4L, 6L))
     assert(r.map(_.getAs[Long]("n_bands")).toSeq == Seq(6L, 4L, 3L, 2L))
@@ -345,7 +348,7 @@ class GraphRetrievalSpec extends SparkSpec {
 
   test("ivfProbeSweep recall is monotone in nprobe and bounded by 1") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val rows = Embeddings.ivfProbeSweep(emb).orderBy("nprobe").collect()
+    val rows = Embeddings.ivfProbeSweepFromTruth(emb, Embeddings.cosineTopK(emb)).orderBy("nprobe").collect()
     assert(rows.map(_.getAs[Long]("nprobe")).toSeq == (1L to Embeddings.NumProbes).toSeq)
     val recalls = rows.map(_.getAs[Double]("recall_at_k")).toSeq
     assert(recalls.zip(recalls.tail).forall { case (a, b) => a <= b })

@@ -202,7 +202,7 @@ class PlanAuditSpec extends SparkSpec {
     val cps = SparkEntry.queries("concept_pair_sentences")(spark, sfDir).queryExecution
     assert(cps.optimizedPlan.collect { case w: Window => w }.isEmpty,
       s"concept_pair_sentences plans a Window:\n${cps.optimizedPlan}")
-    // the cap rides the EXACT integer-lane heap (TopKLongAgg) with a
+    // the cap rides the bounded heap's EXACT integer lane (BIGINT score) with a
     // partial phase — not the double lane, not a window
     assert(cps.executedPlan.toString.contains("partial_top_k_long_agg"),
       cps.executedPlan.toString.take(2000))

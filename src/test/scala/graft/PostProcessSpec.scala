@@ -79,7 +79,8 @@ class PostProcessSpec extends SparkSpec {
       (1L, "omega psi chi phi", "en", "s", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val eval = Seq((100L, "beta gamma epsilon")).toDF("eval_id", "sent_text")
-    val r = TextStats.decontaminate(docs, eval, "eval_id", "sent_text").collect()
+    val r = TextStats.decontaminateFromBigrams(TextStats.docBigrams(docs),
+      TextStats.evalBigrams(eval, "eval_id", "sent_text")).collect()
     assert(r.length == 1)
     assert(r.head.getAs[Long]("doc_id") == 0L)
     assert(r.head.getAs[Long]("n_overlapping_bigrams") == 1L) // "beta gamma"

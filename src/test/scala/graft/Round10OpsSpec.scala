@@ -17,7 +17,7 @@ class Round10OpsSpec extends SparkSpec {
       "table xx yy zz qq ww rr tt uu vv",
       "merge table bb cc dd ee ff gg hh ii")
     val annots = Concepts.postProcess(Concepts.recognize(d))
-    val r = Cooccurrence.bm25Mrr(annots).collect()
+    val r = Cooccurrence.bm25MrrFromPool(annots, Cooccurrence.bm25TopK(annots)).collect()
       .map(x => x.getAs[String]("concept_id") -> x).toMap
     val t = r("DS:table")
     assert(t.getAs[Long]("n_relevant") == 1L)

@@ -205,7 +205,7 @@ class Round11OpsSpec extends SparkSpec {
 
   test("batch_stats / batch_overlap: file-body counts and hash-join overlap matrix") {
     val d = docs((0 until 30).map(i => s"w$i x$i y$i z$i join table"): _*)
-    val stats = Exports.batchStats(d, pp(d)).collect()
+    val stats = Exports.batchStatsFromRepo(Exports.repoFiles(d, pp(d))).collect()
     assert(stats.nonEmpty)
     stats.foreach { r =>
       assert(r.getAs[String]("file").endsWith(".txt"))
@@ -214,7 +214,7 @@ class Round11OpsSpec extends SparkSpec {
     }
     assert(stats.map(_.getAs[String]("annotator")).distinct.sorted.toSeq ==
       (0 until Exports.RepoAnnotators).map(i => s"ann$i"))
-    val overlap = Exports.batchOverlap(d).collect()
+    val overlap = Exports.batchOverlapFromRepo(Exports.batchRepo(d)).collect()
     overlap.foreach { r =>
       assert(r.getAs[String]("batch_a") < r.getAs[String]("batch_b"))
       assert(r.getAs[Long]("n_shared") >= 1L)

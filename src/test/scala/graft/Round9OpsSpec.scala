@@ -56,7 +56,7 @@ class Round9OpsSpec extends SparkSpec {
       (3L, "z z a b c d e f g h"),       // train: contains eval shingle 1
       (20L, "p q r s t u v w x"))        // eval: 2 shingles, no leak
       .toDF("doc_id", "text")
-    val r = operators.Dedup.splitLeakage(docs).collect()
+    val r = operators.Dedup.splitLeakageFrom(operators.Dedup.windowIds(docs, 8)).collect()
       .map(x => x.getAs[Long]("doc_id") ->
         (x.getAs[Long]("n_shingles"), x.getAs[Long]("n_leaked"),
           x.getAs[Double]("leak_fraction"), x.getAs[Boolean]("leaked"))).toMap
@@ -109,7 +109,7 @@ class Round9OpsSpec extends SparkSpec {
     // SentWindow-1 tokens and fill_rate tops out at 1 + 7/64
     val fills = TextStats.packEfficiency(docs).select("fill_rate").as[Double].collect()
     assert(fills.nonEmpty && fills.forall(f => f > 0.0 && f <= 1.0 + 7.0 / 64.0))
-    val leaks = operators.Dedup.splitLeakage(docs).select("leak_fraction").as[Double].collect()
+    val leaks = operators.Dedup.splitLeakageFrom(operators.Dedup.windowIds(docs, 8)).select("leak_fraction").as[Double].collect()
     assert(leaks.nonEmpty && leaks.forall(f => f >= 0.0 && f <= 1.0))
   }
 

@@ -26,7 +26,7 @@ class SkewSpec extends SparkSpec {
     val docs = Seq((0L, base), (1L, base), (2L, "entirely different other words in this unrelated string right here"))
       .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val cands = Dedup.minhashCandidatesHashed(docs).collect()
+    val cands = Dedup.minhashCandidatesFrom(Dedup.shingleSetsHashed(docs)).collect()
     assert(cands.length == 1)
     assert(cands.head.getAs[Long]("shared_bands") == (Dedup.NumHashes / Dedup.RowsPerBand).toLong)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.infra.Staging
-import graft.operators.Dedup
+import graft.operators.{Bpe, Dedup, Embeddings}
 import graft.sources.Tables
 import org.apache.spark.sql.functions.col
 
@@ -26,6 +26,21 @@ class StagingSpec extends SparkSpec {
     assert(hit == 0, s"the second call ran $hit Spark jobs")
     assert(Staging.lastPath("registry_probe") == path)
     assert(Staging.stageOnce("registry_probe", key, derive, spark).count() == 100)
+    // derivations whose build runs jobs (fixpoint loops, a driver-side
+    // learning loop): the hit must not re-enter the loop either
+    val docs = Tables.documents(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
+    Seq[(String, String => Unit)](
+      "Dedup.stagedClusters" -> (k => Dedup.stagedClusters(docs, k)),
+      "Embeddings.stagedSemanticClusters" -> (k => Embeddings.stagedSemanticClusters(emb, k)),
+      "Embeddings.stagedDupPairs" -> (k => Embeddings.stagedDupPairs(emb, k)),
+      "Bpe.stagedMerges" -> (k => Bpe.stagedMerges(docs, k))
+    ).foreach { case (what, staged) =>
+      val k = corpusKey()
+      assert(jobsDuring(staged(k)) > 0, s"$what: the first call must build the artifact")
+      val again = jobsDuring(staged(k))
+      assert(again == 0, s"$what: the second call ran $again Spark jobs")
+    }
   }
 
   test("two derivations under one name and corpus get two artifacts with their own rows") {
