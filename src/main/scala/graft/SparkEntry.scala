@@ -661,8 +661,8 @@ object SparkEntry {
     // write-once asset) instead of an inline shingle+minhash corpus pass
     "tfidf_doc_sim" -> ((s, d) => Cooccurrence.tfidfDocSimFrom(
       Cooccurrence.tfidfFromIdf(pp(s, d), Cooccurrence.stagedIdf(pp(s, d), d)),
-      Dedup.minhashCandidatesFromBands(Dedup.bandsFromSig(Dedup.sigArrays(
-        Dedup.stagedMinhashValues(docs(s, d), d)))).select("doc_a", "doc_b"))),
+      Dedup.minhashCandidatesFromBands(Dedup.bandsFromSig(
+        Dedup.stagedSignatures(docs(s, d), d))).select("doc_a", "doc_b"))),
     "span_corruption" -> ((s, d) => TextOps.spanCorruption(docs(s, d))),
     "source_lm_matrix" -> ((s, d) => TextStats.sourceLmMatrix(docs(s, d))),
     "trapi_nodes" -> ((s, _) => KnowledgeGraph.trapiNodeTriples(s)),
@@ -679,14 +679,14 @@ object SparkEntry {
     "quality_classifier" -> ((s, d) => TextStats.qualityClassifier(docs(s, d))),
     "dedup_minhash" -> ((s, d) => Dedup.minhashCandidates(docs(s, d))),
     "lsh_band_tuning" -> ((s, d) =>
-      Dedup.lshBandTuningFromValues(Dedup.stagedMinhashValues(docs(s, d), d))),
+      Dedup.lshBandTuningFrom(Dedup.stagedSignatures(docs(s, d), d))),
     "minhash_precision" -> ((s, d) => Dedup.minhashPrecision(docs(s, d))),
     "heavy_hitters_cms" -> ((s, d) => TextStats.heavyHittersCms(docs(s, d))),
     "dedup_incremental" -> ((s, d) => Dedup.minhashIncremental(docs(s, d))),
     "dedup_incremental_staged" -> ((s, d) => Dedup.minhashIncrementalStaged(docs(s, d), d)),
     "dedup_minhash_hashed" -> ((s, d) => Dedup.minhashCandidatesHashedStaged(docs(s, d), d)),
     "minhash_est" -> ((s, d) =>
-      Dedup.minhashEstimateFrom(Dedup.stagedMinhashValues(docs(s, d), d))),
+      Dedup.minhashEstimateFrom(Dedup.stagedSignatures(docs(s, d), d))),
     // the CC fixpoint runs ONCE per (process, corpus): every consumer of
     // the cluster labels reads the staged artifact (VERDICT r9 item 2)
     "dedup_clusters" -> ((s, d) => Dedup.stagedClusters(docs(s, d), d)),

@@ -224,15 +224,6 @@ object Concepts {
     base.unionByName(expanded).distinct()
   }
 
-  /** Ontology-id migration merge (reference:
-    * corpora/craft/CraftGoMfExtReverter.java:31-72 — extension-class
-    * annotations are reverted to their base ids by dropping the `_EXT`
-    * marker, kept only when the reverted id EXISTS in the ontology, and
-    * added to the original annotation set). `knownIds` is the ontology-id
-    * universe (here the recognizer's dictionary — literally the known-class
-    * table in this engine); the membership gate is a broadcast semi-join,
-    * the merge a union — per-row throughout, no shuffle beyond the
-    * broadcast build. */
   /** Subtree exclusion (reference:
     * corpora/craft/ExcludeCraftConceptsByOntologyId.java:61-110 — the
     * excluded-class set is the individually-listed classes PLUS every
@@ -253,6 +244,15 @@ object Concepts {
     annots.join(broadcast(excluded), Seq("concept_id"), "left_anti")
   }
 
+  /** Ontology-id migration merge (reference:
+    * corpora/craft/CraftGoMfExtReverter.java:31-72 — extension-class
+    * annotations are reverted to their base ids by dropping the `_EXT`
+    * marker, kept only when the reverted id EXISTS in the ontology, and
+    * added to the original annotation set). `knownIds` is the ontology-id
+    * universe (here the recognizer's dictionary — literally the known-class
+    * table in this engine); the membership gate is a broadcast semi-join,
+    * the merge a union — per-row throughout, no shuffle beyond the
+    * broadcast build. */
   def revertExtMerge(orig: DataFrame, ext: DataFrame, knownIds: DataFrame): DataFrame = {
     val reverted = ext.withColumn("concept_id",
       regexp_replace(col("concept_id"), "_EXT", ""))

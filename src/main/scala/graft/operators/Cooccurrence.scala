@@ -134,14 +134,6 @@ object Cooccurrence {
     * (concept1, concept2, pair_count over the units of `units`): singleton
     * counts and the unit total N come from `units`. */
   private def scorePairs(pairs: DataFrame, units: DataFrame, unitCols: Seq[String]): DataFrame = {
-    val singles = singletonCounts(units)
-    // total unit count as a 1-row aggregate cross-joined (broadcast) into the
-    // pair table — N stays inside the plan; no job launches at DataFrame
-    // construction time (the round-1 driver-side count() ran a full pass over
-    // the unit sets per pipeline build)
-    val total = units.select(unitCols.map(col): _*).distinct()
-      .agg(count(lit(1)).cast("double").as("n_units"))
-
     val fx = col("concept1_count").cast("double")
     val fy = col("concept2_count").cast("double")
     val fxy = col("pair_count").cast("double")
@@ -152,10 +144,7 @@ object Cooccurrence {
     val pmi = log(pxy / (px * py))
     val md = log(pow(pxy, 2.0) / (px * py))
 
-    pairs
-      .join(broadcast(singles.select(col("concept_id").as("concept1"), col("unit_count").as("concept1_count"))), "concept1")
-      .join(broadcast(singles.select(col("concept_id").as("concept2"), col("unit_count").as("concept2_count"))), "concept2")
-      .crossJoin(broadcast(total))
+    withMarginals(pairs, units, unitCols, Seq("concept1", "concept2"))
       .where(log10(n) - least(log10(fx), log10(fy)) =!= 0.0)
       .select(
         col("concept1"), col("concept2"),
@@ -168,6 +157,22 @@ object Cooccurrence {
         Num.r6(pmi / (-lit(1.0) * log(greatest(px, py) + 1e-9))).as("npmim"),
         Num.r6(md).as("md"),
         Num.r6(md + log(pxy)).as("lfmd"))
+  }
+
+  /** `df` with the unit marginals a metric formula reads: for each concept
+    * column `c` of `conceptCols` its unit count `c_count` (a broadcast join
+    * of [[singletonCounts]]), and the unit total N as `n_units` — a 1-row
+    * aggregate cross-joined broadcast, so N stays inside the plan and no
+    * job launches at DataFrame construction time (the round-1 driver-side
+    * count() ran a full pass over the unit sets per pipeline build). */
+  private def withMarginals(df: DataFrame, units: DataFrame, unitCols: Seq[String],
+                            conceptCols: Seq[String]): DataFrame = {
+    val singles = singletonCounts(units)
+    val total = units.select(unitCols.map(col): _*).distinct()
+      .agg(count(lit(1)).cast("double").as("n_units"))
+    conceptCols.foldLeft(df) { (d, c) =>
+      d.join(broadcast(singles.select(col("concept_id").as(c), col("unit_count").as(s"${c}_count"))), c)
+    }.crossJoin(broadcast(total))
   }
 
   /** The reference counts cooccurrence at DOCUMENT/SENTENCE/TITLE/ABSTRACT
@@ -220,10 +225,7 @@ object Cooccurrence {
     * ([[stagedUnitConcepts]] in the query wiring). */
   def idfFromUnits(unitsIn: DataFrame): DataFrame = {
     val units = graft.infra.Caches.managed(unitsIn)
-    val total = units.select("doc_id").distinct()
-      .agg(count(lit(1)).cast("double").as("n_units"))
-    singletonCounts(units)
-      .crossJoin(broadcast(total))
+    withMarginals(singletonCounts(units), units, Seq("doc_id"), Nil)
       .select(col("concept_id"), col("unit_count").as("df"),
         Num.r6(log(col("n_units") / col("unit_count").cast("double"))).as("idf"))
   }
@@ -270,21 +272,12 @@ object Cooccurrence {
     * query wiring). */
   def chi2FromUnits(unitsIn: DataFrame, unitCols: Seq[String]): DataFrame = {
     val units = graft.infra.Caches.managed(unitsIn)
-    val pairs = pairCounts(units, unitCols)
-    val singles = singletonCounts(units)
-    val total = units.select(unitCols.map(col): _*).distinct()
-      .agg(count(lit(1)).cast("double").as("n_units"))
     val fx = col("concept1_count").cast("double")
     val fy = col("concept2_count").cast("double")
     val fxy = col("pair_count").cast("double")
     val n = col("n_units")
     val adbc = fxy * (n - fx - fy + fxy) - (fx - fxy) * (fy - fxy)
-    pairs
-      .join(broadcast(singles.select(col("concept_id").as("concept1"),
-        col("unit_count").as("concept1_count"))), "concept1")
-      .join(broadcast(singles.select(col("concept_id").as("concept2"),
-        col("unit_count").as("concept2_count"))), "concept2")
-      .crossJoin(broadcast(total))
+    withMarginals(pairCounts(units, unitCols), units, unitCols, Seq("concept1", "concept2"))
       .where(fx < n && fy < n)
       .select(col("concept1"), col("concept2"),
         col("pair_count").cast("long").as("pair_count"),
@@ -312,7 +305,7 @@ object Cooccurrence {
     * Inputs: the tf-idf vectors ([[tfidf]]; [[tfidfFromIdf]] over the
     * staged concept-IDF artifact in the query wiring) and the candidate
     * pairs ([[Dedup.minhashCandidates]]; in the query wiring re-banded from
-    * the staged MinHash signature table, Dedup.stagedMinhashValues — 12
+    * the staged MinHash signature table, Dedup.stagedSignatures — 12
     * longs per doc — so the tokenize+shingle+min-agg corpus pass is not
     * re-run). */
   def tfidfDocSimFrom(tfidfVecs: DataFrame, candidates: DataFrame,

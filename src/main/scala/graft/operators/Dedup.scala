@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Agg, Hash60, Num}
+import graft.functions.{Hash60, Num}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -187,83 +187,58 @@ object Dedup {
   def shingles(docs: DataFrame): DataFrame =
     TextOps.ngramExplode(docs, 3, "shingle", Seq("doc_id"))
 
-  /** doc_id, sid — distinct shingle-id set per document. Ids are md5-derived
-    * (Hash60 mod P): per-row, no vocabulary join, no global sort. */
+  /** The shingle id of a shingle (or token-window) string: Hash60 mod P —
+    * per-row, no vocabulary join, no global sort, and the same arithmetic
+    * the oracle runs over the same md5 hex. */
+  def shingleId(shingle: Column): Column = Hash60.id(shingle) % MinhashP
+
+  /** doc_id, sid — distinct shingle-id set per document ([[shingleId]]). */
   def shingleSets(docs: DataFrame): DataFrame =
     shingles(docs)
-      .select(col("doc_id"), (Hash60.id(col("shingle")) % MinhashP).as("sid"))
+      .select(col("doc_id"), shingleId(col("shingle")).as("sid"))
       .distinct()
 
-  /** doc_id, j, mh — the raw MinHash signature components.
+  /** The hash family over shingle ids: one (a, b) per signature component,
+    * (a·sid + b) mod P. */
+  private def componentHash(a: Long, b: Long, sid: Column): Column =
+    (lit(a) * sid + lit(b)) % MinhashP
+
+  /** doc_id, sig — the MinHash signature of every document as ONE
+    * `NumHashes`-long array ordered by component.
     *
     * All k hash minima are computed as k columns of ONE map-side-combinable
     * aggregation over the shingle stream — the k hash evaluations happen
     * inline per input row inside whole-stage codegen, so nothing ever
     * materializes k× the shingle rows (the previous crossJoin-with-params
     * shape shuffled k rows per (doc, j) group; at 100 TB that k× explosion
-    * IS the signature-build cost). The shuffle now carries one k-wide row
-    * per doc per partition; the long (doc_id, j, mh) format downstream
-    * consumers expect is a posexplode AFTER aggregation, over k× |docs|
-    * rows, not k× |shingles|. Same arithmetic, identical signatures. */
-  def minhashValues(shingleSets: DataFrame): DataFrame = {
+    * IS the signature-build cost). The shuffle carries one k-wide row per
+    * doc per partition, and the array is a pure projection after it. */
+  def signatures(shingleSets: DataFrame): DataFrame = {
     val aggs = minhashParams.map { case (j, a, b) =>
-      min((lit(a) * col("sid") + lit(b)) % MinhashP).as(s"mh$j") }
-    shingleSets.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        posexplode(array(minhashParams.map { case (j, _, _) => col(s"mh$j") }: _*)))
-      .select(col("doc_id"), col("pos").as("j"), col("col").as("mh"))
-  }
-
-  /** (doc_id, sig) straight off the shingle stream: the same k min-aggs as
-    * [[minhashValues]], assembled into the array form WITHOUT the
-    * posexplode → re-group roundtrip — one HashAggregate, then a pure
-    * projection. */
-  def sigArraysFromSets(shingleSets: DataFrame): DataFrame = {
-    val aggs = minhashParams.map { case (j, a, b) =>
-      min((lit(a) * col("sid") + lit(b)) % MinhashP).as(s"mh$j") }
+      min(componentHash(a, b, col("sid"))).as(s"mh$j") }
     shingleSets.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
       .select(col("doc_id"),
         array(minhashParams.map { case (j, _, _) => col(s"mh$j") }: _*).as("sig"))
   }
 
-  /** doc_id, band, band_key — LSH band buckets from MinHash signatures.
-    * Band keys derive by slicing the in-row signature array
-    * ([[bandsFromSig]]): the former posexplode → per-(doc, band)
-    * ordered-string aggregation paid a second aggregation pass over k×|docs|
-    * exploded rows for keys that are a row-local function of the k-wide
-    * aggregate output. Identical band keys, one aggregation instead of
-    * two, no Generate-then-regroup. */
+  /** The in-row twin of [[signatures]]: the signature array of one row's
+    * distinct shingle-id array, each component an `array_min` over one
+    * hash's `transform` — the same arithmetic with no aggregation, so it
+    * runs in a streaming plan. */
+  private[graft] def signatureOf(sids: Column): Column =
+    array(minhashParams.map { case (_, a, b) =>
+      array_min(transform(sids, s => componentHash(a, b, s))) }: _*)
+
+  /** doc_id, band, band_key — LSH band buckets from MinHash signatures,
+    * keys derived by slicing the in-row signature array ([[bandsFromSig]]). */
   def minhashBands(shingleSets: DataFrame): DataFrame =
-    bandsFromSig(sigArraysFromSets(shingleSets))
+    bandsFromSig(signatures(shingleSets))
 
-  /** Banding over a prebuilt (doc_id, j, mh) signature table — 12 longs per
-    * doc in, one ordered-string agg per (doc, band) out. Pass
-    * [[stagedMinhashValues]] so re-banding consumers (estimate, band-shape
-    * sweep) never rebuild signatures from the shingle stream. */
-  def minhashBandsFromValues(values: DataFrame): DataFrame =
-    values
-      .withColumn("band", (col("j") / RowsPerBand).cast("long"))
-      .groupBy("doc_id", "band")
-      .agg(Agg.orderedStringAgg(col("j"), col("mh").cast("string"), ",")
-        .as("band_key"))
-
-  /** (doc_id, sig) — the signature table regrouped to ONE array column
-    * ordered by j. Downstream of the doc_id-bucketed staged artifact the
-    * regroup is exchange-free, and the compact row is what the estimate
-    * family should ship (guide §2.3 shuffle fewer bytes): one 12-long array
-    * per doc crosses each exchange instead of 12 (doc_id, j, mh) rows, band
-    * keys derive row-locally by slicing the array (no per-(doc, band)
-    * ordered-string aggregation), and a candidate pair's component-match
-    * count is an in-row zip of two arrays instead of a 12-row-per-pair
-    * join + groupBy. */
-  def sigArrays(values: DataFrame): DataFrame =
-    values.groupBy("doc_id")
-      .agg(expr("transform(array_sort(collect_list(struct(j, mh))), s -> s.mh)").as("sig"))
-
-  /** (doc_id, band, band_key) from the array-form signatures — band keys
-    * IDENTICAL to [[minhashBandsFromValues]] (ordered components joined
-    * with ","), derived by an in-row slice per band: scan-shaped, no
-    * aggregation. */
+  /** (doc_id, band, band_key) from (doc_id, sig) signatures — THE band key
+    * of the near-dup family: the band's `rowsPerBand` components as
+    * strings joined with ",", derived by an in-row slice per band (one
+    * explode over a `transform`). Row-local, so the same derivation serves
+    * batch tables and streams. */
   def bandsFromSig(sig: DataFrame, rowsPerBand: Int = RowsPerBand): DataFrame = {
     val numBands = NumHashes / rowsPerBand
     sig
@@ -275,35 +250,38 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
 
+  /** doc_a, doc_b, nm — every LSH candidate pair of a (doc_id, sig)
+    * table banded at `rowsPerBand`, with the number of signature components
+    * the pair agrees on: both sides pick up their signature array and the
+    * count is an in-row zip, never a per-component join. */
+  private def matchCounts(sig: DataFrame, rowsPerBand: Int = RowsPerBand): DataFrame =
+    minhashCandidatesFromBands(bandsFromSig(sig, rowsPerBand)).select("doc_a", "doc_b")
+      .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
+      .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        expr("CAST(size(filter(zip_with(sa, sb, (x, y) -> x = y), v -> v)) AS BIGINT)").as("nm"))
+
   /** doc_a, doc_b, n_matching_hashes, est_jaccard — signature-based Jaccard
     * ESTIMATE on the LSH candidates: P[two sets' j-th minhashes agree] = J,
     * so the matching-component fraction is an unbiased J estimate computed
     * from 12 longs per doc instead of the full shingle sets. At 100 TB this
     * is the pruning stage between banding and the exact confirm join
     * (ngramJaccard) — signatures are what the candidate join already
-    * carries, so estimation adds no extra corpus scan. Caches here are
-    * managed (drained after the query) — the cross-query share in this
-    * family is the staged signature artifact [[stagedMinhashValues]].
+    * carries, so estimation adds no extra corpus scan.
     *
-    * Input: a (doc_id, j, mh) signature table ([[minhashValues]]). Pass
-    * [[stagedMinhashValues]] (query wiring) and the whole estimate runs
-    * off 12 longs per doc with no shingle-stream scan: bands re-derive from
-    * the signatures, candidates from the bands, and the component-match
-    * count from the same table on both pair sides. */
-  def minhashEstimateFrom(mhIn: DataFrame): DataFrame = {
-    val sig = graft.infra.Caches.managed(sigArrays(mhIn))
-    minhashCandidatesFromBands(bandsFromSig(sig)).select("doc_a", "doc_b")
-      .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
-      .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(size(filter(zip_with(sa, sb, (x, y) -> x = y), v -> v)) AS BIGINT)")
-          .as("n_matching_hashes"))
-      .select(col("doc_a"), col("doc_b"), col("n_matching_hashes"),
-        Num.r6(col("n_matching_hashes").cast("double") / lit(NumHashes.toDouble))
-          .as("est_jaccard"))
+    * Input: a (doc_id, sig) signature table ([[signatures]]). Pass
+    * [[stagedSignatures]] (query wiring) and the whole estimate runs off
+    * one 12-long row per doc with no shingle-stream scan: bands re-derive
+    * from the signatures, candidates from the bands, and the
+    * component-match count from the same table on both pair sides. */
+  def minhashEstimateFrom(sigIn: DataFrame): DataFrame = {
+    val sig = graft.infra.Caches.managed(sigIn)
+    matchCounts(sig)
+      .select(col("doc_a"), col("doc_b"), col("nm").as("n_matching_hashes"),
+        Num.r6(col("nm").cast("double") / lit(NumHashes.toDouble)).as("est_jaccard"))
   }
 
-  /** rows-per-band shapes swept by [[lshBandTuningFromValues]] (divisors of the 12
+  /** rows-per-band shapes swept by [[lshBandTuningFrom]] (divisors of the 12
     * signature components: 6×2 / 4×3 / 3×4 / 2×6 bands×rows). */
   val BandTuningConfigs: Seq[Int] = Seq(2, 3, 4, 6)
 
@@ -327,31 +305,20 @@ object Dedup {
     * — the expensive part); each shape then re-bands 12 longs per doc and
     * its candidate join is band-bucket-bounded exactly like the production
     * path. Estimates come from the signatures the joins already carry, so
-    * the whole sweep adds zero corpus scans. Input: the signature table
-    * ([[minhashValues]]; [[stagedMinhashValues]] in the query wiring, so
-    * the sweep runs entirely off the staged 12-longs-per-doc artifact). */
-  def lshBandTuningFromValues(mhIn: DataFrame,
-                              rowsPerBandShapes: Seq[Int] = BandTuningConfigs): DataFrame = {
-    val sig = graft.infra.Caches.managed(sigArrays(mhIn))
+    * the whole sweep adds zero corpus scans. Input: the (doc_id, sig)
+    * table ([[signatures]]; [[stagedSignatures]] in the query wiring, so
+    * the sweep runs entirely off the staged one-row-per-doc artifact). */
+  def lshBandTuningFrom(sigIn: DataFrame,
+                        rowsPerBandShapes: Seq[Int] = BandTuningConfigs): DataFrame = {
+    val sig = graft.infra.Caches.managed(sigIn)
     rowsPerBandShapes.map { r =>
       val b = NumHashes / r
-      val bands = bandsFromSig(sig, r)
-      val cand = bands.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-        .join(bands.select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
-          Seq("band", "band_key"))
-        .where(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-      val est = cand
-        .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
-        .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sb")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          expr("CAST(size(filter(zip_with(sa, sb, (x, y) -> x = y), v -> v)) AS BIGINT)")
-            .as("nm"))
-      est.agg(
-        count(lit(1)).as("n_candidates"),
-        coalesce(sum(when(col("nm") >= NumHashes / 2, 1L).otherwise(0L)), lit(0L))
-          .as("n_est_dup"),
-        coalesce(sum("nm"), lit(0L)).as("sum_match_hashes"))
+      matchCounts(sig, r)
+        .agg(
+          count(lit(1)).as("n_candidates"),
+          coalesce(sum(when(col("nm") >= NumHashes / 2, 1L).otherwise(0L)), lit(0L))
+            .as("n_est_dup"),
+          coalesce(sum("nm"), lit(0L)).as("sum_match_hashes"))
         .select(lit(r.toLong).as("rows_per_band"), lit(b.toLong).as("n_bands"),
           col("n_candidates"), col("n_est_dup"), col("sum_match_hashes"),
           lit(sCurveThreshold(b, r)).as("s_curve_threshold"))
@@ -387,17 +354,29 @@ object Dedup {
       .agg(count(lit(1)).as("shared_bands"))
   }
 
-  /** The (doc_id, j, mh) MinHash signature table staged ONCE per
-    * (process, corpus) as a doc_id-bucketed parquet artifact — signatures
-    * are the write-once/read-many asset of the near-dup family (the
-    * estimate, the band-shape sweep, and incremental probes all re-band the
-    * same 12 longs per doc), and at 100 TB they are exactly what a
+  /** The (doc_id, sig) MinHash signature table ([[signatures]], one row
+    * per document) staged ONCE per (process, corpus) as a doc_id-bucketed
+    * parquet artifact — signatures are the write-once/read-many asset of
+    * the near-dup family (the estimate, the band-shape sweep and the
+    * tf-idf doc-similarity candidates all re-band the same 12 longs per
+    * doc), and at 100 TB they are exactly what a
     * deployment persists beside the corpus rather than recomputing from the
     * shingle stream (one tokenize+shingle+min-agg corpus pass each time).
     * Keyed by its plan (Staging.stage). */
-  def stagedMinhashValues(docs: DataFrame, sfDir: String): DataFrame =
+  def stagedSignatures(docs: DataFrame, sfDir: String): DataFrame =
     graft.infra.Staging.stageOnceBucketed("minhash_sig", sfDir,
-      minhashValues(shingleSets(docs)), docs.sparkSession, "doc_id")
+      signatures(shingleSets(docs)), docs.sparkSession, "doc_id")
+
+  /** new_id, old_id, shared_bands — THE new-vs-old band probe of the
+    * incremental near-dup check: a (band, band_key) equi-join of the new
+    * documents' bands against the index's, then the shared-band count per
+    * pair. Both inputs are (doc_id, band, band_key) tables; the batch
+    * probes and the streaming ingest gate all call it. */
+  private[graft] def probeBands(newBands: DataFrame, indexBands: DataFrame): DataFrame =
+    newBands.select(col("band"), col("band_key"), col("doc_id").as("new_id"))
+      .join(indexBands.select(col("band"), col("band_key"), col("doc_id").as("old_id")),
+        Seq("band", "band_key"))
+      .groupBy("new_id", "old_id").agg(count(lit(1)).as("shared_bands"))
 
   /** new_id, old_id, shared_bands — INCREMENTAL near-dup check: a new
     * ingest batch's bands probe the existing corpus's bands instead of
@@ -413,12 +392,7 @@ object Dedup {
   def minhashIncremental(docs: DataFrame, batchMod: Long = 10L): DataFrame = {
     val isNew = pmod(col("doc_id"), lit(batchMod)) === 0
     val bands = graft.infra.Caches.managed(minhashBands(shingleSets(docs)))
-    val newBands = bands.where(isNew)
-      .select(col("band"), col("band_key"), col("doc_id").as("new_id"))
-    val oldBands = bands.where(!isNew)
-      .select(col("band"), col("band_key"), col("doc_id").as("old_id"))
-    newBands.join(oldBands, Seq("band", "band_key"))
-      .groupBy("new_id", "old_id").agg(count(lit(1)).as("shared_bands"))
+    probeBands(bands.where(isNew), bands.where(!isNew))
   }
 
   /** Stage (once per process, corpus and batch split) the existing-corpus
@@ -449,15 +423,9 @@ object Dedup {
     * contract at 100 TB: ingest cost scales with the batch, not the
     * corpus. BucketingSpec asserts the index-side plan shape mechanically. */
   def minhashIncrementalStaged(docs: DataFrame, sfDir: String, batchMod: Long = 10L): DataFrame = {
-    val spark = docs.sparkSession
     val isNew = pmod(col("doc_id"), lit(batchMod)) === 0
     val table = stageBandIndex(docs, sfDir, batchMod)
-    val newBands = minhashBands(shingleSets(docs.where(isNew)))
-      .select(col("band"), col("band_key"), col("doc_id").as("new_id"))
-    val index = spark.table(table)
-      .select(col("band"), col("band_key"), col("doc_id").as("old_id"))
-    newBands.join(index, Seq("band", "band_key"))
-      .groupBy("new_id", "old_id").agg(count(lit(1)).as("shared_bands"))
+    probeBands(minhashBands(shingleSets(docs.where(isNew))), docs.sparkSession.table(table))
   }
 
   /** [[minhashCandidatesFrom]] over a STAGED hashed id table: the xxhash64
@@ -471,8 +439,6 @@ object Dedup {
     minhashCandidatesFrom(graft.infra.Staging.stage("hashed_shingle_sets", sfDir,
       graft.infra.Staging.Layout.SingleFile, shingleSetsHashed(docs)).read(docs.sparkSession))
 
-  /** doc_a, doc_b, jaccard — exact shingle-set Jaccard, evaluated ONLY on LSH
-    * candidate pairs (integer counts → deterministic division, round 6). */
   /** (doc_a, doc_b, i, na, nb) per candidate pair — shingle-set sizes and
     * intersection counts computed IN-ROW from per-doc sid ARRAYS. The
     * former shape joined the candidate pairs against the (doc_id, sid)
@@ -495,39 +461,36 @@ object Dedup {
         expr("CAST(size(sb) AS BIGINT)").as("nb"))
   }
 
-  def ngramJaccard(docs: DataFrame, threshold: Double = 0.6): DataFrame = {
+  /** (doc_a, doc_b, i, na, nb, jaccard) for EVERY LSH candidate pair —
+    * the exact shingle-set Jaccard the confirm thresholds and the precision
+    * report aggregates. Candidates come from the SAME managed shingle table
+    * the overlap reads, so the tokenize+shingle corpus pass runs once; a
+    * candidate with no shared shingle keeps its row at i = 0 → J = 0. */
+  private def candidateJaccard(docs: DataFrame): DataFrame = {
     val sets = graft.infra.Caches.managed(shingleSets(docs))
-    // candidates from the SAME managed shingle table the confirm reads
-    // (the minhashPrecision shape) — minhashCandidates(docs) built a
-    // second, uncached shingle derivation, so the tokenize+shingle corpus
-    // pass ran twice per invocation. Candidate pairs with no shared
-    // shingle surface as i = 0 → J = 0 and drop at the threshold, exactly
-    // the rows the former intersect inner-join never produced.
     val cands = minhashCandidatesFrom(sets).select("doc_a", "doc_b")
     candOverlap(sets, cands)
       .withColumn("jaccard", Num.r6(col("i").cast("double") / (col("na") + col("nb") - col("i")).cast("double")))
+  }
+
+  /** doc_a, doc_b, jaccard — exact shingle-set Jaccard, evaluated ONLY on LSH
+    * candidate pairs (integer counts → deterministic division, round 6). */
+  def ngramJaccard(docs: DataFrame, threshold: Double = 0.6): DataFrame =
+    candidateJaccard(docs)
       .where(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-  }
 
   /** n_candidates, n_confirmed, precision — banding precision report: what
     * fraction of the LSH candidate pairs the exact shingle-Jaccard confirm
     * actually keeps (the confirm-stage cost/selectivity number an operator
     * of the dedup pipeline watches — low precision means the band shape
-    * wastes confirm-join work; [[lshBandTuningFromValues]] is the knob, this is the
+    * wastes confirm-join work; [[lshBandTuningFrom]] is the knob, this is the
     * gauge). Candidates with NO shared shingle survive the outer join at
     * J = 0 — they are exactly the false-positive mass the report exists to
     * count. Same band-bounded joins as the production path; one 1-row
     * aggregate at the end. */
-  def minhashPrecision(docs: DataFrame, threshold: Double = 0.6): DataFrame = {
-    val sets = graft.infra.Caches.managed(shingleSets(docs))
-    val cands = minhashCandidatesFrom(sets).select("doc_a", "doc_b")
-    // in-row overlap ([[candOverlap]]): J = 0 pairs keep their row with
-    // i = 0, replacing the former left-join + coalesce(i, 0) — same
-    // per-candidate jaccard, one pass, no intersect groupBy
-    candOverlap(sets, cands)
-      .withColumn("jaccard", Num.r6(col("i").cast("double") /
-        (col("na") + col("nb") - col("i")).cast("double")))
+  def minhashPrecision(docs: DataFrame, threshold: Double = 0.6): DataFrame =
+    candidateJaccard(docs)
       .agg(count(lit(1)).as("n_candidates"),
         coalesce(sum(when(col("jaccard") >= threshold, 1L).otherwise(0L)), lit(0L))
           .as("n_confirmed"))
@@ -535,7 +498,6 @@ object Dedup {
         when(col("n_candidates") > 0,
           Num.r6(col("n_confirmed").cast("double") / col("n_candidates").cast("double")))
           .otherwise(lit(0.0)).as("precision"))
-  }
 
   /** Cross-source duplicate-overlap matrix — the data-card cell that says
     * which sources duplicate into which (crawl-snapshot contamination, a
@@ -828,7 +790,7 @@ object Dedup {
     // is shuffled). Same result: distinct-within-doc ∩ eval ≡
     // distinct(matched) per (doc, eval).
     shingles(docs)
-      .select(col("doc_id"), (graft.functions.Hash60.id(col("shingle")) % MinhashP).as("sid"))
+      .select(col("doc_id"), shingleId(col("shingle")).as("sid"))
       .join(broadcast(eSets), "sid")
       .select("doc_id", "eval_id", "sid").distinct()
       .groupBy("doc_id", "eval_id")
@@ -844,7 +806,7 @@ object Dedup {
     * probe index ([[stagedTrainShingles]]). */
   private[graft] def windowIds(docs: DataFrame, windowTokens: Int): DataFrame =
     TextOps.ngramExplode(docs, windowTokens, "win", Seq("doc_id"))
-      .select(col("doc_id"), (Hash60.id(col("win")) % MinhashP).as("wid"))
+      .select(col("doc_id"), shingleId(col("win")).as("wid"))
       .distinct()
 
   /** [[windowIds]] staged ONCE per (process, corpus) as a wid-bucketed
@@ -937,7 +899,7 @@ object Dedup {
     val wins = TextOps.ngramExplodeArr(toksArr, "toks", windowTokens, "win",
         Seq("doc_id"), pos = Some("pos"))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("start_ord"),
-        (Hash60.id(col("win")) % MinhashP).as("wid"))
+        shingleId(col("win")).as("wid"))
     // the group table and the deletion join both read it
     graft.infra.Caches.managed(wins)
     val groups = wins.groupBy("wid")

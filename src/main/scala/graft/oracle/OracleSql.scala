@@ -2607,7 +2607,7 @@ object OracleSql {
        |FROM fan GROUP BY 1, 2""".stripMargin
   }
 
-  /** Dedup.lshBandTuningFromValues twin: the shared mh CTE re-banded per shape, one
+  /** Dedup.lshBandTuningFrom twin: the shared mh CTE re-banded per shape, one
     * UNION ALL branch per rows-per-band; thresholds are the same
     * Scala-computed literals the engine emits. */
   val lshBandTuning: String = {

@@ -178,41 +178,28 @@ object DocStreams {
   }
 
   /** Row-local streaming dual of Dedup.minhashBands: doc_id, band,
-    * band_key, with band keys IDENTICAL to the batch path. The batch chain
-    * (lead-window shingling → distinct-shingle groupBy → k-min signature
-    * aggregation → band-key string agg) is three stateful shapes deep; here
-    * every step collapses into the row, which is what makes it
-    * streaming-legal: shingles by indexed `transform` over the token array,
-    * shingle ids by the same Hash60-mod-P arithmetic inside the lambda,
-    * each signature component an `array_min` over one hash's transform, and
-    * band keys a `concat_ws` over [[graft.operators.Dedup.RowsPerBand]]
-    * consecutive components. Docs with fewer than 3 tokens have no complete
-    * shingle and emit nothing — same as the batch `t3 IS NOT NULL` drop. */
+    * band_key, with band keys IDENTICAL to the batch path. Shingles come by
+    * indexed `transform` over the token array, their ids and the signature
+    * by Dedup's own in-row derivations (`shingleId`, `signatureOf`), and
+    * the band keys by the shared `Dedup.bandsFromSig`. Docs with fewer than
+    * 3 tokens have no complete shingle and emit nothing, like the batch
+    * shingle explode. */
   def streamBands(docs: DataFrame): DataFrame = {
-    import graft.operators.Dedup._
-    import graft.functions.Hash60
-    val numBands = NumHashes / RowsPerBand
-    // ONE let-bound chain: tokens, shingle ids, and the signature array
-    // each evaluate once per row (see [[letBound]] — an sids referenced by
-    // 12 hash transforms would otherwise rebuild the whole shingle chain
-    // 12× per document)
-    val bks = letBound(split(col("text"), " "), ts => {
+    import graft.operators.Dedup
+    // one let-bound chain (see [[letBound]]): the shingle ids feed 12 hash
+    // transforms, so they are bound as a lambda variable, not rebuilt per
+    // component
+    val sig = letBound(split(col("text"), " "), ts => {
       val shingles = transform(sequence(lit(1), size(ts) - 2), i =>
         concat_ws(" ", element_at(ts, i), element_at(ts, i + 1), element_at(ts, i + 2)))
-      letBound(array_distinct(transform(shingles, x => Hash60.id(x) % MinhashP)), sv => {
-        val mhs = array(minhashParams.map { case (_, a, b) =>
-          array_min(transform(sv, s => (lit(a) * s + lit(b)) % lit(MinhashP))) }: _*)
-        letBound(mhs, mv => array((0 until numBands).map { bnd =>
-          struct(lit(bnd.toLong).as("band"),
-            concat_ws(",", (0 until RowsPerBand).map(r =>
-              element_at(mv, bnd * RowsPerBand + r + 1).cast("string")): _*).as("band_key"))
-        }: _*))
-      })
+      letBound(array_distinct(transform(shingles, x => Dedup.shingleId(x))), Dedup.signatureOf)
     })
-    docs
+    // the band lambda reads `sig` once per band: it must stay the
+    // projected attribute (PlanAuditSpec pins that the optimizer does not
+    // inline the signature chain into the band Generate)
+    Dedup.bandsFromSig(docs
       .where(size(split(col("text"), " ")) >= 3)
-      .select(col("doc_id"), explode(bks).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
+      .select(col("doc_id"), sig.as("sig")))
   }
 
   /** The nightly near-dup ingest gate as Structured Streaming: new
@@ -231,13 +218,31 @@ object DocStreams {
       graft.sources.Tables.documents(spark, sfDir), sfDir)
     val newBands = streamBands(
       stagedDocsStream(spark, sfDir).where(pmod(col("doc_id"), lit(10L)) === 0))
-      .select(col("band"), col("band_key"), col("doc_id").as("new_id"))
-    val index = spark.table(table)
-      .select(col("band"), col("band_key"), col("doc_id").as("old_id"))
     EventStreams.runToTable(
-      newBands.join(index, Seq("band", "band_key"))
-        .groupBy("new_id", "old_id").agg(count(lit(1)).as("shared_bands")),
+      graft.operators.Dedup.probeBands(newBands, spark.table(table)),
       OutputMode.Complete())
+  }
+
+  /** Row-local dual of Dedup's lead-window shingle ids: (doc_id,
+    * n_shingles, wid) with wid IDENTICAL to the batch path (same split,
+    * same window strings via indexed `transform`, same Hash60-mod-P);
+    * docs with fewer than `w` tokens emit nothing, like the batch
+    * `t{w-1} IS NOT NULL` drop. Spec-pinned equal to the batch table. */
+  def inRowWindowIds(docs: DataFrame, w: Int = 8): DataFrame = {
+    // one let-bound chain to the (count, ids) struct, then the
+    // evaluate-once Generate barrier (see [[letBound]] / the quality gate)
+    val widsStruct = letBound(split(col("text"), " "), ts =>
+      letBound(
+        array_distinct(transform(
+          transform(sequence(lit(1), size(ts) - (w - 1)), i =>
+            concat_ws(" ", (0 until w).map(j => element_at(ts, i + j)): _*)),
+          x => graft.operators.Dedup.shingleId(x))),
+        wv => struct(size(wv).cast("long").as("n_shingles"), wv.as("wids"))))
+    docs
+      .where(size(split(col("text"), " ")) >= w)
+      .select(col("doc_id"), explode(array(widsStruct)).as("st"))
+      .select(col("doc_id"), col("st.n_shingles").as("n_shingles"),
+        explode(col("st.wids")).as("wid"))
   }
 
   /** Continuous eval-feed decontamination gate — the streaming dual of
@@ -251,30 +256,6 @@ object DocStreams {
     * aggregation. Run-to-completion equals the batch report and shares
     * its oracle. At 100 TB this is the shape where screening an incoming
     * benchmark/eval feed costs the feed, never the corpus. */
-  /** Row-local dual of Dedup's lead-window shingle ids: (doc_id,
-    * n_shingles, wid) with wid IDENTICAL to the batch path (same split,
-    * same window strings via indexed `transform`, same Hash60-mod-P);
-    * docs with fewer than `w` tokens emit nothing, like the batch
-    * `t{w-1} IS NOT NULL` drop. Spec-pinned equal to the batch table. */
-  def inRowWindowIds(docs: DataFrame, w: Int = 8): DataFrame = {
-    import graft.functions.Hash60
-    import graft.operators.Dedup.MinhashP
-    // one let-bound chain to the (count, ids) struct, then the
-    // evaluate-once Generate barrier (see [[letBound]] / the quality gate)
-    val widsStruct = letBound(split(col("text"), " "), ts =>
-      letBound(
-        array_distinct(transform(
-          transform(sequence(lit(1), size(ts) - (w - 1)), i =>
-            concat_ws(" ", (0 until w).map(j => element_at(ts, i + j)): _*)),
-          x => Hash60.id(x) % lit(MinhashP))),
-        wv => struct(size(wv).cast("long").as("n_shingles"), wv.as("wids"))))
-    docs
-      .where(size(split(col("text"), " ")) >= w)
-      .select(col("doc_id"), explode(array(widsStruct)).as("st"))
-      .select(col("doc_id"), col("st.n_shingles").as("n_shingles"),
-        explode(col("st.wids")).as("wid"))
-  }
-
   def splitLeakageViaStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Num
     val trainShingles = graft.operators.Dedup.stagedTrainShingles(
@@ -298,15 +279,6 @@ object DocStreams {
         (col("n_leaked") > 0).as("leaked"))
   }
 
-  /** Streaming corpus upsert — the reference's incremental update pipeline
-    * (update/UpdateMedlineEntitiesPipeline) as continuous ingestion: update
-    * documents stream through a real exactly-once parquet file sink (the
-    * append log), and the corpus view is merge-on-read — base anti-joined
-    * with the log, updates win. This is the standard streaming-upsert
-    * layout when the store has no native MERGE (log + view now, compaction
-    * as a periodic batch job); the view's plan is the same one-shuffle
-    * anti-join as batch Etl.upsert, so the result matches the doc_upsert
-    * oracle exactly. */
   /** [[upsertViaStream]] extended with the Medline DELETE channel: the
     * nightly update FILES (PubmedArticleSet + trailing DeleteCitation —
     * XmlIngest.serializeMedlineUpdateFiles) arrive as a file-source stream,
@@ -353,6 +325,15 @@ object DocStreams {
     graft.infra.Etl.upsertWithDeletes(base, updates, deletes, "doc_id")
   }
 
+  /** Streaming corpus upsert — the reference's incremental update pipeline
+    * (update/UpdateMedlineEntitiesPipeline) as continuous ingestion: update
+    * documents stream through a real exactly-once parquet file sink (the
+    * append log), and the corpus view is merge-on-read — base anti-joined
+    * with the log, updates win. This is the standard streaming-upsert
+    * layout when the store has no native MERGE (log + view now, compaction
+    * as a periodic batch job); the view's plan is the same one-shuffle
+    * anti-join as batch Etl.upsert, so the result matches the doc_upsert
+    * oracle exactly. */
   def upsertViaStream(spark: SparkSession, sfDir: String): DataFrame = {
     val log = graft.infra.Staging.tempDir("graft-upsert-log").toString
     val ckpt = graft.infra.Staging.tempDir("graft-upsert-ckpt").toString

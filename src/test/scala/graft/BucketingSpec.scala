@@ -305,20 +305,20 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("staged minhash signatures: estimate and band sweep equal their from-scratch derivations") {
-    // the r14 cross-query share of the near-dup family: the (doc_id, j, mh)
-    // signature table staged once (Dedup.stagedMinhashValues); estimate and
+    // the r14 cross-query share of the near-dup family: the (doc_id, sig)
+    // signature table staged once (Dedup.stagedSignatures); estimate and
     // band-shape sweep re-band the staged 12 longs/doc with no
     // shingle-stream scan
     val sf = "/root/testdata/sf0.001"
     val docs = sources.Tables.documents(spark, sf)
     try {
-      val mh = operators.Dedup.stagedMinhashValues(docs, sf)
+      val mh = operators.Dedup.stagedSignatures(docs, sf)
       assert(operators.Dedup.minhashEstimateFrom(mh).collect().map(_.toSeq).toSet ==
         operators.Dedup.minhashEstimateFrom(
-          operators.Dedup.minhashValues(operators.Dedup.shingleSets(docs))).collect().map(_.toSeq).toSet)
-      assert(operators.Dedup.lshBandTuningFromValues(mh).collect().map(_.toSeq).toSet ==
-        operators.Dedup.lshBandTuningFromValues(
-          operators.Dedup.minhashValues(operators.Dedup.shingleSets(docs))).collect().map(_.toSeq).toSet)
+          operators.Dedup.signatures(operators.Dedup.shingleSets(docs))).collect().map(_.toSeq).toSet)
+      assert(operators.Dedup.lshBandTuningFrom(mh).collect().map(_.toSeq).toSet ==
+        operators.Dedup.lshBandTuningFrom(
+          operators.Dedup.signatures(operators.Dedup.shingleSets(docs))).collect().map(_.toSeq).toSet)
     } finally graft.infra.Caches.unpersistManaged()
   }
 

@@ -44,7 +44,7 @@ class DedupSpec extends SparkSpec {
   test("minhash estimate is exact 1.0 on identical docs and tracks exact jaccard on near-dups") {
     val nearDup = base.replace("today", "tonight")
     val est = Dedup.minhashEstimateFrom(
-      Dedup.minhashValues(Dedup.shingleSets(docs(base, base, nearDup)))).collect()
+      Dedup.signatures(Dedup.shingleSets(docs(base, base, nearDup)))).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) -> r.getAs[Double]("est_jaccard")).toMap
     // identical shingle sets ⇒ identical signatures ⇒ estimate exactly 1.0
     assert(est((0L, 1L)) == 1.0)

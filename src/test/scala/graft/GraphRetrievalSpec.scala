@@ -329,8 +329,8 @@ class GraphRetrievalSpec extends SparkSpec {
 
   test("lshBandTuning finds the exact dup at every shape; thresholds rise with rows") {
     val dup = "the quick fox jumps over a lazy dog near the old red barn today"
-    val r = graft.operators.Dedup.lshBandTuningFromValues(
-      graft.operators.Dedup.minhashValues(graft.operators.Dedup.shingleSets(textDocs(dup, dup,
+    val r = graft.operators.Dedup.lshBandTuningFrom(
+      graft.operators.Dedup.signatures(graft.operators.Dedup.shingleSets(textDocs(dup, dup,
         "a completely different document with many other tokens in this string ok"))))
       .orderBy("rows_per_band").collect()
     assert(r.map(_.getAs[Long]("rows_per_band")).toSeq == Seq(2L, 3L, 4L, 6L))

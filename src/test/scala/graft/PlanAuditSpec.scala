@@ -512,4 +512,58 @@ class PlanAuditSpec extends SparkSpec {
     graft.infra.Caches.unpersistManaged()
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  test("minhash signatures stage one array row per document and re-band with no regroup") {
+    // one signature form: the staged minhash_sig table holds (doc_id, sig),
+    // so its consumers band the scanned arrays directly — no aggregate may
+    // sit between the graft_minhash_sig scan and the band Generate
+    import org.apache.spark.sql.catalyst.expressions.ArrayMin
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.functions.{col, countDistinct, size}
+    def below(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case o => o.children
+    }
+    def generates(p: SparkPlan): Seq[GenerateExec] = p match {
+      case g: GenerateExec => g +: below(g).flatMap(generates)
+      case o => below(o).flatMap(generates)
+    }
+    // one entry per signature scan under p: whether an aggregate lies between
+    def sigScans(p: SparkPlan, viaAgg: Boolean): Seq[Boolean] = p match {
+      case s: FileSourceScanExec =>
+        if (s.tableIdentifier.exists(_.table.startsWith("graft_minhash_sig"))) Seq(viaAgg) else Nil
+      case a: BaseAggregateExec => below(a).flatMap(sigScans(_, viaAgg = true))
+      case o => below(o).flatMap(sigScans(_, viaAgg))
+    }
+    val offenders = Seq("minhash_est", "lsh_band_tuning", "tfidf_doc_sim").flatMap { q =>
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      df.collect()
+      val paths = generates(df.queryExecution.executedPlan).flatMap(sigScans(_, viaAgg = false))
+      if (paths.isEmpty) Seq(s"$q: no band Generate over a graft_minhash_sig scan")
+      else if (paths.exists(identity)) Seq(s"$q: aggregate between the signature scan and the bands")
+      else Nil
+    }
+    graft.infra.Caches.unpersistManaged()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val sig = spark.read.parquet(graft.infra.Staging.lastPath("minhash_sig"))
+    assert(sig.columns.sorted.toSeq == Seq("doc_id", "sig"), sig.columns.mkString(","))
+    val r = sig.agg(org.apache.spark.sql.functions.count("doc_id"), countDistinct("doc_id")).head
+    assert(r.getLong(0) > 0 && r.getLong(0) == r.getLong(1))
+    assert(sig.where(size(col("sig")) =!= graft.operators.Dedup.NumHashes).isEmpty)
+    // the streaming band derivation computes each row's signature once: the
+    // band lambda reads `sig` as an attribute, never an inlined array_min
+    // chain per band
+    val bandGen = generates(graft.streaming.DocStreams.streamBands(
+      graft.sources.Tables.documents(spark, sfDir)).queryExecution.executedPlan)
+      .filter(_.generator.references.exists(_.name == "sig"))
+    assert(bandGen.nonEmpty && bandGen.forall(!_.generator.exists(_.isInstanceOf[ArrayMin])),
+      bandGen.mkString("\n"))
+  }
 }

@@ -65,8 +65,8 @@ class Round17OpsSpec extends SparkSpec {
       Cooccurrence.tfidfDocSimFrom(Cooccurrence.tfidf(annots),
         Dedup.minhashCandidates(docs).select("doc_a", "doc_b"), tau = 0.0),
       Cooccurrence.tfidfDocSimFrom(Cooccurrence.tfidf(annots),
-        Dedup.minhashCandidatesFromBands(Dedup.minhashBandsFromValues(
-          Dedup.minhashValues(Dedup.shingleSets(docs)))).select("doc_a", "doc_b"),
+        Dedup.minhashCandidatesFromBands(Dedup.bandsFromSig(
+          Dedup.stagedSignatures(docs, "/tmp/graft-test-r17-minhash"))).select("doc_a", "doc_b"),
         tau = 0.0))
     graft.infra.Caches.unpersistManaged()
   }

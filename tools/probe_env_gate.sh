@@ -8,14 +8,24 @@
 # Checks, in order:
 #  1. sweep stale DuckDB spill (.tmp/duckdb_temp_*) when no DuckDB-hosting
 #     process is alive — the r15 oracle run left 46 GB of dead spill;
-#  2. free disk on the probe tmp filesystem >= ${GATE_MIN_DISK_GB:-20} GB
-#     (staged universe ~4 GB + scale corpora ~2.2 GB + shuffle spill);
+#  2. free disk on the probe tmp filesystem >= the disk floor: about 9x the
+#     corpus in SPARK_GRAFT_SF_DIR (20 GB over the ~2.2 GB sf10 corpus:
+#     staged universe ~4 GB + scale corpora + shuffle spill), at least 1 GB;
+#     20 GB when SPARK_GRAFT_SF_DIR is unset; GATE_MIN_DISK_GB overrides;
 #  3. fd headroom: hard/soft nofile limit >= ${GATE_MIN_NOFILE:-16384}
 #     (the conllu fixture stage opens ~25k files over its life; post-fix it
 #     closes them, but a low ulimit still starves the parquet reader pool).
 set -u
 REPO_DIR="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
-MIN_DISK_GB=${GATE_MIN_DISK_GB:-20}
+if [ -n "${GATE_MIN_DISK_GB:-}" ]; then
+  MIN_DISK_GB=$GATE_MIN_DISK_GB
+elif [ -n "${SPARK_GRAFT_SF_DIR:-}" ] && [ -d "$SPARK_GRAFT_SF_DIR" ]; then
+  corpus_kb=$(du -skL "$SPARK_GRAFT_SF_DIR" | cut -f1)
+  MIN_DISK_GB=$(( (corpus_kb * 9 + 1048575) / 1048576 ))
+  [ "$MIN_DISK_GB" -ge 1 ] || MIN_DISK_GB=1
+else
+  MIN_DISK_GB=20
+fi
 MIN_NOFILE=${GATE_MIN_NOFILE:-16384}
 fail=0
 
