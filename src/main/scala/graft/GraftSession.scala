@@ -1,5 +1,6 @@
 package graft
 
+import graft.infra.NioLocalFileSystem
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
@@ -33,6 +34,9 @@ object GraftSession {
       // layouts ignore it.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // local files get their permission bits through java.nio, not one
+      // forked `chmod` per written file and directory
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   /** The local session of every main: [[defaultCpus]] cores and shuffle
     * partitions, WARN logging. */

@@ -67,6 +67,12 @@ object ConceptDict {
     ontologyClosure.filter { case (c, _) => concepts(c) }
   }
 
+  /** (concept_id, itself followed by its ancestors) for every concept with
+    * an ancestor — the in-row form of [[ancestors]] that
+    * Concepts.withAncestors explodes. */
+  val lineage: Seq[(String, Seq[String])] =
+    ancestors.groupMap(_._1)(_._2).toSeq.sortBy(_._1).map { case (c, as) => (c, c +: as) }
+
   def directEdgesValuesSql(alias: String = "edges"): String =
     directEdges.map { case (c, p) => s"('$c','$p')" }
       .mkString("(VALUES ", ", ", s") AS $alias(child, parent)")

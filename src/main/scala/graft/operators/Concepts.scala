@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.ConceptDict
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dictionary concept recognition + post-processing.
@@ -14,8 +15,8 @@ import org.apache.spark.sql.functions._
   *    isDigitsAndPunctOnly, length/case checks) as codegen'd predicates.
   *  - concept post-processing (reference: etl/fn/ConceptPostProcessingFn.java:299
   *    removeNestedConceptAnnotations; :939 matchConceptsToAbbreviations) —
-  *    span dedup + nested-annotation removal via a doc-partitioned
-  *    containment anti-join.
+  *    span dedup + nested-annotation removal as one sort-and-sweep window
+  *    per document.
   *  - CRF confirmation (reference: etl/CrfNerPipeline.java + PipelineMain
   *    filterViaCrf): a second, pattern-based annotation channel; concepts are
   *    kept only when their span overlaps a CRF span (semi-join).
@@ -82,18 +83,24 @@ object Concepts {
     graft.infra.Staging.stageOnceBucketed("concepts_pp", sfDir,
       postProcess(recognize(docs)), docs.sparkSession, "doc_id")
 
-  /** Dedup identical (doc, concept, span) annots, then drop annotations whose
+  /** Dedup identical (doc, concept, span) annots and drop annotations whose
     * span is strictly contained in a longer annotation's span (nested-annot
-    * removal). The anti-join is equi on doc_id — per-doc work only. */
+    * removal), as one sort-and-sweep per document: in (char_start asc,
+    * char_end desc) order, a span is nested iff the largest char_end among
+    * the strictly earlier DISTINCT spans of its document reaches its own
+    * end — every such span starts no later and is strictly longer. The
+    * order key packs the span into one long so that a RANGE frame ending 1
+    * before the row excludes identical spans under other concepts; it
+    * overflows (ANSI: throws) only past 2^31 characters. One shuffle on
+    * doc_id; the dedup's distribution is met by it, so it adds none. */
   def postProcess(annots: DataFrame): DataFrame = {
-    val deduped = annots.dropDuplicates("doc_id", "concept_id", "char_start", "char_end")
-    val covering = deduped.select(col("doc_id").as("c_doc_id"),
-      col("char_start").as("c_start"), col("char_end").as("c_end"))
-    deduped.join(covering,
-      col("doc_id") === col("c_doc_id") &&
-        col("c_start") <= col("char_start") && col("char_end") <= col("c_end") &&
-        (col("c_end") - col("c_start")) > (col("char_end") - col("char_start")),
-      "left_anti")
+    val spanKey = col("char_start") * (1L << 32) + (lit((1L << 32) - 1) - col("char_end"))
+    val earlier = Window.partitionBy("doc_id").orderBy(spanKey)
+      .rangeBetween(Window.unboundedPreceding, -1)
+    annots.withColumn("cover_end", max("char_end").over(earlier))
+      .where(!coalesce(col("cover_end") >= col("char_end"), lit(false)))
+      .drop("cover_end")
+      .dropDuplicates("doc_id", "concept_id", "char_start", "char_end")
   }
 
   /** Strict annotation hygiene filters (reference: ConceptPostProcessingFn):
@@ -213,15 +220,20 @@ object Concepts {
     annots.unionByName(onLongForm).dropDuplicates("doc_id", "concept_id", "char_start", "char_end")
   }
 
-  /** Expand (unit_col, concept_id) sets with ancestor ids (broadcast map),
-    * mirroring ConceptIdfPipeline.java:120-140 addAncestorConceptIds. */
+  /** Expand (unit_col, concept_id) sets with ancestor ids, mirroring
+    * ConceptIdfPipeline.java:120-140 addAncestorConceptIds, in-row: a left
+    * join against the broadcast driver-side lineage table (concept → itself
+    * and its ancestors; a concept absent from it keeps only itself), one
+    * explode and a distinct. Every step keeps the input's partitioning, so
+    * over a doc_id-bucketed input it plans no shuffle. */
   def withAncestors(unitConcepts: DataFrame, unitCols: Seq[String]): DataFrame = {
     val spark = unitConcepts.sparkSession
-    val anc = broadcast(ConceptDict.ancestorsDF(spark))
-    val base = unitConcepts.select(unitCols.map(col) :+ col("concept_id"): _*)
-    val expanded = base.join(anc, "concept_id")
-      .select(unitCols.map(col) :+ col("ancestor_id").as("concept_id"): _*)
-    base.unionByName(expanded).distinct()
+    import spark.implicits._
+    val lineage = broadcast(ConceptDict.lineage.toDF("concept_id", "lineage"))
+    unitConcepts.join(lineage, Seq("concept_id"), "left")
+      .select(unitCols.map(col) :+
+        explode(coalesce(col("lineage"), array(col("concept_id")))).as("concept_id"): _*)
+      .distinct()
   }
 
   /** Subtree exclusion (reference:

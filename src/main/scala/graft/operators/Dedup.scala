@@ -35,12 +35,12 @@ object Dedup {
 
   /** doc_id, canonical_id, is_dup — exact text dedup via content hash. */
   def exact(docs: DataFrame): DataFrame = {
-    // managed: the canonical-min aggregation and the label join both read
-    // the hashed table — md5 over the full text ran once per side before
-    val hashed = graft.infra.Caches.managed(
-      docs.select(col("doc_id"), md5(col("text")).as("h")))
-    val canon = hashed.groupBy("h").agg(min("doc_id").as("canonical_id"))
-    hashed.join(canon, "h")
+    // one shuffle on the content hash: the canonical id is a window min over
+    // it, so md5 runs once and no group table is joined back. A null text
+    // has no hash and no canonical document: its row is dropped.
+    val canonical = min("doc_id").over(Window.partitionBy(md5(col("text"))))
+    docs.where(col("text").isNotNull)
+      .select(col("doc_id"), canonical.as("canonical_id"))
       .select(col("doc_id"), col("canonical_id"), (col("doc_id") =!= col("canonical_id")).as("is_dup"))
   }
 
@@ -107,27 +107,26 @@ object Dedup {
     * group at all): a sentence window survives iff it is the FIRST
     * occurrence of its text within its own document. Strictly narrower
     * than [[spanDedupApply]] (which canonicalizes across the corpus): the
-    * whole operator is one per-doc aggregation — grouping key = doc_id, so
-    * it rides the document partitioning with a single shuffle and no
-    * corpus-sized dedup-group table. In-row first-occurrence detection via
-    * a sorted-struct fold; reassembly is the same bounded array_sort as
-    * the sibling apply operators. */
+    * whole operator is row-local, with no corpus-sized dedup-group table.
+    * First occurrences come from one in-row pass, `array_distinct`, which
+    * keeps them in document order. */
   def intraDocDedup(docs: DataFrame): DataFrame = {
     // fully row-local (scan → project, NO shuffle): the keep decision —
     // "first occurrence of this window's text within its own document" —
     // only reads the document's own window array, so the dedup, the
     // reassembly and the counters all derive inside the row. The old form
     // paid a window Exchange + a per-doc aggregation exchange over the
-    // sentence stream for per-row-computable values (guide §2.4). keep(i)
-    // ⇔ array_position(ws, ws[i]) == i (first index of the text is mine) —
-    // exactly min(sent_id).over(doc_id, sent_text) == sent_id.
+    // sentence stream for per-row-computable values (guide §2.4).
+    // array_distinct keeps each text's first index in order — exactly the
+    // windows with min(sent_id).over(doc_id, sent_text) == sent_id — in one
+    // hashed pass.
     val sw = TextOps.SentWindow
     docs.select(col("doc_id"), split(col("text"), " ").as("tk"))
       .select(col("doc_id"),
         transform(sequence(lit(0), expr(s"CAST((size(tk) - 1) DIV $sw AS INT)")), s =>
           array_join(slice(col("tk"), s * sw + 1, lit(sw)), " ")).as("ws"))
       .select(col("doc_id"),
-        filter(col("ws"), (x, i) => array_position(col("ws"), x) === (i + 1).cast("long")).as("kept"),
+        array_distinct(col("ws")).as("kept"),
         size(col("ws")).as("n_windows"))
       .select(col("doc_id"),
         array_join(col("kept"), " ").as("clean_text"),
@@ -168,16 +167,17 @@ object Dedup {
   /** Normalized-form dedup: sorted token multiset with the near-dup marker
     * token removed; emits members of groups with >1 doc. */
   def normalized(docs: DataFrame): DataFrame = {
-    // managed: the group aggregation and the label join both read the
-    // normalized-key table — the split+filter+sort normalization ran once
-    // per side before (guide §2.4)
-    val keyed = graft.infra.Caches.managed(docs.select(col("doc_id"),
-      array_join(array_sort(filter(split(col("text"), " "), t => t =!= "dup")), " ").as("norm_key")))
-    val groups = keyed.groupBy("norm_key")
-      .agg(min("doc_id").as("canonical_id"), count(lit(1)).as("group_size"))
+    // one shuffle on the normalized key: the group's canonical id and size
+    // are window aggregates over it, so the split+filter+sort normalization
+    // runs once and no group table is joined back (guide §2.4). A null text
+    // has no key and joins no group.
+    val group = Window.partitionBy("norm_key")
+    docs.select(col("doc_id"),
+        array_join(array_sort(filter(split(col("text"), " "), t => t =!= "dup")), " ").as("norm_key"))
+      .where(col("norm_key").isNotNull)
+      .select(col("doc_id"), min("doc_id").over(group).as("canonical_id"),
+        count(lit(1)).over(group).as("group_size"))
       .where(col("group_size") > 1)
-    keyed.join(groups, "norm_key")
-      .select(col("doc_id"), col("canonical_id"), col("group_size"))
   }
 
   /** doc_id, shingle — 3-token shingles (order-preserving). Row-local and
@@ -722,18 +722,17 @@ object Dedup {
     * not an arbitrary one). Canonical = argmax over (rounded quality,
     * lowest doc_id tie-break) via a struct max — per the suite's argmin/
     * argmax convention, only ROUNDED values are ever compared, so
-    * summation-order fp noise cannot flip a winner. One groupBy per
-    * cluster plus one co-keyed join over a cluster-label table
-    * ([[clusters]] or the [[stagedClusters]] artifact). */
+    * summation-order fp noise cannot flip a winner. One window max per
+    * cluster over a cluster-label table ([[clusters]] or the
+    * [[stagedClusters]] artifact) — one shuffle on cluster_id, no join back;
+    * a row with no cluster id belongs to no cluster and is dropped. */
   def clusterKeepBestFrom(docs: DataFrame, cl: DataFrame): DataFrame = {
     val q = graft.operators.TextStats.quality(docs).select(col("doc_id"), col("quality"))
-    val joined = cl.join(q, "doc_id")
-    val canon = joined.groupBy("cluster_id")
-      .agg(max(struct(col("quality"), (-col("doc_id")).as("nid"))).as("c"))
-      .select(col("cluster_id"), (-col("c.nid")).as("keep_doc"))
-    joined.join(canon, "cluster_id")
+    val best = max(struct(col("quality"), (-col("doc_id")).as("nid")))
+      .over(Window.partitionBy("cluster_id"))
+    cl.join(q, "doc_id").where(col("cluster_id").isNotNull)
       .select(col("doc_id"), col("cluster_id"), col("quality"),
-        (col("doc_id") === col("keep_doc")).as("keep"))
+        (col("doc_id") === -best.getField("nid")).as("keep"))
   }
 
   /** doc_id, fingerprint — min over rolling 5-gram polynomial hashes of token

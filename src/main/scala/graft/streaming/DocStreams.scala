@@ -83,10 +83,9 @@ object DocStreams {
     // dropped token can hit the map.
     val dictByTok = ConceptDict.entries.groupBy(_._1)
       .view.mapValues(_.map(_._2).sorted).toMap
-    val ancByConcept = ConceptDict.ancestors.groupBy(_._1)
-      .view.mapValues(_.map(_._2).sorted).toMap
+    val lineage = ConceptDict.lineage.toMap
     val expandedByTok: Map[String, Seq[String]] = dictByTok.map { case (t, cids) =>
-      t -> (cids ++ cids.flatMap(c => ancByConcept.getOrElse(c, Nil))).distinct
+      t -> cids.flatMap(c => lineage.getOrElse(c, Seq(c))).distinct
     }
     val tokMap = typedLit(expandedByTok)
     val emptyArr = expr("CAST(array() AS array<string>)")

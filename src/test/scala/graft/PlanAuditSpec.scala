@@ -566,4 +566,109 @@ class PlanAuditSpec extends SparkSpec {
     assert(bandGen.nonEmpty && bandGen.forall(!_.generator.exists(_.isInstanceOf[ArrayMin])),
       bandGen.mkString("\n"))
   }
+
+  /** The final adaptive plan of the write that stages `table` (a
+    * `graft_<name>_` prefix), run by `stage` under a fresh corpus key, so
+    * the artifact is derived here and never read from an earlier stage. */
+  private def stagingPlan(table: String)(stage: String => Unit)
+      : org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => writes.add(a.executedPlan)
+        case _ =>
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      stage(graft.infra.Staging.tempDir("graft-plan").toString)
+      // listener calls arrive asynchronously, after the write returns
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      def found = writes.asScala.find(_.toString.contains(table))
+      while (found.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      found.getOrElse(fail(s"no write of $table reached the listener"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every node of an executed plan, through adaptive query stages (a reused
+    * exchange counts as its node, not its subtree). */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => planNodes(q.plan)
+      case o => o.children.flatMap(planNodes)
+    })
+  }
+
+  private def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    planNodes(p).count {
+      case _: ShuffleExchangeExec => true
+      case r: ReusedExchangeExec => r.child.isInstanceOf[ShuffleExchangeExec]
+      case _ => false
+    }
+  }
+
+  test("staging concepts_pp tokenizes once and shuffles once") {
+    // the sort-and-sweep nested-span removal: one doc_id exchange feeds the
+    // window and the dedup, and the staging repartition on doc_id is met
+    // by it
+    import org.apache.spark.sql.execution.GenerateExec
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val plan = stagingPlan("graft_concepts_pp_") { dir =>
+      graft.operators.Concepts.stagedPostProcessed(docs, dir)
+    }
+    val tokenizers = planNodes(plan).count {
+      case g: GenerateExec => g.generator.isInstanceOf[graft.functions.TokenWindows]
+      case _ => false
+    }
+    assert(tokenizers == 1, s"$tokenizers token_windows Generates:\n$plan")
+    assert(shuffles(plan) == 1, s"${shuffles(plan)} shuffle exchanges:\n$plan")
+  }
+
+  test("staging units_document over a staged concepts_pp plans no shuffle") {
+    // the bucketed scan's doc_id partitioning carries through the distinct,
+    // the broadcast lineage join, the in-row ancestor explode and the
+    // final distinct into the bucketed write
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val plan = stagingPlan("graft_units_document_") { dir =>
+      graft.operators.Cooccurrence.stagedUnitConcepts(
+        graft.operators.Concepts.stagedPostProcessed(docs, dir), dir, "document", Seq("doc_id"))
+    }
+    assert(shuffles(plan) == 0, s"${shuffles(plan)} shuffle exchanges:\n$plan")
+  }
+
+  test("dedup winners are per-key windows: no cache and no join onto their own key aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def strip(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, c) => strip(c)
+      case Filter(_, c) => strip(c)
+      case o => o
+    }
+    val offenders = Seq("dedup_exact", "dedup_norm", "dedup_keep_best").flatMap { q =>
+      val plan = SparkEntry.queries(q)(spark, sfDir).queryExecution.optimizedPlan
+      val cached = plan.collect { case m: InMemoryRelation => s"$q: InMemoryRelation" }
+      val joinBacks = plan.collect { case j: Join => j }.flatMap { j =>
+        val keys = j.condition.map(_.references).getOrElse(AttributeSet.empty)
+        Seq(j.left, j.right).map(strip).collect {
+          case a: Aggregate if a.groupingExpressions.nonEmpty && a.groupingExpressions.forall {
+                case at: Attribute => keys.contains(at)
+                case _ => false
+              } => s"$q: join onto its aggregate by ${a.groupingExpressions.mkString(", ")}"
+        }
+      }
+      cached ++ joinBacks
+    }
+    graft.infra.Caches.unpersistManaged()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
