@@ -631,12 +631,10 @@ object SparkEntry {
       // same result as top_parts_per_brand, computed by the custom bounded
       // top-k AGGREGATE (TypedImperativeAggregate): ≤k rows per group leave
       // each map task — no per-group full sort, no window materialization
-      Tables.part(s, d)
-        .groupBy("p_brand")
-        .agg(graft.functions.TopKAgg.topK(col("p_retailprice"), col("p_partkey"), 3).as("tk"))
-        .select(col("p_brand"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("p_brand"), (col("pos") + 1).cast("long").as("rk"),
-          col("e.id").as("p_partkey"), col("e.score").as("p_retailprice"))),
+      graft.functions.TopKAgg.perGroup(Tables.part(s, d), Seq("p_brand"),
+          col("p_retailprice"), col("p_partkey"), 3)
+        .select(col("p_brand"), col("rank").as("rk"), col("id").as("p_partkey"),
+          col("score").as("p_retailprice"))),
     "kg_nodes" -> ((s, _) => KnowledgeGraph.nodes(s)),
     "kgx_nodes" -> ((s, _) => KnowledgeGraph.kgxNodes(s)),
     "kgx_edges" -> ((s, d) => KnowledgeGraph.kgxEdgesFromPairs(pairsAt(s, d))),

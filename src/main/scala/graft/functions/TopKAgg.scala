@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, RuntimeReplaceable, UnsafeProjection, UnsafeRow}
@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst AGGREGATE function: bounded top-k per group.
@@ -65,7 +66,7 @@ case class TopKAgg(
   // as Long. (AbstractDataType is private[sql] in Spark 4, so
   // ExpectsInputTypes is closed to third parties; the explicit check gives
   // the same analysis-time rejection instead of a mid-task
-  // ClassCastException, and the Column API coerces compatible inputs.)
+  // ClassCastException, and [[TopKAgg.perGroup]] coerces compatible inputs.)
   override def checkInputDataTypes(): TypeCheckResult =
     if ((score.dataType == DoubleType || score.dataType == LongType) && id.dataType == LongType)
       TypeCheckResult.TypeCheckSuccess
@@ -189,7 +190,7 @@ case class TopKAgg(
   override def prettyName: String = if (longLane) "top_k_long_agg" else "top_k_agg"
 }
 
-/** The Column API's score coercion, decided once the input is resolved: a
+/** [[TopKAgg.perGroup]]'s score coercion, decided once the input is resolved: a
   * BIGINT or DOUBLE score passes through, any other becomes
   * `cast(score as double)`. The optimizer swaps in that replacement before
   * planning, so physical plans show the score or its cast, never this node. */
@@ -203,24 +204,30 @@ private case class TopKScore(child: Expression) extends RuntimeReplaceable with 
 }
 
 object TopKAgg {
-  /** Column API: top-k (score, id) pairs per group, best-first; bottom-k
-    * when `asc`. A BIGINT score takes the exact long lane, any other
-    * numeric score the double lane; an int id is cast to BIGINT, and
-    * incompatible inputs fail analysis in checkInputDataTypes. */
-  def topK(score: Column, id: Column, k: Int, asc: Boolean = false): Column =
-    column(score, id, k, asc, Nil)
-
-  /** Column API with payload cargo: top-k (score, id, payload-struct)
-    * entries per group. The payload rides through the heap untouched — the
-    * bounded-plan answer to "top-N per group, but I also need these other
-    * columns of the winning rows". */
-  def topKWith(score: Column, id: Column, k: Int, payload: Column*): Column =
-    column(score, id, k, asc = false, payload)
-
-  private def column(score: Column, id: Column, k: Int, asc: Boolean, payload: Seq[Column]): Column =
-    ColumnBridge.column(
+  /** keys…, alongside…, rank, id, score, payload… — the k best rows of
+    * every group of `df` by `keys`, one row each, `rank` a 1-based BIGINT:
+    * the rows of `row_number() over (partition by keys order by score
+    * [DESC|ASC], id) <= k`, through the bounded heap. Every ranked cut in
+    * the engine goes through here. A BIGINT score takes the exact long
+    * lane, any other numeric score the double lane; the id is cast to
+    * BIGINT. `payload` names columns of `df` carried with each winning row
+    * under their own names; `alongside` are further aggregates of the same
+    * grouping, one value per group on each of its rows. The heap skips
+    * rows whose score or id is null, where the window ranks a null score
+    * last: a caller whose score can be null filters it before the call. */
+  def perGroup(df: DataFrame, keys: Seq[String], score: Column, id: Column, k: Int,
+               asc: Boolean = false, payload: Seq[String] = Nil,
+               alongside: Seq[Column] = Nil): DataFrame = {
+    val heap = ColumnBridge.column(
       TopKAgg(TopKScore(ColumnBridge.expression(score)),
         ColumnBridge.expression(id.cast("long")), k, asc,
-        payload.map(ColumnBridge.expression))
+        payload.map(p => ColumnBridge.expression(col(p))))
         .toAggregateExpression())
+    val grouped = df.groupBy(keys.map(col): _*).agg(heap.as("_tk"), alongside: _*)
+    val carried = grouped.columns.filter(_ != "_tk").map(col).toSeq
+    grouped.select(carried :+ posexplode(col("_tk")).as(Seq("_pos", "_e")): _*)
+      .select(carried ++ Seq((col("_pos") + 1).cast("long").as("rank"),
+        col("_e.id").as("id"), col("_e.score").as("score")) ++
+        payload.zipWithIndex.map { case (p, i) => col(s"_e.payload.p$i").as(p) }: _*)
+  }
 }

@@ -233,14 +233,11 @@ object ConceptPairs {
     // aggregation in the integer lane: the ascending order on
     // (score=doc_id, id=sent_id) is the window's (doc_id ASC, sent_id ASC)
     // exactly, at ANY id magnitude (no 2^53 double caveat).
-    val inSent = if (maxReturned <= 0) inSent0 else inSent0
-      .groupBy("subject_curie", "object_curie", "predicate_biolink")
-      .agg(graft.functions.TopKAgg.topK(
-        col("doc_id"), col("sent_id"), maxReturned, asc = true).as("tk"))
+    val inSent = if (maxReturned <= 0) inSent0 else graft.functions.TopKAgg.perGroup(inSent0,
+        Seq("subject_curie", "object_curie", "predicate_biolink"),
+        col("doc_id"), col("sent_id"), maxReturned, asc = true)
       .select(col("subject_curie"), col("object_curie"), col("predicate_biolink"),
-        explode(col("tk")).as("e"))
-      .select(col("subject_curie"), col("object_curie"), col("predicate_biolink"),
-        col("e.score").as("doc_id"), col("e.id").as("sent_id"))
+        col("score").as("doc_id"), col("id").as("sent_id"))
 
     // typed mention sets per qualifying (pair, sentence)
     val m = inSent.join(mentions, Seq("doc_id", "sent_id"))

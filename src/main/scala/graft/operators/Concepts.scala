@@ -91,16 +91,22 @@ object Concepts {
     * end — every such span starts no later and is strictly longer. The
     * order key packs the span into one long so that a RANGE frame ending 1
     * before the row excludes identical spans under other concepts; it
-    * overflows (ANSI: throws) only past 2^31 characters. One shuffle on
-    * doc_id; the dedup's distribution is met by it, so it adds none. */
+    * overflows (ANSI: throws) only past 2^31 characters. The dedup rides
+    * the same sort: ordered on (span key, concept_id, span), identical
+    * (concept, span) rows are adjacent and all but the first drop. One
+    * shuffle on doc_id and one sort; no aggregate. */
   def postProcess(annots: DataFrame): DataFrame = {
-    val spanKey = col("char_start") * (1L << 32) + (lit((1L << 32) - 1) - col("char_end"))
-    val earlier = Window.partitionBy("doc_id").orderBy(spanKey)
-      .rangeBetween(Window.unboundedPreceding, -1)
-    annots.withColumn("cover_end", max("char_end").over(earlier))
-      .where(!coalesce(col("cover_end") >= col("char_end"), lit(false)))
-      .drop("cover_end")
-      .dropDuplicates("doc_id", "concept_id", "char_start", "char_end")
+    val byDoc = Window.partitionBy("doc_id")
+    val earlier = byDoc.orderBy("span_key").rangeBetween(Window.unboundedPreceding, -1)
+    val key = struct(col("concept_id"), col("char_start"), col("char_end"))
+    annots
+      .withColumn("span_key", col("char_start") * (1L << 32) + (lit((1L << 32) - 1) - col("char_end")))
+      // the longer order first: its sort also serves the sweep's prefix order
+      .withColumn("dup", lag(key, 1).over(
+        byDoc.orderBy("span_key", "concept_id", "char_start", "char_end")) <=> key)
+      .withColumn("cover_end", max("char_end").over(earlier))
+      .where(!col("dup") && !coalesce(col("cover_end") >= col("char_end"), lit(false)))
+      .drop("span_key", "dup", "cover_end")
   }
 
   /** Strict annotation hygiene filters (reference: ConceptPostProcessingFn):

@@ -374,12 +374,8 @@ object Cooccurrence {
     * ROUNDED score with a doc_id tie-break, so the cut is deterministic
     * cross-engine. */
   def bm25TopK(annots: DataFrame, k: Int = 10): DataFrame =
-    bm25(annots)
-      .groupBy("concept_id")
-      .agg(graft.functions.TopKAgg.topK(col("bm25"), col("doc_id"), k).as("tk"))
-      .select(col("concept_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("concept_id"), (col("pos") + 1).cast("long").as("rk"),
-        col("e.id").as("doc_id"), col("e.score").as("bm25"))
+    graft.functions.TopKAgg.perGroup(bm25(annots), Seq("concept_id"), col("bm25"), col("doc_id"), k)
+      .select(col("concept_id"), col("rank").as("rk"), col("id").as("doc_id"), col("score").as("bm25"))
 
   /** [[bm25TopK]] staged ONCE per (process, corpus) — the retrieval pool is
     * the index artifact of the sparse family (an Elasticsearch deployment

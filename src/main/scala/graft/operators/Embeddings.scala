@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.functions.{MatVec, Num}
+import graft.functions.{MatVec, Num, TopKAgg}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (Array[Float]).
@@ -88,41 +87,54 @@ object Embeddings {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  // ---------- the search skeleton every index below shares ----------
+
+  /** query_id, qe — the query side of every search: the first
+    * `numQueries` vectors, full precision. */
+  private def queries(embeddings: DataFrame, numQueries: Int): DataFrame =
+    embeddings.where(col("vec_id") < numQueries)
+      .select(col("vec_id").cast("long").as("query_id"), asDouble(col("embedding")).as("qe"))
+
+  /** neighbor_id, ne — every vector, full precision. */
+  private def neighbors(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id").cast("long").as("neighbor_id"), asDouble(col("embedding")).as("ne"))
+
+  /** query_id, neighbor_id, `name` — the 6dp-rounded `score` of every
+    * (query, other vector) pair: the broadcast query side crossed with the
+    * streamed `nbrs` (neighbor_id, …). */
+  private def scan(embeddings: DataFrame, numQueries: Int, nbrs: DataFrame,
+                   score: Column, name: String): DataFrame =
+    broadcast(queries(embeddings, numQueries)).crossJoin(nbrs)
+      .where(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"), Num.r6(score).as(name))
+
+  /** `query`, rank, neighbor_id, `score` — each query's k best scored
+    * neighbors (largest first, smallest when `asc`), ties to the smaller
+    * id, through the bounded heap (no per-query sort of the candidates).
+    * A null score (the cosine of a zero-norm vector) never ranks: the heap
+    * skips it, where the oracle's window ranks it last. No filter states
+    * that here: the optimizer would push it into the pair join and
+    * evaluate every pair's score twice. */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int,
+                           asc: Boolean = false, query: String = "query_id"): DataFrame =
+    TopKAgg.perGroup(scored, Seq(query), col(score), col("neighbor_id"), k, asc)
+      .select(col(query), col("rank"), col("id").as("neighbor_id"), col("score").as(score))
+
   /** query_id, rank, neighbor_id, cosine — brute-force top-k per query vector.
     * Ordering is on the ROUNDED cosine with id tie-break, so ranks are
     * deterministic across engines even for equal-cosine neighbors. */
-  def cosineTopK(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame = {
-    val q = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val n = embeddings.select(col("vec_id").as("neighbor_id"), asDouble(col("embedding")).as("ne"))
-    val scored = broadcast(q).crossJoin(n)
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Num.r6(cosine(col("qe"), col("ne"))).as("cosine"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-  }
+  def cosineTopK(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame =
+    topKPerQuery(scan(embeddings, numQueries, neighbors(embeddings),
+      cosine(col("qe"), col("ne")), "cosine"), "cosine", k)
 
   /** Same result as cosineTopK, executed through the custom physical
     * operator (graft.plans.PartialCosineTopK): one heap-pruning pass over the
-    * neighbor side emits ≤ Q·k·partitions partials, and the exact top-k is a
-    * window over that tiny set — no Q×N row materialization, no big sort.
-    * This is the plan shape that survives 10⁹ neighbors. */
-  def cosineTopKNative(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame = {
-    val spark = embeddings.sparkSession
-    val q = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id").cast("long").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val n = embeddings
-      .select(col("vec_id").cast("long").as("neighbor_id"), asDouble(col("embedding")).as("ne"))
-    graft.plans.CosineTopKPlan.partials(spark, q, n, k)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-  }
+    * neighbor side emits ≤ Q·k·partitions partials, and the exact top-k is
+    * the bounded heap over that tiny set — no Q×N row materialization, no
+    * big sort. This is the plan shape that survives 10⁹ neighbors. */
+  def cosineTopKNative(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame =
+    topKPerQuery(graft.plans.CosineTopKPlan.partials(embeddings.sparkSession,
+      queries(embeddings, numQueries), neighbors(embeddings), k), "cosine", k)
 
   /** The brute-force top-k truth set staged ONCE per (process, corpus) —
     * the eval family's ground truth is an EVAL CONSTANT per corpus version
@@ -186,32 +198,53 @@ object Embeddings {
           MatVec.matrixLit(centroidMatrix))).as(Seq("rnk0", "cell")))
       .select(col("vec_id"), col("cell"), (col("rnk0") + 1).cast("long").as("rnk"))
 
+  /** (neighbor_id, cell; query_id, cell) — every vector's IVF cell (its
+    * nearest centroid) and each query's `probes` nearest cells. */
+  private def ivfCells(embeddings: DataFrame, numQueries: Int,
+                       probes: Int): (DataFrame, DataFrame) = {
+    val ranks = graft.infra.Caches.managed(cellRanks(embeddings))
+    (ranks.where(col("rnk") === 1).select(col("vec_id").as("neighbor_id"), col("cell")),
+      ranks.where(col("vec_id") < numQueries && col("rnk") <= probes)
+        .select(col("vec_id").as("query_id"), col("cell")))
+  }
+
+  /** query_id, rank, neighbor_id, cosine — cosine top-k over the IVF
+    * candidates: each query meets the vectors of its probed cells once, as
+    * rebuilt by `nbrs` (neighbor_id, ne). */
+  private def ivfCosineTopK(embeddings: DataFrame, nbrs: DataFrame, numQueries: Int,
+                            k: Int, probes: Int): DataFrame = {
+    val (cells, qProbe) = ivfCells(embeddings, numQueries, probes)
+    val cand = qProbe.join(cells, "cell")
+      .where(col("neighbor_id") =!= col("query_id"))
+      .select("query_id", "neighbor_id").distinct()
+    topKPerQuery(cand
+      .join(broadcast(queries(embeddings, numQueries)), "query_id")
+      .join(nbrs, "neighbor_id")
+      .select(col("query_id"), col("neighbor_id"), Num.r6(cosine(col("qe"), col("ne"))).as("cosine")),
+      "cosine", k)
+  }
+
   /** query_id, rank, neighbor_id, cosine — IVF approximate top-k: vectors
     * live in their nearest-centroid cell; each query probes its `probes`
     * nearest cells and ranks candidates there. The 100 TB shape: the cell id
     * is the partition key, candidate generation is per-cell (corpus/K rows
     * per query·probe on average), never a full scan per query. */
   def ivfTopK(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5,
-              probes: Int = NumProbes): DataFrame = {
-    val ranks = graft.infra.Caches.managed(cellRanks(embeddings))
-    val cells = ranks.where(col("rnk") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cell"))
-    val qProbe = ranks.where(col("vec_id") < numQueries && col("rnk") <= probes)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val vecs = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("ve"))
-    val cand = qProbe.join(cells, "cell")
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id").distinct()
-    cand
-      .join(broadcast(vecs.where(col("vec_id") < numQueries)
-        .select(col("vec_id").as("query_id"), col("ve").as("qe"))), "query_id")
-      .join(vecs.select(col("vec_id").as("neighbor_id"), col("ve").as("ne")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"), Num.r6(cosine(col("qe"), col("ne"))).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-  }
+              probes: Int = NumProbes): DataFrame =
+    ivfCosineTopK(embeddings, neighbors(embeddings), numQueries, k, probes)
+
+  /** query_id, neighbor_id — the `truth` pairs that `approx` also found. */
+  private def truthHits(truth: DataFrame, approx: DataFrame): DataFrame =
+    truth.join(approx.select(col("query_id").as("a_qid"), col("neighbor_id").as("a_nid")),
+      col("query_id") === col("a_qid") && col("neighbor_id") === col("a_nid"), "left_semi")
+
+  /** `label`, n_hit, recall_at_k — one corpus-level recall row of `approx`
+    * against the Q·k `truth` pairs. */
+  private def recallRow(truth: DataFrame, approx: DataFrame, label: Column,
+                        numQueries: Int, k: Int): DataFrame =
+    truthHits(truth, approx).agg(count(lit(1)).as("n_hit"))
+      .select(label, col("n_hit"),
+        Num.r6(col("n_hit").cast("double") / lit((numQueries * k).toDouble)).as("recall_at_k"))
 
   /** query_id, n_hit, recall_at_k — ANN quality evaluation: recall@k of
     * the IVF path against the brute-force ground truth (the FAISS-style
@@ -226,11 +259,7 @@ object Embeddings {
   def annRecallFromTruth(embeddings: DataFrame, truthIn: DataFrame,
                          numQueries: Int = 8, k: Int = 5): DataFrame = {
     val truth = truthIn.select("query_id", "neighbor_id")
-    val approx = ivfTopK(embeddings, numQueries, k)
-      .select(col("query_id").as("a_qid"), col("neighbor_id").as("a_nid"))
-    val hits = truth
-      .join(approx, col("query_id") === col("a_qid") && col("neighbor_id") === col("a_nid"),
-        "left_semi")
+    val hits = truthHits(truth, ivfTopK(embeddings, numQueries, k))
       .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
     truth.select("query_id").distinct()
       .join(hits, Seq("query_id"), "left_outer")
@@ -288,21 +317,9 @@ object Embeddings {
     * corpus ever exists (the same window-free discipline as bm25_topk).
     * The oracle keeps the window formulation as the independent twin. */
   def hardNegatives(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5,
-                    tau: Double = HardNegTau): DataFrame = {
-    val q = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val n = embeddings.select(col("vec_id").as("neighbor_id"), asDouble(col("embedding")).as("ne"))
-    broadcast(q).crossJoin(n)
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Num.r6(cosine(col("qe"), col("ne"))).as("cosine"))
-      .where(col("cosine") < tau)
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAgg.topK(col("cosine"), col("neighbor_id"), k).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("e.id").as("neighbor_id"), col("e.score").as("cosine"))
-  }
+                    tau: Double = HardNegTau): DataFrame =
+    topKPerQuery(scan(embeddings, numQueries, neighbors(embeddings),
+      cosine(col("qe"), col("ne")), "cosine").where(col("cosine") < tau), "cosine", k)
 
   /** nprobe, n_hit, recall_at_k — the IVF tuning curve: corpus-level
     * recall@k of the IVF path at every probe width 1..maxProbes against
@@ -319,16 +336,8 @@ object Embeddings {
     val truth = graft.infra.Caches.managed(truthIn
       .select("query_id", "neighbor_id"))
     (1 to maxProbes).map { p =>
-      val approx = ivfTopK(embeddings, numQueries, k, p)
-        .select(col("query_id").as("a_qid"), col("neighbor_id").as("a_nid"))
-      truth
-        .join(approx,
-          col("query_id") === col("a_qid") && col("neighbor_id") === col("a_nid"),
-          "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .select(lit(p.toLong).as("nprobe"), col("n_hit"),
-          Num.r6(col("n_hit").cast("double") / lit((numQueries * k).toDouble))
-            .as("recall_at_k"))
+      recallRow(truth, ivfTopK(embeddings, numQueries, k, p), lit(p.toLong).as("nprobe"),
+        numQueries, k)
     }.reduce(_.unionByName(_))
   }
 
@@ -345,15 +354,8 @@ object Embeddings {
                                  numQueries: Int = 8, k: Int = 5): DataFrame = {
     val truth = graft.infra.Caches.managed(truthIn
       .select("query_id", "neighbor_id"))
-    val denom = (numQueries * k).toDouble
     def row(name: String, approx: DataFrame): DataFrame =
-      truth.join(
-          approx.select(col("query_id").as("a_qid"), col("neighbor_id").as("a_nid")),
-          col("query_id") === col("a_qid") && col("neighbor_id") === col("a_nid"),
-          "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .select(lit(name).as("index_type"), col("n_hit"),
-          Num.r6(col("n_hit").cast("double") / lit(denom)).as("recall_at_k"))
+      recallRow(truth, approx, lit(name).as("index_type"), numQueries, k)
     Seq(
       row("ivf", ivfTopK(embeddings, numQueries, k)),
       row("ivf_pq", ivfPqTopK(embeddings, numQueries, k)),
@@ -371,26 +373,8 @@ object Embeddings {
     * scan — each rung independently oracle-checked (ivf_topk, sq_topk)
     * and here composed under its own oracle. */
   def ivfSqTopK(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5,
-                probes: Int = NumProbes): DataFrame = {
-    val ranks = graft.infra.Caches.managed(cellRanks(embeddings))
-    val cells = ranks.where(col("rnk") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cell"))
-    val qProbe = ranks.where(col("vec_id") < numQueries && col("rnk") <= probes)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val q = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val cand = qProbe.join(cells, "cell")
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select("query_id", "neighbor_id").distinct()
-    cand
-      .join(broadcast(q), "query_id")
-      .join(sqRecon(embeddings), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"), Num.r6(cosine(col("qe"), col("ne"))).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-  }
+                probes: Int = NumProbes): DataFrame =
+    ivfCosineTopK(embeddings, sqRecon(embeddings), numQueries, k, probes)
 
   // ---------- Product quantization (Jégou, Douze & Schmid, TPAMI 2011) ----------
   // The 100 TB memory path: a 64-dim float vector (256 B) compresses to
@@ -440,16 +424,8 @@ object Embeddings {
     val cb = MatVec.matrixLit(pqCodebookFlat)
     val codes = embeddings.select(col("vec_id").as("neighbor_id"),
       MatVec.pqCodes(asDouble(col("embedding")), cb, PqM, PqK).as("codes"))
-    val q = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    broadcast(q).crossJoin(codes)
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Num.r6(MatVec.pqAdcDistance(col("qe"), col("codes"), cb)).as("adc_dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "adc_dist")
+    topKPerQuery(scan(embeddings, numQueries, codes,
+      MatVec.pqAdcDistance(col("qe"), col("codes"), cb), "adc_dist"), "adc_dist", k, asc = true)
   }
 
   /** query_id, rank, neighbor_id, adc_dist — IVF-PQ with RESIDUAL encoding
@@ -472,28 +448,18 @@ object Embeddings {
     def residual(vec: Column, cell: Column): Column =
       transform(vec, (x, i) =>
         x - element_at(cm, (cell * EmbDim).cast("int") + i + 1))
-    val ranks = graft.infra.Caches.managed(cellRanks(embeddings))
-    val cells = ranks.where(col("rnk") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cell"))
-    val nCodes = embeddings
-      .select(col("vec_id").as("neighbor_id"), asDouble(col("embedding")).as("ne"))
+    val (cells, qProbe) = ivfCells(embeddings, numQueries, probes)
+    val nCodes = neighbors(embeddings)
       .join(cells, "neighbor_id")
       .select(col("neighbor_id"), col("cell"),
         MatVec.pqCodes(residual(col("ne"), col("cell")), cb, PqM, PqK).as("codes"))
-    val q = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    val qres = ranks.where(col("vec_id") < numQueries && col("rnk") <= probes)
-      .select(col("vec_id").as("query_id"), col("cell"))
-      .join(q, "query_id")
+    val qres = qProbe.join(queries(embeddings, numQueries), "query_id")
       .select(col("query_id"), col("cell"), residual(col("qe"), col("cell")).as("qr"))
-    broadcast(qres).join(nCodes, "cell")
+    topKPerQuery(broadcast(qres).join(nCodes, "cell")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        Num.r6(MatVec.pqAdcDistance(col("qr"), col("codes"), cb)).as("adc_dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "adc_dist")
+        Num.r6(MatVec.pqAdcDistance(col("qr"), col("codes"), cb)).as("adc_dist")),
+      "adc_dist", k, asc = true)
   }
 
   /** cell, n_vecs, frac, imbalance — IVF cell-occupancy report (the other
@@ -544,38 +510,29 @@ object Embeddings {
     * quantizer is pure column algebra — array_min/max for the range,
     * floor(x+0.5) for the code — all codegen'd built-ins. Codes serialize
     * as the same '|'-joined key as pq_codes. */
-  def sqCodes(embeddings: DataFrame): DataFrame = {
+  def sqCodes(embeddings: DataFrame): DataFrame =
+    sq8(embeddings).select(col("vec_id"), Num.r6(col("mn0")).as("mn"),
+      Num.r6(col("scale0")).as("scale"),
+      array_join(col("codes").cast("array<string>"), "|").as("code_key"))
+
+  /** vec_id, mn0, scale0, codes — the SQ8 quantizer: per-vector range
+    * (min, (max−min)/255) and one code per dimension, floor((x−min)/scale
+    * + ½), all 0 for a constant vector. The range stays unrounded here;
+    * [[sqCodes]] rounds it for output only. */
+  private def sq8(embeddings: DataFrame): DataFrame = {
     val e = asDouble(col("embedding"))
-    // raw range stats keep distinct names (mn0/scale0): the code transform
-    // must quantize against the UNROUNDED stats while the output carries
-    // 6dp-rounded ones, and a same-name sibling alias would capture the
-    // rounded value inside the lambda
-    embeddings.select(col("vec_id"),
-        array_min(e).as("mn0"),
-        ((array_max(e) - array_min(e)) / lit(255.0)).as("scale0"),
-        e.as("e"))
-      .select(col("vec_id"), Num.r6(col("mn0")).as("mn"), Num.r6(col("scale0")).as("scale"),
-        array_join(transform(col("e"),
-          x => when(col("scale0") === 0.0, lit(0L))
-            .otherwise(floor((x - col("mn0")) / col("scale0") + lit(0.5)).cast("long"))
-        ).cast("array<string>"), "|").as("code_key"))
+    embeddings.select(col("vec_id"), array_min(e).as("mn0"),
+        ((array_max(e) - array_min(e)) / lit(255.0)).as("scale0"), e.as("e"))
+      .select(col("vec_id"), col("mn0"), col("scale0"),
+        transform(col("e"), x => when(col("scale0") === 0.0, lit(0L))
+          .otherwise(floor((x - col("mn0")) / col("scale0") + lit(0.5)).cast("long"))).as("codes"))
   }
 
   /** neighbor_id, ne — every vector SQ8-quantized and rebuilt in-plan as
     * mn + code·scale (what a code-carrying scan materializes at read). */
-  private def sqRecon(embeddings: DataFrame): DataFrame = {
-    val e = asDouble(col("embedding"))
-    embeddings.select(col("vec_id").as("neighbor_id"),
-        array_min(e).as("mn"),
-        ((array_max(e) - array_min(e)) / lit(255.0)).as("scale"),
-        e.as("e"))
-      .select(col("neighbor_id"), col("mn"), col("scale"),
-        transform(col("e"),
-          x => when(col("scale") === 0.0, lit(0L))
-            .otherwise(floor((x - col("mn")) / col("scale") + lit(0.5)).cast("long"))).as("codes"))
-      .select(col("neighbor_id"),
-        transform(col("codes"), c => col("mn") + c.cast("double") * col("scale")).as("ne"))
-  }
+  private def sqRecon(embeddings: DataFrame): DataFrame =
+    sq8(embeddings).select(col("vec_id").as("neighbor_id"),
+      transform(col("codes"), c => col("mn0") + c.cast("double") * col("scale0")).as("ne"))
 
   /** query_id, rank, neighbor_id, cosine — ANN over SQ8-RECONSTRUCTED
     * neighbors with exact queries (asymmetric, like ADC): each neighbor
@@ -585,18 +542,9 @@ object Embeddings {
     * cosineTopK; rounded-cosine + id tie-break ranking. Unlike PQ there
     * is no codebook to fit, so recall degrades only with the per-vector
     * dynamic range. */
-  def sqTopK(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame = {
-    val q = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qe"))
-    broadcast(q).crossJoin(sqRecon(embeddings))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Num.r6(cosine(col("qe"), col("ne"))).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("long"))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-  }
+  def sqTopK(embeddings: DataFrame, numQueries: Int = 8, k: Int = 5): DataFrame =
+    topKPerQuery(scan(embeddings, numQueries, sqRecon(embeddings),
+      cosine(col("qe"), col("ne")), "cosine"), "cosine", k)
 
   // ---------- k-means codebook training ----------
 
@@ -653,19 +601,19 @@ object Embeddings {
     * measure (and, in a training-data pipeline, the audit that a
     * cluster-balanced sampling scheme samples what it claims). Two keyed
     * aggregations over the assignment — the contingency table is
-    * |cells|×|labels| rows, the per-cell majority a window over that tiny
-    * table, nothing corpus-global. */
+    * |cells|×|labels| rows, and one bounded-heap aggregate over it gives
+    * each cell's size and majority label (ties to the smaller label; an
+    * unlabeled vector counts in n_vecs but is never the majority); nothing
+    * corpus-global. */
   def kmeansPurity(embeddings: DataFrame, k: Int = NumCells, iters: Int = 2): DataFrame = {
-    val byCell = Window.partitionBy("cell").orderBy(col("n").desc, col("label"))
-    kmeansCells(embeddings, k, iters)
+    val contingency = kmeansCells(embeddings, k, iters)
       .join(embeddings.select(col("vec_id"), col("label").cast("long").as("label")), "vec_id")
       .groupBy("cell", "label").agg(count(lit(1)).as("n"))
-      .withColumn("n_vecs", sum(col("n")).over(Window.partitionBy("cell")))
-      .withColumn("rk", row_number().over(byCell))
-      .where(col("rk") === 1)
+    TopKAgg.perGroup(contingency, Seq("cell"), col("n"), col("label"), 1,
+        alongside = Seq(sum(col("n")).as("n_vecs")))
       .select(col("cell").cast("long").as("cell"), col("n_vecs"),
-        col("label").as("majority_label"), col("n").as("n_majority"),
-        Num.r6(col("n").cast("double") / col("n_vecs").cast("double")).as("purity"))
+        col("id").as("majority_label"), col("score").as("n_majority"),
+        Num.r6(col("score").cast("double") / col("n_vecs").cast("double")).as("purity"))
   }
 
   /** vec_a, vec_b, cosine — near-duplicate embedding pairs, candidate-limited
@@ -767,18 +715,6 @@ object Embeddings {
       .select(col("vec_id"), col("cell"), coalesce(col("dup"), lit(false)).as("is_dup"))
   }
 
-  /** vec_id, rank, neighbor_id, cosine, mutual — approximate k-NN graph over
-    * the whole corpus (the structure SemDeDup-style diversity pruning,
-    * graph-based label propagation, and hubness analysis consume; no
-    * reference counterpart — training-data extension). Candidates are
-    * bounded to shared LSH buckets (never all-pairs); each node's top-k is
-    * the bounded-heap aggregate (graft.functions.TopKAgg), so no
-    * bucket-width ranking window exists — a hot bucket ships ≤ k pairs per
-    * node per map task, the bm25_topk lesson applied from the start. The
-    * mutual flag (reverse edge also survived its node's top-k) is one
-    * self-equi-join of the n·k edge list on the swapped key — mutual-kNN is
-    * the standard symmetrization, since one-way edges from hub nodes
-    * distort neighborhoods. */
   /** MMR pool size (candidates re-ranked) and output size. λ = 0.7 enters
     * as the integer pair (7, 3): all MMR score comparisons happen in
     * ×10⁷-scaled integer micro-units, so the greedy argmax can never
@@ -845,18 +781,26 @@ object Embeddings {
 
   val KnnGraphK = 3
 
+  /** vec_id, rank, neighbor_id, cosine, mutual — approximate k-NN graph over
+    * the whole corpus (the structure SemDeDup-style diversity pruning,
+    * graph-based label propagation, and hubness analysis consume; no
+    * reference counterpart — training-data extension). Candidates are
+    * bounded to shared LSH buckets (never all-pairs); each node's top-k is
+    * the bounded-heap aggregate (graft.functions.TopKAgg), so no
+    * bucket-width ranking window exists — a hot bucket ships ≤ k pairs per
+    * node per map task, the bm25_topk lesson applied from the start. The
+    * mutual flag (reverse edge also survived its node's top-k) is one
+    * self-equi-join of the n·k edge list on the swapped key — mutual-kNN is
+    * the standard symmetrization, since one-way edges from hub nodes
+    * distort neighborhoods. */
   def knnGraph(embeddings: DataFrame, k: Int = KnnGraphK): DataFrame = {
     val bv = lshBuckets(embeddings)
       .join(embeddings.select(col("vec_id"), asDouble(col("embedding")).as("ve")), "vec_id")
-    val edges = bv.select(col("bucket"), col("vec_id").as("src"), col("ve").as("sv"))
-      .join(bv.select(col("bucket"), col("vec_id").as("dst"), col("ve").as("dv")), Seq("bucket"))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), Num.r6(cosine(col("sv"), col("dv"))).as("cosine"))
-      .groupBy("src")
-      .agg(graft.functions.TopKAgg.topK(col("cosine"), col("dst"), k).as("tk"))
-      .select(col("src"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("src").as("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("e.id").as("neighbor_id"), col("e.score").as("cosine"))
+    val edges = topKPerQuery(bv.select(col("bucket"), col("vec_id"), col("ve").as("sv"))
+      .join(bv.select(col("bucket"), col("vec_id").as("neighbor_id"), col("ve").as("dv")), Seq("bucket"))
+      .where(col("vec_id") =!= col("neighbor_id"))
+      .select(col("vec_id"), col("neighbor_id"), Num.r6(cosine(col("sv"), col("dv"))).as("cosine")),
+      "cosine", k, query = "vec_id")
     // referenced twice: as the edge list and as its own reverse
     graft.infra.Caches.managed(edges)
     val rev = edges.select(col("neighbor_id").as("vec_id"),

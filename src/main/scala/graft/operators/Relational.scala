@@ -281,20 +281,16 @@ object Relational {
     * inert cargo. The window formulation itself is the DuckDB oracle's
     * twin of this query, which checks the heap plan row-for-row. */
   def topPartsPerBrand(part: DataFrame, k: Int = 3): DataFrame =
-    part
-      // explicit non-null contract (ADVICE r9): TopKAgg.update skips null
-      // score/id rows, where the window formulation would rank them NULLS
-      // LAST — the TPC-H columns are never null, but if a source schema
-      // marks them nullable the divergence must be this visible pre-filter,
-      // not a silent heap-side drop.
-      .where(col("p_retailprice").isNotNull && col("p_partkey").isNotNull)
-      .groupBy("p_brand")
-      .agg(graft.functions.TopKAgg.topKWith(
-        col("p_retailprice"), col("p_partkey"), k, col("p_name")).as("tk"))
-      .select(col("p_brand"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("p_brand"), (col("pos") + 1).cast("long").as("rk"),
-        col("e.id").as("p_partkey"), col("e.payload.p0").as("p_name"),
-        col("e.score").as("p_retailprice"))
+    graft.functions.TopKAgg.perGroup(
+        // explicit non-null contract (ADVICE r9): the heap skips null
+        // score/id rows, where the window formulation would rank them NULLS
+        // LAST — the TPC-H columns are never null, but if a source schema
+        // marks them nullable the divergence must be this visible pre-filter,
+        // not a silent heap-side drop.
+        part.where(col("p_retailprice").isNotNull && col("p_partkey").isNotNull),
+        Seq("p_brand"), col("p_retailprice"), col("p_partkey"), k, payload = Seq("p_name"))
+      .select(col("p_brand"), col("rank").as("rk"), col("id").as("p_partkey"), col("p_name"),
+        col("score").as("p_retailprice"))
 
   /** TPC-H Q7-shaped: shipping volume between customer and supplier nations
     * by ship year. Every dimension (customer, supplier, both nation copies)

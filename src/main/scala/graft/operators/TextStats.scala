@@ -630,16 +630,14 @@ object TextStats {
 
   /** Stratified reproducible sampling: exactly `k` documents per stratum
     * (source), chosen by the multiplicative-hash permutation — the
-    * per-domain eval-holdout / ablation-subset draw. Partition-local
-    * row_number per stratum; no global sort. At 100 TB with huge k the
-    * per-stratum window becomes the two-level pattern used by corpusMix. */
-  def stratifiedSample(docs: DataFrame, k: Int = 5): DataFrame = {
-    val win = org.apache.spark.sql.expressions.Window.partitionBy("source")
-      .orderBy(Num.mulMod(col("doc_id"), 2654435761L, 1000000L), col("doc_id"))
-    docs.select(col("doc_id"), col("source"))
-      .withColumn("draw_rank", row_number().over(win).cast("long"))
-      .where(col("draw_rank") <= k)
-  }
+    * per-domain eval-holdout / ablation-subset draw. The k smallest
+    * (hash, doc_id) per stratum through the bounded heap's exact BIGINT
+    * lane: ≤ k docs per stratum leave each map task, and no stratum is
+    * ever sorted. A doc without an id is never drawn. */
+  def stratifiedSample(docs: DataFrame, k: Int = 5): DataFrame =
+    graft.functions.TopKAgg.perGroup(docs.where(col("doc_id").isNotNull), Seq("source"),
+        Num.mulMod(col("doc_id"), 2654435761L, 1000000L), col("doc_id"), k, asc = true)
+      .select(col("id").as("doc_id"), col("source"), col("rank").as("draw_rank"))
 
   /** source, n_docs, n_tokens, p_raw, p_temp, boost — temperature /
     * alpha-sampling mixture weights (the multilingual-corpus recipe of

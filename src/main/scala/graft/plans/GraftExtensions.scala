@@ -16,10 +16,10 @@ import org.apache.spark.sql.types.DoubleType
   * similarity comparisons fold away at plan time. GraftSession installs
   * these on every session the engine builds.
   *
-  * Rank-window top-k stays a hand-written TopKAgg call at each
-  * operator that needs it; an optimizer rule that rewrote eligible
-  * `row_number() <= k` windows to the bounded heap was removed after it was
-  * measured to change the plan of one driver query only.
+  * Every ranked cut calls TopKAgg.perGroup directly; an optimizer rule
+  * that rewrote eligible `row_number() <= k` windows to the bounded heap
+  * was removed after it was measured to change the plan of one driver
+  * query only.
   *
   * Activate with:
   *   GraftSession.builder()                                              // code

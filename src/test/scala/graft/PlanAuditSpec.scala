@@ -253,6 +253,18 @@ class PlanAuditSpec extends SparkSpec {
       s"vocab_coverage plans a global range sort:\n${plan.take(2000)}")
   }
 
+  test("every ranked cut plans the bounded heap, never a ranking window") {
+    val offenders = Seq("emb_topk", "emb_topk_native", "ivf_topk", "ivfsq_topk", "ivfpq_topk",
+        "pq_topk", "sq_topk", "kmeans_purity", "stratified_sample").flatMap { q =>
+      val qe = SparkEntry.queries(q)(spark, sfDir).queryExecution
+      qe.optimizedPlan.collect { case _: Window => s"$q: plans a Window" } ++
+        (if ("partial_top_k(_long)?_agg".r.findFirstIn(qe.executedPlan.toString).isEmpty)
+          Seq(s"$q: plans no top_k aggregate") else Nil)
+    }
+    graft.infra.Caches.unpersistManaged()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("round-9 queries keep their designed plan shapes") {
     // top_parts_per_brand was RE-PLANNED onto the payload heap in r9 —
     // the window formulation must not regress back in
@@ -631,6 +643,18 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(tokenizers == 1, s"$tokenizers token_windows Generates:\n$plan")
     assert(shuffles(plan) == 1, s"${shuffles(plan)} shuffle exchanges:\n$plan")
+  }
+
+  test("staging concepts_pp sorts twice: the sweep and the bucketed write") {
+    // the span dedup rides the sweep's sort; an aggregate dedup on
+    // (doc_id, concept_id, span) would re-sort every annotation in between
+    import org.apache.spark.sql.execution.SortExec
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    val plan = stagingPlan("graft_concepts_pp_") { dir =>
+      graft.operators.Concepts.stagedPostProcessed(docs, dir)
+    }
+    val sorts = planNodes(plan).count(_.isInstanceOf[SortExec])
+    assert(sorts == 2, s"$sorts sorts:\n$plan")
   }
 
   test("staging units_document over a staged concepts_pp plans no shuffle") {

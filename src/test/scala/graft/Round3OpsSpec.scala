@@ -109,10 +109,8 @@ class Round3OpsSpec extends SparkSpec {
   test("bounded top-k aggregate matches the window formulation and partially aggregates") {
     val rows = (0 until 200).map(i => (s"g${i % 4}", (i * 37 % 100).toDouble, i.toLong))
       .toDF("g", "score", "id")
-    val viaAgg = rows.groupBy("g")
-      .agg(graft.functions.TopKAgg.topK(col("score"), col("id"), 5).as("tk"))
-      .select(col("g"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("g"), (col("pos") + 1).as("rk"), col("e.score"), col("e.id"))
+    val viaAgg = graft.functions.TopKAgg.perGroup(rows, Seq("g"), col("score"), col("id"), 5)
+      .select(col("g"), col("rank").cast("int").as("rk"), col("score"), col("id"))
     val viaWindow = rows.withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("g")
           .orderBy(col("score").desc, col("id"))))
@@ -127,11 +125,9 @@ class Round3OpsSpec extends SparkSpec {
   test("payload-carrying top-k aggregate ships winner rows' extra columns through the heap") {
     val rows = (0 until 120).map(i => (s"g${i % 3}", (i * 31 % 97).toDouble, i.toLong, s"name-$i"))
       .toDF("g", "score", "id", "nm")
-    val viaAgg = rows.groupBy("g")
-      .agg(graft.functions.TopKAgg.topKWith(col("score"), col("id"), 4, col("nm")).as("tk"))
-      .select(col("g"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("g"), (col("pos") + 1).as("rk"), col("e.score"), col("e.id"),
-        col("e.payload.p0").as("nm"))
+    val viaAgg = graft.functions.TopKAgg.perGroup(rows, Seq("g"), col("score"), col("id"), 4,
+        payload = Seq("nm"))
+      .select(col("g"), col("rank").cast("int").as("rk"), col("score"), col("id"), col("nm"))
     val viaWindow = rows.withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("g")
           .orderBy(col("score").desc, col("id"))))
