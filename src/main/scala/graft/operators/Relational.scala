@@ -282,7 +282,7 @@ object Relational {
     * twin of this query, which checks the heap plan row-for-row. */
   def topPartsPerBrand(part: DataFrame, k: Int = 3): DataFrame =
     graft.functions.TopKAgg.perGroup(
-        // explicit non-null contract (ADVICE r9): the heap skips null
+        // explicit non-null contract: the heap skips null
         // score/id rows, where the window formulation would rank them NULLS
         // LAST — the TPC-H columns are never null, but if a source schema
         // marks them nullable the divergence must be this visible pre-filter,
