@@ -97,8 +97,8 @@ object Cooccurrence {
 
   /** concept1, concept2, pair_count over units. */
   def pairCounts(unitsIn: DataFrame, unitCols: Seq[String]): DataFrame = {
-    // scanned twice (both sides of the pair join); managed is idempotent on
-    // an input [[unitConcepts]] already cached (same Dataset object)
+    // scanned twice (both sides of the pair join); managed leaves an
+    // already-cached input or a bare staged-artifact scan as it is
     val units = graft.infra.Caches.managed(unitsIn)
     val l = units.select(unitCols.map(col) :+ col("concept_id").as("concept1"): _*)
     val r = units.select(unitCols.map(col) :+ col("concept_id").as("concept2"): _*)
@@ -123,9 +123,8 @@ object Cooccurrence {
     * [[stagedUnitConcepts]] for the eviction-immune bucketed artifact
     * (query wiring), or [[unitConcepts]] for a one-shot in-session run. */
   def metricsFromUnits(unitsIn: DataFrame, unitCols: Seq[String]): DataFrame = {
-    // reused 4x (pair l/r, singletons, total) — one managed per-query
-    // cache whether the input is the staged file scan or already cached
-    // (managed is idempotent on a cached Dataset)
+    // reused 4x (pair l/r, singletons, total); managed leaves an
+    // already-cached input or a bare staged-artifact scan as it is
     val units = graft.infra.Caches.managed(unitsIn)
     scorePairs(pairCounts(units, unitCols), units, unitCols)
   }

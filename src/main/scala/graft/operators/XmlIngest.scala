@@ -21,32 +21,49 @@ object XmlIngest {
     StructField("title", StringType),
     StructField("body", StringType)))
 
-  /** Pre-parse character-entity resolution (see [[graft.functions.XmlEntityDecoder]]):
-    * publisher XML carries ISO-8879 named entities and numeric refs that
-    * `from_xml` does not resolve; the reference resolves them via DTD tables
-    * (fn/JatsFileToArticleFn.java:47-60, resources/pubmed/iso8879). Identity
-    * on entity-free input, so every parser applies it unconditionally. */
-  private def decodeEntities(xml: Column): Column = DecodeXmlEntities.decodeXml(xml)
+  /** The one XML reader: `xmlDocs` with its `xml` column parsed against
+    * `schema` into a `parsed` struct column. Character entities are
+    * resolved first (see [[graft.functions.XmlEntityDecoder]]): publisher
+    * XML carries ISO-8879 named entities and numeric refs that `from_xml`
+    * does not resolve; the reference resolves them via DTD tables
+    * (fn/JatsFileToArticleFn.java:47-60, resources/pubmed/iso8879). The
+    * decode is the identity on entity-free input, so every format parses
+    * through here unconditionally. */
+  private def parsed(xmlDocs: DataFrame, schema: StructType): DataFrame =
+    xmlDocs.withColumn("parsed", from_xml(DecodeXmlEntities.decodeXml(col("xml")), schema))
+
+  /** doc_id, windows, title — the serializers' one pass over the sentence
+    * windows ([[TextOps.sentences]]): one aggregation per document,
+    * `windows` = every window as (sent_id, sent_text) structs in sent_id
+    * order and `title` = window 0's text. */
+  private def titleAndWindows(docs: DataFrame): DataFrame =
+    TextOps.sentences(docs)
+      .groupBy("doc_id")
+      .agg(array_sort(collect_list(struct(col("sent_id"), col("sent_text")))).as("windows"))
+      .withColumn("title", col("windows")(0).getField("sent_text"))
+
+  /** Over a [[titleAndWindows]] row: the windows with sent_id in
+    * [from, to] (from ≥ 1: after the title), each rendered by `render`,
+    * joined by `sep`; null when the document has none in that range. */
+  private def windowsIn(from: Long, to: Long, sep: String,
+                        render: Column => Column = _.getField("sent_text")): Column = {
+    val in = filter(col("windows"), w => w.getField("sent_id").between(from, to))
+    when(size(in) > 0, array_join(transform(in, render), sep))
+  }
+
+  /** The parts concatenated, or "" when any is null (an absent section). */
+  private def optional(parts: Column*): Column = coalesce(concat(parts: _*), lit(""))
 
   /** doc_id, xml — title = first sentence window, body = the rest. */
-  def serialize(docs: DataFrame): DataFrame = {
-    val sents = TextOps.sentences(docs)
-    val title = sents.where(col("sent_id") === 0)
-      .select(col("doc_id"), col("sent_text").as("title"))
-    val body = sents.where(col("sent_id") > 0)
-      .groupBy("doc_id")
-      .agg(Agg.orderedStringAgg(col("sent_id"), col("sent_text"), " ")
-        .as("body"))
-    title.join(body, Seq("doc_id"), "left")
+  def serialize(docs: DataFrame): DataFrame =
+    titleAndWindows(docs)
       .select(col("doc_id"),
         concat(lit("<doc><title>"), col("title"), lit("</title><body>"),
-          coalesce(col("body"), lit("")), lit("</body></doc>")).as("xml"))
-  }
+          optional(windowsIn(1, Long.MaxValue, " ")), lit("</body></doc>")).as("xml"))
 
   /** Parse an xml column → doc_id, title, body, title_n_tokens. */
   def parse(xmlDocs: DataFrame): DataFrame =
-    xmlDocs
-      .withColumn("parsed", from_xml(decodeEntities(col("xml")), xmlSchema))
+    parsed(xmlDocs, xmlSchema)
       .select(col("doc_id"),
         col("parsed.title").as("title"),
         coalesce(col("parsed.body"), lit("")).as("body"),
@@ -64,17 +81,17 @@ object XmlIngest {
     * MedlineXmlToTextFn.DEFAULT_PUB_YEAR ("2155", MySQL's max year). */
   val DefaultPubYear = "2155"
 
-  /** doc_id, xml — Medline-shaped XML: nested MedlineCitation with PMID,
-    * Journal/JournalIssue/PubDate/Year (omitted for doc_id%7==0 to exercise
-    * the pub-year default), ArticleTitle, and labeled AbstractText sections
-    * (title = sentence window 0; abstract sections = windows 1-2), the
-    * structure fn/MedlineXmlToTextFn.java:150-165 consumes. */
   /** Month names as real Medline PubDate/Month carries them (the reference's
     * MedlineUiMetadataExtractor.getThreeLetterAbbrev normalizes numeric and
     * long-form months to exactly these). */
   val MonthAbbrevs: Seq[String] = Seq(
     "Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
 
+  /** doc_id, xml — Medline-shaped XML: nested MedlineCitation with PMID,
+    * Journal/JournalIssue/PubDate/Year (omitted for doc_id%7==0 to exercise
+    * the pub-year default), ArticleTitle, and labeled AbstractText sections
+    * (title = sentence window 0; abstract sections = windows 1-2), the
+    * structure fn/MedlineXmlToTextFn.java:150-165 consumes. */
   def serializeMedline(docs: DataFrame): DataFrame =
     serializeMedlineWith(docs, yearOffset = 0)
 
@@ -83,36 +100,28 @@ object XmlIngest {
     * observable after the upsert). Docs under the no-PubYear rule
     * (doc_id%7==0) stay year-less in revisions too. */
   private[graft] def serializeMedlineWith(docs: DataFrame, yearOffset: Int): DataFrame =
-    serializeMedlineFrom(docs, col("title"), col("elem"), yearOffset)
+    serializeMedlineFrom(docs, identity, (_, elem) => elem, yearOffset)
 
-  /** Shared Medline serializer body. `titleOut` / `absElemOut` rewrite the
-    * title string / per-section AbstractText element just before assembly
+  /** Shared Medline serializer body. `titleOut` (of the title) /
+    * `absElemOut` (of a section's sent_id and AbstractText element) rewrite
+    * the title string / per-section element just before assembly
     * (identity for the plain corpus; the sub/sup corpus injects escaped
     * formatting tags there). Besides PMID/ArticleTitle/Abstract, the
     * citation carries the full journal-issue metadata block —
     * Volume/Issue/PubDate(Year Month Day) and Journal Title/ISOAbbreviation
     * — with per-field omission channels so the metadata flatten
-    * (MedlineUiMetadataExtractor.java:52-60) meets real nulls. Existing
-    * consumers are unaffected: from_xml prunes to its schema, so parses
-    * that only ask for PMID/Year/Title/Abstract never see the new fields. */
-  private def serializeMedlineFrom(docs: DataFrame, titleOut: Column,
-                                   absElemOut: Column, yearOffset: Int = 0): DataFrame = {
-    val sents = TextOps.sentences(docs)
-    val title = sents.where(col("sent_id") === 0)
-      .select(col("doc_id"), col("sent_text").as("title"))
-      .withColumn("title_out", titleOut)
-    val abs = sents.where(col("sent_id") === 1 || col("sent_id") === 2)
-      .withColumn("elem", concat(
-        lit("<AbstractText Label=\""),
-        element_at(array(AbstractLabels.map(lit): _*), col("sent_id").cast("int")),
-        lit("\">"), col("sent_text"), lit("</AbstractText>")))
-      .withColumn("elem_out", absElemOut)
-      .groupBy("doc_id")
-      .agg(Agg.orderedStringAgg(col("sent_id"), col("elem_out"), "").as("abs_elems"))
+    * (MedlineUiMetadataExtractor.java:52-60) meets real nulls. */
+  private def serializeMedlineFrom(docs: DataFrame, titleOut: Column => Column,
+                                   absElemOut: (Column, Column) => Column,
+                                   yearOffset: Int = 0): DataFrame = {
+    val absElems = windowsIn(1, 2, "", w => absElemOut(w.getField("sent_id"), concat(
+      lit("<AbstractText Label=\""),
+      element_at(array(AbstractLabels.map(lit): _*), w.getField("sent_id").cast("int")),
+      lit("\">"), w.getField("sent_text"), lit("</AbstractText>"))))
     val id = col("doc_id")
     def optElem(present: Column, name: String, value: Column): Column =
       when(present, concat(lit(s"<$name>"), value, lit(s"</$name>"))).otherwise(lit(""))
-    title.join(abs, Seq("doc_id"), "left")
+    titleAndWindows(docs)
       .select(col("doc_id"), concat(
         lit("<PubmedArticle><MedlineCitation><PMID>"), id, lit("</PMID><Article>"),
         lit("<Journal><JournalIssue>"),
@@ -129,76 +138,78 @@ object XmlIngest {
         optElem(pmod(id, lit(11)) =!= 0, "ISOAbbreviation",
           concat(lit("J Spark "), (id % 20).cast("string"))),
         lit("</Journal>"),
-        lit("<ArticleTitle>"), col("title_out"), lit("</ArticleTitle>"),
-        when(col("abs_elems").isNull, lit(""))
-          .otherwise(concat(lit("<Abstract>"), col("abs_elems"), lit("</Abstract>"))),
+        lit("<ArticleTitle>"), titleOut(col("title")), lit("</ArticleTitle>"),
+        optional(lit("<Abstract>"), absElems, lit("</Abstract>")),
         lit("</Article></MedlineCitation></PubmedArticle>")).as("xml"))
   }
 
-  private val medlineSchema: StructType = {
-    val pubDate = StructType(Seq(StructField("Year", StringType)))
+  /** The one Medline citation shape, as a PubmedArticle element: every field
+    * any Medline reader here reads — PMID; the JournalIssue's Volume, Issue
+    * and PubDate (Year, Month, Day, MedlineDate); the Journal's Title and
+    * ISOAbbreviation; ArticleTitle; the labeled AbstractText sections; and
+    * the ArticleDate years. The update-file schema wraps it. */
+  private val citationSchema: StructType = {
+    def strings(names: String*) = StructType(names.map(StructField(_, StringType)))
     val journal = StructType(Seq(
-      StructField("JournalIssue", StructType(Seq(StructField("PubDate", pubDate))))))
-    val abstractText = ArrayType(StructType(Seq(
-      StructField("_Label", StringType),
-      StructField("_VALUE", StringType))))
+      StructField("JournalIssue", StructType(Seq(
+        StructField("Volume", StringType), StructField("Issue", StringType),
+        StructField("PubDate", strings("Year", "Month", "Day", "MedlineDate"))))),
+      StructField("Title", StringType),
+      StructField("ISOAbbreviation", StringType)))
     val article = StructType(Seq(
       StructField("Journal", journal),
       StructField("ArticleTitle", StringType),
-      StructField("Abstract", StructType(Seq(StructField("AbstractText", abstractText))))))
+      StructField("Abstract", StructType(Seq(
+        StructField("AbstractText", ArrayType(strings("_Label", "_VALUE")))))),
+      StructField("ArticleDate", ArrayType(strings("Year")))))
     StructType(Seq(
       StructField("MedlineCitation", StructType(Seq(
         StructField("PMID", LongType),
         StructField("Article", article))))))
   }
 
-  /** Parse Medline XML → doc_id, pmid, year, title, abstract, doc_text.
-    * Mirrors fn/MedlineXmlToTextFn.java: abstract = AbstractText values
-    * joined with \n (:257-266); doc text = title, or title\n\nabstract when
-    * an abstract exists (:151-153); year defaults to 2155 (:209-224). */
-  def parseMedline(xmlDocs: DataFrame): DataFrame = {
-    val cit = col("parsed").getField("MedlineCitation")
-    val art = cit.getField("Article")
-    xmlDocs
-      .withColumn("parsed", from_xml(decodeEntities(col("xml")), medlineSchema))
-      .withColumn("abstract0",
-        array_join(transform(art.getField("Abstract").getField("AbstractText"), x => x.getField("_VALUE")), "\n"))
-      .select(
-        col("doc_id"),
-        concat(lit("PMID:"), cit.getField("PMID")).as("pmid"),
-        coalesce(art.getField("Journal").getField("JournalIssue").getField("PubDate").getField("Year"),
-          lit(DefaultPubYear)).as("year"),
-        art.getField("ArticleTitle").as("title"),
+  private def pmidOf(citation: Column): Column =
+    citation.getField("MedlineCitation").getField("PMID")
+  private def articleOf(citation: Column): Column =
+    citation.getField("MedlineCitation").getField("Article")
+  private def issueOf(citation: Column): Column =
+    articleOf(citation).getField("Journal").getField("JournalIssue")
+  private def pmidLabel(pmid: Column): Column = concat(lit("PMID:"), pmid).as("pmid")
+
+  /** The AbstractText values joined with \n (fn/MedlineXmlToTextFn.java:257-266);
+    * null when the citation has no abstract. */
+  private def abstractOf(citation: Column): Column =
+    array_join(transform(articleOf(citation).getField("Abstract").getField("AbstractText"),
+      x => x.getField("_VALUE")), "\n")
+
+  /** keys…, pmid, year, title, abstract, doc_text — the one citation
+    * projection over rows whose `citation` column holds a parsed citation.
+    * Mirrors fn/MedlineXmlToTextFn.java: doc text = title, or
+    * title\n\nabstract when an abstract exists (:151-153); year defaults
+    * to 2155 (:209-224). */
+  private def citationText(rows: DataFrame, citation: Column, keys: Column*): DataFrame = {
+    val art = articleOf(citation)
+    val title = art.getField("ArticleTitle")
+    rows
+      .withColumn("abstract0", abstractOf(citation))
+      .select(keys ++ Seq(
+        pmidLabel(pmidOf(citation)),
+        coalesce(issueOf(citation).getField("PubDate").getField("Year"), lit(DefaultPubYear))
+          .as("year"),
+        title.as("title"),
         coalesce(col("abstract0"), lit("")).as("abstract"),
-        when(col("abstract0").isNull || col("abstract0") === "", art.getField("ArticleTitle"))
-          .otherwise(concat(art.getField("ArticleTitle"), lit("\n\n"), col("abstract0"))).as("doc_text"))
+        when(col("abstract0").isNull || col("abstract0") === "", title)
+          .otherwise(concat(title, lit("\n\n"), col("abstract0"))).as("doc_text")): _*)
   }
+
+  /** Parse Medline XML → doc_id, pmid, year, title, abstract, doc_text
+    * (the citation projection, [[citationText]]). */
+  def parseMedline(xmlDocs: DataFrame): DataFrame =
+    citationText(parsed(xmlDocs, citationSchema), col("parsed"), col("doc_id"))
 
   def medlineRoundTrip(docs: DataFrame): DataFrame = parseMedline(serializeMedline(docs))
 
   // ---------- Medline UI metadata flatten ----------
-
-  private val medlineMetaSchema: StructType = {
-    val pubDate = StructType(Seq(
-      StructField("Year", StringType), StructField("Month", StringType),
-      StructField("Day", StringType)))
-    val journal = StructType(Seq(
-      StructField("JournalIssue", StructType(Seq(
-        StructField("Volume", StringType), StructField("Issue", StringType),
-        StructField("PubDate", pubDate)))),
-      StructField("Title", StringType),
-      StructField("ISOAbbreviation", StringType)))
-    val abstractText = ArrayType(StructType(Seq(
-      StructField("_Label", StringType), StructField("_VALUE", StringType))))
-    val article = StructType(Seq(
-      StructField("Journal", journal),
-      StructField("ArticleTitle", StringType),
-      StructField("Abstract", StructType(Seq(StructField("AbstractText", abstractText))))))
-    StructType(Seq(
-      StructField("MedlineCitation", StructType(Seq(
-        StructField("PMID", LongType),
-        StructField("Article", article))))))
-  }
 
   /** Per-citation publication-metadata flatten — the Translator-UI TSV of
     * corpora/MedlineUiMetadataExtractor.java:52-105: DOC_ID ("PMID:n"),
@@ -210,18 +221,15 @@ object XmlIngest {
     * (MedlineXmlToTextFn.java:209 vs MedlineUiMetadataExtractor.java:137).
     * One from_xml projection per row, no shuffle beyond the source read. */
   def medlineMetadata(xmlDocs: DataFrame): DataFrame = {
-    val cit = col("parsed").getField("MedlineCitation")
-    val art = cit.getField("Article")
-    val issue = art.getField("Journal").getField("JournalIssue")
+    val art = articleOf(col("parsed"))
+    val issue = issueOf(col("parsed"))
     val pd = issue.getField("PubDate")
     def hyphen(c: Column): Column = coalesce(c, lit("-"))
-    xmlDocs
-      .withColumn("parsed", from_xml(decodeEntities(col("xml")), medlineMetaSchema))
-      .withColumn("abstract0",
-        array_join(transform(art.getField("Abstract").getField("AbstractText"), x => x.getField("_VALUE")), "\n"))
+    parsed(xmlDocs, citationSchema)
+      .withColumn("abstract0", abstractOf(col("parsed")))
       .select(
         col("doc_id"),
-        concat(lit("PMID:"), cit.getField("PMID")).as("pmid"),
+        pmidLabel(pmidOf(col("parsed"))),
         hyphen(pd.getField("Year")).as("year"),
         hyphen(pd.getField("Month")).as("month"),
         hyphen(pd.getField("Day")).as("day"),
@@ -272,44 +280,31 @@ object XmlIngest {
         lit("</PubmedArticleSet>")).as("xml"))
   }
 
-  private val medlineSetSchema: StructType = StructType(Seq(
-    StructField("PubmedArticle", ArrayType(
-      medlineSchema("MedlineCitation").dataType match {
-        case s: StructType => StructType(Seq(StructField("MedlineCitation", s)))
-      })),
+  private val updateFileSchema: StructType = StructType(Seq(
+    StructField("PubmedArticle", ArrayType(citationSchema)),
     StructField("DeleteCitation", StructType(Seq(
       StructField("PMID", ArrayType(LongType)))))))
 
-  /** Parse every revised citation out of update files → the same schema as
-    * [[parseMedline]] (doc_id from the PMID — in an update file the id
-    * exists only inside the XML). One from_xml + one posexplode per file
-    * row; no shuffle. */
   /** Update files with the from_xml struct attached — the shared parse of
     * the articles/deletes/pmid extractors, so callers needing more than one
     * channel can managed-cache ONE parsed table instead of re-running
-    * decodeEntities + from_xml per channel (guide §2.4: share the scan). */
+    * the entity decode + from_xml per channel (guide §2.4: share the scan). */
   private[operators] def parsedUpdateFiles(files: DataFrame): DataFrame =
-    files.withColumn("parsed", from_xml(decodeEntities(col("xml")), medlineSetSchema))
+    parsed(files, updateFileSchema)
 
+  /** Parse every revised citation out of update files → the same schema as
+    * [[parseMedline]] (doc_id from the PMID — in an update file the id
+    * exists only inside the XML). One from_xml + one explode per file
+    * row; no shuffle. */
   def parseUpdateFileArticles(files: DataFrame): DataFrame =
-    articlesFromParsed(parsedUpdateFiles(files))
+    articlesFromParsed(parsedUpdateFiles(files)).drop("file_id")
 
+  /** file_id, then [[parseUpdateFileArticles]]' columns. */
   private[operators] def articlesFromParsed(parsedFiles: DataFrame): DataFrame = {
-    val cit = col("a").getField("MedlineCitation")
-    val art = cit.getField("Article")
-    parsedFiles
-      .select(col("file_id"), explode(col("parsed").getField("PubmedArticle")).as("a"))
-      .withColumn("abstract0",
-        array_join(transform(art.getField("Abstract").getField("AbstractText"), x => x.getField("_VALUE")), "\n"))
-      .select(
-        cit.getField("PMID").as("doc_id"),
-        concat(lit("PMID:"), cit.getField("PMID")).as("pmid"),
-        coalesce(art.getField("Journal").getField("JournalIssue").getField("PubDate").getField("Year"),
-          lit(DefaultPubYear)).as("year"),
-        art.getField("ArticleTitle").as("title"),
-        coalesce(col("abstract0"), lit("")).as("abstract"),
-        when(col("abstract0").isNull || col("abstract0") === "", art.getField("ArticleTitle"))
-          .otherwise(concat(art.getField("ArticleTitle"), lit("\n\n"), col("abstract0"))).as("doc_text"))
+    val a = col("a")
+    citationText(
+      parsedFiles.select(col("file_id"), explode(col("parsed").getField("PubmedArticle")).as("a")),
+      a, col("file_id"), pmidOf(a).as("doc_id"))
   }
 
   /** file_id, doc_id, pmid — the retraction channel: DeleteCitation PMIDs
@@ -323,29 +318,19 @@ object XmlIngest {
     parsedFiles
       .select(col("file_id"),
         explode(col("parsed").getField("DeleteCitation").getField("PMID")).as("doc_id"))
-      .select(col("file_id"), col("doc_id"), concat(lit("PMID:"), col("doc_id")).as("pmid"))
+      .select(col("file_id"), col("doc_id"), pmidLabel(col("doc_id")))
 
   /** file_id, doc_id, pmid, channel ('article' | 'delete') — BOTH output
     * streams of the reference's PmidToFileExtractor (:62-83): the forward
     * pmid→file map for every citation an update file carries, and the
     * retracted pmid→file stream from its DeleteCitation block. One
-    * from_xml per file row, two explodes, a union — per-row, no shuffle. */
+    * from_xml per file row (managed, so both channels read one parse), two
+    * explodes, a union — per-row, no shuffle. */
   def parseUpdateFilePmids(files: DataFrame): DataFrame = {
-    // both channels (articles + deletes) explode the same parsed struct —
-    // managed so decodeEntities + from_xml run once, not once per branch
-    val parsed = graft.infra.Caches.managed(parsedUpdateFiles(files))
-    val arts = parsed
-      .select(col("file_id"), explode(col("parsed").getField("PubmedArticle")).as("a"))
-      .select(col("file_id"),
-        col("a").getField("MedlineCitation").getField("PMID").as("doc_id"),
-        lit("article").as("channel"))
-    val dels = parsed
-      .select(col("file_id"),
-        explode(col("parsed").getField("DeleteCitation").getField("PMID")).as("doc_id"),
-        lit("delete").as("channel"))
-    arts.unionByName(dels)
-      .select(col("file_id"), col("doc_id"),
-        concat(lit("PMID:"), col("doc_id")).as("pmid"), col("channel"))
+    val parsedFiles = graft.infra.Caches.managed(parsedUpdateFiles(files))
+    articlesFromParsed(parsedFiles)
+      .select(col("file_id"), col("doc_id"), col("pmid"), lit("article").as("channel"))
+      .unionByName(deletesFromParsed(parsedFiles).withColumn("channel", lit("delete")))
   }
 
   /** Nightly-baseline maintenance end to end: current corpus + one update
@@ -357,11 +342,11 @@ object XmlIngest {
     // ONE managed serialize+from_xml pass serves both update channels — the
     // articles and deletes branches each re-ran the whole update-file
     // serialization and XML parse before (guide §2.4: share the scan)
-    val parsed = graft.infra.Caches.managed(
+    val parsedFiles = graft.infra.Caches.managed(
       parsedUpdateFiles(serializeMedlineUpdateFiles(docs)))
-    val updates = articlesFromParsed(parsed).select(base.columns.map(col): _*)
+    val updates = articlesFromParsed(parsedFiles).select(base.columns.map(col): _*)
     graft.infra.Etl.upsertWithDeletes(
-      base, updates, deletesFromParsed(parsed).select("doc_id"), "doc_id")
+      base, updates, deletesFromParsed(parsedFiles).select("doc_id"), "doc_id")
   }
 
   // ---------- sub/superscript formatting annotations ----------
@@ -378,18 +363,18 @@ object XmlIngest {
     val tClose = when(pmod(col("doc_id"), lit(2)) === 0, lit("&lt;/sup&gt;")).otherwise(lit("&lt;/sub&gt;"))
     val aOpen = when(pmod(col("doc_id"), lit(2)) === 0, lit("&lt;sub&gt;")).otherwise(lit("&lt;sup&gt;"))
     val aClose = when(pmod(col("doc_id"), lit(2)) === 0, lit("&lt;/sub&gt;")).otherwise(lit("&lt;/sup&gt;"))
-    val titleOut = concat(lit("&lt;b&gt;"),
-      regexp_extract(col("title"), "^(\\S+)", 1), lit("&lt;/b&gt;"),
-      when(col("title").rlike("^\\S+ \\S+"),
-        concat(lit(" "), tOpen, regexp_extract(col("title"), "^\\S+ (\\S+)", 1), tClose,
-          regexp_replace(col("title"), "^\\S+ \\S+", "")))
-        .otherwise(regexp_replace(col("title"), "^\\S+", "")))
+    def titleOut(title: Column) = concat(lit("&lt;b&gt;"),
+      regexp_extract(title, "^(\\S+)", 1), lit("&lt;/b&gt;"),
+      when(title.rlike("^\\S+ \\S+"),
+        concat(lit(" "), tOpen, regexp_extract(title, "^\\S+ (\\S+)", 1), tClose,
+          regexp_replace(title, "^\\S+ \\S+", "")))
+        .otherwise(regexp_replace(title, "^\\S+", "")))
     // [^<\s]+, not \S+: a single-token section's token is followed directly
     // by the closing </AbstractText> tag, and a greedy \S+ would swallow it
-    val absElemOut = when(col("sent_id") === 1,
-      regexp_replace(col("elem"), lit("(<AbstractText Label=\"[A-Z]+\">)([^<\\s]+)"),
+    def absElemOut(sentId: Column, elem: Column) = when(sentId === 1,
+      regexp_replace(elem, lit("(<AbstractText Label=\"[A-Z]+\">)([^<\\s]+)"),
         concat(lit("$1"), aOpen, lit("$2"), aClose)))
-      .otherwise(col("elem"))
+      .otherwise(elem)
     serializeMedlineFrom(docs, titleOut, absElemOut)
   }
 
@@ -406,8 +391,6 @@ object XmlIngest {
     * stack; the relational form handles the serialized shape and validates
     * covered_text == substring like validateObservedAnnotations). */
   def medlineSubSup(xmlDocs: DataFrame): DataFrame = {
-    val cit = col("parsed").getField("MedlineCitation")
-    val art = cit.getField("Article")
     // one annotation extraction over a section string (b/i/u pre-stripped):
     // returns struct(ann_type, char_start, char_end, covered_text) or null
     def annOf(section: Column, offset: Column, tag: String): Column = {
@@ -422,11 +405,9 @@ object XmlIngest {
           covered.as("covered_text")))
     }
     def stripBiu(c: Column): Column = regexp_replace(c, "</?[biu]>", "")
-    xmlDocs
-      .withColumn("parsed", from_xml(decodeEntities(col("xml")), medlineSchema))
-      .withColumn("rawTitle", stripBiu(cit.getField("Article").getField("ArticleTitle")))
-      .withColumn("rawAbs", stripBiu(array_join(
-        transform(art.getField("Abstract").getField("AbstractText"), x => x.getField("_VALUE")), "\n")))
+    parsed(xmlDocs, citationSchema)
+      .withColumn("rawTitle", stripBiu(articleOf(col("parsed")).getField("ArticleTitle")))
+      .withColumn("rawAbs", stripBiu(abstractOf(col("parsed"))))
       .withColumn("cleanTitleLen",
         length(regexp_replace(col("rawTitle"), "</?(sub|sup)>", "")))
       .withColumn("absOffset", col("cleanTitleLen") + 2)
@@ -462,17 +443,10 @@ object XmlIngest {
     * target, here the boolean carries both channels). Entities are decoded
     * before the check, exactly as JAXB hands the reference literal tags. */
   def pmidHtmlFlag(xmlDocs: DataFrame): DataFrame = {
-    val cit = col("parsed").getField("MedlineCitation")
-    val art = cit.getField("Article")
     val codes = Seq("<b>", "<i>", "<u>", "<sub>", "<sup>")
-    xmlDocs
-      .withColumn("parsed", from_xml(decodeEntities(col("xml")), medlineSchema))
-      .withColumn("t", art.getField("ArticleTitle"))
-      .withColumn("a", coalesce(array_join(
-        transform(art.getField("Abstract").getField("AbstractText"), x => x.getField("_VALUE")), "\n"),
-        lit("")))
-      .select(col("doc_id"), concat(lit("PMID:"), cit.getField("PMID")).as("pmid"),
-        codes.map(c => col("t").contains(c) || col("a").contains(c))
+    parseMedline(xmlDocs)
+      .select(col("doc_id"), col("pmid"),
+        codes.map(c => col("title").contains(c) || col("abstract").contains(c))
           .reduce(_ || _).as("contains_html"))
   }
 
@@ -503,31 +477,17 @@ object XmlIngest {
       lit("</Article></MedlineCitation></PubmedArticle>")).as("xml"))
   }
 
-  private val medlineDatesSchema: StructType = StructType(Seq(
-    StructField("MedlineCitation", StructType(Seq(
-      StructField("PMID", LongType),
-      StructField("Article", StructType(Seq(
-        StructField("Journal", StructType(Seq(
-          StructField("JournalIssue", StructType(Seq(
-            StructField("PubDate", StructType(Seq(
-              StructField("Year", StringType),
-              StructField("MedlineDate", StringType)))))))))),
-        StructField("ArticleDate", ArrayType(StructType(Seq(
-          StructField("Year", StringType)))))))))))))
-
   /** doc_id, pmid, year — the PMID→publication-year TSV
     * (PmidToYearExtractor.extract:42-91, getYear:93-133): PubDate/Year
     * first; else the first `\b(\d{4})\b` match inside MedlineDate; else
     * the first ArticleDate's Year. The reference throws on an unresolvable
     * year; here such rows would surface as nulls the oracle rejects. */
   def pmidToYear(xmlDocs: DataFrame): DataFrame = {
-    val cit = col("parsed").getField("MedlineCitation")
-    val art = cit.getField("Article")
-    val pd = art.getField("Journal").getField("JournalIssue").getField("PubDate")
-    xmlDocs
-      .withColumn("parsed", from_xml(col("xml"), medlineDatesSchema))
+    val art = articleOf(col("parsed"))
+    val pd = issueOf(col("parsed")).getField("PubDate")
+    parsed(xmlDocs, citationSchema)
       .select(col("doc_id"),
-        concat(lit("PMID:"), cit.getField("PMID")).as("pmid"),
+        pmidLabel(pmidOf(col("parsed"))),
         coalesce(
           pd.getField("Year"),
           nullif(regexp_extract(pd.getField("MedlineDate"), "\\b(\\d{4})\\b", 1), lit("")),
@@ -601,26 +561,16 @@ object XmlIngest {
     * 1-2) and body/sec paragraphs (windows 3+), the structure
     * fn/JatsArticleToDocumentFn.java (BiorxivXmlToTextPipeline) consumes. */
   def serializeJats(docs: DataFrame): DataFrame = {
-    val sents = TextOps.sentences(docs)
-    val title = sents.where(col("sent_id") === 0)
-      .select(col("doc_id"), col("sent_text").as("title"))
-    def paras(cond: org.apache.spark.sql.Column, name: String) =
-      sents.where(cond)
-        .withColumn("p", concat(lit("<p>"), col("sent_text"), lit("</p>")))
-        .groupBy("doc_id")
-        .agg(Agg.orderedStringAgg(col("sent_id"), col("p"), "").as(name))
-    title
-      .join(paras(col("sent_id") === 1 || col("sent_id") === 2, "abs_ps"), Seq("doc_id"), "left")
-      .join(paras(col("sent_id") >= 3, "body_ps"), Seq("doc_id"), "left")
+    def paras(from: Long, to: Long) =
+      windowsIn(from, to, "", w => concat(lit("<p>"), w.getField("sent_text"), lit("</p>")))
+    titleAndWindows(docs)
       .select(col("doc_id"), concat(
         lit("<article><front><article-meta>"),
         lit("<article-id pub-id-type=\"doi\">10.1101/"), col("doc_id"), lit("</article-id>"),
         lit("<title-group><article-title>"), col("title"), lit("</article-title></title-group>"),
-        when(col("abs_ps").isNull, lit(""))
-          .otherwise(concat(lit("<abstract>"), col("abs_ps"), lit("</abstract>"))),
+        optional(lit("<abstract>"), paras(1, 2), lit("</abstract>")),
         lit("</article-meta></front>"),
-        when(col("body_ps").isNull, lit(""))
-          .otherwise(concat(lit("<body><sec>"), col("body_ps"), lit("</sec></body>"))),
+        optional(lit("<body><sec>"), paras(3, Long.MaxValue), lit("</sec></body>")),
         lit("</article>")).as("xml"))
   }
 
@@ -643,8 +593,7 @@ object XmlIngest {
     * abstract + body joined with blank lines, null sections skipped). */
   def parseJats(xmlDocs: DataFrame): DataFrame = {
     val meta = col("parsed").getField("front").getField("article-meta")
-    xmlDocs
-      .withColumn("parsed", from_xml(decodeEntities(col("xml")), jatsSchema))
+    parsed(xmlDocs, jatsSchema)
       .withColumn("abstract0", array_join(meta.getField("abstract").getField("p"), "\n"))
       .withColumn("body0",
         array_join(col("parsed").getField("body").getField("sec").getField("p"), "\n"))
@@ -666,24 +615,16 @@ object XmlIngest {
     * passages carrying byte offsets (title at 0, abstract after it), the
     * structure util/BiocToTextConverter.java:162-211 walks (passage `infon
     * key="type"`, offset, text). Title = window 0; abstract = the rest. */
-  def serializeBioc(docs: DataFrame): DataFrame = {
-    val sents = TextOps.sentences(docs)
-    val title = sents.where(col("sent_id") === 0)
-      .select(col("doc_id"), col("sent_text").as("title"))
-    val abs = sents.where(col("sent_id") >= 1)
-      .groupBy("doc_id")
-      .agg(Agg.orderedStringAgg(col("sent_id"), col("sent_text"), " ").as("abstract"))
-    title.join(abs, Seq("doc_id"), "left")
+  def serializeBioc(docs: DataFrame): DataFrame =
+    titleAndWindows(docs)
       .select(col("doc_id"), concat(
         lit("<collection><document><id>"), col("doc_id"), lit("</id>"),
         lit("<passage><infon key=\"type\">title</infon><offset>0</offset><text>"),
         col("title"), lit("</text></passage>"),
-        when(col("abstract").isNull, lit("")).otherwise(concat(
-          lit("<passage><infon key=\"type\">abstract</infon><offset>"),
+        optional(lit("<passage><infon key=\"type\">abstract</infon><offset>"),
           length(col("title")) + 1,
-          lit("</offset><text>"), col("abstract"), lit("</text></passage>"))),
+          lit("</offset><text>"), windowsIn(1, Long.MaxValue, " "), lit("</text></passage>")),
         lit("</document></collection>")).as("xml"))
-  }
 
   private val biocSchema: StructType = {
     val infon = StructType(Seq(
@@ -709,8 +650,7 @@ object XmlIngest {
     val ps = col("parsed").getField("document").getField("passage")
     def passage(t: String) =
       try_element_at(filter(ps, p => p.getField("infon").getField("_VALUE") === lit(t)), lit(1))
-    xmlDocs
-      .withColumn("parsed", from_xml(decodeEntities(col("xml")), biocSchema))
+    parsed(xmlDocs, biocSchema)
       .select(col("doc_id"),
         passage("title").getField("text").as("title"),
         coalesce(passage("abstract").getField("text"), lit("")).as("abstract"),

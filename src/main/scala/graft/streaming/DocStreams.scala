@@ -307,17 +307,16 @@ object DocStreams {
       }, XmlIngest.serializeMedlineUpdateFiles(docs)).path
     val (filesDir, log, ckpt) = (s"$stage/files", s"$stage/log", s"$stage/ckpt")
     val fileSchema = org.apache.spark.sql.types.StructType.fromDDL("file_id BIGINT, xml STRING")
-    val q = XmlIngest.parseUpdateFileArticles(
-        spark.readStream.schema(fileSchema).parquet(filesDir))
-      .writeStream.format("parquet")
+    val articles = XmlIngest.parseUpdateFileArticles(
+      spark.readStream.schema(fileSchema).parquet(filesDir))
+    val q = articles.writeStream.format("parquet")
       .option("path", log).option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append()).start()
     try q.processAllAvailable()
     finally { StreamTelemetry.record(q); q.stop() }
     val base = XmlIngest.medlineRoundTrip(docs)
-    val updSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, pmid STRING, year STRING, title STRING, `abstract` STRING, doc_text STRING")
-    val updates = spark.read.schema(updSchema).parquet(log)
+    // the log is read back with the schema the stream wrote it with
+    val updates = spark.read.schema(articles.schema).parquet(log)
       .select(base.columns.map(col): _*)
     val deletes = XmlIngest.parseUpdateFileDeletes(
       spark.read.schema(fileSchema).parquet(filesDir)).select("doc_id")

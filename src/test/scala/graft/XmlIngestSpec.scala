@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.XmlIngest
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, concat, lit}
 
 /** Medline/JATS schema-fidelity checks mirroring the reference's own
   * MedlineXmlToTextFnTest semantics (title + labeled-abstract assembly,
@@ -111,5 +113,151 @@ class XmlIngestSpec extends SparkSpec {
     val title7 = (1 to 10).map(i => s"t$i").mkString(" ")
     assert(r(7L).getAs[String]("doc_text").startsWith(title7 + "\n\n"))
     assert(r(8L).getAs[String]("doc_text") == "only five tokens right here")
+  }
+
+  // doc 25: 35 tokens → title + three later windows (the last of 5 tokens);
+  // hash(25) < 100 → revised in the update files; 25 % 3 == 1 → MedlineDate.
+  // doc 38: 5 tokens → title only; hash(38) >= 900 → retracted; 38 % 3 == 2
+  // → ArticleDate only.
+  private val golden = Seq(
+    (25L, (1 to 35).map(i => s"w$i").mkString(" "), "en", "s", 130L),
+    (38L, "only five tokens right here", "en", "s", 27L))
+    .toDF("doc_id", "text", "lang", "source", "n_chars")
+
+  private val w11to35 =
+    "w11 w12 w13 w14 w15 w16 w17 w18 w19 w20 w21 w22 w23 w24 w25 w26 w27 w28 w29 w30 " +
+      "w31 w32 w33 w34 w35"
+
+  /** Each serializer's xml per id on [[golden]], byte for byte. */
+  private val goldenXml: Seq[(String, DataFrame => DataFrame, Seq[(Long, String)])] = Seq(
+    ("serialize", XmlIngest.serialize, Seq(
+      25L ->
+        s"<doc><title>w1 w2 w3 w4 w5 w6 w7 w8 w9 w10</title><body>$w11to35</body></doc>",
+      38L ->
+        "<doc><title>only five tokens right here</title><body></body></doc>")),
+    ("serializeMedline", XmlIngest.serializeMedline, Seq(
+      25L ->
+        ("<PubmedArticle><MedlineCitation><PMID>25</PMID><Article><Journal>" +
+        "<JournalIssue><Volume>26</Volume><PubDate><Year>2015</Year><Month>Feb</Month>" +
+        "<Day>26</Day></PubDate></JournalIssue><Title>Journal of Spark Topic 5</Title>" +
+        "<ISOAbbreviation>J Spark 5</ISOAbbreviation></Journal><ArticleTitle>" +
+        "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10</ArticleTitle><Abstract>" +
+        "<AbstractText Label=\"BACKGROUND\">" +
+        "w11 w12 w13 w14 w15 w16 w17 w18 w19 w20</AbstractText>" +
+        "<AbstractText Label=\"METHODS\">" +
+        "w21 w22 w23 w24 w25 w26 w27 w28 w29 w30</AbstractText></Abstract></Article>" +
+        "</MedlineCitation></PubmedArticle>"),
+      38L ->
+        ("<PubmedArticle><MedlineCitation><PMID>38</PMID><Article><Journal>" +
+        "<JournalIssue><Volume>39</Volume><Issue>3</Issue><PubDate><Year>1998</Year>" +
+        "<Month>Mar</Month><Day>11</Day></PubDate></JournalIssue><Title>" +
+        "Journal of Spark Topic 18</Title><ISOAbbreviation>J Spark 18</ISOAbbreviation>" +
+        "</Journal><ArticleTitle>only five tokens right here</ArticleTitle></Article>" +
+        "</MedlineCitation></PubmedArticle>"))),
+    ("serializeMedlineSubSup", XmlIngest.serializeMedlineSubSup, Seq(
+      25L ->
+        ("<PubmedArticle><MedlineCitation><PMID>25</PMID><Article><Journal>" +
+        "<JournalIssue><Volume>26</Volume><PubDate><Year>2015</Year><Month>Feb</Month>" +
+        "<Day>26</Day></PubDate></JournalIssue><Title>Journal of Spark Topic 5</Title>" +
+        "<ISOAbbreviation>J Spark 5</ISOAbbreviation></Journal><ArticleTitle>" +
+        "&lt;b&gt;w1&lt;/b&gt; &lt;sub&gt;w2&lt;/sub&gt; w3 w4 w5 w6 w7 w8 w9 w10</ArticleTitle>" +
+        "<Abstract><AbstractText Label=\"BACKGROUND\">" +
+        "&lt;sup&gt;w11&lt;/sup&gt; w12 w13 w14 w15 w16 w17 w18 w19 w20</AbstractText>" +
+        "<AbstractText Label=\"METHODS\">" +
+        "w21 w22 w23 w24 w25 w26 w27 w28 w29 w30</AbstractText></Abstract></Article>" +
+        "</MedlineCitation></PubmedArticle>"),
+      38L ->
+        ("<PubmedArticle><MedlineCitation><PMID>38</PMID><Article><Journal>" +
+        "<JournalIssue><Volume>39</Volume><Issue>3</Issue><PubDate><Year>1998</Year>" +
+        "<Month>Mar</Month><Day>11</Day></PubDate></JournalIssue><Title>" +
+        "Journal of Spark Topic 18</Title><ISOAbbreviation>J Spark 18</ISOAbbreviation>" +
+        "</Journal><ArticleTitle>" +
+        "&lt;b&gt;only&lt;/b&gt; &lt;sup&gt;five&lt;/sup&gt; tokens right here</ArticleTitle>" +
+        "</Article></MedlineCitation></PubmedArticle>"))),
+    ("serializeMedlineUpdateFiles", XmlIngest.serializeMedlineUpdateFiles, Seq(
+      5L ->
+        ("<PubmedArticleSet><PubmedArticle><MedlineCitation><PMID>25</PMID><Article>" +
+        "<Journal><JournalIssue><Volume>26</Volume><PubDate><Year>2016</Year><Month>" +
+        "Feb</Month><Day>26</Day></PubDate></JournalIssue><Title>" +
+        "Journal of Spark Topic 5</Title><ISOAbbreviation>J Spark 5</ISOAbbreviation>" +
+        "</Journal><ArticleTitle>w1 w2 w3 w4 w5 w6 w7 w8 w9 w10</ArticleTitle>" +
+        "<Abstract><AbstractText Label=\"BACKGROUND\">" +
+        "w11 w12 w13 w14 w15 w16 w17 w18 w19 w20</AbstractText>" +
+        "<AbstractText Label=\"METHODS\">" +
+        "w21 w22 w23 w24 w25 w26 w27 w28 w29 w30</AbstractText></Abstract></Article>" +
+        "</MedlineCitation></PubmedArticle></PubmedArticleSet>"),
+      8L ->
+        ("<PubmedArticleSet><DeleteCitation><PMID>38</PMID></DeleteCitation>" +
+        "</PubmedArticleSet>"))),
+    ("serializeMedlinePubdates", XmlIngest.serializeMedlinePubdates, Seq(
+      25L ->
+        ("<PubmedArticle><MedlineCitation><PMID>25</PMID><Article><Journal>" +
+        "<JournalIssue><PubDate><MedlineDate>Winter 2016 Nov-Dec</MedlineDate>" +
+        "</PubDate></JournalIssue></Journal><ArticleTitle>t</ArticleTitle></Article>" +
+        "</MedlineCitation></PubmedArticle>"),
+      38L ->
+        ("<PubmedArticle><MedlineCitation><PMID>38</PMID><Article><Journal>" +
+        "<JournalIssue><PubDate><Season>Winter</Season></PubDate></JournalIssue>" +
+        "</Journal><ArticleTitle>t</ArticleTitle><ArticleDate><Year>2000</Year><Month>" +
+        "01</Month></ArticleDate></Article></MedlineCitation></PubmedArticle>"))),
+    ("serializeJats", XmlIngest.serializeJats, Seq(
+      25L ->
+        ("<article><front><article-meta><article-id pub-id-type=\"doi\">" +
+        "10.1101/25</article-id><title-group><article-title>" +
+        "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10</article-title></title-group><abstract><p>" +
+        "w11 w12 w13 w14 w15 w16 w17 w18 w19 w20</p><p>" +
+        "w21 w22 w23 w24 w25 w26 w27 w28 w29 w30</p></abstract></article-meta></front>" +
+        "<body><sec><p>w31 w32 w33 w34 w35</p></sec></body></article>"),
+      38L ->
+        ("<article><front><article-meta><article-id pub-id-type=\"doi\">" +
+        "10.1101/38</article-id><title-group><article-title>" +
+        "only five tokens right here</article-title></title-group></article-meta>" +
+        "</front></article>"))),
+    ("serializeBioc", XmlIngest.serializeBioc, Seq(
+      25L ->
+        ("<collection><document><id>25</id><passage><infon key=\"type\">title</infon>" +
+        "<offset>0</offset><text>w1 w2 w3 w4 w5 w6 w7 w8 w9 w10</text></passage>" +
+        "<passage><infon key=\"type\">abstract</infon><offset>31</offset><text>" +
+        s"$w11to35</text></passage></document></collection>"),
+      38L ->
+        ("<collection><document><id>38</id><passage><infon key=\"type\">title</infon>" +
+        "<offset>0</offset><text>only five tokens right here</text></passage>" +
+        "</document></collection>"))))
+
+  goldenXml.foreach { case (name, serializer, expected) =>
+    test(s"golden xml: $name on a title-only and a four-window document") {
+      val got = serializer(golden).collect()
+        .map(r => r.getLong(0) -> r.getAs[String]("xml")).sortBy(_._1).toSeq
+      assert(got == expected)
+    }
+  }
+
+  test("pmidToYear resolves entities before parsing, like every Medline reader") {
+    val xml = "<PubmedArticle><MedlineCitation><PMID>42</PMID><Article><Journal>" +
+      "<JournalIssue><PubDate><Year>2001</Year></PubDate></JournalIssue></Journal>" +
+      "<ArticleTitle>&alpha;-helix</ArticleTitle></Article></MedlineCitation></PubmedArticle>"
+    val r = XmlIngest.pmidToYear(Seq((42L, xml)).toDF("doc_id", "xml")).collect()
+    assert(r.map(x => (x.getAs[String]("pmid"), x.getAs[String]("year"))).toSeq ==
+      Seq(("PMID:42", "2001")))
+  }
+
+  test("cross-reader: citation, update-file, html-flag and year readers agree on the same citations") {
+    // entity-bearing titles, escaped sub/sup markup, a year-less citation (7)
+    val cits = XmlIngest.serializeMedlineEntities(golden)
+      .unionByName(XmlIngest.serializeMedlineSubSup(docs))
+    val files = cits.select(col("doc_id").as("file_id"),
+      concat(lit("<PubmedArticleSet>"), col("xml"), lit("</PubmedArticleSet>")).as("xml"))
+    val textCols = Seq("doc_id", "pmid", "year", "title", "abstract", "doc_text").map(col)
+    def rows(df: DataFrame) =
+      df.select(textCols: _*).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val medline = rows(XmlIngest.parseMedline(cits))
+    assert(medline.map(_.head) == Seq(7L, 8L, 25L, 38L))
+    assert(rows(XmlIngest.parseUpdateFileArticles(files)) == medline)
+    def pmids(df: DataFrame) = df.select("doc_id", "pmid").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val expected = medline.map(r => r(0).asInstanceOf[Long] -> r(1).asInstanceOf[String]).toMap
+    assert(expected.forall { case (id, p) => p == s"PMID:$id" })
+    assert(pmids(XmlIngest.pmidHtmlFlag(cits)) == expected)
+    assert(pmids(XmlIngest.pmidToYear(cits)) == expected)
   }
 }
